@@ -80,9 +80,9 @@ object CompileApi {
   }
 
   /** Action-free compile against a caller-held context (session reuse).
-    * Lowers with `analysisOnly` set so natives with lowering-time side
-    * effects (ann_pq_index's parquet write) return schema-only frames —
-    * an LSP hover or schema probe must never write to disk. */
+    * Lowers with `analysisOnly` set so table functions whose lowering runs
+    * a job or writes return empty frames of their declared schemas — an
+    * LSP hover or schema probe never runs a job or writes to disk. */
   def compileOnlyWith(ctx0: graft.lang.Lowering.Context, text: String): org.apache.spark.sql.DataFrame = {
     import graft.lang._
     // copy shares the mutable maps (models/vals/…) with the caller's ctx,

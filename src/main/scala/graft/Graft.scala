@@ -108,24 +108,30 @@ object Graft {
   // session (the WeakHashMap-value-refs-key leak): the session catalog
   // itself strongly holds every registered temp view, so a cleared ref can
   // only mean the view was dropped or replaced — which is exactly the
-  // "re-register" case.
+  // "re-register" case. A table missing from the dir has no handle (None)
+  // and stays a hit while no view of that name appears.
   private val sqlTablesFor =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        (String, String, Map[String, java.lang.ref.WeakReference[AnyRef]])]())
+        (String, String, Map[String, Option[java.lang.ref.WeakReference[AnyRef]]])]())
   private def ensureSqlTables(spark: SparkSession, d: String): Unit = {
     val fp = Tables.directoryFingerprint(spark, d).getOrElse("__missing__")
     def rawView(n: String): AnyRef =
       try spark.sessionState.catalog.getRawTempView(n).orNull
       catch { case _: Throwable => null }
+    def current(n: String, handle: Option[java.lang.ref.WeakReference[AnyRef]]): Boolean =
+      handle match {
+        case None => rawView(n) == null
+        case Some(ref) => val v = ref.get; v != null && (v eq rawView(n))
+      }
     val memo = sqlTablesFor.get(spark)
     val hit = memo != null && memo._1 == d && memo._2 == fp &&
-      Tables.names.forall(n => memo._3.get(n).forall(_.get eq rawView(n)))
+      Tables.names.forall(n => memo._3.get(n).forall(current(n, _)))
     if (!hit) {
       val registered = Tables.names.map { n =>
         try Tables.read(spark, d, n).createOrReplaceTempView(n)
         catch { case _: Throwable => () } // tolerate missing tables in dir
-        n -> new java.lang.ref.WeakReference[AnyRef](rawView(n))
+        n -> Option(rawView(n)).map(new java.lang.ref.WeakReference[AnyRef](_))
       }.toMap
       sqlTablesFor.put(spark, (d, fp, registered))
     }

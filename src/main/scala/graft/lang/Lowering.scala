@@ -19,83 +19,6 @@ final class LoweringException(msg: String) extends Exception(msg)
   */
 object Lowering {
 
-  /** Every native table function this lowering dispatches in relation
-    * position (the `ModelRef` natives), in ONE place. The LSP completion
-    * list and the playground derive from this constant, and
-    * TableFunctionRegistrySpec greps this file's dispatch cases
-    * (`name.toLowerCase == "…"`) to assert the constant and the dispatch
-    * can never drift — the completion list went stale by hand-maintenance
-    * twice in r13/r14. Add a dispatch case ⇒ the spec forces the name in
-    * here ⇒ LSP + playground pick it up structurally. */
-  val nativeTableFunctions: Seq[String] = Seq(
-    "ann_int8_index", "ann_int8_index_append", "ann_lsh_postings",
-    "ann_pq_index", "ann_pq_index_append",
-    "bm25_index", "bm25_index_append", "bm25_topk", "bm25_topk_index",
-    "bpe_count", "bpe_count_merges", "bpe_encode", "bpe_stats", "bpe_train", "build_vocab",
-    "contaminated_docs", "contaminated_vecs", "contamination_report",
-    "contamination_report_semantic",
-    "decode_audio", "decode_images", "decode_video",
-    "decontaminate", "decontaminate_semantic",
-    "dedup_bloom", "dedup_bloom_against", "dedup_bloom_against_index",
-    "dedup_bloom_index", "dedup_bloom_index_append",
-    "dedup_incremental", "dedup_incremental_pairs",
-    "dedup_phash", "dedup_phash_against", "dedup_semantic",
-    "dedup_spans", "dsir_sample", "dsir_weight", "duckdb_functions", "each_top_k", "jdbc",
-    "keywords_tfidf",
-    "minhash_index", "minhash_index_append",
-    "mix_by_temperature", "pack_sequences", "parquet_metadata",
-    "perplexity_score", "perplexity_score_bigram", "prototypicality_score",
-    "quality_classifier_score",
-    "range", "resize_images",
-    "select_token_budget", "select_token_budget_by",
-    "similarity_topk",
-    "split_by_cluster", "split_by_cluster_pairs",
-    "split_by_cluster_pairs_stats", "split_by_cluster_stats",
-    "token_stats", "top_ngrams", "vocab_profile", "weighted_mix",
-    "wv_schemas", "wv_tables"
-  )
-
-  /** Industry-standard n-gram presets for the decontamination family, so
-    * users don't re-derive the conventions: 'gpt3' = 13-gram overlap
-    * (Brown et al. 2020 appendix C — the GPT-3 eval-decontamination
-    * n-gram), 'palm' = 8-gram overlap (Chowdhery et al. 2022's
-    * contamination analysis). Accepted anywhere the family takes n
-    * (contaminated_docs / decontaminate / contamination_report). */
-  val contaminationPresets: Map[String, Int] = Map("gpt3" -> 13, "palm" -> 8)
-
-  private def contaminationN(name: String, v: Any): Int = v match {
-    case n: Long if n >= 1 => n.toInt
-    case s: String => contaminationPresets.getOrElse(s.toLowerCase,
-      throw new LoweringException(
-        s"$name: unknown n-gram preset '$s' — expected " +
-          contaminationPresets.toSeq.sortBy(_._1)
-            .map { case (k, n) => s"'$k' (= $n)" }.mkString(", ") +
-          " or a positive integer n"))
-    case other => throw new LoweringException(
-      s"$name: n must be a positive integer literal or a preset " +
-        s"('gpt3' = 13, 'palm' = 8), got '$other'")
-  }
-
-  /** ann_pq_index side-effecting write + 1-row summary: path, row count of
-    * the written index, and the quantizer shape. Analysis-only contexts
-    * (LSP schema probes, compile-only) get the summary SCHEMA with no rows
-    * — lowering a script for hover/completion must not write to the
-    * user-supplied path as a planning side effect (ADVICE r15). */
-  private def pqIndexWriteSummary(ctx: Context, corpus: String, idCol: String,
-      vecCol: String, path: String, subspaces: Int, ksub: Int,
-      trained: Boolean,
-      trainSample: Int = graft.operators.Similarity.PqTrainSampleDefault): DataFrame = {
-    val s = ctx.spark
-    import s.implicits._
-    if (ctx.analysisOnly)
-      return Seq.empty[(String, Long, Int, Int)].toDF("path", "rows", "subspaces", "ksub")
-    graft.operators.Similarity.writePqIndex(
-      lower(TableRef(corpus), ctx), idCol, vecCol, path, subspaces, ksub,
-      trained = trained, trainSample = trainSample)
-    val n = ctx.spark.read.parquet(path).count()
-    Seq((path, n, subspaces, ksub)).toDF("path", "rows", "subspaces", "ksub")
-  }
-
   final case class Context(
       spark: SparkSession,
       tableResolver: String => DataFrame,
@@ -148,9 +71,9 @@ object Lowering {
         * FlowRunner so jump requests can be attributed to their stage. */
       stageName: Option[String] = None,
       /** Analysis-only lowering (LSP schema probes, compile-only API,
-        * playground validation): natives whose LOWERING has a side effect
-        * (ann_pq_index writes parquet) must return a schema-equivalent
-        * frame instead of executing the effect (ADVICE r15). */
+        * playground validation): table functions whose lowering runs a job
+        * or writes return an empty frame of their declared schema instead
+        * (TableFunctions.lower). */
       analysisOnly: Boolean = false
   )
 
@@ -1087,323 +1010,6 @@ object Lowering {
     case _ => None
   }
 
-  // Case bodies extracted from lowerRel's dispatch — the match itself must
-  // stay under the JVM's 64 KB method-size limit, so newer natives keep
-  // their logic in private defs and the case arm is a one-line call.
-
-  private def lowerBm25IndexAppend(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(batch: String), Some(idCol: String),
-          Some(textCol: String)) =>
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "postings"))
-        else {
-          try ctx.spark.read.parquet(path + "_meta").schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"bm25_index_append expects a path to a persisted BM25 index " +
-                  s"(postings at '$path' plus '_df'/'_meta' siblings — write them " +
-                  s"with bm25_index / Retrieval.writeBm25Index) — ${e.getMessage}")
-          }
-          graft.operators.Retrieval.bm25IndexAppend(
-            ctx.spark, path, lower(TableRef(batch), ctx), idCol, textCol)
-          val n = graft.operators.Retrieval.readPostings(ctx.spark, path).count()
-          Plain(Seq((path, n)).toDF("path", "postings"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "bm25_index_append expects (index_path, batch, id_col, text_col) " +
-            "literals, e.g. bm25_index_append('/tmp/bm25_idx', 'newbatch', " +
-            "'doc_id', 'text')")
-    }
-
-  private def lowerMinhashIndexAppend(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(batch: String), Some(idCol: String),
-          Some(textCol: String), rest @ _*) if rest.lengthCompare(2) <= 0 =>
-        val (k, sh) = rest.toList match {
-          case Nil => (64, 2)
-          case List(Some(kk: Long), Some(s: Long)) if kk >= 1 && s >= 1 =>
-            (kk.toInt, s.toInt)
-          case other => throw new LoweringException(
-            s"minhash_index_append: trailing args must be (num_hashes, shingle) " +
-              s"positive integer literals, got '$other'")
-        }
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "rows"))
-        else {
-          try ctx.spark.read.parquet(path).schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"minhash_index_append expects a path to a persisted MinHash index " +
-                  s"(build it with minhash_index / Dedup.buildMinhashIndex) — ${e.getMessage}")
-          }
-          graft.operators.Dedup.minhashIndexAppend(
-            ctx.spark, path, lower(TableRef(batch), ctx), idCol, textCol, k, sh)
-          val n = ctx.spark.read.parquet(path).count()
-          Plain(Seq((path, n)).toDF("path", "rows"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "minhash_index_append expects (index_path, batch, id_col, text_col" +
-            "[, num_hashes, shingle]) literals, e.g. minhash_index_append(" +
-            "'/tmp/mh_idx', 'newbatch', 'doc_id', 'text')")
-    }
-
-  private def lowerDedupPhash(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(corpus: String), Some(idCol: String), Some(imageCol: String),
-          rest @ _*) if rest.lengthCompare(1) <= 0 =>
-        val r = rest.headOption match {
-          case Some(Some(n: Long)) if n >= 0 && n <= 14 => n.toInt
-          case None => 3
-          case other => throw new LoweringException(
-            s"dedup_phash: hamming_r must be an integer literal in [0, 14], got '$other'")
-        }
-        val src = lower(TableRef(corpus), ctx)
-        if (ctx.analysisOnly)
-          // the pairs machinery materializes eagerly (localCheckpoint +
-          // path-choice count) — schema probes get the lazy shape
-          Plain(src.limit(0).select(
-            F.col(idCol).cast("long").as("id_a"),
-            F.col(idCol).cast("long").as("id_b"),
-            F.lit(0).cast("int").as("hamming")))
-        else
-          Plain(graft.operators.Dedup.phashPairs(src, idCol, imageCol, r))
-      case _ =>
-        throw new LoweringException(
-          "dedup_phash expects (corpus, id_col, image_col[, hamming_r]) literals, " +
-            "e.g. dedup_phash('images', 'img_id', 'png', 3)")
-    }
-
-  private def lowerDedupPhashAgainst(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(corpus: String), Some(batch: String), Some(idCol: String),
-          Some(imageCol: String), rest @ _*) if rest.lengthCompare(1) <= 0 =>
-        val r = rest.headOption match {
-          case Some(Some(n: Long)) if n >= 0 && n <= 15 => n.toInt
-          case None => 3
-          case other => throw new LoweringException(
-            s"dedup_phash_against: hamming_r must be an integer literal in [0, 15], " +
-              s"got '$other'")
-        }
-        val c = lower(TableRef(corpus), ctx)
-        val b = lower(TableRef(batch), ctx)
-        Plain(graft.operators.Dedup.phashAgainst(c, b, idCol, imageCol, r))
-      case _ =>
-        throw new LoweringException(
-          "dedup_phash_against expects (corpus, batch, id_col, image_col" +
-            "[, hamming_r]) literals, e.g. dedup_phash_against('images', " +
-            "'new_images', 'img_id', 'png', 3)")
-    }
-
-  private def lowerInt8IndexAppend(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(batch: String), Some(idCol: String),
-          Some(vecCol: String)) =>
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "rows"))
-        else {
-          try ctx.spark.read.parquet(path).schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"ann_int8_index_append expects a path to a persisted int8 ANN index " +
-                  s"(build it with ann_int8_index / Similarity.buildInt8Index) — " +
-                  s"${e.getMessage}")
-          }
-          graft.operators.Similarity.int8IndexAppend(
-            ctx.spark, path, lower(TableRef(batch), ctx), idCol, vecCol)
-          val n = ctx.spark.read.parquet(path).count()
-          Plain(Seq((path, n)).toDF("path", "rows"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "ann_int8_index_append expects (index_path, batch, id_col, vec_col) " +
-            "literals, e.g. ann_int8_index_append('/tmp/int8_idx', 'newvecs', " +
-            "'vec_id', 'embedding')")
-    }
-
-  private def lowerPqIndexAppend(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(batch: String), Some(idCol: String),
-          Some(vecCol: String)) =>
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "rows"))
-        else {
-          try ctx.spark.read.parquet(path + "_codebook").schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"ann_pq_index_append expects a path to a persisted PQ index " +
-                  s"(codes at '$path' plus the '_codebook' sibling — build them " +
-                  s"with ann_pq_index / Similarity.writePqIndex) — ${e.getMessage}")
-          }
-          graft.operators.Similarity.pqIndexAppend(
-            ctx.spark, path, lower(TableRef(batch), ctx), idCol, vecCol)
-          val n = ctx.spark.read.parquet(path).count()
-          Plain(Seq((path, n)).toDF("path", "rows"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "ann_pq_index_append expects (index_path, batch, id_col, vec_col) " +
-            "literals, e.g. ann_pq_index_append('/tmp/pq_idx', 'newvecs', " +
-            "'vec_id', 'embedding')")
-    }
-
-  private def lowerDedupBloomIndex(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-          Some(path: String), rest @ _*) if rest.lengthCompare(2) <= 0 =>
-        val fpp = rest.headOption match {
-          case Some(Some(d: java.lang.Double)) => d.doubleValue()
-          case Some(Some(n: Number)) => n.doubleValue()
-          case None => 0.01
-          case other => throw new LoweringException(
-            s"dedup_bloom_index: fpp must be a number literal in (0, 1), got '$other'")
-        }
-        val expected = rest.drop(1).headOption match {
-          case Some(Some(n: Long)) if n >= 1 => Some(n)
-          case None => None
-          case other => throw new LoweringException(
-            s"dedup_bloom_index: expected_items must be a positive integer " +
-              s"literal, got '$other'")
-        }
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "num_bits"))
-        else {
-          graft.operators.Dedup.writeBloomIndex(
-            lower(TableRef(corpus), ctx), idCol, textCol, path, fpp, expected)
-          val bits = ctx.spark.read.parquet(path).head().getLong(2)
-          Plain(Seq((path, bits)).toDF("path", "num_bits"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "dedup_bloom_index expects (corpus, id_col, text_col, out_path" +
-            "[, fpp[, expected_items]]) literals, e.g. dedup_bloom_index(" +
-            "'documents', 'doc_id', 'text', '/tmp/bloom_idx')")
-    }
-
-  private def lowerDedupBloomIndexAppend(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(batch: String), Some(idCol: String),
-          Some(textCol: String)) =>
-        val s = ctx.spark
-        import s.implicits._
-        if (ctx.analysisOnly)
-          Plain(Seq.empty[(String, Long)].toDF("path", "num_bits"))
-        else {
-          try ctx.spark.read.parquet(path).schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"dedup_bloom_index_append expects a path to a persisted bloom index " +
-                  s"(write it with dedup_bloom_index / Dedup.writeBloomIndex) — " +
-                  s"${e.getMessage}")
-          }
-          graft.operators.Dedup.bloomIndexAppend(
-            ctx.spark, path, lower(TableRef(batch), ctx), idCol, textCol)
-          val bits = ctx.spark.read.parquet(path).head().getLong(2)
-          Plain(Seq((path, bits)).toDF("path", "num_bits"))
-        }
-      case _ =>
-        throw new LoweringException(
-          "dedup_bloom_index_append expects (index_path, batch, id_col, text_col) " +
-            "literals, e.g. dedup_bloom_index_append('/tmp/bloom_idx', 'newbatch', " +
-            "'doc_id', 'text')")
-    }
-
-  private def lowerDedupBloomAgainstIndex(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(path: String), Some(corpus: String), Some(batch: String),
-          Some(idCol: String), Some(textCol: String)) =>
-        if (ctx.analysisOnly)
-          Plain(graft.operators.Dedup.dedupAgainstExact(
-            lower(TableRef(corpus), ctx), lower(TableRef(batch), ctx), idCol, textCol))
-        else
-          Plain(graft.operators.Dedup.bloomDedupAgainstIndex(
-            ctx.spark, path, lower(TableRef(corpus), ctx),
-            lower(TableRef(batch), ctx), idCol, textCol))
-      case _ =>
-        throw new LoweringException(
-          "dedup_bloom_against_index expects (index_path, corpus, batch, id_col, " +
-            "text_col) literals, e.g. dedup_bloom_against_index('/tmp/bloom_idx', " +
-            "'documents', 'newbatch', 'doc_id', 'text')")
-    }
-
-  private def lowerDedupBloom(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-          rest @ _*) if rest.lengthCompare(2) <= 0 =>
-        val fpp = rest.headOption match {
-          case Some(Some(d: java.lang.Double)) => d.doubleValue()
-          case Some(Some(n: Number)) => n.doubleValue()
-          case None => 0.01
-          case other => throw new LoweringException(
-            s"dedup_bloom: fpp must be a number literal in (0, 1), got '$other'")
-        }
-        val expected = rest.drop(1).headOption match {
-          case Some(Some(n: Long)) if n >= 1 => Some(n)
-          case None => None
-          case other => throw new LoweringException(
-            s"dedup_bloom: expected_items must be a positive integer literal, got '$other'")
-        }
-        if (ctx.analysisOnly)
-          Plain(graft.operators.Dedup.exactGroups(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        else
-          Plain(graft.operators.Dedup.bloomExactGroups(
-            lower(TableRef(corpus), ctx), idCol, textCol, fpp, expected))
-      case _ =>
-        throw new LoweringException(
-          "dedup_bloom expects (corpus, id_col, text_col[, fpp[, expected_items]]) " +
-            "literals, e.g. dedup_bloom('documents', 'doc_id', 'text', 0.01)")
-    }
-
-  private def lowerDedupBloomAgainst(args: Seq[Expr], ctx: Context): LRes =
-    args.map(constValue) match {
-      case List(Some(corpus: String), Some(batch: String), Some(idCol: String),
-          Some(textCol: String), rest @ _*) if rest.lengthCompare(2) <= 0 =>
-        val fpp = rest.headOption match {
-          case Some(Some(d: java.lang.Double)) => d.doubleValue()
-          case Some(Some(n: Number)) => n.doubleValue()
-          case None => 0.01
-          case other => throw new LoweringException(
-            s"dedup_bloom_against: fpp must be a number literal in (0, 1), got '$other'")
-        }
-        val expected = rest.drop(1).headOption match {
-          case Some(Some(n: Long)) if n >= 1 => Some(n)
-          case None => None
-          case other => throw new LoweringException(
-            s"dedup_bloom_against: expected_items must be a positive integer " +
-              s"literal, got '$other'")
-        }
-        if (ctx.analysisOnly)
-          Plain(graft.operators.Dedup.dedupAgainstExact(
-            lower(TableRef(corpus), ctx), lower(TableRef(batch), ctx), idCol, textCol))
-        else
-          Plain(graft.operators.Dedup.bloomDedupAgainst(
-            lower(TableRef(corpus), ctx), lower(TableRef(batch), ctx),
-            idCol, textCol, fpp, expected))
-      case _ =>
-        throw new LoweringException(
-          "dedup_bloom_against expects (corpus, batch, id_col, text_col" +
-            "[, fpp[, expected_items]]) literals, e.g. dedup_bloom_against(" +
-            "'documents', 'newbatch', 'doc_id', 'text', 0.01)")
-    }
-
   private def lowerRel(rel: Relation, ctx: Context): LRes = rel match {
     case TableRef(name) =>
       ctx.models.get(name) match {
@@ -1414,1533 +1020,8 @@ object Lowering {
           Plain(resolveTable(name, ctx).alias(shortName))
       }
 
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "parquet_metadata" =>
-      // parquet_metadata('file.parquet') table function (DuckDB parity,
-      // save-with-options.wv): per-column-chunk footer metadata, read via
-      // parquet-hadoop (already on Spark's classpath)
-      args match {
-        case List(StringLit(p)) => Plain(parquetMetadata(p, ctx))
-        case _ =>
-          throw new LoweringException("parquet_metadata expects one path string")
-      }
-
-    case ModelRef(name, Nil) if !ctx.models.contains(name) &&
-        name.toLowerCase == "wv_tables" =>
-      // stdlib catalog model (reference wvlet-stdlib/module/standard/
-      // catalog.wv: information_schema.tables projected to 4 columns). The
-      // reference's in-memory engine names its default catalog memory.main;
-      // the in-memory session catalog here presents the same logical names
-      // so catalog queries are portable across the two engines.
-      import ctx.spark.implicits._
-      val rows = ctx.spark.catalog.listTables().collect().toSeq.map { t =>
-        val schema = t.database match {
-          case null | "" | "default" => "main"
-          case d => d
-        }
-        val tpe =
-          if (t.tableType == "TEMPORARY" || t.tableType == "VIEW") "VIEW"
-          else "BASE TABLE"
-        ("memory", schema, t.name, tpe)
-      }.sortBy(r => (r._2, r._3))
-      Plain(rows.toDF("catalog", "schema", "name", "table_type"))
-
-    case ModelRef(name, Nil) if !ctx.models.contains(name) &&
-        name.toLowerCase == "wv_schemas" =>
-      import ctx.spark.implicits._
-      val rows = ctx.spark.catalog.listDatabases().collect().toSeq
-        .map(d => ("memory", if (d.name == "default") "main" else d.name))
-        .sortBy(_._2)
-      Plain(rows.toDF("catalog", "name"))
-
-    case ModelRef(name, Nil) if !ctx.models.contains(name) &&
-        name.toLowerCase == "duckdb_functions" =>
-      // engine-registry table function (reference spec/basic/duckdb/
-      // from_table_function.wv): DuckDB-shaped columns over THIS engine's
-      // function registry — same surface, engine-native contents
-      import ctx.spark.implicits._
-      val builtin = ctx.spark.catalog.listFunctions().collect().toSeq
-        .map(f => (f.name, "scalar", null: String))
-      val user = (ctx.funcs.keys.map((_, "macro", null: String)).toSeq ++
-        ctx.partials.keys.map((_, "table_macro", null: String)).toSeq)
-      Plain((builtin ++ user).sortBy(_._1)
-        .toDF("function_name", "function_type", "return_type"))
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        (name.toLowerCase == "contaminated_docs" || name.toLowerCase == "decontaminate") =>
-      // decontamination table functions (operators/Decontamination.scala):
-      //   contaminated_docs('corpus', 'eval', 'id_col', 'text_col', n)
-      //   decontaminate('corpus', 'eval', 'id_col', 'text_col', n)
-      // corpus/eval are relation names resolved through the same rules as
-      // `from <name>` — tables, files, and in-scope models all work, so
-      // `model evalset = { … }` composes directly. n accepts the
-      // industry-standard presets alongside an integer (see
-      // contaminationN: 'gpt3' = 13, 'palm' = 8).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(eval: String), Some(idCol: String),
-            Some(textCol: String), Some(n)) =>
-          val c = lower(TableRef(corpus), ctx)
-          val e = lower(TableRef(eval), ctx)
-          val nn = contaminationN(name, n)
-          Plain(
-            if (name.toLowerCase == "contaminated_docs")
-              graft.operators.Decontamination
-                .contaminatedDocs(c, idCol, textCol, e, textCol, nn)
-            else
-              graft.operators.Decontamination
-                .decontaminate(c, idCol, textCol, e, textCol, nn))
-        case _ =>
-          throw new LoweringException(
-            s"$name expects (corpus, eval, id_col, text_col, n) literals — n an " +
-              s"integer or a preset ('gpt3' = 13, 'palm' = 8) — e.g. " +
-              s"$name('documents', 'evalset', 'doc_id', 'text', 13)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "contamination_report" =>
-      // contamination_report('corpus', 'eval', 'id_col', 'text_col', n) —
-      // the benchmark-health transpose (Decontamination.contaminationReport):
-      // per EVAL doc, how many corpus docs share an n-gram with it. n
-      // accepts the standard presets ('gpt3' = 13, 'palm' = 8).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(eval: String), Some(idCol: String),
-            Some(textCol: String), Some(n)) =>
-          Plain(graft.operators.Decontamination.contaminationReport(
-            lower(TableRef(corpus), ctx), idCol, textCol,
-            lower(TableRef(eval), ctx), idCol, textCol, contaminationN(name, n)))
-        case _ =>
-          throw new LoweringException(
-            "contamination_report expects (corpus, eval, id_col, text_col, n) literals " +
-              "— n an integer or a preset ('gpt3' = 13, 'palm' = 8) — e.g. " +
-              "contamination_report('trainset', 'evalset', 'doc_id', 'text', 'gpt3')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        (name.toLowerCase == "contaminated_vecs" ||
-         name.toLowerCase == "decontaminate_semantic") =>
-      // embedding-space decontamination (Decontamination.contaminatedVecs /
-      // decontaminateSemantic): the paraphrase-robust second net behind the
-      // n-gram pair above; same relation-name resolution, so models compose
-      //   contaminated_vecs('corpus', 'eval', 'id_col', 'vec_col', threshold)
-      //   decontaminate_semantic('corpus', 'eval', 'id_col', 'vec_col', threshold)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(eval: String), Some(idCol: String),
-            Some(vecCol: String), Some(thr), rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          val t = thr match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"$name: threshold must be a number, got '$other'")
-          }
-          // optional trailing nlist: the centroid count of the exact
-          // pruning pass (speed knob only — results are exact for any
-          // value; scale it with the DISTINCT eval vector count)
-          val nlist = rest.headOption match {
-            case Some(Some(n: Long)) if n > 0 => n.toInt
-            case None => 32
-            case other => throw new LoweringException(
-              s"$name: nlist must be a positive integer literal, got '$other'")
-          }
-          val c = lower(TableRef(corpus), ctx)
-          val e = lower(TableRef(eval), ctx)
-          Plain(
-            if (name.toLowerCase == "contaminated_vecs")
-              graft.operators.Decontamination
-                .contaminatedVecs(c, idCol, vecCol, e, vecCol, t, nlist)
-            else
-              graft.operators.Decontamination
-                .decontaminateSemantic(c, idCol, vecCol, e, vecCol, t, nlist))
-        case _ =>
-          throw new LoweringException(
-            s"$name expects (corpus, eval, id_col, vec_col, threshold[, nlist]) literals, e.g. " +
-              s"$name('embeddings', 'evalvecs', 'vec_id', 'embedding', 0.95)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "contamination_report_semantic" =>
-      // contamination_report_semantic('corpus', 'eval', 'id_col',
-      // 'vec_col', threshold[, nlist]) — the embedding-space audit
-      // transpose (Decontamination.contaminationReportSemantic): per EVAL
-      // row, how many corpus vectors sit within threshold cosine and the
-      // closest one; zero rows kept. Shares contaminated_vecs' exact
-      // centroid-pruned candidate machinery.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(eval: String), Some(idCol: String),
-            Some(vecCol: String), Some(thr: Number), rest @ _*)
-            if rest.lengthCompare(1) <= 0 =>
-          val nlist = rest.headOption match {
-            case Some(Some(n: Long)) if n > 0 => n.toInt
-            case None => 32
-            case other => throw new LoweringException(
-              s"contamination_report_semantic: nlist must be a positive integer " +
-                s"literal, got '$other'")
-          }
-          Plain(graft.operators.Decontamination.contaminationReportSemantic(
-            lower(TableRef(corpus), ctx), vecCol,
-            lower(TableRef(eval), ctx), idCol, vecCol, thr.doubleValue(), nlist))
-        case _ =>
-          throw new LoweringException(
-            "contamination_report_semantic expects (corpus, eval, id_col, vec_col, " +
-              "threshold[, nlist]) literals, e.g. " +
-              "contamination_report_semantic('corpusvecs', 'evalvecs', 'vec_id', " +
-              "'embedding', 0.95)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "mix_by_temperature" =>
-      // mix_by_temperature('corpus', 'domain_col', 'id_col', alpha) — the
-      // GPT-3/PaLM multinomial temperature recipe: target composition
-      // q_d ∝ p_d^alpha, realized as deterministic per-doc weights
-      // q_d/p_d through weightedMix (Sampling.mixByTemperature)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(domainCol: String),
-            Some(idCol: String), Some(alpha: Number))
-            if alpha.doubleValue() > 0.0 && alpha.doubleValue() <= 10.0 =>
-          Plain(graft.operators.Sampling.mixByTemperature(
-            lower(TableRef(corpus), ctx), domainCol, idCol, alpha.doubleValue()))
-        case _ =>
-          throw new LoweringException(
-            "mix_by_temperature expects (corpus, domain_col, id_col, alpha in (0,10]) " +
-              "literals, e.g. mix_by_temperature('documents', 'lang', 'doc_id', 0.5)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "weighted_mix" =>
-      // weighted_mix('corpus', 'domain_col', 'id_col', 'en:1.5,de:0.75')
-      // — deterministic domain-weighted corpus mixing
-      // (operators/Sampling.weightedMix); weights are a 'domain:w' list
-      // (table-function args are scalar literals)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(domainCol: String),
-            Some(idCol: String), Some(spec: String)) =>
-          val weights = spec.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-            kv.split(":") match {
-              case Array(d, w) =>
-                d.trim -> (try w.trim.toDouble
-                catch {
-                  case _: NumberFormatException => throw new LoweringException(
-                    s"weighted_mix: bad weight '${w.trim}' in entry '$kv' (expected a number)")
-                })
-              case _ => throw new LoweringException(
-                s"weighted_mix: bad weight entry '$kv' (expected domain:weight)")
-            }
-          }.toMap
-          Plain(graft.operators.Sampling.weightedMix(
-            lower(TableRef(corpus), ctx), domainCol, idCol, weights))
-        case _ =>
-          throw new LoweringException(
-            "weighted_mix expects (corpus, domain_col, id_col, weights) literals, e.g. " +
-              "weighted_mix('documents', 'lang', 'doc_id', 'en:1.5,de:0.75')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "pack_sequences" =>
-      // pack_sequences('corpus', 'id_col', 'text_col', budget[, shards
-      // [, 'vocab_rel']]) — GPT-style packing coordinates
-      // (operators/Packing.scala); with a vocab relation the budget unit
-      // is BPE tokens (operators/Bpe.scala) instead of regex words
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long)) =>
-          Plain(graft.operators.Packing.packSequences(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget.toInt))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long), Some(shards: Long)) =>
-          Plain(graft.operators.Packing.packSequences(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget.toInt, shards.toInt))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long), Some(shards: Long), Some(vocabRel: String)) =>
-          val vocab = graft.operators.Bpe.loadVocab(lower(TableRef(vocabRel), ctx))
-          Plain(graft.operators.Packing.packSequences(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget.toInt, shards.toInt,
-            tokenCounter = Some(graft.operators.Bpe.counter(vocab))))
-        case _ =>
-          throw new LoweringException(
-            "pack_sequences expects (corpus, id_col, text_col, budget[, shards" +
-              "[, vocab_rel]]) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bpe_count" =>
-      // bpe_count('corpus', 'text_col', 'vocab_rel') — corpus +
-      // n_bpe_tokens: byte-level greedy longest-match token counts against
-      // the vocab relation's `token` column (operators/Bpe.scala,
-      // functions/BpeExpressions.scala). Null text counts 0 (the shared
-      // counter convention).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(vocabRel: String)) =>
-          val vocab = graft.operators.Bpe.loadVocab(lower(TableRef(vocabRel), ctx))
-          val df = lower(TableRef(corpus), ctx)
-          Plain(df.withColumn("n_bpe_tokens",
-            F.when(F.col(textCol).isNull, F.lit(0L))
-              .otherwise(graft.functions.BpeExpressions.bpeCount(F.col(textCol), vocab))))
-        case _ =>
-          throw new LoweringException(
-            "bpe_count expects (corpus, text_col, vocab_rel) literals — vocab_rel " +
-              "is a relation with a `token` string column, e.g. " +
-              "bpe_count('documents', 'text', 'my_vocab')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bpe_count_merges" =>
-      // bpe_count_merges('corpus', 'text_col', 'merges_rel') — corpus +
-      // n_bpe_merge_tokens: TRUE rank-ordered BPE inference
-      // (Bpe.withMergeCount, functions/BpeMergeCountExpr) replaying the
-      // merges relation (bpe_train's (left, right, rank) shape) within each
-      // canonical word. Greedy bpe_count approximates this from the vocab
-      // alone; this is the exact count when the merge list exists.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(mergesRel: String),
-            rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          // optional trailing pretok mode: 'gpt2' replays merges within
-          // GPT-2 pre-tokens (MUST match the mode the merges were trained
-          // with — a mismatched stream silently segments differently)
-          val pretok = rest.headOption match {
-            case Some(Some(p: String)) if p == "gpt2" || p == "words" => p
-            case None => "words"
-            case other => throw new LoweringException(
-              s"bpe_count_merges: pretok must be 'gpt2' or 'words', got '$other'")
-          }
-          val merges = graft.operators.Bpe.loadMerges(lower(TableRef(mergesRel), ctx))
-          Plain(graft.operators.Bpe.withMergeCount(
-            lower(TableRef(corpus), ctx), textCol, merges, pretok = pretok))
-        case _ =>
-          throw new LoweringException(
-            "bpe_count_merges expects (corpus, text_col, merges_rel[, 'gpt2'|'words']) " +
-              "literals — merges_rel has (left, right, rank) columns (bpe_train's " +
-              "output), e.g. bpe_count_merges('documents', 'text', 'my_merges')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bpe_encode" =>
-      // bpe_encode('corpus', 'id_col', 'text_col', 'merges_rel'
-      // [, 'gpt2'|'words']) — the actual TOKENIZE surface (Bpe.encode):
-      // (id, bpe_tokens array<string>, n_bpe_tokens) under rank-ordered
-      // merge replay — what ships to training after bpe_train. The pretok
-      // mode MUST match the one the merges were trained with.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(mergesRel: String), rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          val pretok = rest.headOption match {
-            case Some(Some(p: String)) if p == "gpt2" || p == "words" => p
-            case None => "words"
-            case other => throw new LoweringException(
-              s"bpe_encode: pretok must be 'gpt2' or 'words', got '$other'")
-          }
-          val merges = graft.operators.Bpe.loadMerges(lower(TableRef(mergesRel), ctx))
-          Plain(graft.operators.Bpe.encode(
-            lower(TableRef(corpus), ctx), idCol, textCol, merges, pretok))
-        case _ =>
-          throw new LoweringException(
-            "bpe_encode expects (corpus, id_col, text_col, merges_rel" +
-              "[, 'gpt2'|'words']) literals — merges_rel has (left, right, rank) " +
-              "columns (bpe_train's output), e.g. " +
-              "bpe_encode('documents', 'doc_id', 'text', 'my_merges')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bm25_topk" =>
-      // bm25_topk('corpus', 'id_col', 'text_col', 'queries_rel', k[, k1, b])
-      // — Okapi BM25 retrieval (operators/Retrieval.bm25TopK): per query
-      // doc, the k corpus docs with the highest lexical relevance — the
-      // retrieval-based contamination/data-selection net. The queries
-      // relation shares the id/text column names (a planted model or an
-      // eval table); query terms are DISTINCT (qtf = 1).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(queriesRel: String), Some(k: Long), rest @ _*)
-            if k >= 1 && rest.lengthCompare(2) <= 0 =>
-          def num(v: Option[Any], what: String, dflt: Double): Double = v match {
-            case Some(d: java.lang.Double) => d.doubleValue()
-            case Some(n: Number) => n.doubleValue()
-            case None => dflt
-            case other => throw new LoweringException(
-              s"bm25_topk: $what must be a number literal, got '$other'")
-          }
-          val k1 = num(rest.headOption.flatten, "k1", 1.2)
-          val b = num(rest.drop(1).headOption.flatten, "b", 0.75)
-          Plain(graft.operators.Retrieval.bm25TopK(
-            lower(TableRef(corpus), ctx), idCol, textCol,
-            lower(TableRef(queriesRel), ctx), idCol, textCol, k.toInt, k1, b))
-        case _ =>
-          throw new LoweringException(
-            "bm25_topk expects (corpus, id_col, text_col, queries_rel, k[, k1, b]) " +
-              "literals, e.g. bm25_topk('documents', 'doc_id', 'text', 'evalset', 5)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bm25_index" =>
-      // bm25_index('corpus', 'id_col', 'text_col', '/out/path') — WRITES
-      // the persisted BM25 index (tok_grp-partitioned postings + "_df" +
-      // "_meta" siblings; Retrieval.writeBm25Index — a three-output write
-      // a plain CTAS cannot express) and returns a 1-row summary. Query
-      // the path with bm25_topk_index(...). Analysis-only contexts get the
-      // summary schema with no rows (the ann_pq_index contract).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(path: String)) =>
-          val s = ctx.spark
-          import s.implicits._
-          if (ctx.analysisOnly)
-            Plain(Seq.empty[(String, Long)].toDF("path", "postings"))
-          else {
-            graft.operators.Retrieval.writeBm25Index(
-              lower(TableRef(corpus), ctx), idCol, textCol, path)
-            val n = ctx.spark.read.parquet(path).count()
-            Plain(Seq((path, n)).toDF("path", "postings"))
-          }
-        case _ =>
-          throw new LoweringException(
-            "bm25_index expects (corpus, id_col, text_col, out_path) literals, " +
-              "e.g. bm25_index('documents', 'doc_id', 'text', '/tmp/bm25_idx')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bm25_index_append" =>
-      // bm25_index_append('/index/path', 'batch', 'id_col', 'text_col') —
-      // INCREMENTAL maintenance of a persisted BM25 index
-      // (Retrieval.bm25IndexAppend): the batch's postings are appended
-      // into their tok_grp partitions and the _df/_meta siblings advance
-      // by exact arithmetic, so serving over the appended index is
-      // bitwise a full rebuild over corpus ∪ batch — without re-reading
-      // the corpus (cost scales with |batch|). Returns the bm25_index
-      // 1-row summary over the updated index; analysis-only contexts get
-      // the summary schema with no rows (the bm25_index contract).
-      lowerBm25IndexAppend(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bm25_topk_index" =>
-      // bm25_topk_index('/index/path', 'queries_rel', 'id_col', 'text_col',
-      // k[, k1, b]) — BM25 over the PERSISTED index written by
-      // bm25_index(...): the postings scan is partition-pruned to the
-      // query terms' buckets; results are bitwise the flat bm25_topk's.
-      args.map(constValue) match {
-        case List(Some(path: String), Some(queriesRel: String), Some(idCol: String),
-            Some(textCol: String), Some(k: Long), rest @ _*)
-            if k >= 1 && rest.lengthCompare(2) <= 0 =>
-          def num(v: Option[Any], what: String, dflt: Double): Double = v match {
-            case Some(d: java.lang.Double) => d.doubleValue()
-            case Some(n: Number) => n.doubleValue()
-            case None => dflt
-            case other => throw new LoweringException(
-              s"bm25_topk_index: $what must be a number literal, got '$other'")
-          }
-          val k1 = num(rest.headOption.flatten, "k1", 1.2)
-          val b = num(rest.drop(1).headOption.flatten, "b", 0.75)
-          try ctx.spark.read.parquet(path + "_meta").schema
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new LoweringException(
-                s"bm25_topk_index expects a path to a persisted BM25 index " +
-                  s"(postings at '$path' plus '_df'/'_meta' siblings — write them " +
-                  s"with bm25_index / Retrieval.writeBm25Index) — ${e.getMessage}")
-          }
-          Plain(graft.operators.Retrieval.bm25IndexTopK(
-            ctx.spark, path, lower(TableRef(queriesRel), ctx), idCol, textCol,
-            k.toInt, k1, b))
-        case _ =>
-          throw new LoweringException(
-            "bm25_topk_index expects (index_path, queries_rel, id_col, text_col, k" +
-              "[, k1, b]) literals, e.g. bm25_topk_index('/tmp/bm25_idx', 'evalset', " +
-              "'doc_id', 'text', 5)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "keywords_tfidf" =>
-      // keywords_tfidf('corpus', 'id_col', 'text_col'[, k]) — per-doc
-      // top-k tf-idf terms (Retrieval.keywordsTfidf): the classic
-      // doc-labeling/boilerplate-spotting view; idf = ln(N/df), ties
-      // (tfidf desc, token).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          val k = rest.headOption match {
-            case Some(Some(n: Long)) if n >= 1 => n.toInt
-            case None => 5
-            case other => throw new LoweringException(
-              s"keywords_tfidf: k must be a positive integer literal, got '$other'")
-          }
-          Plain(graft.operators.Retrieval.keywordsTfidf(
-            lower(TableRef(corpus), ctx), idCol, textCol, k))
-        case _ =>
-          throw new LoweringException(
-            "keywords_tfidf expects (corpus, id_col, text_col[, k]) literals, " +
-              "e.g. keywords_tfidf('documents', 'doc_id', 'text', 5)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bpe_stats" =>
-      // bpe_stats('corpus', 'text_col', 'vocab_rel') — tokenizer-fitness
-      // report (operators/Bpe.withStats): corpus + n_bpe_tokens / n_bytes /
-      // fallback_bytes (OOV byte mass) / n_words / bpe_coverage / fertility
-      // — the decide-before-you-train numbers for a vocab on a corpus
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(vocabRel: String)) =>
-          val vocab = graft.operators.Bpe.loadVocab(lower(TableRef(vocabRel), ctx))
-          Plain(graft.operators.Bpe.withStats(lower(TableRef(corpus), ctx), textCol, vocab))
-        case _ =>
-          throw new LoweringException(
-            "bpe_stats expects (corpus, text_col, vocab_rel) literals — vocab_rel " +
-              "is a relation with a `token` string column, e.g. " +
-              "bpe_stats('documents', 'text', 'my_vocab')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_bloom" =>
-      // dedup_bloom('corpus', 'id_col', 'text_col'[, fpp[, expected_items]])
-      // — bloom-pruned EXACT dedup (operators/Dedup.bloomExactGroups): a
-      // "seen-twice" bloom pair routes definitively-unique rows around the
-      // shuffle; only bloom hits go through the exact groupBy recheck.
-      // Same rows as exact dedup for ANY fpp/sizing (the bloom only
-      // prunes); expected_items overrides the plan-statistics row estimate
-      // the bloom is sized from (never a count job either way). Analysis-
-      // only contexts get the schema through the lazy exact plan — the
-      // eager bloom build must not run on a compile/LSP/docs probe.
-      lowerDedupBloom(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_bloom_against" =>
-      // dedup_bloom_against('corpus', 'batch', 'id_col', 'text_col'
-      // [, fpp[, expected_items]]) — exact INCREMENTAL dedup of a new
-      // batch against an existing corpus (Dedup.bloomDedupAgainst): a
-      // corpus-membership bloom prunes the batch, an exact broadcast
-      // recheck kills the false positives; the corpus is scanned twice,
-      // shuffled never. expected_items overrides the plan-statistics
-      // sizing estimate (results identical either way). Analysis-only
-      // contexts get the schema through the lazy exact join — the eager
-      // bloom build must not run on a compile/LSP/docs probe.
-      // Output per batch row: (id, is_dup, dup_of).
-      lowerDedupBloomAgainst(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_bloom_index" =>
-      // dedup_bloom_index('corpus', 'id_col', 'text_col', '/out/path'
-      // [, fpp[, expected_items]]) — persist the corpus-membership bloom
-      // as a durable APPENDABLE artifact (Dedup.writeBloomIndex): one
-      // parquet row (bloom, n, num_bits, fpp). Recurring crawls probe it
-      // via dedup_bloom_against_index without rebuilding the filter and
-      // maintain it via dedup_bloom_index_append. Analysis-only contexts
-      // get the summary schema with no rows.
-      lowerDedupBloomIndex(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_bloom_index_append" =>
-      // dedup_bloom_index_append('/index/path', 'batch', 'id_col',
-      // 'text_col') — merge the batch's fingerprints into the persisted
-      // bloom (Dedup.bloomIndexAppend): one batch-sized scan, no corpus
-      // re-read; same-shape OR is lossless, so the appended filter equals
-      // a fresh build over corpus ∪ batch at the stored shape.
-      lowerDedupBloomIndexAppend(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_bloom_against_index" =>
-      // dedup_bloom_against_index('/index/path', 'corpus', 'batch',
-      // 'id_col', 'text_col') — dedup_bloom_against probing the PERSISTED
-      // bloom (Dedup.bloomDedupAgainstIndex): the filter is read back (one
-      // driver row), the exact recheck broadcasts candidates against the
-      // recheck corpus. Output per batch row: (id, is_dup, dup_of).
-      lowerDedupBloomAgainstIndex(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_spans" =>
-      // dedup_spans('corpus', 'id_col', 'text_col'[, span_len, min_docs])
-      // — exact-substring dedup (operators/Dedup.spanDedup): masks token
-      // spans repeated across >= min_docs documents
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String)) =>
-          Plain(graft.operators.Dedup.spanDedup(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(spanLen: Long), Some(minDocs: Long)) =>
-          Plain(graft.operators.Dedup.spanDedup(
-            lower(TableRef(corpus), ctx), idCol, textCol, spanLen.toInt, minDocs.toInt))
-        case _ =>
-          throw new LoweringException(
-            "dedup_spans expects (corpus, id_col, text_col[, span_len, min_docs]) " +
-              "literals, e.g. dedup_spans('documents', 'doc_id', 'text', 8, 2)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_phash" =>
-      // dedup_phash('corpus', 'id_col', 'image_col'[, hamming_r]) —
-      // near-duplicate IMAGE pairs via DCT perceptual hash
-      // (Dedup.phashPairs): one javax.imageio decode pass to a 63-bit
-      // pHash per asset, then the simhash family's chunk-pair-blocked
-      // candidate join — exact recall within hamming_r below the bucket
-      // cap, no cartesian. Output (id_a, id_b, hamming).
-      lowerDedupPhash(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_phash_against" =>
-      // dedup_phash_against('corpus', 'batch', 'id_col', 'image_col'
-      // [, hamming_r]) — INCREMENTAL image dedup (Dedup.phashAgainst):
-      // near-dup links from a new image batch into the static corpus via
-      // single-chunk pigeonhole blocking over the pHash — exact recall
-      // within hamming_r below the bucket cap, no cartesian. Output
-      // (batch_id, corpus_id, hamming).
-      lowerDedupPhashAgainst(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "ann_int8_index_append" =>
-      // ann_int8_index_append('/index/path', 'batch', 'id_col', 'vec_col')
-      // — INCREMENTAL maintenance of a persisted int8 ANN index
-      // (Similarity.int8IndexAppend): per-row-deterministic quantization
-      // makes the appended index row-identical to a full rebuild; the
-      // corpus is never re-read. Returns a 1-row summary; analysis-only
-      // contexts get the summary schema with no rows.
-      lowerInt8IndexAppend(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "ann_pq_index_append" =>
-      // ann_pq_index_append('/index/path', 'batch', 'id_col', 'vec_col') —
-      // INCREMENTAL maintenance of a persisted PQ index with the FROZEN
-      // persisted codebook (Similarity.pqIndexAppend — the FAISS add()
-      // semantic: a rebuild would reseed the codebook; the incremental
-      // contract is corpus ∪ batch encoded with the base corpus'
-      // codebook). Returns a 1-row summary; analysis-only contexts get
-      // the summary schema with no rows.
-      lowerPqIndexAppend(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dedup_semantic" =>
-      // dedup_semantic('corpus', 'id_col', 'vec_col'[, nlist, threshold])
-      // — SemDeDup (operators/Dedup.semDedup): keeps one representative per
-      // within-cluster semantic-duplicate group
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String)) =>
-          Plain(graft.operators.Dedup.semDedup(
-            lower(TableRef(corpus), ctx), idCol, vecCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String),
-            Some(nlist: Long), Some(threshold)) =>
-          val t = threshold match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"dedup_semantic: threshold must be a number, got '$other'")
-          }
-          Plain(graft.operators.Dedup.semDedup(
-            lower(TableRef(corpus), ctx), idCol, vecCol, nlist.toInt, t))
-        case _ =>
-          throw new LoweringException(
-            "dedup_semantic expects (corpus, id_col, vec_col[, nlist, threshold]) " +
-              "literals, e.g. dedup_semantic('embeddings', 'vec_id', 'embedding', 32, 0.9)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "split_by_cluster" =>
-      // split_by_cluster('corpus', 'id_col', 'text_col', train_fraction
-      //   [, jaccard_threshold]) — leakage-safe train/test split
-      // (operators/Sampling.splitByCluster): verified near-dup clusters
-      // (exact n-gram Jaccard pairs → connected components) land whole in
-      // one split; the assignment is the deterministic md5 threshold on
-      // the cluster-representative id
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(frac)) =>
-          val f = frac match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"split_by_cluster: train_fraction must be a number, got '$other'")
-          }
-          val docs = lower(TableRef(corpus), ctx)
-          val pairs = graft.operators.Dedup.ngramJaccardPairs(docs, idCol, textCol,
-            n = 2, threshold = 0.12)
-          Plain(graft.operators.Sampling.splitByCluster(docs, idCol, pairs, f))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(frac), Some(thr)) =>
-          def num(v: Any, what: String): Double = v match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"split_by_cluster: $what must be a number, got '$other'")
-          }
-          val docs = lower(TableRef(corpus), ctx)
-          val pairs = graft.operators.Dedup.ngramJaccardPairs(docs, idCol, textCol,
-            n = 2, threshold = num(thr, "jaccard_threshold"))
-          Plain(graft.operators.Sampling.splitByCluster(docs, idCol, pairs,
-            num(frac, "train_fraction")))
-        case _ =>
-          throw new LoweringException(
-            "split_by_cluster expects (corpus, id_col, text_col, train_fraction" +
-              "[, jaccard_threshold]) literals, e.g. " +
-              "split_by_cluster('documents', 'doc_id', 'text', 0.8, 0.12). " +
-              "NOTE: an aggressive jaccard_threshold can percolate the near-dup " +
-              "graph into one giant cluster whose single draw swings the realized " +
-              "train fraction — check split_by_cluster_stats(...) (max_cluster_size, " +
-              "frac_delta), and prefer split_by_cluster_pairs(...) to reuse pairs " +
-              "the pipeline already verified")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "split_by_cluster_pairs" =>
-      // split_by_cluster_pairs('corpus', 'id_col', 'pairs', train_fraction)
-      // — the leakage-safe split over a PRECOMPUTED pair relation (a model
-      // or table with id_a/id_b columns: dedup_* output, a persisted
-      // minhash-index pair dump, or any verified near-dup list). At 100 TB
-      // pair discovery is days of work — this form never re-runs it, and
-      // the corpus is scanned exactly once (the label left join).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(pairsRel: String),
-            Some(frac)) =>
-          val f = frac match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"split_by_cluster_pairs: train_fraction must be a number, got '$other'")
-          }
-          val pairs = lower(TableRef(pairsRel), ctx)
-          val cols = pairs.columns.map(_.toLowerCase).toSet
-          if (!cols.contains("id_a") || !cols.contains("id_b"))
-            throw new LoweringException(
-              s"split_by_cluster_pairs: relation '$pairsRel' must have id_a and " +
-                s"id_b columns (got ${pairs.columns.mkString(", ")})")
-          Plain(graft.operators.Sampling.splitByCluster(
-            lower(TableRef(corpus), ctx), idCol, pairs, f))
-        case _ =>
-          throw new LoweringException(
-            "split_by_cluster_pairs expects (corpus, id_col, pairs, train_fraction) " +
-              "literals where pairs names a relation with id_a/id_b columns, e.g. " +
-              "split_by_cluster_pairs('documents', 'doc_id', 'dup_pairs', 0.8)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "split_by_cluster_pairs_stats" =>
-      // split_by_cluster_pairs_stats('corpus', 'id_col', 'pairs', frac) —
-      // the percolation-guard statistics over a PRECOMPUTED pair relation
-      // (the split_by_cluster_stats twin of split_by_cluster_pairs)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(pairsRel: String),
-            Some(frac)) =>
-          val f = frac match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"split_by_cluster_pairs_stats: train_fraction must be a number, got '$other'")
-          }
-          val pairs = lower(TableRef(pairsRel), ctx)
-          val cols = pairs.columns.map(_.toLowerCase).toSet
-          if (!cols.contains("id_a") || !cols.contains("id_b"))
-            throw new LoweringException(
-              s"split_by_cluster_pairs_stats: relation '$pairsRel' must have id_a and " +
-                s"id_b columns (got ${pairs.columns.mkString(", ")})")
-          Plain(graft.operators.Sampling.splitByClusterStats(
-            lower(TableRef(corpus), ctx), idCol, pairs, f))
-        case _ =>
-          throw new LoweringException(
-            "split_by_cluster_pairs_stats expects (corpus, id_col, pairs, " +
-              "train_fraction) literals where pairs names a relation with id_a/id_b " +
-              "columns, e.g. split_by_cluster_pairs_stats('documents', 'doc_id', 'dup_pairs', 0.8)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "split_by_cluster_stats" =>
-      // split_by_cluster_stats('corpus', 'id_col', 'text_col', train_fraction
-      //   [, jaccard_threshold]) — one row of cluster/assignment statistics
-      // for the SAME inputs as split_by_cluster (Sampling.splitByClusterStats):
-      // the percolation guard — a max_cluster_size that is a material share
-      // of n_docs, or a frac_delta far from 0, means the pair threshold is
-      // percolating the near-dup graph and the split needs a stricter one.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(frac), rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          def num(v: Any, what: String): Double = v match {
-            case d: java.lang.Double => d.doubleValue()
-            case n: Number => n.doubleValue()
-            case other => throw new LoweringException(
-              s"split_by_cluster_stats: $what must be a number, got '$other'")
-          }
-          val thr = rest.headOption match {
-            case Some(Some(t)) => num(t, "jaccard_threshold")
-            case None => 0.12
-            case other => throw new LoweringException(
-              s"split_by_cluster_stats: jaccard_threshold must be a number, got '$other'")
-          }
-          val docs = lower(TableRef(corpus), ctx)
-          val pairs = graft.operators.Dedup.ngramJaccardPairs(docs, idCol, textCol,
-            n = 2, threshold = thr)
-          Plain(graft.operators.Sampling.splitByClusterStats(docs, idCol, pairs,
-            num(frac, "train_fraction")))
-        case _ =>
-          throw new LoweringException(
-            "split_by_cluster_stats expects (corpus, id_col, text_col, train_fraction" +
-              "[, jaccard_threshold]) literals, e.g. " +
-              "split_by_cluster_stats('documents', 'doc_id', 'text', 0.8, 0.12)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "minhash_index" =>
-      // minhash_index('corpus', 'id_col', 'text_col'[, num_hashes, shingle])
-      // — offline build of the persisted MinHash signature index
-      // (operators/Dedup.buildMinhashIndex): (id, sig array<long>), meant to
-      // be CTAS'd; later batches dedupe against it without re-shingling the
-      // corpus (dedup_incremental)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String)) =>
-          Plain(graft.operators.Dedup.buildMinhashIndex(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(k: Long), Some(sh: Long)) =>
-          Plain(graft.operators.Dedup.buildMinhashIndex(
-            lower(TableRef(corpus), ctx), idCol, textCol, k.toInt, sh.toInt))
-        case _ =>
-          throw new LoweringException(
-            "minhash_index expects (corpus, id_col, text_col[, num_hashes, shingle]) " +
-              "literals, e.g. minhash_index('documents', 'doc_id', 'text', 64, 2)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "minhash_index_append" =>
-      // minhash_index_append('/index/path', 'batch', 'id_col', 'text_col'
-      // [, num_hashes, shingle]) — INCREMENTAL maintenance of a persisted
-      // MinHash index (Dedup.minhashIndexAppend): the batch's signature
-      // rows (payload columns riding along) append to the index parquet —
-      // row-identical to a full rebuild over corpus ∪ batch, corpus never
-      // re-read. Returns a 1-row summary; analysis-only contexts get the
-      // summary schema with no rows (the bm25_index contract).
-      lowerMinhashIndexAppend(args, ctx)
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        (name.toLowerCase == "dedup_incremental" ||
-         name.toLowerCase == "dedup_incremental_pairs") =>
-      // dedup_incremental[_pairs]('batch', 'index', 'id_col', 'text_col'
-      //   [, threshold, num_hashes, bands, shingle])
-      // — incremental dedup of a NEW batch against a persisted minhash_index
-      // (file path or table): _pairs returns the (batch_id, corpus_id,
-      // est_jaccard) links; the plain form returns the batch rows with no
-      // near-dup in the corpus. (num_hashes, shingle) MUST match the index
-      // build (mismatched probes hash different band keys and find nothing).
-      {
-        val pairsOnly = name.toLowerCase.endsWith("_pairs")
-        def run(batch: String, index: String, idCol: String, textCol: String,
-            t: Double, k: Int, b: Int, sh: Int): LRes = {
-          val batchDf = lower(TableRef(batch), ctx)
-          val idxDf = lower(TableRef(index), ctx)
-          if (pairsOnly)
-            Plain(graft.operators.Dedup.minhashIndexPairs(
-              batchDf, idCol, textCol, idxDf, t, k, b, sh))
-          else
-            Plain(graft.operators.Dedup.dedupAgainstMinhashIndex(
-              batchDf, idCol, textCol, idxDf, t, k, b, sh))
-        }
-        args.map(constValue) match {
-          case List(Some(batch: String), Some(index: String),
-              Some(idCol: String), Some(textCol: String)) =>
-            run(batch, index, idCol, textCol, 0.5, 64, 16, 2)
-          case List(Some(batch: String), Some(index: String),
-              Some(idCol: String), Some(textCol: String), Some(threshold),
-              Some(k: Long), Some(b: Long), Some(sh: Long)) =>
-            val t = threshold match {
-              case n: Number => n.doubleValue()
-              case other => throw new LoweringException(
-                s"$name: threshold must be a number, got '$other'")
-            }
-            run(batch, index, idCol, textCol, t, k.toInt, b.toInt, sh.toInt)
-          case _ =>
-            throw new LoweringException(
-              s"$name expects (batch, index, id_col, text_col[, threshold, " +
-                s"num_hashes, bands, shingle]) literals, e.g. " +
-                s"$name('new_docs', '/data/minhash_idx.parquet', 'doc_id', 'text', 0.5, 64, 16, 2)")
-        }
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "jdbc" =>
-      // jdbc('url', 'table') — single-stream remote read; or the parallel
-      // form jdbc('url', 'table', partition_col, num_parts, lower, upper)
-      // (sources/Jdbc.readPartitioned: bounded-range queries per task — the
-      // scale path for fact-table ingest). The reference reaches external
-      // databases through its connector layer (wvlet-connector
-      // DBConnector.scala); here they are Spark JDBC data sources with
-      // filter/column pushdown into the remote query.
-      args.map(constValue) match {
-        case List(Some(url: String), Some(table: String)) =>
-          Plain(graft.sources.Jdbc.read(ctx.spark, url, table))
-        case List(Some(url: String), Some(table: String), Some(pc: String),
-            Some(np: Long), Some(lo: Long), Some(hi: Long)) =>
-          Plain(graft.sources.Jdbc.readPartitioned(
-            ctx.spark, url, table, pc, np.toInt, lo, hi))
-        case _ =>
-          throw new LoweringException(
-            "jdbc expects ('url', 'table') or ('url', 'table', partition_col, " +
-              "num_partitions, lower, upper) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "similarity_topk" =>
-      // similarity_topk('corpus', 'id_col', 'vec_col', k[, method]) —
-      // per-row cosine top-k neighbors (self-kNN join, self-matches
-      // excluded). method: 'brute' (exact, O(n²) — small corpora/oracles),
-      // 'lsh' | 'ivf' (the bucketed scale paths), 'int8' (quantized
-      // scoring, on-the-fly — operators/Similarity.int8BruteForceTopK).
-      // 'int8_index' | 'lsh_int8_index' read a PERSISTED quantized index
-      // instead: vec_col is a pre-quantized array<tinyint> column (built
-      // with ann_int8_index(...) and CTAS'd) — the float vector column is
-      // never scanned (PlanSpec-gated pruning; the 4×-smaller-index I/O
-      // saving is real, not just in-memory). Output:
-      // query_id, corpus_id, cos_sim (cos_q8 for int8 methods), rank.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String),
-            Some(k: Long), rest @ _*) if rest.lengthCompare(3) <= 0 =>
-          val method = rest.headOption match {
-            case Some(Some(m: String)) => m.toLowerCase
-            case None => "brute"
-            case other => throw new LoweringException(
-              s"similarity_topk: method must be a string literal, got '$other'")
-          }
-          // optional trailing args: (planes, tables) for the lsh-family
-          // methods — they MUST match the values the index/postings were
-          // built with (mismatched probes silently miss buckets) — or a
-          // single train_sample integer for the trained-codebook methods
-          // (Lloyd sample bound; default Similarity.PqTrainSampleDefault,
-          // effectively min(16384, corpus))
-          val trailing = rest.drop(1).toList
-          val isTrainedMethod = method == "pq_trained" || method == "ivf_pq_trained"
-          val trainSample: Int = trailing match {
-            case List(Some(n: Long)) if isTrainedMethod && n >= 1 => n.toInt
-            case List(x) if isTrainedMethod => throw new LoweringException(
-              s"similarity_topk: '$method' takes an optional positive train_sample " +
-                s"integer literal as its trailing arg, got '$x'")
-            case _ => graft.operators.Similarity.PqTrainSampleDefault
-          }
-          val lshParams: Option[(Int, Int)] = trailing match {
-            case Nil => None
-            case List(Some(_: Long)) if isTrainedMethod => None
-            case List(Some(p: Long), Some(t: Long)) => Some((p.toInt, t.toInt))
-            case other => throw new LoweringException(
-              s"similarity_topk: trailing args must be (planes, tables) integer " +
-                s"literals (lsh methods) or a train_sample integer (trained " +
-                s"methods), got '$other'")
-          }
-          val (planes, tables) = lshParams.getOrElse((10, 4))
-          if (lshParams.isDefined && !method.startsWith("lsh"))
-            throw new LoweringException(
-              s"similarity_topk: (planes, tables) only apply to lsh methods, not '$method'")
-          // LAZY: the path-based methods ('pq_index', 'lsh_int8_part') read
-          // `corpus` as a parquet PATH — resolving it as a table name here
-          // would prepend the base dir and fail before the match runs
-          lazy val df = lower(TableRef(corpus), ctx)
-          val sim = method match {
-            case "brute" => graft.operators.Similarity.bruteForceTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "lsh" => graft.operators.Similarity.lshTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt,
-              planes = planes, tables = tables)
-            case "ivf" => graft.operators.Similarity.ivfSeededTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "ivf_pq" => graft.operators.Similarity.ivfPqTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "ivf_pq_trained" => graft.operators.Similarity.ivfPqTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt,
-              subspaces = graft.operators.Similarity.PqTrainedSubspaces,
-              ksub = graft.operators.Similarity.PqTrainedKsub, trained = true,
-              trainSample = trainSample)
-            case "int8" => graft.operators.Similarity.int8BruteForceTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "pq" => graft.operators.Similarity.pqTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "pq_trained" =>
-              // Lloyd-trained PQ32x8 codebook (Similarity.trainedPqCodebook)
-              // — the production PQ tier: recall@5 ≥ 0.7 property-gated;
-              // same serving plan as 'pq' (codes scan + per-query ADC table)
-              graft.operators.Similarity.pqTopK(
-                df, idCol, vecCol, df, idCol, vecCol, k.toInt,
-                subspaces = graft.operators.Similarity.PqTrainedSubspaces,
-                ksub = graft.operators.Similarity.PqTrainedKsub, trained = true,
-                trainSample = trainSample)
-            case "pq_index" =>
-              // corpus must be a PATH to a persisted PQ index (written by
-              // Similarity.writePqIndex: codes parquet + "_codebook"
-              // sibling); vec_col names the CODES column. Self-kNN by
-              // symmetric distance — no float column in the serving path.
-              // Validated by the real contract — the codebook sibling must
-              // be readable — not by path shape (a '/'-free relative path
-              // is valid; a '/'-bearing table name is not; ADVICE r15).
-              try ctx.spark.read.parquet(corpus + "_codebook").schema
-              catch {
-                case e: org.apache.spark.sql.AnalysisException =>
-                  throw new LoweringException(
-                    s"similarity_topk 'pq_index' expects a path to a persisted " +
-                      s"PQ index: codes parquet at '$corpus' plus its codebook " +
-                      s"sibling at '${corpus}_codebook' (write both with " +
-                      s"ann_pq_index / Similarity.writePqIndex) — ${e.getMessage}")
-              }
-              val queries = ctx.spark.read.parquet(corpus)
-                .dropDuplicates(idCol).select(F.col(idCol), F.col(vecCol))
-              graft.operators.Similarity.pqIndexTopK(ctx.spark, corpus, idCol, vecCol,
-                queries, idCol, vecCol, k.toInt)
-            case "lsh_int8" => graft.operators.Similarity.lshTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt,
-              planes = planes, tables = tables, int8Scoring = true)
-            case "int8_index" => graft.operators.Similarity.int8IndexTopK(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt)
-            case "lsh_int8_index" => graft.operators.Similarity.lshTopKInt8Index(
-              df, idCol, vecCol, df, idCol, vecCol, k.toInt,
-              planes = planes, tables = tables)
-            case "lsh_int8_part" =>
-              // corpus must be a PATH to a bucket-partitioned posting index
-              // (written from Similarity.lshInt8IndexPostings with
-              // partitionBy("bucket_grp"), or the legacy bucket layout);
-              // self-kNN queries are the index's
-              // distinct (id, q8) rows, the scan is partition-pruned to the
-              // probe buckets
-              if (!corpus.matches("(?i).*\\.(parquet)$") && !corpus.contains("/"))
-                throw new LoweringException(
-                  "similarity_topk 'lsh_int8_part' expects a path to a " +
-                    "bucket-partitioned posting index (see ann_int8_index + " +
-                    "Similarity.lshInt8IndexPostings)")
-              val queries = ctx.spark.read.parquet(corpus)
-                .dropDuplicates(idCol).select(F.col(idCol), F.col(vecCol))
-              graft.operators.Similarity.lshTopKPartitionedIndex(
-                corpus, idCol, vecCol, queries, idCol, vecCol, k.toInt,
-                planes = planes, tables = tables)
-            case other => throw new LoweringException(
-              s"similarity_topk: unknown method '$other' (expected brute, lsh, ivf, " +
-                "int8, pq, pq_trained, pq_index, ivf_pq, ivf_pq_trained, lsh_int8, " +
-                "int8_index, lsh_int8_index, lsh_int8_part)")
-          }
-          Plain(sim)
-        case _ =>
-          throw new LoweringException(
-            "similarity_topk expects (corpus, id_col, vec_col, k[, method[, planes, " +
-              "tables]]) literals, e.g. similarity_topk('embeddings', 'vec_id', " +
-              "'embedding', 5, 'int8')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "ann_int8_index" =>
-      // ann_int8_index('corpus', 'id_col', 'vec_col') — one-pass build of
-      // the persistable int8 ANN index (id, scale double, q8 array<tinyint>;
-      // operators/Similarity.buildInt8Index). CTAS the result once, then
-      // query it with similarity_topk(..., 'int8_index' | 'lsh_int8_index')
-      // — subsequent scans read the 4×-smaller q8 column, never the floats.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String)) =>
-          Plain(graft.operators.Similarity.buildInt8Index(
-            lower(TableRef(corpus), ctx), idCol, vecCol))
-        case _ =>
-          throw new LoweringException(
-            "ann_int8_index expects (corpus, id_col, vec_col) literals, " +
-              "e.g. ann_int8_index('embeddings', 'vec_id', 'embedding')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "ann_pq_index" =>
-      // ann_pq_index('corpus', 'id_col', 'vec_col', '/out/path'[, subspaces,
-      // ksub]) — WRITES the persisted PQ index (payload-bearing codes
-      // parquet + "_codebook" sibling; Similarity.writePqIndex — two
-      // outputs, which a plain CTAS of a returned frame cannot express) and
-      // returns a 1-row summary. Query the path with
-      // similarity_topk('<path>', '<id_col>', 'codes', k, 'pq_index').
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String),
-            Some(path: String)) =>
-          Plain(pqIndexWriteSummary(ctx, corpus, idCol, vecCol, path, 16, 64,
-            trained = false))
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String),
-            Some(path: String), Some(m: Long), Some(ks: Long), rest @ _*)
-            if m >= 1 && ks >= 2 && rest.lengthCompare(2) <= 0 =>
-          val trained = rest.headOption match {
-            case Some(Some("trained")) => true
-            case Some(Some("seeded")) | None => false
-            case other => throw new LoweringException(
-              s"ann_pq_index: codebook mode must be 'trained' or 'seeded', got '$other'")
-          }
-          // optional trailing Lloyd train_sample (trained mode only;
-          // default Similarity.PqTrainSampleDefault = min(16384, corpus))
-          val trainSample = rest.drop(1).headOption match {
-            case Some(Some(n: Long)) if trained && n >= 1 => n.toInt
-            case None => graft.operators.Similarity.PqTrainSampleDefault
-            case other => throw new LoweringException(
-              s"ann_pq_index: train_sample must be a positive integer literal " +
-                s"following the 'trained' mode, got '$other'")
-          }
-          Plain(pqIndexWriteSummary(ctx, corpus, idCol, vecCol, path, m.toInt, ks.toInt,
-            trained, trainSample))
-        case _ =>
-          throw new LoweringException(
-            "ann_pq_index expects (corpus, id_col, vec_col, out_path[, subspaces, ksub" +
-              "[, 'trained'|'seeded'[, train_sample]]]) literals, e.g. " +
-              "ann_pq_index('embeddings', 'vec_id', 'embedding', '/tmp/pq_idx', 16, 64)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "ann_lsh_postings" =>
-      // ann_lsh_postings('index', 'id_col', 'q8_col'[, planes, tables]) —
-      // sign-bit bucket postings of a quantized index
-      // (Similarity.lshInt8IndexPostings). CTAS the result with
-      // `partition by bucket_grp`, then query it with
-      // similarity_topk('<path>', 'id', 'q8', k, 'lsh_int8_part') for a
-      // partition-pruned index lookup (defaults planes=10, tables=4 match
-      // the query side's).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(q8Col: String)) =>
-          Plain(graft.operators.Similarity.lshInt8IndexPostings(
-            lower(TableRef(corpus), ctx), idCol, q8Col))
-        case List(Some(corpus: String), Some(idCol: String), Some(q8Col: String),
-            Some(planes: Long), Some(tables: Long)) =>
-          Plain(graft.operators.Similarity.lshInt8IndexPostings(
-            lower(TableRef(corpus), ctx), idCol, q8Col, planes.toInt, tables.toInt))
-        case _ =>
-          throw new LoweringException(
-            "ann_lsh_postings expects (index, id_col, q8_col[, planes, tables]) " +
-              "literals, e.g. ann_lsh_postings('idx.parquet', 'vec_id', 'q8')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "each_top_k" =>
-      // each_top_k(relation, k, group_col, score_col) — the Hivemall UDTF
-      // pattern (top-k rows per group by score) as a first-class table
-      // function: all child columns + `rank`, rank <= k. Same semantics as
-      // the SQL shim's window-rank rewrite (SqlDialect.convertEachTopK):
-      // rank() keeps boundary ties, matching the SQL form. Relation and
-      // column arguments take bare identifiers or string literals; the
-      // relation resolves through the same rules as `from <name>`, so
-      // tables, files, and in-scope models (subqueries via
-      // `model m = { … }`) all work.
-      def nameArg(e: Expr): Option[String] = e match {
-        case StringLit(s) => Some(s)
-        case Ident(n) => Some(n)
-        case _ => None
-      }
-      args match {
-        case List(relE, kE, grpE, scoreE) =>
-          (nameArg(relE), constValue(kE), nameArg(grpE), nameArg(scoreE)) match {
-            case (Some(rel), Some(k: Long), Some(grp), Some(score)) =>
-              val df = lower(TableRef(rel), ctx)
-              def resolve(c: String) = df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-                throw new LoweringException(s"each_top_k: '$c' is not a column of $rel"))
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(F.col(resolve(grp))).orderBy(F.col(resolve(score)).desc)
-              Plain(df.withColumn("rank", F.rank().over(w)).filter(F.col("rank") <= k))
-            case _ =>
-              throw new LoweringException(
-                "each_top_k expects (relation, k, group_col, score_col), e.g. " +
-                  "each_top_k(events, 3, event_type, value)")
-          }
-        case _ =>
-          throw new LoweringException(
-            "each_top_k expects (relation, k, group_col, score_col), e.g. " +
-              "each_top_k(events, 3, event_type, value)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "token_stats" =>
-      // token_stats('corpus', 'id_col', 'text_col') — per-doc corpus
-      // token-frequency features (operators/CorpusStats.scala)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String)) =>
-          Plain(graft.operators.CorpusStats.tokenDocFrequencyFeatures(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        case _ =>
-          throw new LoweringException(
-            "token_stats expects (corpus, id_col, text_col) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "select_token_budget" =>
-      // select_token_budget('corpus', 'id_col', 'text_col', budget_tokens)
-      // — deterministic token-budget prefix selection
-      // (Sampling.selectTokenBudget): keep the md5-ordered corpus prefix
-      // whose cumulative token count fits the budget (distributed
-      // prefix-sum, no single-partition window)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long)) =>
-          Plain(graft.operators.Sampling.selectTokenBudget(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long), Some(vocabRel: String)) =>
-          // optional vocab relation: the budget unit becomes BPE tokens
-          val vocab = graft.operators.Bpe.loadVocab(lower(TableRef(vocabRel), ctx))
-          Plain(graft.operators.Sampling.selectTokenBudget(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget,
-            tokenCounter = Some(graft.operators.Bpe.counter(vocab))))
-        case _ =>
-          throw new LoweringException(
-            "select_token_budget expects (corpus, id_col, text_col, budget_tokens" +
-              "[, vocab_rel]) literals, e.g. " +
-              "select_token_budget('documents', 'doc_id', 'text', 50000)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "select_token_budget_by" =>
-      // select_token_budget_by('corpus', 'id_col', 'text_col', budget,
-      // 'order_col'[, vocab_rel]) — the QUALITY-FIRST budget cut
-      // (Sampling.selectTokenBudgetBy): keep the highest-`order_col` docs
-      // whose cumulative token count fits the budget; range-bucketed
-      // prefix-sum, boundary-independent output, no single-partition window
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long), Some(orderCol: String)) =>
-          Plain(graft.operators.Sampling.selectTokenBudgetBy(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget, orderCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(budget: Long), Some(orderCol: String), Some(vocabRel: String)) =>
-          val vocab = graft.operators.Bpe.loadVocab(lower(TableRef(vocabRel), ctx))
-          Plain(graft.operators.Sampling.selectTokenBudgetBy(
-            lower(TableRef(corpus), ctx), idCol, textCol, budget, orderCol,
-            tokenCounter = Some(graft.operators.Bpe.counter(vocab))))
-        case _ =>
-          throw new LoweringException(
-            "select_token_budget_by expects (corpus, id_col, text_col, budget_tokens, " +
-              "order_col[, vocab_rel]) literals, e.g. " +
-              "select_token_budget_by('documents', 'doc_id', 'text', 50000, 'quality')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "bpe_train" =>
-      // bpe_train('corpus', 'text_col', n_merges[, max_word_types
-      // [, 'gpt2'|'words']]) — exact BPE merge learning
-      // (BpeTrain.bpeTrain): ONE corpus scan to the word-frequency table,
-      // then the incremental merge loop runs exactly over that bounded
-      // table driver-side; deterministic lexicographic tie-break. The
-      // optional pretok mode 'gpt2' segments with the GPT-2 pattern
-      // (contractions, leading spaces, punctuation runs, case kept) so
-      // trained vocabs match what HF tokenizers learn. Output (token,
-      // pair_count, rank) feeds bpe_count / select_token_budget /
-      // pack_sequences as their vocab_rel.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(n: Long)) =>
-          Plain(graft.operators.BpeTrain.bpeTrain(
-            lower(TableRef(corpus), ctx), textCol, n.toInt))
-        case List(Some(corpus: String), Some(textCol: String), Some(n: Long),
-            Some(maxTypes: Long)) =>
-          Plain(graft.operators.BpeTrain.bpeTrain(
-            lower(TableRef(corpus), ctx), textCol, n.toInt, maxTypes.toInt))
-        case List(Some(corpus: String), Some(textCol: String), Some(n: Long),
-            Some(maxTypes: Long), Some(pretok: String))
-            if pretok == "gpt2" || pretok == "words" =>
-          Plain(graft.operators.BpeTrain.bpeTrain(
-            lower(TableRef(corpus), ctx), textCol, n.toInt, maxTypes.toInt, pretok))
-        case _ =>
-          throw new LoweringException(
-            "bpe_train expects (corpus, text_col, n_merges[, max_word_types" +
-              "[, 'gpt2'|'words']]) literals, e.g. bpe_train('documents', 'text', 200)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "build_vocab" =>
-      // build_vocab('corpus', 'text_col', size) — deterministic top-K
-      // token vocabulary (token, cnt, rank), rank by (count desc, token):
-      // the builder whose output feeds bpe_count / select_token_budget /
-      // pack_sequences as their vocab_rel (CorpusStats.buildVocab)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(size: Long))
-            if size > 0 =>
-          Plain(graft.operators.CorpusStats.buildVocab(
-            lower(TableRef(corpus), ctx), textCol, size.toInt))
-        case _ =>
-          throw new LoweringException(
-            "build_vocab expects (corpus, text_col, size) literals, e.g. " +
-              "build_vocab('documents', 'text', 1000)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "top_ngrams" =>
-      // top_ngrams('corpus', 'text_col', n, k) — heavy-hitter n-grams
-      // (CorpusStats.topNgrams): the k most frequent space-joined n-grams,
-      // (count desc, ngram) rank — the C4/Gopher boilerplate-template
-      // discovery pass (feed offenders back as filters or dedup keys).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String), Some(n: Long),
-            Some(k: Long)) if n >= 1 && n <= 8 && k > 0 =>
-          Plain(graft.operators.CorpusStats.topNgrams(
-            lower(TableRef(corpus), ctx), textCol, n.toInt, k.toInt))
-        case _ =>
-          throw new LoweringException(
-            "top_ngrams expects (corpus, text_col, n in 1..8, k) literals, " +
-              "e.g. top_ngrams('documents', 'text', 3, 25)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "vocab_profile" =>
-      // vocab_profile('corpus', 'text_col'[, top_k]) — one-row Zipf health
-      // profile (CorpusStats.vocabProfile): total/distinct/hapax token
-      // counts + topK occurrence coverage
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(textCol: String)) =>
-          Plain(graft.operators.CorpusStats.vocabProfile(
-            lower(TableRef(corpus), ctx), textCol))
-        case List(Some(corpus: String), Some(textCol: String), Some(k: Long)) if k > 0 =>
-          Plain(graft.operators.CorpusStats.vocabProfile(
-            lower(TableRef(corpus), ctx), textCol, k.toInt))
-        case _ =>
-          throw new LoweringException(
-            "vocab_profile expects (corpus, text_col[, top_k]) literals, e.g. " +
-              "vocab_profile('documents', 'text', 100)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "perplexity_score" =>
-      // perplexity_score('corpus', 'id_col', 'text_col') — unigram-LM mean
-      // negative log-likelihood per doc (CorpusStats.unigramNll): the
-      // CCNet-style perplexity quality filter, model fit on the corpus
-      // itself; cut high (rare-token garble) and low (boilerplate) tails
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String)) =>
-          Plain(graft.operators.CorpusStats.unigramNll(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        case _ =>
-          throw new LoweringException(
-            "perplexity_score expects (corpus, id_col, text_col) literals, e.g. " +
-              "perplexity_score('documents', 'doc_id', 'text')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "perplexity_score_bigram" =>
-      // perplexity_score_bigram('corpus', 'id_col', 'text_col'[, alpha,
-      // min_count]) — bigram-LM mean NLL with Stupid Backoff
-      // (CorpusStats.bigramNll): context-aware quality filter that catches
-      // common-token word salad the unigram score cannot see; alpha is the
-      // backoff penalty (0.4), min_count the bigram-model pruning
-      // threshold (2 — what bounds the model table at scale AND keeps the
-      // backoff branch live under self-fit)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String)) =>
-          Plain(graft.operators.CorpusStats.bigramNll(
-            lower(TableRef(corpus), ctx), idCol, textCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(alpha: Number)) if alpha.doubleValue() > 0.0 && alpha.doubleValue() <= 1.0 =>
-          Plain(graft.operators.CorpusStats.bigramNll(
-            lower(TableRef(corpus), ctx), idCol, textCol, alpha.doubleValue()))
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(alpha: Number), Some(minCount: Long))
-            if alpha.doubleValue() > 0.0 && alpha.doubleValue() <= 1.0 && minCount >= 1 =>
-          Plain(graft.operators.CorpusStats.bigramNll(
-            lower(TableRef(corpus), ctx), idCol, textCol, alpha.doubleValue(), minCount))
-        // 'kn' mode: interpolated Kneser-Ney (CorpusStats.bigramNllKn) —
-        // the quality-reference smoothing next to web-scale Stupid
-        // Backoff; the trailing numbers are (discount in (0,1), min_count)
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some("kn"), rest @ _*) if rest.lengthCompare(2) <= 0 =>
-          val (discount, minCount) = rest.toList match {
-            case Nil => (0.75, 2L)
-            case List(Some(dd: Number))
-                if dd.doubleValue() > 0.0 && dd.doubleValue() < 1.0 =>
-              (dd.doubleValue(), 2L)
-            case List(Some(dd: Number), Some(mc: Long))
-                if dd.doubleValue() > 0.0 && dd.doubleValue() < 1.0 && mc >= 1 =>
-              (dd.doubleValue(), mc)
-            case other => throw new LoweringException(
-              s"perplexity_score_bigram 'kn': trailing args must be (discount in " +
-                s"(0,1)[, min_count >= 1]) literals, got '$other'")
-          }
-          Plain(graft.operators.CorpusStats.bigramNllKn(
-            lower(TableRef(corpus), ctx), idCol, textCol, discount, minCount))
-        case _ =>
-          throw new LoweringException(
-            "perplexity_score_bigram expects (corpus, id_col, text_col[, alpha in (0,1], " +
-              "min_count >= 1]) or (corpus, id_col, text_col, 'kn'[, discount, " +
-              "min_count]) literals, e.g. " +
-              "perplexity_score_bigram('documents', 'doc_id', 'text', 0.4, 2)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dsir_weight" =>
-      // dsir_weight('corpus', 'id_col', 'text_col', 'target_rel'
-      // [, 'target_text_col'][, 'unigram'|'bigram']) — DSIR log importance
-      // weight (Sampling.dsirWeight): hashed-n-gram multinomials fit on
-      // target and raw corpus, per-doc Σ ln(p_target/p_raw); 'bigram'
-      // adds hashed adjacent pairs to the feature bag (the paper's
-      // feature set). High = looks like the target; compose with
-      // select_token_budget_by for the cut.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(targetRel: String), rest @ _*) if rest.lengthCompare(2) <= 0 =>
-          // a trailing 'unigram'/'bigram' literal is the feature mode; any
-          // other single trailing string is the target text column. A
-          // target column literally NAMED 'unigram'/'bigram' is shadowed
-          // in the one-arg form — use the unambiguous two-arg form
-          // (target_text_col, features), e.g. (..., 'unigram', 'unigram')
-          val (targetText, feats) = rest.toList match {
-            case Nil => (textCol, "unigram")
-            case List(Some(f: String)) if f == "unigram" || f == "bigram" =>
-              (textCol, f)
-            case List(Some(t: String)) => (t, "unigram")
-            case List(Some(t: String), Some(f: String))
-                if f == "unigram" || f == "bigram" => (t, f)
-            case other => throw new LoweringException(
-              s"dsir_weight: trailing args must be ([target_text_col,] " +
-                s"'unigram'|'bigram') literals, got '$other'. A single trailing " +
-                "string equal to 'unigram'/'bigram' is always read as the feature " +
-                "mode — for a target text column with that literal name, pass the " +
-                "two-arg form (target_text_col, features)")
-          }
-          Plain(graft.operators.Sampling.dsirWeight(
-            lower(TableRef(corpus), ctx), idCol, textCol,
-            lower(TableRef(targetRel), ctx), targetText, feats))
-        case _ =>
-          throw new LoweringException(
-            "dsir_weight expects (corpus, id_col, text_col, target_rel" +
-              "[, target_text_col][, 'unigram'|'bigram']) literals, e.g. " +
-              "dsir_weight('documents', 'doc_id', 'text', 'reference_docs')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "dsir_sample" =>
-      // dsir_sample('corpus', 'id_col', 'text_col', 'target_rel', k
-      // [, 'seed'[, 'target_text_col']]) — DSIR's Gumbel-top-k importance
-      // RESAMPLING (Sampling.dsirSample): keep the k docs with the largest
-      // dsir_weight + seeded portable Gumbel noise (samples ∝ the
-      // importance weights, without replacement). target_text_col defaults
-      // to text_col (dsir_weight parity; positional after seed, so the two
-      // string args never shadow each other).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(targetRel: String), Some(k: Long), rest @ _*)
-            if k > 0 && rest.lengthCompare(2) <= 0 =>
-          val seed = rest.headOption match {
-            case Some(Some(s: String)) => s
-            case None => "dsir"
-            case other => throw new LoweringException(
-              s"dsir_sample: seed must be a string literal, got '$other'")
-          }
-          val targetText = rest.drop(1).headOption match {
-            case Some(Some(t: String)) => t
-            case None => textCol
-            case other => throw new LoweringException(
-              s"dsir_sample: target_text_col must be a string literal, got '$other'")
-          }
-          Plain(graft.operators.Sampling.dsirSample(
-            lower(TableRef(corpus), ctx), idCol, textCol,
-            lower(TableRef(targetRel), ctx), targetText, k.toInt, seed))
-        case _ =>
-          throw new LoweringException(
-            "dsir_sample expects (corpus, id_col, text_col, target_rel, k" +
-              "[, seed[, target_text_col]]) literals, e.g. dsir_sample('documents', " +
-              "'doc_id', 'text', 'reference_docs', 100)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "prototypicality_score" =>
-      // prototypicality_score('corpus', 'id_col', 'vec_col'[, nlist]) —
-      // SSL-prototypes pruning metric (Similarity.prototypicalityScore):
-      // cosine of each embedding to its own seeded-cluster prototype; high
-      // = prototypical/easy, low = hard/outlier (Sorscher et al. 2022's
-      // pruning axis).
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(vecCol: String),
-            rest @ _*) if rest.lengthCompare(1) <= 0 =>
-          val nlist = rest.headOption match {
-            case Some(Some(n: Long)) if n > 0 => n.toInt
-            case None => 32
-            case other => throw new LoweringException(
-              s"prototypicality_score: nlist must be a positive integer literal, got '$other'")
-          }
-          Plain(graft.operators.Similarity.prototypicalityScore(
-            lower(TableRef(corpus), ctx), idCol, vecCol, nlist))
-        case _ =>
-          throw new LoweringException(
-            "prototypicality_score expects (corpus, id_col, vec_col[, nlist]) " +
-              "literals, e.g. prototypicality_score('embeddings', 'vec_id', 'embedding', 32)")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "quality_classifier_score" =>
-      // quality_classifier_score('corpus', 'id_col', 'text_col',
-      // 'pos_rel', 'neg_rel') — logistic quality classifier over hashed
-      // token features (QualityClassifier): trained driver-side on the
-      // BOUNDED pos/neg labeled sets with fixed iterations and pinned
-      // order (deterministic, oracle-replayable), scored as one
-      // plan-shipped-weights pass over the corpus. The GPT-3/LLaMA third
-      // net after heuristics and perplexity.
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(textCol: String),
-            Some(posRel: String), Some(negRel: String)) =>
-          Plain(graft.operators.QualityClassifier.qualityClassifierScore(
-            lower(TableRef(corpus), ctx), idCol, textCol,
-            lower(TableRef(posRel), ctx), lower(TableRef(negRel), ctx)))
-        case _ =>
-          throw new LoweringException(
-            "quality_classifier_score expects (corpus, id_col, text_col, pos_rel, " +
-              "neg_rel) literals, e.g. quality_classifier_score('documents', " +
-              "'doc_id', 'text', 'good_docs', 'boilerplate_docs')")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "decode_images" =>
-      // decode_images('corpus', 'id_col', 'payload_col'[, hist_buckets]) —
-      // REAL javax.imageio decode to width/height/mean-luminance/histogram
-      // (operators/Multimodal.decodeImages; corrupt payloads yield
-      // decoded=false rows, never errors)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String)) =>
-          Plain(graft.operators.Multimodal.decodeImages(
-            lower(TableRef(corpus), ctx), idCol, payloadCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String),
-            Some(buckets: Long)) =>
-          Plain(graft.operators.Multimodal.decodeImages(
-            lower(TableRef(corpus), ctx), idCol, payloadCol, buckets.toInt))
-        case _ =>
-          throw new LoweringException(
-            "decode_images expects (corpus, id_col, payload_col[, hist_buckets]) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "decode_audio" =>
-      // decode_audio('corpus', 'id_col', 'payload_col') — REAL
-      // javax.sound.sampled WAV decode to rate/channels/duration/RMS/
-      // zero-crossings (operators/Multimodal.decodeAudio)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String)) =>
-          Plain(graft.operators.Multimodal.decodeAudio(
-            lower(TableRef(corpus), ctx), idCol, payloadCol))
-        case _ =>
-          throw new LoweringException(
-            "decode_audio expects (corpus, id_col, payload_col) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "decode_video" =>
-      // decode_video('corpus', 'id_col', 'payload_col'[, stride, max_frames])
-      // — REAL AVI frame decode, one row per sampled frame
-      // (operators/Multimodal.decodeVideoFrames)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String)) =>
-          Plain(graft.operators.Multimodal.decodeVideoFrames(
-            lower(TableRef(corpus), ctx), idCol, payloadCol))
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String),
-            Some(stride: Long), Some(maxF: Long)) =>
-          if (stride < 1) throw new LoweringException(
-            s"decode_video stride must be >= 1 (got $stride)")
-          if (maxF < 1) throw new LoweringException(
-            s"decode_video max_frames must be >= 1 (got $maxF)")
-          Plain(graft.operators.Multimodal.decodeVideoFrames(
-            lower(TableRef(corpus), ctx), idCol, payloadCol, stride.toInt, maxF.toInt))
-        case _ =>
-          throw new LoweringException(
-            "decode_video expects (corpus, id_col, payload_col[, stride, max_frames]) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "resize_images" =>
-      // resize_images('corpus', 'id_col', 'payload_col', w, h) — decode,
-      // bilinear-resize, re-encode PNG (operators/Multimodal.resizeImages)
-      args.map(constValue) match {
-        case List(Some(corpus: String), Some(idCol: String), Some(payloadCol: String),
-            Some(w: Long), Some(h: Long)) =>
-          Plain(graft.operators.Multimodal.resizeImages(
-            lower(TableRef(corpus), ctx), idCol, payloadCol, w.toInt, h.toInt))
-        case _ =>
-          throw new LoweringException(
-            "resize_images expects (corpus, id_col, payload_col, width, height) literals")
-      }
-
-    case ModelRef(name, args) if !ctx.models.contains(name) &&
-        name.toLowerCase == "range" =>
-      // builtin table function: range(n) / range(start, end[, step]) → id
-      val vals = args.map(a => constValue(a) match {
-        case Some(v: Long) => v
-        case _ => throw new LoweringException("range() arguments must be integer literals")
-      })
-      val df = vals match {
-        case List(n) => ctx.spark.range(n)
-        case List(s, e) => ctx.spark.range(s, e)
-        case List(s, e, st) => ctx.spark.range(s, e, st)
-        case _ => throw new LoweringException("range() takes 1-3 arguments")
-      }
-      Plain(df.toDF("id"))
+    case ModelRef(name, args) if !ctx.models.contains(name) && TableFunctions.get(name).isDefined =>
+      Plain(TableFunctions.lower(TableFunctions.get(name).get, args, ctx))
 
     case ModelRef(name, args) =>
       val m = ctx.models.getOrElse(name,
@@ -3012,8 +1093,19 @@ object Lowering {
             else ctx.spark.sql(translated)
         })
     case RawJson(json) =>
-      import ctx.spark.implicits._
-      Plain(ctx.spark.read.json(ctx.spark.createDataset(Seq(json))))
+      // schema inferred from the literal on the driver (a local relation, so
+      // compiling the query runs no schema-inference job)
+      val spark = ctx.spark
+      import spark.implicits._
+      val one = Seq(json).toDF("json")
+      val parsed = DataType.fromDDL(
+        one.select(F.schema_of_json(F.lit(json))).head().getString(0)) match {
+        case t @ ArrayType(_: StructType, _) =>
+          one.select(F.explode(F.from_json(F.col("json"), t)).as("r")).select("r.*")
+        case t: StructType => one.select(F.from_json(F.col("json"), t).as("r")).select("r.*")
+        case _ => spark.read.json(Seq(json).toDS())
+      }
+      Plain(parsed)
     case EmptyRelation => Plain(ctx.spark.range(1).toDF("__dummy"))
     case v: Values => Plain(lowerValues(v, ctx))
     case u: UnnestRel => Plain(lowerUnnest(u, ctx))
@@ -3751,50 +1843,6 @@ object Lowering {
         builtin.union(user)
       case other => throw new LoweringException(s"unsupported show target: $other")
     }
-  }
-
-  /** Footer metadata rows for a parquet file or directory of part files.
-    * Relative paths resolve against basePath; when a test corpus addresses
-    * a path by its repo-relative spelling, leading segments are stripped
-    * until a basePath-relative suffix exists. */
-  private def parquetMetadata(path0: String, ctx: Context): DataFrame = {
-    def candidates(p: String): Seq[String] = {
-      val base = ctx.basePath.stripSuffix("/")
-      if (p.startsWith("/")) Seq(p)
-      else {
-        val segs = p.split('/')
-        Seq(p) ++ (if (base.isEmpty) Nil
-        else segs.indices.map(i => s"$base/${segs.drop(i).mkString("/")}"))
-      }
-    }
-    val resolved = candidates(path0)
-      .find(p => new java.io.File(p).exists())
-      .getOrElse(throw new LoweringException(s"parquet_metadata: '$path0' not found"))
-    val f = new java.io.File(resolved)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(x => x.getName.endsWith(".parquet") &&
-          !x.getName.startsWith(".") && !x.getName.startsWith("_")).sortBy(_.getName)
-      else Array(f)
-    import scala.jdk.CollectionConverters._
-    val conf = ctx.spark.sparkContext.hadoopConfiguration
-    val rows: Seq[(String, Long, Long, String, String, Long)] = files.toSeq.flatMap { file =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.getAbsolutePath), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        blocks.zipWithIndex.flatMap { case (b, gi) =>
-          b.getColumns.asScala.zipWithIndex.map { case (c, ci) =>
-            (file.getName, gi.toLong, ci.toLong,
-              c.getPath.toDotString, c.getCodec.name(), c.getValueCount)
-          }
-        }.toSeq
-      } finally reader.close()
-    }
-    import ctx.spark.implicits._
-    rows.toDF("file_name", "row_group_id", "column_id", "path_in_schema",
-      "compression", "num_values")
   }
 
   private def readFile(path: String, ctx: Context): DataFrame = {

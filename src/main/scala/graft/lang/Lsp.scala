@@ -314,15 +314,10 @@ object Lsp {
     }
   }
 
-  /** Native table functions, completable in relation position alongside
-    * table names: DERIVED from the Lowering dispatch registry (plus
-    * `unnest`, which lowers through its own UnnestRel node rather than a
-    * ModelRef native). Hand-maintained copies of this list went stale
-    * twice (r13/r14); deriving it makes staleness structurally
-    * impossible — TableFunctionRegistrySpec pins the registry to the
-    * dispatch cases, and LspSpec asserts every registry name completes. */
+  /** Native table functions (plus `unnest`, which lowers through its own
+    * UnnestRel node), completable in relation position. */
   private val tableFunctions: Seq[CompletionItem] =
-    (Lowering.nativeTableFunctions :+ "unnest")
+    (TableFunctions.entries.map(_.name) :+ "unnest")
       .map(CompletionItem(_, "table_function"))
 
   /** Table names completable in relation position: `dir`'s parquet tables

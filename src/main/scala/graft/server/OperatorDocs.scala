@@ -2,29 +2,12 @@ package graft.server
 
 import org.apache.spark.sql.SparkSession
 
-/** The native-table-function reference page — GENERATED, never
-  * hand-maintained (r16 verdict #8: the registry spans 60+ operators
-  * across 10 families; a hand-written list would rot like the completion
-  * list did in r13/r14). Every column is derived structurally:
-  *
-  *   - names: `Lowering.nativeTableFunctions` (itself spec-pinned to the
-  *     dispatch cases by TableFunctionRegistrySpec);
-  *   - args + example: probed FROM THE DISPATCH — each function is
-  *     compiled with zero args in analysis-only mode and the signature is
-  *     parsed out of its own `expects (…) literals … e.g. …` error (the
-  *     text a user sees; zero-arg functions like wv_tables compile and
-  *     report `()`);
-  *   - output schema: the example itself is compiled (analysis-only, no
-  *     execution side effects) against the served tables, with alias
-  *     models for the placeholder relations the examples mention;
-  *   - oracle rows: QueryCatalog.queryWvTexts scanned for calls of the
-  *     function — the wv-surface correctness rows that gate it;
-  *   - scale exponent: those rows' entries in BENCH_SCALE.json (absent
-  *     file → column omitted).
-  *
-  * OperatorDocsSpec pins the page to the registry (every registry name
-  * present, every entry carrying a parsed signature), so the page cannot
-  * drift from the dispatch without failing the build. */
+/** The native-table-function reference page, built from the registry
+  * (graft.lang.TableFunctions): each entry's name, signature and example;
+  * its output schema from compiling the example (compile-only, with the
+  * registry's example relations in scope); the wv-surface oracle rows that
+  * call it (QueryCatalog.queryWvTexts) or are named for it; and those rows'
+  * scale exponents from BENCH_SCALE.json (absent file → column omitted). */
 object OperatorDocs {
 
   final case class OpDoc(
@@ -37,25 +20,13 @@ object OperatorDocs {
 
   private val cache = scala.collection.concurrent.TrieMap.empty[String, Seq[OpDoc]]
 
-  /** Alias models for the placeholder relations the dispatch examples
-    * reference, so the schema probe can lower them against the served
-    * tables. Purely analysis-time; missing ones just cost that example
-    * its schema column. */
-  private val preamble: String =
-    """model trainset = { from documents }
-      |model evalset = { from documents where doc_id < 3 }
-      |model reference_docs = { from documents where doc_id < 5 }
-      |model evalvecs = { from embeddings where vec_id < 5 }
-      |model my_vocab = { from documents select text as token }
-      |""".stripMargin
-
   def build(spark: SparkSession, dir: String): Seq[OpDoc] =
     cache.getOrElseUpdate(dir, {
       val exps = scaleExponents()
       val texts = graft.catalog.QueryCatalog.queryWvTexts
       val allRowNames = graft.catalog.QueryCatalog.queries.keySet
-      graft.lang.Lowering.nativeTableFunctions.map { name =>
-        val (args, example, schema) = probe(spark, dir, name)
+      graft.lang.TableFunctions.entries.map { e =>
+        val name = e.name
         // oracle rows, both derivations structural: wv-surface rows whose
         // text CALLS the function, plus rows NAMED for it (the API-built
         // rows follow the q_<operator>… convention — e.g. the
@@ -65,7 +36,7 @@ object OperatorDocs {
         val byText = texts.collect { case (n, t) if callRe.matches(t) => n }
         val byName = allRowNames.filter(_.drop(2).contains(name))
         val rows = (byText.toSet ++ byName).toSeq.sorted
-        OpDoc(name, args, example, schema, rows,
+        OpDoc(name, e.signature, e.example, exampleSchema(spark, dir, e.example), rows,
           rows.flatMap(r => exps.get(r).map(r -> _)).toMap)
       }
     })
@@ -76,32 +47,10 @@ object OperatorDocs {
   private def schemaOf(df: org.apache.spark.sql.DataFrame): String =
     df.schema.fields.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")
 
-  private def probe(spark: SparkSession, dir: String, name: String): (String, String, String) =
-    try {
-      val df = graft.CompileApi.compileOnly(spark, s"from $name()", dir, None)
-      ("()", s"$name()", schemaOf(df))
-    } catch {
-      case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse("")
-        val args = """(?s)expects\s+(.*?)\s+literals""".r
-          .findFirstMatchIn(msg).map(_.group(1).trim)
-          // messages without the "literals" suffix (each_top_k): take up
-          // to the example instead
-          .orElse("""(?s)expects\s+(.*?),?\s+e\.g\.""".r
-            .findFirstMatchIn(msg).map(_.group(1).trim))
-          .getOrElse(msg.linesIterator.toSeq.headOption.getOrElse("").take(160))
-        val example = msg.lastIndexOf("e.g. ") match {
-          case -1 => ""
-          case i => msg.substring(i + 5).trim
-        }
-        val schema =
-          if (example.isEmpty) ""
-          else
-            try schemaOf(graft.CompileApi.compileOnly(
-              spark, preamble + s"from $example", dir, None))
-            catch { case _: Throwable => "" }
-        (args, example, schema)
-    }
+  private def exampleSchema(spark: SparkSession, dir: String, example: String): String =
+    try schemaOf(graft.CompileApi.compileOnly(
+      spark, graft.lang.TableFunctions.examplePreamble + s"from $example", dir, None))
+    catch { case _: Throwable => "" }
 
   /** Per-row scale exponents from BENCH_SCALE.json (machine-written by
     * graft.BenchScale); absent or malformed file → empty. */
@@ -140,8 +89,8 @@ object OperatorDocs {
        |ul{margin:0;padding-left:1.1rem}
        |</style></head><body>
        |<h1>Native table functions</h1>
-       |<p>Generated from the lowering dispatch registry
-       |(<code>Lowering.nativeTableFunctions</code>), the correctness catalog, and
+       |<p>Generated from the table-function registry
+       |(<code>TableFunctions</code>), the correctness catalog, and
        |BENCH_SCALE.json — nothing on this page is hand-maintained.</p>
        |<table><tr><th>function</th><th>signature</th><th>output schema</th>
        |<th>oracle rows · scale exponent</th></tr>

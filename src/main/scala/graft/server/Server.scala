@@ -573,8 +573,8 @@ object Server {
       }
     })
 
-    // generated native-table-function reference (OperatorDocs: registry +
-    // dispatch-probed signatures + oracle rows + scale exponents — nothing
+    // generated native-table-function reference (OperatorDocs: registry
+    // signatures and examples + oracle rows + scale exponents — nothing
     // hand-maintained). JSON twin at /api/v1/operators for tools.
     http.createContext("/api/v1/operators", handler { ex =>
       val ops = OperatorDocs.build(spark, dir).map(d => Map(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Subscribe / incrementalize: continuous (or repeatedly-triggered) tumbling
   * window aggregation over an append-only stream, the reference's
@@ -281,7 +281,7 @@ object Subscribe {
     // recheck joins the same STATIC (fingerprint, id) frame, and the lazy
     // form re-ran the corpus scan + md5 per trigger. Bounded cross-batch
     // state: two narrow columns per corpus row, MEMORY_AND_DISK with full
-    // lineage — same ownership caveats as the image-dedup corpus hashes.
+    // lineage. The query owns it: it is released when the query terminates.
     val cKeyed = graft.operators.Dedup.corpusFingerprints(corpus, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cKeyed.count()
@@ -295,7 +295,31 @@ object Subscribe {
             cKeyed, bloom, batch, idCol, textCol),
           batchId, outPath)
       }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    val q =
+      try (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      catch { case e: Throwable => cKeyed.unpersist(); throw e }
+    unpersistOnTermination(q, cKeyed)
+    q
+  }
+
+  /** Unpersists `cached` once `q` terminates. */
+  private def unpersistOnTermination(q: StreamingQuery, cached: DataFrame): Unit = {
+    val listener = new UnpersistOnTermination(q, cached)
+    q.sparkSession.streams.addListener(listener)
+    // the query may have ended before the listener was added
+    if (!q.isActive) listener.release()
+  }
+
+  private final class UnpersistOnTermination(q: StreamingQuery, cached: DataFrame)
+      extends StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      if (e.id == q.id) release()
+    def release(): Unit = {
+      cached.unpersist()
+      q.sparkSession.streams.removeListener(this)
+    }
   }
 
   /** Streaming IMAGE ingest dedup — the LAION-shaped loop composing the

@@ -8,19 +8,22 @@ import graft.SparkTestBase
   * column crashes it — r17's q_bpe_encode shipped a raw `array<string>`
   * and the round's only red row was the comparator's pandas lexsort
   * dying, not a wrong answer. This spec compiles every wv-surface row
-  * ANALYSIS-ONLY (no jobs — the analysisOnly contract) and rejects
-  * non-scalar output columns; the Scala-lambda rows (whose plans only
-  * exist at execution) are gated by the same check inside Verify itself,
-  * which fails the row loudly before the driver's compare. */
+  * compile-only, asserts that no compile starts a Spark job once the
+  * tables are warm, and rejects non-scalar output columns; the
+  * Scala-lambda rows (whose plans only exist at execution) are gated by the
+  * same check inside Verify itself, which fails the row loudly before the
+  * driver's compare. */
 class CatalogInvariantSpec extends SparkTestBase {
 
   test("every wv oracle row compiles to scalar-only output columns") {
     val texts = QueryCatalog.queryWvTexts
     assert(texts.size > 100, s"wv-text capture looks broken: ${texts.size} rows")
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val withJobs = scala.collection.mutable.ArrayBuffer.empty[String]
     var checked = 0
+    graft.Tables.names.foreach(graft.Tables.read(spark, sfDir, _).schema)
     texts.toSeq.sortBy(_._1).foreach { case (name, text) =>
-      val df =
+      val (df, cost) = graft.SparkCost.of(spark) {
         try Some(graft.CompileApi.compileOnly(spark, text, sfDir, None))
         catch {
           // write-effecting rows (save/dml) refuse compile-only by design;
@@ -28,6 +31,8 @@ class CatalogInvariantSpec extends SparkTestBase {
           case e: graft.lang.LoweringException
               if String.valueOf(e.getMessage).contains("compile-only") => None
         }
+      }
+      if (cost.jobs != 0) withJobs += s"$name -> ${cost.jobs} job(s)"
       df.foreach { d =>
         checked += 1
         val bad = QueryCatalog.nonScalarColumns(d.schema)
@@ -35,6 +40,8 @@ class CatalogInvariantSpec extends SparkTestBase {
       }
     }
     assert(checked > 80, s"too few rows actually compiled: $checked")
+    assert(withJobs.isEmpty,
+      "compile-only started Spark jobs:\n  " + withJobs.mkString("\n  "))
     assert(offenders.isEmpty,
       "rows with non-scalar output columns (the driver comparator crashes " +
         "on these — serialize via array_join, the q_array_funcs convention):\n  " +

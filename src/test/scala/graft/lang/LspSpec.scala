@@ -172,10 +172,7 @@ class LspSpec extends SparkTestBase {
     val tf = complete("from simil", 10, spark, dir)
     assert(tf.exists(i => i.label == "similarity_topk" && i.kind == "table_function"))
     // EVERY registered native must complete behind its own typed prefix
-    // (the list is now derived from Lowering.nativeTableFunctions, and
-    // TableFunctionRegistrySpec pins that to the dispatch cases — this
-    // loop closes the last gap: the derivation itself)
-    (Lowering.nativeTableFunctions :+ "unnest").foreach { n =>
+    (TableFunctions.entries.map(_.name) :+ "unnest").foreach { n =>
       val src = s"from ${n.take(9)}"
       val got = complete(src, src.length, spark, dir)
       assert(got.exists(i => i.label == n && i.kind == "table_function"), s"missing $n")

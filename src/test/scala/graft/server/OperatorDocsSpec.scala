@@ -2,12 +2,10 @@ package graft.server
 
 import graft.SparkTestBase
 
-/** Pins the generated operator reference to the dispatch registry (the
-  * TableFunctionRegistrySpec pattern, extended to the docs page): every
-  * registry native appears exactly once with a probed signature, the
+/** Pins the generated operator reference to the table-function registry:
+  * every registry native appears exactly once with its signature, the
   * oracle-row mapping points at real catalog rows, and the page renders
-  * without hand-maintained content. A registry rename/removal that the
-  * page misses fails here, not in a stale HTML table. */
+  * without hand-maintained content. */
 class OperatorDocsSpec extends SparkTestBase {
 
   private lazy val docs = {
@@ -16,20 +14,18 @@ class OperatorDocsSpec extends SparkTestBase {
   }
 
   test("every registry native is documented exactly once, in registry order") {
-    assert(docs.map(_.name) == graft.lang.Lowering.nativeTableFunctions,
-      "docs page diverged from Lowering.nativeTableFunctions")
+    assert(docs.map(_.name) == graft.lang.TableFunctions.entries.map(_.name),
+      "docs page diverged from the TableFunctions registry")
   }
 
   test("every entry carries a dispatch-derived signature") {
     val blank = docs.filter(_.args.trim.isEmpty)
     assert(blank.isEmpty, s"entries with no signature: ${blank.map(_.name).mkString(", ")}")
-    // probed signatures are the dispatch's own `expects (…)` text (or `()`
-    // for zero-arg natives) — a pinned handful use prose errors instead
-    val proseOk = Set("range", "parquet_metadata")
+    // the registry's rendered signature, the text argument errors quote
     val odd = docs.filterNot(d =>
-      d.args.trim.startsWith("(") || proseOk.contains(d.name))
+      d.args == graft.lang.TableFunctions.get(d.name).get.signature && d.args.startsWith("("))
     assert(odd.isEmpty,
-      s"signatures not parsed from the dispatch: ${odd.map(d => d.name + " -> " + d.args).mkString("; ")}")
+      s"signatures not taken from the registry: ${odd.map(d => d.name + " -> " + d.args).mkString("; ")}")
   }
 
   test("oracle-row mapping points at real catalog rows with oracles") {
@@ -70,7 +66,7 @@ class OperatorDocsSpec extends SparkTestBase {
 
   test("the HTML page renders every native and nothing hand-maintained leaks") {
     val html = OperatorDocs.page(spark, sfDir)
-    graft.lang.Lowering.nativeTableFunctions.foreach { n =>
+    graft.lang.TableFunctions.entries.map(_.name).foreach { n =>
       assert(html.contains(s"<code>$n</code>"), s"page missing $n")
     }
   }

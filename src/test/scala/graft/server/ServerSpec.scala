@@ -123,7 +123,7 @@ class ServerSpec extends SparkTestBase {
     assert(code == 200, s"got $resp")
     val ops = resp("operators").asInstanceOf[Seq[Map[String, Any]]]
     assert(ops.map(_("name").asInstanceOf[String]) ==
-      graft.lang.Lowering.nativeTableFunctions,
+      graft.lang.TableFunctions.entries.map(_.name),
       "JSON operator list diverged from the registry")
     assert(ops.forall(_("args").asInstanceOf[String].nonEmpty))
     // the HTML page renders and carries every native
@@ -132,7 +132,7 @@ class ServerSpec extends SparkTestBase {
     conn.setRequestMethod("GET")
     val html = new String(conn.getInputStream.readAllBytes(), UTF_8)
     assert(conn.getResponseCode == 200)
-    graft.lang.Lowering.nativeTableFunctions.foreach(n =>
+    graft.lang.TableFunctions.entries.map(_.name).foreach(n =>
       assert(html.contains(s"<code>$n</code>"), s"page missing $n"))
   }
 

@@ -161,8 +161,15 @@ class SubscribeSpec extends SparkTestBase {
     val ck = Files.createTempDirectory("sda_ck").toString
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     Subscribe.dedupAgainstAppend(stream, corpus, "doc_id", "text", out, ck)
       .awaitTermination()
+    // the corpus fingerprints persisted for the run are released with it
+    // (the termination event reaches the listener asynchronously)
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, s"persisted RDDs outlived the query: $leaked")
     val streamed = spark.read.parquet(out)
     assert(streamed.select("__batch_id").distinct().count() >= 2,
       "expected at least two micro-batches")
