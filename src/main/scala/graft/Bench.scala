@@ -13,7 +13,7 @@ import java.nio.file.{Files, Paths}
   * classpath). Each child is the old in-process bench over its subset;
   * the parent aggregates chunk artifacts into the same one-line stdout
   * contract + BENCH_DETAIL.json. SPARK_GRAFT_FORK=0 restores the legacy
-  * single-JVM path (used by BenchOne-style isolation runs).
+  * single-JVM path (for isolation runs).
   */
 object Bench {
   private def loadavg(): String = BenchGuard.loadavg()

@@ -73,7 +73,7 @@ object PlanDump {
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
-              rows += s""""$name":{"failed":${"\""}${Option(e.getMessage).getOrElse("?").take(120).replaceAll("[\"\\\\\n\r\t]", " ")}${"\""}}"""
+              rows += s""""$name":{"failed":${"\""}${Option(e.getMessage).getOrElse("?").take(120).replaceAll("[\"\\\\\n\r\t{}]", " ")}${"\""}}"""
           }
       }
     }

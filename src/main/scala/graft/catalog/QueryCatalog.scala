@@ -506,11 +506,40 @@ object QueryCatalog {
     * contamination (ADVICE r17). The pid bound means artifacts are never
     * shared across processes; within one JVM the TrieMap still makes
     * every stage build-once. */
-  private def stageKey(dir: String): String = {
+  private[catalog] def stageKey(dir: String): String = {
     val abs = new java.io.File(dir).getAbsolutePath
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(abs.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     d.take(8).map(b => f"$b%02x").mkString + "_p" + ProcessHandle.current().pid()
+  }
+
+  /** `java.io.tmpdir/<prefix><stageKey(dir)>`. No other process can reuse
+    * a pid-keyed path, so it is deleted when the JVM exits, together with
+    * its `<path>_…` siblings (the PQ codebook). */
+  private[catalog] def stagePath(prefix: String, dir: String): String = {
+    val f = new java.io.File(sys.props("java.io.tmpdir"), prefix + stageKey(dir))
+    stagedOnExit
+    stagedNames.add(f.getName)
+    f.getAbsolutePath
+  }
+
+  private val stagedNames = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val stagedOnExit: Unit = {
+    sys.addShutdownHook(deleteStaged(
+      new java.io.File(sys.props("java.io.tmpdir")), stagedNames.toArray(Array.empty[String]).toSeq))
+    ()
+  }
+
+  /** Delete the entries of `tmp` named one of `names` or `<name>_…`. */
+  private[catalog] def deleteStaged(tmp: java.io.File, names: Seq[String]): Unit = {
+    def deleteTree(f: java.io.File): Unit = {
+      if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
+        Option(f.listFiles()).foreach(_.foreach(deleteTree))
+      f.delete()
+    }
+    Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => names.exists(n => f.getName == n || f.getName.startsWith(n + "_")))
+      .foreach(deleteTree)
   }
 
   /** Build-once-per-(JVM, corpus dir) persisted int8 ANN index: CTAS of
@@ -526,8 +555,7 @@ object QueryCatalog {
   private val pqIndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedPqIndex(spark: SparkSession, dir: String): String =
     pqIndexPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_pq_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_pq_index_", dir)
       Similarity.writePqIndex(
         Tables.read(spark, dir, "embeddings"), "vec_id", "embedding", path)
       path
@@ -659,8 +687,7 @@ object QueryCatalog {
   private val stagedDocsDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedDocsDir(spark: SparkSession, dir: String): String =
     stagedDocsDirs.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_docs_stream_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_docs_stream_", dir)
       Tables.read(spark, dir, "documents").repartition(4)
         .write.mode("overwrite").parquet(path)
       path
@@ -672,8 +699,7 @@ object QueryCatalog {
   private val bm25IndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedBm25Index(spark: SparkSession, dir: String): String =
     bm25IndexPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_bm25_index_", dir)
       graft.operators.Retrieval.writeBm25Index(
         Tables.read(spark, dir, "documents"), "doc_id", "text", path)
       path
@@ -689,8 +715,7 @@ object QueryCatalog {
   private val bm25AppendIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def appendedBm25Index(spark: SparkSession, dir: String): String =
     bm25AppendIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_appidx_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_bm25_appidx_", dir)
       val docs = Tables.read(spark, dir, "documents")
       graft.operators.Retrieval.writeBm25Index(
         docs.filter(F.col("doc_id") % 4 =!= 0), "doc_id", "text", path)
@@ -709,8 +734,7 @@ object QueryCatalog {
   private val int8AppendIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def appendedInt8Index(spark: SparkSession, dir: String): String =
     int8AppendIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_int8_appidx_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_int8_appidx_", dir)
       val embs = Tables.read(spark, dir, "embeddings")
       Similarity.buildInt8Index(
           embs.filter(F.col("vec_id") % 2 === 1), "vec_id", "embedding")
@@ -731,8 +755,7 @@ object QueryCatalog {
   private val pqAppendIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def appendedPqIndex(spark: SparkSession, dir: String): String =
     pqAppendIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_pq_appidx_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_pq_appidx_", dir)
       val embs = Tables.read(spark, dir, "embeddings")
       Similarity.writePqIndex(
         embs.filter(F.col("vec_id") % 2 === 1), "vec_id", "embedding", path)
@@ -746,8 +769,7 @@ object QueryCatalog {
   private val int8IndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedInt8Index(spark: SparkSession, dir: String): String =
     int8IndexPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_int8_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_int8_index_", dir)
       Similarity.buildInt8Index(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
         .write.mode("overwrite").parquet(path)
       path
@@ -763,8 +785,7 @@ object QueryCatalog {
   private val minhashIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedMinhashIndex(spark: SparkSession, dir: String): String =
     minhashIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_minhash_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_minhash_index_", dir)
       val corpus = Tables.read(spark, dir, "documents").filter(F.col("doc_id") % 4 =!= 0)
       graft.operators.Dedup.buildMinhashIndex(corpus, "doc_id", "text", 64, 2)
         .join(corpus.select("doc_id", "text"), Seq("doc_id"))
@@ -783,8 +804,7 @@ object QueryCatalog {
   private val minhashAppendIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def appendedMinhashIndex(spark: SparkSession, dir: String): String =
     minhashAppendIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_minhash_appidx_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_minhash_appidx_", dir)
       val docs = Tables.read(spark, dir, "documents")
       val half = docs.filter(F.col("doc_id") % 4 =!= 0 && F.col("doc_id") % 4 =!= 3)
       graft.operators.Dedup.buildMinhashIndex(half, "doc_id", "text", 64, 2)
@@ -874,8 +894,7 @@ object QueryCatalog {
   private val bloomIdxPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def appendedBloomIndex(spark: SparkSession, dir: String): String =
     bloomIdxPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bloom_appidx_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_bloom_appidx_", dir)
       val docs = Tables.read(spark, dir, "documents")
       graft.operators.Dedup.writeBloomIndex(
         docs.filter(F.col("doc_id") % 4 =!= 0 && F.col("doc_id") % 4 =!= 3),
@@ -1155,8 +1174,7 @@ object QueryCatalog {
   private val lshIndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedLshInt8Index(spark: SparkSession, dir: String): String =
     lshIndexPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_lsh_int8_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_lsh_int8_index_", dir)
       val idx = graft.Tables.readPath(spark, persistedInt8Index(spark, dir))
       Similarity.lshInt8IndexPostings(idx, "vec_id", "q8", planes = 8, tables = 6)
         .write.mode("overwrite").partitionBy("bucket_grp").parquet(path)
@@ -1169,8 +1187,7 @@ object QueryCatalog {
   private val ivfIndexPaths = scala.collection.concurrent.TrieMap.empty[String, String]
   private def persistedIvfInt8Index(spark: SparkSession, dir: String): String =
     ivfIndexPaths.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_int8_index_" + stageKey(dir)).getAbsolutePath
+      val path = stagePath("graft_ivf_int8_index_", dir)
       val idx = graft.Tables.readPath(spark, persistedInt8Index(spark, dir))
       Similarity.writeIvfInt8Index(idx, "vec_id", "q8", path, nlist = 32)
       path
@@ -1595,7 +1612,7 @@ object QueryCatalog {
       """)
     ),
     (
-      "q_join_semi_correlated", // correlated exists → decorrelated semi join
+      "q_join_semi_correlated", // correlated exists; Catalyst plans a semi join
       wv("""
         from customer
         where exists {
@@ -3327,7 +3344,7 @@ object QueryCatalog {
       """)
     ),
     (
-      "q_join_lateral", // correlated-subquery lateral join (decorrelated)
+      "q_join_lateral", // correlated-subquery lateral join (Catalyst decorrelates it)
       wv("""
         from nation
         join lateral {

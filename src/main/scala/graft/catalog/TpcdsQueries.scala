@@ -504,8 +504,10 @@ reason AS (
   private val starWritten = scala.collection.mutable.Set.empty[String]
   private def ensureViews(spark: SparkSession, dir: String): Unit = synchronized {
     if (viewsFor.get(spark) != dir) {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_tpcds_star_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
+      // keyed by the absolute dir and the pid: two JVMs on one dir never
+      // overwrite parquet the other may be scanning, and two dirs never
+      // share a star schema
+      val base = QueryCatalog.stagePath("graft_tpcds_star_", dir)
       val writeFacts = !starWritten.contains(base)
       preludeCtes.foreach { case (n, body) =>
         if (materialized(n)) {
@@ -566,6 +568,7 @@ reason AS (
         }
       }
     }
+    require(!rest.startsWith(","), s"cannot split the leading CTE block at: ${rest.take(60)}")
     (legs.toSeq, rest)
   }
 
@@ -606,9 +609,7 @@ reason AS (
       ensureViews(spark, dir)
       // pid-scoped staging dir: concurrent JVMs (bench children, verify)
       // can never clobber each other's in-flight legs
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_tpcds_cte_${ProcessHandle.current().pid()}_${name}_" +
-          Integer.toHexString(dir.hashCode)).getAbsolutePath
+      val base = QueryCatalog.stagePath(s"graft_tpcds_cte_${name}_", dir)
       legs.foreach { case (n, body) =>
         val df = graft.Graft.sqlScript(spark, body, Some(dir))
         if (refCount(n) > 1) {

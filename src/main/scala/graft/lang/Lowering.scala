@@ -102,7 +102,7 @@ object Lowering {
         // ulid_string is one id, not one per reference). Constants fold;
         // anything else is evaluated driver-side over a 1-row plan.
         ctx.vals(name) =
-          if (constValue(e).isDefined) e
+          if (constValue(e).isDefined || hasSubquery(e)) e // a subquery stays lazy
           else
             try {
               val v = ctx.spark.range(1)
@@ -732,18 +732,16 @@ object Lowering {
   /** Post-aggregation stages of a streaming subscription query: HAVING-style
     * filters and stateless projections/column ops over the emitted aggregate
     * rows. Each case mirrors the batch lowering of the same node over an
-    * aggregated Plain relation (no subquery binding — a subquery join after
-    * a streaming aggregation is not reproducible by the batch refresh, and
+    * aggregated Plain relation (no subqueries — a subquery after a
+    * streaming aggregation is not reproducible by the batch refresh, and
     * `select distinct` would need a second stateful dedup; both are rejected
     * at lowering). */
   private def applyPostAggStage(df: DataFrame, stage: Relation, ctx: Context): DataFrame = {
     def subqueryFree(e: Expr): Expr = {
-      transformExpr(e) {
-        case s @ (_: InSubquery | _: ExistsExpr | _: ScalarSubquery) =>
-          throw new LoweringException(
-            "streaming aggregation: subqueries are not supported after the agg " +
-              "— the batch refresh could not reproduce a stream-side subquery join")
-      }
+      if (hasSubquery(e))
+        throw new LoweringException(
+          "streaming aggregation: subqueries are not supported after the agg " +
+            "— the batch refresh could not reproduce a stream-side subquery join")
       e
     }
     val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(df))
@@ -798,58 +796,126 @@ object Lowering {
       aggregate(g, aggs.toList, Nil, ctx)
   }
 
-  /** Lazily bind scalar subqueries appearing in aggregation-mode
-    * expressions: cross-join the (broadcast) 1-row aggregate onto the INPUT
-    * frame and reference it through any_value() — constant per group, plan
-    * stays lazy, no driver-side collect (closes the eager fallback the
-    * expr() ScalarSubquery case used to take for agg arguments). */
-  private def bindScalarsForAgg(
-      g: Grouped,
-      items: List[SelectItem],
-      ctx: Context
-  ): (Grouped, List[SelectItem]) = {
-    if (!items.exists(it => containsScalarSubquery(it.expr))) return (g, items)
-    val (df2, rewritten, bound) = bindScalarSubqueries(g.df, items.map(_.expr), ctx)
-    val names = bound.toSet
-    val wrapped = items.zip(rewritten).map { case (it, re) =>
-      it.copy(expr = transformExpr(re) {
-        case Ident(n) if names.contains(n) => MethodCall(Ident(n), "any_value", Nil)
-      })
-    }
-    (g.copy(df = df2), wrapped)
+  /** The `where`, `agg` and `select` stages over a lowered child (a `where`
+    * after a `group by` is a HAVING). Expressions evaluated where no single
+    * frame is at hand (aggregates, grouped items) get the names a subquery
+    * in them may take from the outer row through `ExprCtx.enclosing`. */
+  private def filterOn(res: LRes, cond: Expr, ctx: Context): LRes = res match {
+    case g: Grouped => g.copy(havings = g.havings :+ cond)
+    case Plain(df) => Plain(df.filter(expr(cond, ExprCtx(ctx, aggMode = false, dfOpt = Some(df)))))
   }
 
-  private def bindScalarsForAggPlain(
-      df0: DataFrame,
-      items: List[SelectItem],
-      ctx: Context
-  ): (DataFrame, List[SelectItem]) = {
-    val g2 = Grouped(df0, Nil, Nil, GroupingStyle.Plain)
-    val (gb, wrapped) = bindScalarsForAgg(g2, items, ctx)
-    (gb.df, wrapped)
+  private def aggOn(res: LRes, items0: List[SelectItem], ctx: Context): LRes = res match {
+    case g: Grouped =>
+      val items = items0.map(it =>
+        it.copy(expr = subqueriesPerGroup(bindPositionalKeys(it.expr, g.keys))))
+      val ectx = ExprCtx(ctx, aggMode = true, enclosing = groupedNames(g))
+      // under a pending pivot a single agg stays UNALIASED so the output
+      // columns are the bare pivot values (`1951`, not `1951_count`)
+      val aggs =
+        if (g.pivot.isDefined && items.length == 1) List(expr(items.head.expr, ectx))
+        else items.zipWithIndex.map { case (it, i) => expr(it.expr, ectx).as(itemName(it, i)) }
+      val countish = items.forall(it => it.expr match {
+        case DotRef(_, n) => n.equalsIgnoreCase("count")
+        case MethodCall(_, n, _) => n.equalsIgnoreCase("count")
+        case FunctionCall(n, _, _, _) => n.equalsIgnoreCase("count")
+        case _ => false
+      })
+      Plain(aggregate(g, aggs, Nil, ctx,
+        pivotCountFill = g.pivot.isDefined && countish))
+    case Plain(df) =>
+      val ectx = ExprCtx(ctx, aggMode = true, enclosing = df.columns.toSeq)
+      val aggs = items0.zipWithIndex.map { case (it, i) => expr(it.expr, ectx).as(itemName(it, i)) }
+      Plain(df.agg(aggs.head, aggs.tail: _*))
   }
+
+  private def projectOn(
+      res: LRes,
+      items0: List[SelectItem],
+      distinct: Boolean,
+      ctx: Context
+  ): LRes = {
+    val out = res match {
+      case g0: Grouped =>
+        // `group by supplier_no select supplier_no = l_suppkey`: a group
+        // key may name a FORWARD select alias (reference typer resolves
+        // grouping keys against the projection); substitute the aliased
+        // expression into the key and make the item reference the key name
+        val (g, items1a) = resolveForwardKeys(g0, items0)
+        // a select item whose expression structurally equals a grouping
+        // key (SQL shape: GROUP BY extract(year FROM d) … SELECT
+        // extract(year FROM d)) references the key's OUTPUT column — the
+        // source columns are gone after aggregation
+        val keyOut: Map[Expr, String] = g.keys.zipWithIndex
+          .map { case (k, i) => (k.expr, itemName(k, i)) }.toMap
+        val items1 = items1a.map { it =>
+          keyOut.get(it.expr) match {
+            case Some(kn) if !hasAgg(it.expr) && !it.expr.isInstanceOf[Ident] =>
+              it.copy(expr = Ident(kn))
+            case _ => it
+          }
+        }
+        // projection over a grouped relation: agg items + key refs;
+        // `_1`/`_2` reference grouping keys positionally
+        val items = items1.map(it => it.copy(expr = bindPositionalKeys(it.expr, g.keys)))
+        val ectx = ExprCtx(ctx, aggMode = false, enclosing = groupedNames(g))
+        val aggItems = items.zipWithIndex.filter { case (it, _) => hasAgg(it.expr) }
+        val aggs = aggItems.map { case (it, i) =>
+          expr(subqueriesPerGroup(it.expr), ectx.copy(aggMode = true)).as(itemName(it, i))
+        }
+        val post = items.zipWithIndex.map { case (it, i) =>
+          if (hasAgg(it.expr)) F.col(itemName(it, i))
+          else expr(it.expr, ectx).as(itemName(it, i))
+        }
+        aggregate(g, aggs.toList, post.toList, ctx)
+      case Plain(df) =>
+        if (items0.exists(it => hasAgg(it.expr))) {
+          // global aggregation: select count(*), _.count, …
+          val ectx = ExprCtx(ctx, aggMode = true, enclosing = df.columns.toSeq)
+          val aggs = items0.zipWithIndex.map { case (it, i) => expr(it.expr, ectx).as(itemName(it, i)) }
+          df.agg(aggs.head, aggs.tail: _*)
+        } else {
+          val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(df))
+          df.select(items0.zipWithIndex.map { case (it, i) => selectCol(it, i, ectx) }: _*)
+        }
+    }
+    Plain(if (distinct) out.distinct() else out)
+  }
+
+  /** A scalar subquery in a grouped aggregate outside every aggregate call
+    * becomes `any_value(subquery)`: Spark takes a correlated one there only
+    * inside an aggregate function, and one correlated on the grouping keys
+    * has a single value per group. */
+  private def subqueriesPerGroup(e: Expr): Expr = {
+    def aggCall(x: Expr): Boolean = x match {
+      case DotRef(_, n) => Stdlib.isAggMethod(n)
+      case MethodCall(_, n, _) => Stdlib.isAggMethod(n)
+      case FunctionCall(n, _, _, _) => Stdlib.aggFunctionNames.contains(n.toLowerCase)
+      case _ => false
+    }
+    // bottom-up: wrap every subquery, then unwrap those an aggregate call holds
+    transformExpr(e) {
+      case s: ScalarSubquery => MethodCall(s, "any_value", Nil)
+      case a if aggCall(a) => transformExpr(a) { case MethodCall(s: ScalarSubquery, "any_value", Nil) => s }
+    }
+  }
+
+  /** The input columns and the key names of a grouping. */
+  private def groupedNames(g: Grouped): Seq[String] =
+    g.df.columns.toSeq ++ g.keys.zipWithIndex.map { case (k, i) => itemName(k, i) }
 
   /** groupBy/rollup/cube + agg + having filters. */
   private def aggregate(
-      g0: Grouped,
+      g: Grouped,
       aggCols: List[Column],
       postSelect: List[Column],
       ctx: Context,
       pivotCountFill: Boolean = false
   ): DataFrame = {
-    // scalar subqueries in HAVING bind lazily the same way (TPC-H q11 shape)
-    val g =
-      if (g0.havings.exists(containsScalarSubquery)) {
-        val (df2, rewritten, bound) = bindScalarSubqueries(g0.df, g0.havings, ctx)
-        val names = bound.toSet
-        g0.copy(df = df2, havings = rewritten.map(transformExpr(_) {
-          case Ident(n) if names.contains(n) => MethodCall(Ident(n), "any_value", Nil)
-        }))
-      } else g0
-    val ectx = ExprCtx(ctx, aggMode = false)
+    val ectx = ExprCtx(ctx, aggMode = false, enclosing = groupedNames(g))
     val keyCols = g.keys.zipWithIndex.map { case (k, i) => expr(k.expr, ectx).as(itemName(k, i)) }
     val havingCols = g.havings.zipWithIndex.map { case (h, i) =>
-      expr(h, ectx.copy(aggMode = true)).as(s"__having_$i")
+      expr(subqueriesPerGroup(h), ectx.copy(aggMode = true)).as(s"__having_$i")
     }
     val allAggs = aggCols ++ havingCols
     val grouped0 = g.style match {
@@ -931,6 +997,13 @@ object Lowering {
       }
     }
     (g.copy(keys = keys), newItems)
+  }
+
+  /** A select item as an output column; `*` and `q.*` pass through. */
+  private def selectCol(item: SelectItem, idx: Int, ec: ExprCtx): Column = item.expr match {
+    case Star(None) => F.col("*")
+    case Star(Some(q)) => F.col(s"$q.*")
+    case e => expr(e, ec).as(itemName(item, idx))
   }
 
   private def itemName(item: SelectItem, idx: Int): String =
@@ -1246,11 +1319,7 @@ object Lowering {
     case TableRefDyn(interp) =>
       lowerRel(TableRef(resolveInterpName(interp, ctx)), ctx)
 
-    case Filter(child, cond) =>
-      lowerRel(child, ctx) match {
-        case g: Grouped => g.copy(havings = g.havings :+ cond)
-        case Plain(df) => Plain(lowerFilter(df, cond, ctx))
-      }
+    case Filter(child, cond) => filterOn(lowerRel(child, ctx), cond, ctx)
 
     case GroupBy(Pivot(pchild, pivotCol, values, None), keys) =>
       // pivot followed by an explicit group-by: the pivot's grouping keys
@@ -1361,112 +1430,20 @@ object Lowering {
     case GroupByStyled(child, keys, style) =>
       Grouped(lower(child, ctx), keys, Nil, style)
 
-    case Agg(child, items0) =>
-      lowerRel(child, ctx) match {
-        case g0: Grouped =>
-          val (g, items) = bindScalarsForAgg(g0,
-            items0.map(it => it.copy(expr = bindPositionalKeys(it.expr, g0.keys))), ctx)
-          // under a pending pivot a single agg stays UNALIASED so the output
-          // columns are the bare pivot values (`1951`, not `1951_count`)
-          val aggs =
-            if (g.pivot.isDefined && items.length == 1)
-              List(expr(items.head.expr, ExprCtx(ctx, aggMode = true)))
-            else items.zipWithIndex.map { case (it, i) =>
-              expr(it.expr, ExprCtx(ctx, aggMode = true)).as(itemName(it, i))
-            }
-          val countish = items.forall(it => it.expr match {
-            case DotRef(_, n) => n.equalsIgnoreCase("count")
-            case MethodCall(_, n, _) => n.equalsIgnoreCase("count")
-            case FunctionCall(n, _, _, _) => n.equalsIgnoreCase("count")
-            case _ => false
-          })
-          Plain(aggregate(g, aggs, Nil, ctx,
-            pivotCountFill = g.pivot.isDefined && countish))
-        case Plain(df0) =>
-          val (df, items) = bindScalarsForAggPlain(df0, items0, ctx)
-          val aggs = items.zipWithIndex.map { case (it, i) =>
-            expr(it.expr, ExprCtx(ctx, aggMode = true)).as(itemName(it, i))
-          }
-          Plain(df.agg(aggs.head, aggs.tail: _*))
-      }
-
-    case Project(child, items0, distinct) =>
-      val out = lowerRel(child, ctx) match {
-        case g0: Grouped =>
-          // `group by supplier_no select supplier_no = l_suppkey`: a group
-          // key may name a FORWARD select alias (reference typer resolves
-          // grouping keys against the projection); substitute the aliased
-          // expression into the key and make the item reference the key name
-          val (g1, items1a) = resolveForwardKeys(g0, items0)
-          // a select item whose expression structurally equals a grouping
-          // key (SQL shape: GROUP BY extract(year FROM d) … SELECT
-          // extract(year FROM d)) references the key's OUTPUT column — the
-          // source columns are gone after aggregation
-          val keyOut: Map[Expr, String] = g1.keys.zipWithIndex
-            .map { case (k, i) => (k.expr, itemName(k, i)) }.toMap
-          val items1 = items1a.map { it =>
-            keyOut.get(it.expr) match {
-              case Some(kn) if !hasAgg(it.expr) && !it.expr.isInstanceOf[Ident] =>
-                it.copy(expr = Ident(kn))
-              case _ => it
-            }
-          }
-          // projection over a grouped relation: agg items + key refs;
-          // `_1`/`_2` reference grouping keys positionally
-          val (g, items) = bindScalarsForAgg(g1,
-            items1.map(it => it.copy(expr = bindPositionalKeys(it.expr, g1.keys))), ctx)
-          val ectx = ExprCtx(ctx, aggMode = false)
-          val keyNames = g.keys.zipWithIndex.map { case (k, i) => itemName(k, i) }
-          val aggItems = items.zipWithIndex.filter { case (it, _) => hasAgg(it.expr) }
-          val aggs = aggItems.map { case (it, i) =>
-            expr(it.expr, ectx.copy(aggMode = true)).as(itemName(it, i))
-          }
-          val post = items.zipWithIndex.map { case (it, i) =>
-            if (hasAgg(it.expr)) F.col(itemName(it, i))
-            else expr(it.expr, ectx).as(itemName(it, i))
-          }
-          aggregate(g, aggs.toList, post.toList, ctx)
-        case Plain(df) =>
-          val items = items0
-          if (items.exists(it => hasAgg(it.expr))) {
-            // global aggregation: select count(*), _.count, …
-            val (df2, items2) = bindScalarsForAggPlain(df, items, ctx)
-            val aggs = items2.zipWithIndex.map { case (it, i) =>
-              expr(it.expr, ExprCtx(ctx, aggMode = true)).as(itemName(it, i))
-            }
-            df2.agg(aggs.head, aggs.tail: _*)
-          } else {
-            val (joined, rewritten, _) = bindScalarSubqueries(df, items.map(_.expr), ctx)
-            val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(joined))
-            joined.select(items.zip(rewritten).zipWithIndex.flatMap { case ((it, re), i) =>
-              re match {
-                // expand * from the PRE-join columns so bound __scalar_N
-                // helper columns never leak into the output; when no scalar
-                // binding happened, pass * through — per-name expansion
-                // breaks on duplicate post-join column names (using-join
-                // sides sharing a non-key column)
-                case Star(None) if joined eq df => Seq(F.col("*"))
-                case Star(None) => df.columns.toSeq.map(F.col)
-                case Star(Some(q)) => Seq(F.col(s"$q.*"))
-                case e => Seq(expr(e, ectx).as(itemName(it, i)))
-              }
-            }: _*)
-          }
-      }
-      Plain(if (distinct) out.distinct() else out)
+    case Agg(child, items0) => aggOn(lowerRel(child, ctx), items0, ctx)
+    case Project(child, items0, distinct) => projectOn(lowerRel(child, ctx), items0, distinct, ctx)
 
     case AddColumns(child, items, prepend) =>
-      val df0 = lower(child, ctx)
-      val (df, rewritten, _) = bindScalarSubqueries(df0, items.map(_.expr), ctx)
+      val df = lower(child, ctx)
       val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(df))
-      val newCols = items.zip(rewritten).zipWithIndex.map { case ((it, re), i) =>
-        expr(re, ectx).as(itemName(it, i))
+      val newCols = items.zipWithIndex.map { case (it, i) =>
+        expr(it.expr, ectx).as(itemName(it, i))
       }
       // existing columns by ATTRIBUTE, not by name: after a multi-join the
       // frame can carry duplicate names (customers.id, products.id —
       // spec/benchmark/q2-join-derived.wv) and F.col("id") would be
       // ambiguous where the positional attribute list is not
-      val existing = df0.queryExecution.analyzed.output
+      val existing = df.queryExecution.analyzed.output
         .map(org.apache.spark.sql.graftbridge.ColumnBridge.column(_)).toList
       Plain(
         if (prepend) df.select(newCols ++ existing: _*)
@@ -1668,7 +1645,7 @@ object Lowering {
           // sensor: poll the condition until true or timeout (reference:
           // FlowScheduler wait-until sensors — driver-side control flow by
           // design, like the reference's poll loop). The condition is a
-          // scalar boolean; uncorrelated scalar subqueries bind lazily so
+          // scalar boolean, re-evaluated on every poll, so
           // `wait until (from t agg _.count) > 0` polls live state.
           val cond = args.headOption.getOrElse(
             throw new LoweringException("wait until requires a condition"))
@@ -1681,11 +1658,8 @@ object Lowering {
           val deadline = System.currentTimeMillis() + timeoutMs
           var ok = false
           while (!ok && System.currentTimeMillis() < deadline) {
-            val base = ctx.spark.range(1).toDF("__one")
-            val (df, rewritten, _) = bindScalarSubqueries(base, List(cond), ctx)
-            val v = df.select(
-              expr(rewritten.head, ExprCtx(ctx, aggMode = false, dfOpt = Some(df)))
-                .cast("boolean").as("__c")).collect().head
+            val v = ctx.spark.range(1).select(
+              expr(cond, ExprCtx(ctx, aggMode = false)).cast("boolean").as("__c")).collect().head
             ok = !v.isNullAt(0) && v.getBoolean(0)
             if (!ok) Thread.sleep(pollMs)
           }
@@ -2046,10 +2020,18 @@ object Lowering {
   // --- joins -----------------------------------------------------------------
   private def lowerJoin(j: Join, ctx: Context): DataFrame = {
     val l = lower(j.left, ctx)
-    if (j.lateral) return lowerLateralJoin(l, j, ctx)
+    if (j.lateral) {
+      // the right side may reference the left's columns (reference: Lateral,
+      // relation.scala:1046-1051); Catalyst decorrelates the lateral subquery
+      val r = subqueryFrame(j.right, ExprCtx(ctx, aggMode = false, dfOpt = Some(l)),
+        duplicatesHarmless = false)
+      return j.on.fold(l.lateralJoin(r, j.kind.sparkName))(cond =>
+        l.lateralJoin(r, expr(cond, ExprCtx(ctx, aggMode = false, enclosing = l.columns.toSeq)),
+          j.kind.sparkName))
+    }
     val r = lower(j.right, ctx)
     if (j.asof) return lowerAsofJoin(l, r, j, ctx)
-    val ectx = ExprCtx(ctx, aggMode = false)
+    val ectx = ExprCtx(ctx, aggMode = false, enclosing = (l.columns ++ r.columns).toSeq)
     j.kind match {
       case JoinKind.Cross if j.on.isEmpty && j.usingColumns.isEmpty => l.crossJoin(r)
       case k =>
@@ -2064,59 +2046,13 @@ object Lowering {
         } else if (j.usingColumns.nonEmpty) l.join(r, j.usingColumns, k.sparkName)
         else
           j.on match {
-            case Some(cond) if containsScalarSubquery(cond) =>
-              // scalar subquery in a join condition: bind lazily against the
-              // left side (broadcast cross join), drop the helper after
-              val (l2, rewritten, bound) = bindScalarSubqueries(l, List(cond), ctx)
-              l2.join(r, expr(rewritten.head, ectx), k.sparkName).drop(bound: _*)
+            // Spark takes a correlated subquery in a filter but not in a join
+            // condition; for an inner join the two are the same
+            case Some(cond) if hasSubquery(cond) && (k == JoinKind.Inner || k == JoinKind.Cross) =>
+              l.join(r).filter(expr(cond, ectx))
             case Some(cond) => l.join(r, expr(cond, ectx), k.sparkName)
             case None => l.crossJoin(r)
           }
-    }
-  }
-
-  /** Correlated lateral subquery join (reference: Lateral,
-    * relation.scala:1046-1051): the subquery's filter conjuncts that
-    * reference the outer row decorrelate into join conditions; local
-    * conjuncts filter the subquery core; a trailing projection applies after
-    * the join (outer columns stay visible, lateral semantics). */
-  private def lowerLateralJoin(l: DataFrame, j: Join, ctx: Context): DataFrame = {
-    var rel = j.right match {
-      case BracedRelation(c) => c
-      case other => other
-    }
-    var projItems: List[SelectItem] = Nil
-    rel match {
-      case Project(c, items, false) => projItems = items; rel = c
-      case _ =>
-    }
-    val filterConjuncts = mutable.ListBuffer.empty[Expr]
-    var unwrapping = true
-    while (unwrapping) rel match {
-      case Filter(c, fcond) => filterConjuncts ++= splitConjuncts(fcond); rel = c
-      case _ => unwrapping = false
-    }
-    var coreDf = lower(rel, ctx)
-    val scope = relationScopeNames(rel)
-    val corr = mutable.ListBuffer.empty[Expr]
-    filterConjuncts.foreach { cj =>
-      if (hasForeignQualifier(cj, scope, coreDf.columns)) corr += cj
-      else
-        try coreDf = coreDf.filter(expr(cj, ExprCtx(ctx, aggMode = false, dfOpt = Some(coreDf))))
-        catch { case _: org.apache.spark.sql.AnalysisException => corr += cj }
-    }
-    val ecJoin = ExprCtx(ctx, aggMode = false)
-    val conds = corr.toList.map(expr(_, ecJoin)) ++ j.on.map(expr(_, ecJoin)).toList
-    val joined =
-      if (conds.isEmpty) l.crossJoin(coreDf)
-      else l.join(coreDf, conds.reduce(_ && _), j.kind.sparkName)
-    if (projItems.isEmpty) joined
-    else {
-      val leftCols = l.columns.toSeq.map(c => l(c))
-      val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(joined))
-      joined.select(leftCols ++ projItems.zipWithIndex.map { case (it, i) =>
-        expr(it.expr, ectx).as(itemName(it, i))
-      }: _*)
     }
   }
 
@@ -2229,8 +2165,8 @@ object Lowering {
   }
 
   /** Bottom-up expression rewrite: applies `f` where defined, recursing into
-    * children first (shared by scalar-subquery binding, model-parameter
-    * substitution and user-def inlining). */
+    * children first (shared by model-parameter substitution and user-def
+    * inlining). Subquery relations are leaves. */
   def transformExpr(e: Expr)(f: PartialFunction[Expr, Expr]): Expr = {
     def go(x: Expr): Expr = {
       val rebuilt: Expr = x match {
@@ -2270,141 +2206,64 @@ object Lowering {
     go(e)
   }
 
-  /** Replace each uncorrelated ScalarSubquery with a reference to a column
-    * cross-joined from the 1-row aggregate (Catalyst broadcasts it) — the
-    * plan stays lazy; no driver-side collect (reference semantics:
-    * exprs.scala ScalarSubquery; a >1-row subquery is a user error, surfaced
-    * by the multiplied row count). Returns (joined df, rewritten exprs,
-    * bound temp column names to drop afterwards). */
-  private def bindScalarSubqueries(
-      df0: DataFrame,
-      exprs: List[Expr],
-      ctx: Context
-  ): (DataFrame, List[Expr], List[String]) = {
-    if (!exprs.exists(containsScalarSubquery)) return (df0, exprs, Nil)
-    var df = df0
-    var i = 0
-    val names = List.newBuilder[String]
-    val rewritten = exprs.map(transformExpr(_) {
-      case ScalarSubquery(q) =>
-        val name = s"__scalar_$i"; i += 1
-        names += name
-        def correlated(orElse: Throwable): Unit =
-          df = correlatedScalarJoin(df, q, name, i, ctx).getOrElse(throw orElse)
-        val scope = relationScopeNames(q)
-        if (collectFilterConds(q).exists(c => hasForeignQualifier(c, scope, Nil)))
-          correlated(new LoweringException("cannot decorrelate scalar subquery"))
-        else
-          try {
-            val sub = lower(q, ctx)
-            if (sub.columns.length != 1)
-              throw new LoweringException("scalar subquery must return a single column")
-            df = df.crossJoin(F.broadcast(sub.select(F.col(sub.columns.head).as(name))))
-          } catch {
-            case ae: org.apache.spark.sql.AnalysisException => correlated(ae)
-          }
-        Ident(name)
-    })
-    (df, rewritten, names.result())
-  }
-
-  /** Decorrelate `… cmp { from t where t.k = outer.k select <agg> }`: group
-    * the inner by its correlation keys and LEFT-join the 1-row-per-key
-    * aggregate onto the outer frame (reference semantics: a correlated
-    * scalar subquery evaluates per outer row; SQL returns NULL over an empty
-    * group, which the left join reproduces — note count-style aggregates
-    * would need a 0-coalesce, fine for the min/avg/sum shapes this serves).
-    * One shuffle on the correlation keys; the join output stays lazy. */
-  private def correlatedScalarJoin(
-      outer: DataFrame,
-      q0: Relation,
-      name: String,
-      serial: Int,
-      ctx: Context
-  ): Option[DataFrame] = {
-    var rel = q0 match { case BracedRelation(c) => c; case r => r }
-    val items = rel match {
-      case Project(c, its, false) if its.length == 1 => rel = c; its
-      case _ => return None
+  /** Lower the relation of a subquery expression to the frame Spark's
+    * subquery API takes (`scalar`, `exists`, `isin`, `lateralJoin`);
+    * Catalyst decorrelates it (RewriteCorrelatedScalarSubquery,
+    * RewritePredicateSubquery). A subquery is a `select`/`agg` over `where`s
+    * over a core: the core lowers once, then the filter and the projection
+    * apply with the names taken from the enclosing frame (`ec.dfOpt` or
+    * `ec.enclosing`) as outer references. Spark analyzes a frame holding
+    * them only inside the enclosing plan, so nothing past the core reads
+    * its schema, its aggregates are a `select` (`agg` analyzes eagerly),
+    * and a correlated `select distinct` cannot deduplicate (`distinct`
+    * analyzes eagerly too): it is allowed where duplicates change nothing
+    * (`in`, `exists`: `duplicatesHarmless`) and rejected elsewhere. */
+  private def subqueryFrame(q0: Relation, ec: ExprCtx, duplicatesHarmless: Boolean): DataFrame = {
+    val q = q0 match { case BracedRelation(c) => c; case r => r }
+    val (items, aggMode, distinct, filtered) = q match {
+      case Project(c, its, d) => (its, its.exists(it => hasAgg(it.expr)), d, c)
+      case Agg(c, its) => (its, true, false, c)
+      case other => (Nil, false, false, other)
     }
-    val filterConjuncts = mutable.ListBuffer.empty[Expr]
-    var unwrapping = true
-    while (unwrapping) rel match {
-      case Filter(c, fcond) => filterConjuncts ++= splitConjuncts(fcond); rel = c
-      case _ => unwrapping = false
+    def peel(r: Relation, conds: List[Expr]): (Relation, List[Expr]) = r match {
+      case Filter(c, cond) => peel(c, splitConjuncts(cond) ++ conds)
+      case core => (core, conds)
     }
-    if (filterConjuncts.isEmpty) return None
-    var coreDf = try lower(rel, ctx) catch { case _: Throwable => return None }
-    val scope = relationScopeNames(rel)
-    val corr = mutable.ListBuffer.empty[Expr]
-    filterConjuncts.foreach { cj =>
-      if (hasForeignQualifier(cj, scope, coreDf.columns)) corr += cj
-      else
-        try coreDf = coreDf.filter(expr(cj, ExprCtx(ctx, aggMode = false, dfOpt = Some(coreDf))))
-        catch { case _: org.apache.spark.sql.AnalysisException => corr += cj }
-    }
-    if (corr.isEmpty) return None
-    // every correlated conjunct must be an equality with exactly one side
-    // resolvable on the inner frame — those sides become the grouping keys
-    val ecCore = ExprCtx(ctx, aggMode = false, dfOpt = Some(coreDf))
-    def innerSide(e: Expr): Option[Column] =
-      if (hasForeignQualifier(e, scope, coreDf.columns)) None
-      else
-        try { val c = expr(e, ecCore); coreDf.select(c); Some(c) }
-        catch { case _: Throwable => None }
-    val pairs = corr.toList.zipWithIndex.map {
-      case (BinaryOp("=", a, b), j) =>
-        val keyName = s"__ck_${serial}_$j"
-        (innerSide(a), innerSide(b)) match {
-          case (Some(ia), None) => (keyName, ia, b)
-          case (None, Some(ib)) => (keyName, ib, a)
-          case _ => return None
-        }
-      case _ => return None
-    }
-    val aggCol = expr(items.head.expr, ExprCtx(ctx, aggMode = true, dfOpt = Some(coreDf)))
-    val grouped = coreDf
-      .groupBy(pairs.map { case (kn, ic, _) => ic.as(kn) }: _*)
-      .agg(aggCol.as(name))
-    val ecOuter = ExprCtx(ctx, aggMode = false, dfOpt = Some(outer))
-    val cond = pairs.map { case (kn, _, oe) => grouped(kn) === expr(oe, ecOuter) }
-      .reduce(_ && _)
-    Some(outer.join(grouped, cond, "left").drop(pairs.map(_._1): _*))
-  }
-
-  private def containsScalarSubquery(e: Expr): Boolean = {
-    var found = false
-    transformExpr(e) { case s: ScalarSubquery => found = true; s }
-    found
-  }
-
-  /** where-clause lowering with semi/anti-join extraction for subquery
-    * predicates (reference: InRelation/Exists exprs.scala:424-450, 522;
-    * Spark lowering per SURVEY §2.D: left_semi / left_anti joins). */
-  private def lowerFilter(df: DataFrame, cond: Expr, ctx: Context): DataFrame = {
-    val conjuncts = splitConjuncts(cond)
-    var out = df
-    val plain = List.newBuilder[Expr]
-    conjuncts.foreach {
-      case InSubquery(e, q, negated) =>
-        out = subqueryJoin(out, Some(e), q, if (negated) "left_anti" else "left_semi", ctx)
-      case ExistsExpr(q) =>
-        out = subqueryJoin(out, None, q, "left_semi", ctx)
-      case Not(ExistsExpr(q)) =>
-        out = subqueryJoin(out, None, q, "left_anti", ctx)
-      // `not (x in {subq})` — same predicate with the negation outside the
-      // IN (the SQL→wv transpiler emits this shape for NOT IN)
-      case Not(InSubquery(e, q, negated)) =>
-        out = subqueryJoin(out, Some(e), q, if (negated) "left_semi" else "left_anti", ctx)
-      case other => plain += other
-    }
-    val rest0 = plain.result()
-    if (rest0.isEmpty) out
-    else {
-      val (joined, rest, bound) = bindScalarSubqueries(out, rest0, ctx)
-      val filtered = joined.filter(
-        rest.map(e => expr(e, ExprCtx(ctx, aggMode = false, dfOpt = Some(joined)))).reduce(_ && _))
-      if (bound.isEmpty) filtered else filtered.drop(bound: _*)
+    val (core, conds) = peel(filtered, Nil)
+    val scope = relationScopeNames(core)
+    // a foreign qualifier below the outermost `where` would silently resolve
+    // to the inner column of the same name (see hasForeignQualifier)
+    if (relationNodes(core).exists { case Filter(_, c) => hasForeignQualifier(c, scope); case _ => false })
+      throw new LoweringException(
+        "a subquery may reference the outer query only in its outermost `where` and its `select`")
+    val ctx = ec.ctx
+    lowerRel(core, ctx) match {
+      case g: Grouped =>
+        if ((conds ++ items.map(_.expr)).exists(hasForeignQualifier(_, scope)))
+          throw new LoweringException(
+            "a correlated subquery cannot group: reference the outer row in a `where` before the `group by`")
+        val where = conds.foldLeft[LRes](g)(filterOn(_, _, ctx))
+        materialize(q match {
+          case Project(_, its, d) => projectOn(where, its, d, ctx)
+          case Agg(_, its) => aggOn(where, its, ctx)
+          case _ => where
+        }, ctx)
+      case Plain(base) =>
+        val outer = new OuterScope(scope, base.columns.toSeq,
+          ec.enclosing ++ ec.dfOpt.fold(Seq.empty[String])(_.columns.toSeq))
+        val iec = ExprCtx(ctx, aggMode = aggMode, dfOpt = Some(base), outer = Some(outer))
+        val where =
+          if (conds.isEmpty) base
+          else base.filter(conds.map(expr(_, iec.copy(aggMode = false))).reduce(_ && _))
+        val out =
+          if (items.isEmpty) where
+          else where.select(items.zipWithIndex.map { case (it, i) => selectCol(it, i, iec) }: _*)
+        if (!distinct) out
+        else if (outer.refs == 0) out.distinct()
+        else if (duplicatesHarmless) out
+        else throw new LoweringException(
+          "a correlated `select distinct` subquery is supported under `in` and `exists` only: " +
+            "aggregate it instead")
     }
   }
 
@@ -2443,23 +2302,11 @@ object Lowering {
       defs: Map[String, Relation],
       what: String
   ): Unit = {
-    def refs(r: Relation): Set[String] = {
-      val acc = Set.newBuilder[String]
-      def walk(x: Any): Unit = x match {
-        case TableRef(n) if defs.contains(n) => acc += n
-        case m @ ModelRef(n, _) =>
-          if (defs.contains(n)) acc += n
-          m.productIterator.foreach(walk)
-        case p @ PartialApply(_, n, _) =>
-          if (defs.contains(n.toLowerCase)) acc += n.toLowerCase
-          p.productIterator.foreach(walk)
-        case p: Product => p.productIterator.foreach(walk)
-        case it: Iterable[_] => it.foreach(walk)
-        case _ => ()
-      }
-      walk(r)
-      acc.result()
-    }
+    def refs(r: Relation): Set[String] = relationNodes(r).collect {
+      case TableRef(n) if defs.contains(n) => n
+      case ModelRef(n, _) if defs.contains(n) => n
+      case PartialApply(_, n, _) if defs.contains(n.toLowerCase) => n.toLowerCase
+    }.toSet
     val visiting = mutable.Set.empty[String]
     val done = mutable.Set.empty[String]
     def dfs(n: String, path: List[String]): Unit = {
@@ -2477,159 +2324,35 @@ object Lowering {
 
   /** Table names and aliases visible inside a relation tree (lowercased) —
     * the name scope a subquery's own qualified refs may legally use. */
-  private def relationScopeNames(r: Relation): Set[String] = {
-    val acc = Set.newBuilder[String]
-    def walk(x: Any): Unit = x match {
-      case TableRef(n) => acc += n.toLowerCase
-      case AliasedRelation(c, alias, _) => acc += alias.toLowerCase; walk(c)
-      case p: Product => p.productIterator.foreach(walk)
-      case it: Iterable[_] => it.foreach(walk)
-      case _ => ()
-    }
-    walk(r)
-    acc.result()
+  private def relationScopeNames(r: Relation): Set[String] =
+    relationNodes(r).collect {
+      case TableRef(n) => n.toLowerCase
+      case AliasedRelation(_, alias, _) => alias.toLowerCase
+    }.toSet
+
+  /** Every node of an AST tree, nested subqueries and expressions included
+    * (a walk over the case classes' fields). */
+  private def relationNodes(x: Any): Iterator[Any] = x match {
+    case p: Product => Iterator.single(p) ++ p.productIterator.flatMap(relationNodes)
+    case it: Iterable[_] => it.iterator.flatMap(relationNodes)
+    case _ => Iterator.empty
   }
 
   /** Does `e` contain a qualified column ref `q.c` whose qualifier names
-    * neither a relation in `scope` nor a column of `cols`? Such a ref can
-    * only come from an OUTER query — the expression is correlated. This must
-    * be checked structurally: resolving it against the inner frame would
-    * silently drop the foreign qualifier to the bare column (the post-join
-    * fallback in expr's DotRef case), turning `l2.k = l1.k` into the
-    * always-true `k = k`. */
-  private def hasForeignQualifier(e: Expr, scope: Set[String], cols: Seq[String]): Boolean = {
+    * no relation in `scope`? Such a ref can only come from an OUTER query —
+    * the expression is correlated. This must be checked structurally:
+    * resolving it against the inner frame would silently drop the foreign
+    * qualifier to the bare column (the post-join fallback in expr's DotRef
+    * case), turning `l2.k = l1.k` into the always-true `k = k`. */
+  private def hasForeignQualifier(e: Expr, scope: Set[String]): Boolean = {
     var found = false
     transformExpr(e) {
       case d @ DotRef(Ident(q), member)
         if !Stdlib.isAggMethod(member) && !Stdlib.scalarMethods.contains(member.toLowerCase) &&
-          !scope.contains(q.toLowerCase) && !cols.exists(_.equalsIgnoreCase(q)) =>
+          !scope.contains(q.toLowerCase) =>
         found = true; d
     }
     found
-  }
-
-  /** All Filter conditions anywhere in a relation tree (for structural
-    * correlation detection of whole subqueries). */
-  private def collectFilterConds(r: Relation): List[Expr] = {
-    val acc = List.newBuilder[Expr]
-    def walk(x: Any): Unit = x match {
-      case Filter(c, cond) => acc += cond; walk(c)
-      case p: Product => p.productIterator.foreach(walk)
-      case it: Iterable[_] => it.foreach(walk)
-      case _ => ()
-    }
-    walk(r)
-    acc.result()
-  }
-
-  /** Lower an in/exists subquery predicate as a semi/anti join. Uncorrelated
-    * subqueries lower directly; subqueries whose filters use foreign
-    * qualifiers (or whose lowering fails on unresolved columns) are
-    * decorrelated: correlated filter conjuncts become join conditions
-    * (reference: Lateral / InRelation, relation.scala:1046-1051,
-    * exprs.scala:424-450; Spark plans a semi/anti hash join either way). */
-  private def subqueryJoin(
-      out: DataFrame,
-      probeExpr: Option[Expr],
-      q: Relation,
-      joinType: String,
-      ctx: Context
-  ): DataFrame = {
-    // structurally-correlated subqueries must NOT take the uncorrelated path:
-    // their foreign quals would silently mis-resolve against the inner frame
-    val scope = relationScopeNames(q)
-    if (collectFilterConds(q).exists(c => hasForeignQualifier(c, scope, Nil)))
-      return decorrelated(out, probeExpr, q, joinType, ctx).getOrElse(
-        throw new LoweringException("cannot decorrelate subquery predicate"))
-    def uncorrelated(): DataFrame = {
-      val sub = lower(q, ctx)
-      probeExpr match {
-        case Some(TupleLit(fields)) =>
-          // tuple-IN over a multi-column subquery: compare positional structs
-          // (field names forced to _c0… so struct equality resolves)
-          if (fields.length != sub.columns.length)
-            throw new LoweringException(
-              s"tuple IN arity mismatch: ${fields.length} vs subquery's ${sub.columns.length} columns")
-          val ec = ExprCtx(ctx, aggMode = false, dfOpt = Some(out))
-          val probe = F.struct(fields.zipWithIndex.map { case (f, i) =>
-            expr(f, ec).as(s"_c$i")
-          }: _*)
-          val renamed = sub.select(F.struct(sub.columns.zipWithIndex.map { case (c, i) =>
-            F.col(c).as(s"_c$i")
-          }: _*).as("__in_key"))
-          out.join(renamed, probe === F.col("__in_key"), joinType)
-        case Some(e) =>
-          val probe = expr(e, ExprCtx(ctx, aggMode = false, dfOpt = Some(out)))
-          val renamed = sub.select(F.col(sub.columns.head).as("__in_key"))
-          if (joinType == "left_anti") {
-            // SQL NOT IN is null-aware: a NULL probe (or any NULL key when
-            // the subquery is non-empty) excludes the row. The
-            // `cond || isnull(cond)` shape is exactly what Spark's
-            // ExtractSingleColumnNullAwareAntiJoin optimizes into a
-            // broadcast null-aware anti join (no nested-loop fallback).
-            val eq = probe === F.col("__in_key")
-            out.join(renamed, eq || eq.isNull, joinType)
-          } else out.join(renamed, probe === F.col("__in_key"), joinType)
-        case None =>
-          out.join(sub.limit(1), F.lit(true), joinType)
-      }
-    }
-    try uncorrelated()
-    catch {
-      case ae: org.apache.spark.sql.AnalysisException =>
-        decorrelated(out, probeExpr, q, joinType, ctx).getOrElse(throw ae)
-    }
-  }
-
-  /** Decorrelate a Project/Filter-chain subquery: local conjuncts filter the
-    * core, conjuncts that do not resolve against it become join conditions. */
-  private def decorrelated(
-      out: DataFrame,
-      probeExpr: Option[Expr],
-      q: Relation,
-      joinType: String,
-      ctx: Context
-  ): Option[DataFrame] = {
-    var rel = q
-    var projItems: List[SelectItem] = Nil
-    rel match {
-      case Project(c, items, _) => projItems = items; rel = c
-      case _ =>
-    }
-    val filterConjuncts = mutable.ListBuffer.empty[Expr]
-    var unwrapping = true
-    while (unwrapping) rel match {
-      case Filter(c, fcond) => filterConjuncts ++= splitConjuncts(fcond); rel = c
-      case _ => unwrapping = false
-    }
-    if (filterConjuncts.isEmpty) return None
-    val core = try lower(rel, ctx) catch { case _: Throwable => return None }
-    var coreDf = core
-    val scope = relationScopeNames(rel)
-    val corr = mutable.ListBuffer.empty[Expr]
-    filterConjuncts.foreach { cj =>
-      // structural check first: a foreign qualifier would silently resolve to
-      // the bare inner column (always-true/false condition), not throw
-      if (hasForeignQualifier(cj, scope, coreDf.columns)) corr += cj
-      else
-        try coreDf = coreDf.filter(expr(cj, ExprCtx(ctx, aggMode = false, dfOpt = Some(coreDf))))
-        catch { case _: org.apache.spark.sql.AnalysisException => corr += cj }
-    }
-    if (corr.isEmpty) return None
-    // correlated conjuncts lower unbound — the join resolves their qualified
-    // refs against both children (outer keeps its alias, core keeps its own)
-    val ecJoin = ExprCtx(ctx, aggMode = false)
-    val corrCond = corr.toList.map(expr(_, ecJoin)).reduce(_ && _)
-    val cond = probeExpr match {
-      case Some(pe) =>
-        val probe = expr(pe, ExprCtx(ctx, aggMode = false, dfOpt = Some(out)))
-        val subCol = projItems.headOption
-          .map(it => expr(it.expr, ExprCtx(ctx, aggMode = false, dfOpt = Some(coreDf))))
-          .getOrElse(coreDf(coreDf.columns.head))
-        corrCond && (probe === subCol)
-      case None => corrCond
-    }
-    Some(out.join(coreDf, cond, joinType))
   }
 
   private def sortCol(si: SortItem, df: DataFrame, ctx: Context): Column = {
@@ -2655,8 +2378,27 @@ object Lowering {
       aggMode: Boolean,
       env: Map[String, Column] = Map.empty,
       dfOpt: Option[DataFrame] = None,
-      inlineDepth: Int = 0
+      inlineDepth: Int = 0,
+      /** Set while lowering a correlated subquery (see subqueryFrame). */
+      outer: Option[OuterScope] = None,
+      /** Where `dfOpt` is unset (join ON, aggregates, grouped items): the
+        * columns of the enclosing frame a subquery may reference. */
+      enclosing: Seq[String] = Nil
   )
+
+  /** The names a correlated subquery takes from its enclosing frame: a
+    * qualified `q.c` whose qualifier names no relation (`scope`) and no
+    * column (`inner`) of the subquery, and a bare name that is no column of
+    * the subquery but one of the enclosing frame (`enclosing`). Each becomes
+    * an outer reference; `refs` counts them. */
+  final class OuterScope(scope: Set[String], inner: Seq[String], enclosing: Seq[String]) {
+    var refs = 0
+    def foreign(q: String): Boolean =
+      !scope.contains(q.toLowerCase) && !inner.exists(_.equalsIgnoreCase(q))
+    def bare(name: String): Boolean =
+      !inner.exists(_.equalsIgnoreCase(name)) && enclosing.exists(_.equalsIgnoreCase(name))
+    def ref(name: String): Column = { refs += 1; F.col(name).outer() }
+  }
 
   /** Inline a user `def` by argument substitution (reference:
     * FunctionInliner.scala:43+ — sql-template expansion; here the template is
@@ -2731,6 +2473,7 @@ object Lowering {
             Some(expr(FunctionCall(lower, Nil), ec))
           else None
         }
+        .orElse(ec.outer.filter(_.bare(name)).map(_.ref(name)))
         .getOrElse(F.col(name))
 
     case Underscore =>
@@ -2760,13 +2503,17 @@ object Lowering {
       } else
         target match {
           case Ident(q) if ec.env.contains(q) => ec.env(q).getField(name)
+          case Ident(q) if ec.outer.exists(_.foreign(q)) => ec.outer.get.ref(s"$q.$name")
           case Ident(q) =>
             // qualified column `q.c`: after joins the qualifier may be gone
             // from the output — probe the DataFrame and fall back to the
-            // bare column name (reference merges join columns similarly)
+            // bare column name (reference merges join columns similarly).
+            // Inside a correlated subquery the column stays a name: Spark
+            // re-instances a relation the subquery shares with the
+            // enclosing plan, which a resolved column would not follow
             ec.dfOpt match {
               case Some(df) =>
-                try { df(s"$q.$name") }
+                try { val c = df(s"$q.$name"); if (ec.outer.isDefined) F.col(s"$q.$name") else c }
                 catch {
                   case _: Throwable =>
                     if (df.columns.exists(_.equalsIgnoreCase(name))) F.col(name)
@@ -2906,23 +2653,13 @@ object Lowering {
       }
     case LambdaExpr(_, _) =>
       throw new LoweringException("lambda outside higher-order function context")
-    case ScalarSubquery(_) =>
-      // Every supported position (where / select / add / agg / having /
-      // join-on) binds scalar subqueries LAZILY via bindScalarSubqueries —
-      // reaching this case means an unsupported position (e.g. a sort key).
-      // Throw instead of silently running an eager driver-side job.
-      throw new LoweringException(
-        "scalar subquery is not supported in this position; supported: " +
-          "where, select, add, agg, having, join conditions")
-    case InSubquery(_, _, _) | ExistsExpr(_) =>
-      // reached for non-conjunct positions too (e.g. `x in {…} or y > 5`:
-      // the subquery extraction walks top-level AND conjuncts only) — name
-      // the actual limitation and a rewrite, not a false "outside where"
-      throw new LoweringException(
-        "IN/EXISTS subqueries are supported only as top-level AND conjuncts " +
-          "of where/having (and join conditions) — a subquery under OR/NOT " +
-          "is not decorrelated; rewrite as a union of filters or join the " +
-          "subquery explicitly")
+    case ScalarSubquery(q) => subqueryFrame(q, ec, duplicatesHarmless = false).scalar()
+    case ExistsExpr(q) => subqueryFrame(q, ec, duplicatesHarmless = true).exists()
+    case InSubquery(operand, q, negated) =>
+      // a tuple operand lowers to a struct, whose fields Spark matches
+      // against the subquery's columns
+      val in = expr(operand, ec).isin(subqueryFrame(q, ec, duplicatesHarmless = true))
+      if (negated) !in else in
     case Underscore => F.lit(1)
     case other => throw new LoweringException(s"cannot lower expression: $other")
   }
@@ -3233,6 +2970,14 @@ object Lowering {
     case Interpolation(_, args) => args.exists(hasAgg)
     case Subscript(t, i) => hasAgg(t) || hasAgg(i)
     case _ => false
+  }
+
+  private def hasSubquery(e: Expr): Boolean = {
+    var found = false
+    transformExpr(e) {
+      case s @ (_: InSubquery | _: ExistsExpr | _: ScalarSubquery) => found = true; s
+    }
+    found
   }
 
   /** Column names referenced by an expression (for pivot group-key inference). */

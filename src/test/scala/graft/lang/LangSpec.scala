@@ -550,16 +550,20 @@ class LangSpec extends SparkTestBase {
   }
 
   test("scalar subquery in where is lazy (no driver collect) and correct") {
-    val df = wv("""
+    val q = """
       from [[1, 10], [2, 20], [3, 30]] as t(id, v)
       where v > (from [[1, 10], [2, 20], [3, 30]] as s(sid, sv) agg avg(sv))
       select id
       order by id
-      test _.rows should be [[3]]
-    """)
-    // the bound subquery must appear as a join in the plan, not a folded literal
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.toLowerCase.contains("join"), s"expected a join in:\n$plan")
+    """
+    val (df, cost) = graft.SparkCost.of(spark)(graft.Graft.query(spark, q, name => table(name)))
+    assert(cost.jobs == 0, s"lowering started ${cost.jobs} Spark job(s)")
+    // the subquery stays a subquery expression, not a folded literal
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalarSubquery]))),
+      s"expected a ScalarSubquery in:\n$plan")
+    assert(df.collect().map(_.getLong(0)).toList == List(3L))
   }
 
   test("scalar subquery in select and add") {
@@ -601,13 +605,249 @@ class LangSpec extends SparkTestBase {
       test _.rows should be [[2, 200]]
     """)
 
-    // unsupported position (sort key) throws instead of collecting
-    intercept[LoweringException] {
+    // sort key: lowers without a job, evaluates at action time
+    // DuckDB: SELECT id FROM (VALUES (1, 10), (2, 20), (3, 30)) t(id, v)
+    //   ORDER BY abs(v - (SELECT avg(sv) FROM (VALUES (10), (20), (30)) s(sv))) DESC, id
+    //   → 1, 3, 2
+    val (sorted, cost) = graft.SparkCost.of(spark)(graft.Graft.query(spark, """
+      from [[1, 10], [2, 20], [3, 30]] as t(id, v)
+      order by abs(v - (from [[10], [20], [30]] as s(sv) agg avg(sv))) desc, id
+      select id
+    """, name => table(name)))
+    assert(cost.jobs == 0, s"lowering started ${cost.jobs} Spark job(s)")
+    assert(sorted.collect().map(_.getLong(0)).toList == List(1L, 3L, 2L))
+  }
+
+  test("correlated count(*) over an empty group is 0, not NULL") {
+    // DuckDB: SELECT r_regionkey, (SELECT count(*) FROM nation
+    //   WHERE n_regionkey = r_regionkey AND n_nationkey < 3) AS n
+    //   FROM region ORDER BY r_regionkey
+    wv("""
+      from region
+      select r_regionkey,
+        n = (from nation where n_regionkey = r_regionkey and n_nationkey < 3 select count(*))
+      order by r_regionkey
+      test _.rows should be [[0, 1], [1, 1], [2, 1], [3, 0], [4, 0]]
+    """)
+  }
+
+  test("correlated count(*) compared with 0 keeps the empty groups") {
+    // DuckDB: SELECT r_regionkey FROM region WHERE 0 = (SELECT count(*) FROM nation
+    //   WHERE n_regionkey = r_regionkey AND n_nationkey < 3) ORDER BY r_regionkey
+    wv("""
+      from region
+      where 0 = (from nation where n_regionkey = r_regionkey and n_nationkey < 3 select count(*))
+      select r_regionkey
+      order by r_regionkey
+      test _.rows should be [[3], [4]]
+    """)
+  }
+
+  test("uncorrelated scalar subquery of 0 rows yields NULL per outer row") {
+    // DuckDB: SELECT id, (SELECT x FROM (VALUES (5)) s(x) WHERE x > 10) AS v
+    //   FROM (VALUES (1), (2)) t(id) ORDER BY id → (1, NULL), (2, NULL)
+    wv("""
+      from [[1], [2]] as t(id)
+      select id, v = (from [[5]] as s(x) where x > 10 select x)
+      order by id
+      test _.rows should be [[1, null], [2, null]]
+    """)
+  }
+
+  test("uncorrelated scalar subquery of 2 rows raises, not multiplies") {
+    // SELECT id, (SELECT x FROM (VALUES (5), (6)) s(x)) FROM (VALUES (1), (2)) t(id)
+    // is a cardinality violation in SQL; DuckDB 1.0 instead returns the first
+    // row ((1, 5), (2, 5)); neither returns the 4 rows of a cross join
+    val e = intercept[Exception] {
       wv("""
         from [[1], [2]] as t(id)
-        order by (from [[1]] as s(x) agg max(x))
-      """)
+        select id, v = (from [[5], [6]] as s(x) select x)
+      """).collect()
     }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("SCALAR_SUBQUERY_TOO_MANY_ROWS")), e.toString)
+  }
+
+  test("correlated scalar subquery with qualified correlation") {
+    // DuckDB: SELECT cid, (SELECT sum(amt) FROM (VALUES (1, 10), (1, 20), (3, 5)) o(ocid, amt)
+    //   WHERE o.ocid = c.cid) AS total FROM (VALUES (1), (2), (3)) c(cid) ORDER BY cid
+    //   → (1, 30), (2, NULL), (3, 5)
+    wv("""
+      from [[1], [2], [3]] as c(cid)
+      select cid, total = (from [[1, 10], [1, 20], [3, 5]] as o(ocid, amt)
+                           where o.ocid = c.cid select amt.sum)
+      order by cid
+      test _.rows should be [[1, 30], [2, null], [3, 5]]
+    """)
+  }
+
+  test("in / exists subqueries under or and not") {
+    // DuckDB: SELECT cid FROM (VALUES (1), (2), (3), (4)) c(cid)
+    //   WHERE cid IN (SELECT x FROM (VALUES (1), (3)) s(x)) OR cid = 4 ORDER BY cid
+    //   → 1, 3, 4
+    wv("""
+      from [[1], [2], [3], [4]] as c(cid)
+      where cid in { from [[1], [3]] as s(x) select x } or cid = 4
+      select cid
+      order by cid
+      test _.rows should be [[1], [3], [4]]
+    """)
+    // DuckDB: … WHERE NOT (cid IN (SELECT x FROM (VALUES (1), (3)) s(x)) OR cid = 4) → 2
+    wv("""
+      from [[1], [2], [3], [4]] as c(cid)
+      where not (cid in { from [[1], [3]] as s(x) select x } or cid = 4)
+      select cid
+      order by cid
+      test _.rows should be [[2]]
+    """)
+    // DuckDB: … WHERE EXISTS (SELECT 1 FROM (VALUES (1, 10), (3, 5)) o(ocid, amt)
+    //   WHERE o.ocid = c.cid) OR cid = 2 ORDER BY cid → 1, 2, 3
+    wv("""
+      from [[1], [2], [3], [4]] as c(cid)
+      where exists { from [[1, 10], [3, 5]] as o(ocid, amt) where o.ocid = c.cid } or cid = 2
+      select cid
+      order by cid
+      test _.rows should be [[1], [2], [3]]
+    """)
+    // DuckDB: … WHERE NOT (EXISTS (…) OR cid = 2) ORDER BY cid → 4
+    wv("""
+      from [[1], [2], [3], [4]] as c(cid)
+      where not (exists { from [[1, 10], [3, 5]] as o(ocid, amt) where o.ocid = c.cid } or cid = 2)
+      select cid
+      order by cid
+      test _.rows should be [[4]]
+    """)
+  }
+
+  test("tuple in over a correlated subquery") {
+    // DuckDB: SELECT cid FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c')) c(cid, tag)
+    //   WHERE row(cid, tag) [NOT] IN (SELECT row(ocid, otag)
+    //     FROM (VALUES (1, 'a'), (2, 'x')) o(ocid, otag) WHERE o.ocid = c.cid)
+    //   ORDER BY cid → IN: 1; NOT IN: 2, 3
+    wv("""
+      from [[1, 'a'], [2, 'b'], [3, 'c']] as c(cid, tag)
+      where (cid, tag) in { from [[1, 'a'], [2, 'x']] as o(ocid, otag)
+                            where o.ocid = c.cid select ocid, otag }
+      select cid
+      order by cid
+      test _.rows should be [[1]]
+    """)
+    wv("""
+      from [[1, 'a'], [2, 'b'], [3, 'c']] as c(cid, tag)
+      where (cid, tag) not in { from [[1, 'a'], [2, 'x']] as o(ocid, otag)
+                                where o.ocid = c.cid select ocid, otag }
+      select cid
+      order by cid
+      test _.rows should be [[2], [3]]
+    """)
+  }
+
+  test("scalar subquery in order by") {
+    // DuckDB: SELECT n_nationkey FROM nation ORDER BY abs(n_regionkey -
+    //   (SELECT avg(r_regionkey) FROM region)) DESC, n_nationkey LIMIT 6
+    //   → 0, 4, 5, 9, 10, 14
+    wv("""
+      from nation
+      order by abs(n_regionkey - (from region agg avg(r_regionkey))) desc, n_nationkey
+      select n_nationkey
+      limit 6
+      test _.rows should be [[0], [4], [5], [9], [10], [14]]
+    """)
+  }
+
+  test("correlated select distinct: kept under in/exists, rejected where duplicates would show") {
+    // DuckDB: SELECT cid FROM (VALUES (1), (2), (3)) c(cid)
+    //   WHERE cid IN (SELECT DISTINCT ocid FROM (VALUES (1, 10), (1, 10), (3, 5)) o(ocid, amt)
+    //     WHERE o.amt >= c.cid * 5) ORDER BY cid → 1
+    wv("""
+      from [[1], [2], [3]] as c(cid)
+      where cid in { from [[1, 10], [1, 10], [3, 5]] as o(ocid, amt)
+                     where o.amt >= c.cid * 5 select distinct ocid }
+      select cid
+      order by cid
+      test _.rows should be [[1]]
+    """)
+    // DuckDB: … WHERE EXISTS (SELECT DISTINCT amt FROM … o(ocid, amt)
+    //   WHERE o.ocid = c.cid) ORDER BY cid → 1, 3
+    wv("""
+      from [[1], [2], [3]] as c(cid)
+      where exists { from [[1, 10], [1, 10], [3, 5]] as o(ocid, amt)
+                     where o.ocid = c.cid select distinct amt }
+      select cid
+      order by cid
+      test _.rows should be [[1], [3]]
+    """)
+    // a lateral join or a scalar use would return the duplicates
+    // (DuckDB: one row (1, 10) per matching cid), so both are rejected
+    val correlated = "{ from [[1, 10], [1, 10], [3, 5]] as o(ocid, amt) where o.ocid = c.cid select distinct amt }"
+    intercept[LoweringException] {
+      wv(s"from [[1], [2], [3]] as c(cid) join lateral $correlated select cid, amt")
+    }
+    intercept[LoweringException] {
+      wv(s"from [[1], [2], [3]] as c(cid) select cid, v = (${correlated.drop(1).dropRight(1)})")
+    }
+    // uncorrelated, the distinct applies
+    // DuckDB: SELECT cid, amt FROM (VALUES (1), (2)) c(cid), LATERAL (SELECT DISTINCT amt
+    //   FROM (VALUES (1, 10), (1, 10), (3, 5)) o(ocid, amt)) ORDER BY cid, amt
+    wv("""
+      from [[1], [2]] as c(cid)
+      join lateral { from [[1, 10], [1, 10], [3, 5]] as o(ocid, amt) select distinct amt }
+      select cid, amt
+      order by cid, amt
+      test _.rows should be [[1, 5], [1, 10], [2, 5], [2, 10]]
+    """)
+  }
+
+  test("unqualified correlation in join on, having, grouped select and agg positions") {
+    val o = "[[1, 10], [1, 20], [3, 5], [2, 7]] as o(ocid, amt)"
+    val lim = "[[1, 25], [2, 1], [3, 9]] as lim(lk, lv)"
+    // DuckDB: SELECT cid, tag FROM (VALUES (1), (2), (3)) c(cid)
+    //   JOIN (VALUES (1, 'a'), (2, 'b'), (3, 'c')) d(did, tag) ON did = cid
+    //   AND 1 < (SELECT count(*) FROM (VALUES (1, 10), (1, 20), (3, 5)) o(ocid, amt)
+    //   WHERE ocid = cid) ORDER BY cid → (1, 'a')
+    wv("""
+      from [[1], [2], [3]] as c(cid)
+      join [[1, 'a'], [2, 'b'], [3, 'c']] as d(did, tag)
+        on did = cid and 1 < (from [[1, 10], [1, 20], [3, 5]] as o(ocid, amt)
+                              where ocid = cid select count(*))
+      select cid, tag
+      order by cid
+      test _.rows should be [[1, 'a']]
+    """)
+    // DuckDB: SELECT ocid, sum(amt) AS total FROM o GROUP BY ocid
+    //   HAVING sum(amt) > (SELECT lv FROM lim WHERE lk = ocid) ORDER BY ocid → (1, 30), (2, 7)
+    wv(s"""
+      from $o
+      group by ocid
+      where amt.sum > (from $lim where lk = ocid select lv)
+      agg total = amt.sum
+      order by ocid
+      test _.rows should be [[1, 30], [2, 7]]
+    """)
+    // DuckDB: SELECT ocid, sum(amt) AS total, (SELECT lv FROM lim WHERE lk = ocid) AS l
+    //   FROM o GROUP BY ocid ORDER BY ocid → (1, 30, 25), (2, 7, 1), (3, 5, 9)
+    wv(s"""
+      from $o
+      group by ocid
+      select ocid, total = amt.sum, l = (from $lim where lk = ocid select lv)
+      order by ocid
+      test _.rows should be [[1, 30, 25], [2, 7, 1], [3, 5, 9]]
+    """)
+    // DuckDB: SELECT ocid, max((SELECT lv FROM lim WHERE lk = ocid)) AS m
+    //   FROM o GROUP BY ocid ORDER BY ocid → (1, 25), (2, 1), (3, 9)
+    wv(s"""
+      from $o
+      group by ocid
+      agg m = max((from $lim where lk = ocid select lv))
+      order by ocid
+      test _.rows should be [[1, 25], [2, 1], [3, 9]]
+    """)
+    // DuckDB: SELECT sum((SELECT lv FROM lim WHERE lk = ocid)) AS s FROM o → 60
+    wv(s"""
+      from $o
+      agg s = sum((from $lim where lk = ocid select lv))
+      test _.rows should be [[60]]
+    """)
   }
 
   test("select * alongside a scalar subquery does not leak helper columns") {
