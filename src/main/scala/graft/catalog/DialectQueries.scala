@@ -226,7 +226,7 @@ object DialectQueries {
 
   // ---------------------------------------------------------------------
   // Reference-corpus leg: the reference's own TPC-H .wv files
-  // (/root/reference/spec/tpch) compile to DuckDB SQL and the driver
+  // (ReferenceCorpus spec/tpch) compile to DuckDB SQL and the driver
   // executes that text as the oracle against the Spark lowering of the
   // SAME file. Only the corpus files whose columns exist in the slimmed
   // testdata schema (and that return rows on it) participate: q1, q6,
@@ -237,12 +237,8 @@ object DialectQueries {
   // verbatim as the wrapper's FROM.
   // ---------------------------------------------------------------------
 
-  private val tpchDir = "/root/reference/spec/tpch"
-
   private def refText(f: String): Option[String] =
-    try Some(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$tpchDir/$f")), java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => None }
+    Option.when(ReferenceCorpus.exists(s"spec/tpch/$f"))(ReferenceCorpus.read(s"spec/tpch/$f"))
 
   /** Schema-driven Spark-side normalization mirroring the oracle wrapper. */
   private def normalize(df: DataFrame): DataFrame = {

@@ -24,7 +24,10 @@ import graft.Graft
   */
 object TpchCatalog {
 
-  private val tpchDir = "/root/reference/spec/tpch"
+  private val tables = Seq("customer", "lineitem", "nation", "orders", "part", "partsupp",
+    "region", "supplier")
+
+  private def data(t: String): String = s"spec/tpch/data/$t.parquet"
 
   /** Post-execution canonicalization of a verbatim corpus result. */
   private def canon(df: DataFrame): DataFrame = {
@@ -43,17 +46,14 @@ object TpchCatalog {
   }
 
   private def runFile(spark: SparkSession, fname: String): DataFrame = {
-    val text = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$tpchDir/$fname")))
-    Graft.query(spark, text,
-      name => graft.Tables.readPath(spark, s"$tpchDir/data/$name.parquet"))
+    ReferenceCorpus.require(s"spec/tpch/$fname" +: tables.map(data): _*)
+    Graft.query(spark, ReferenceCorpus.read(s"spec/tpch/$fname"),
+      name => graft.Tables.readPath(spark, ReferenceCorpus.path(data(name))))
   }
 
   /** DuckDB-side table bindings: CTEs over the same parquet files. */
   private val prelude: String =
-    Seq("customer", "lineitem", "nation", "orders", "part", "partsupp",
-      "region", "supplier")
-      .map(t => s"$t AS (SELECT * FROM read_parquet('$tpchDir/data/$t.parquet'))")
+    tables.map(t => s"$t AS (SELECT * FROM read_parquet('${ReferenceCorpus.path(data(t))}'))")
       .mkString("WITH ", ",\n     ", "\n")
 
   private def entry(n: Int, oracle: String): (String, QueryCatalog.Q, Option[String]) =

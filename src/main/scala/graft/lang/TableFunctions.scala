@@ -174,15 +174,22 @@ object TableFunctions {
   }
 
   /** Checks `args` against the entry's signatures; the first signature that
-    * accepts them wins. */
+    * accepts them wins. Arguments after the positional ones may be named,
+    * `param = value`, as in a model call. */
   def bind(e: Entry, args: List[Expr], ctx: Lowering.Context): Args = {
-    val given = args.map(a => Lowering.constValue(a).orElse(a match {
+    def value(a: Expr): Option[Any] = Lowering.constValue(a).orElse(a match {
       case Ident(n) if e.bareNames => Some(n)
       case _ => None
-    }))
+    })
+    val isParam = e.signatures.flatten.map(_.name).toSet
+    val (named, positional) = args.partitionMap {
+      case BinaryOp("=", Ident(p), v) if isParam(p.toLowerCase) => Left(p.toLowerCase -> value(v))
+      case a => Right(value(a))
+    }
+    val byName = named.toMap
     def attempt(sig: Seq[Param]): Either[String, Map[String, Any]] = {
       val bound = sig.zipWithIndex.flatMap { case (p, i) =>
-        given.lift(i) match {
+        positional.lift(i).orElse(byName.get(p.name)) match {
           case Some(v) => Some(p -> v.flatMap(accept(p.tpe, _)).toRight(
             s"${e.name}: ${p.name} must be ${p.tpe.describe}, got " +
               v.map(x => s"'$x'").getOrElse("a non-literal expression")))
@@ -192,9 +199,11 @@ object TableFunctions {
       bound.collectFirst { case (_, Left(msg)) => msg }.toLeft(
         bound.collect { case (p, Right(v)) => p.name -> v }.toMap)
     }
-    val fits = e.signatures.filter(s =>
-      given.size >= s.count(!_.optional) && given.size <= s.size)
-    val results = fits.map(attempt)
+    def fits(s: Seq[Param]): Boolean = positional.size <= s.size &&
+      byName.keys.forall(n => s.indexWhere(_.name == n) >= positional.size) &&
+      s.zipWithIndex.forall { case (p, i) =>
+        p.optional || i < positional.size || byName.contains(p.name) }
+    val results = e.signatures.filter(fits).map(attempt)
     results.collectFirst { case Right(vs) => new Args(e.name, vs, ctx) }.getOrElse {
       throw new LoweringException(results match {
         case Seq(Left(msg)) => msg
@@ -244,9 +253,9 @@ object TableFunctions {
   import graft.operators._
 
   private val pretok = OneOfT("words", "gpt2")
-  private val similarityMethods = Seq("brute", "lsh", "ivf", "int8", "pq", "pq_trained",
-    "pq_index", "ivf_pq", "ivf_pq_trained", "lsh_int8", "int8_index", "lsh_int8_index",
-    "lsh_int8_part")
+  private val similarityMethods = Seq("brute", "lsh", "ivf", "ivf_kmeans", "int8", "pq",
+    "pq_trained", "pq_index", "ivf_pq", "ivf_pq_trained", "lsh_int8", "int8_index",
+    "lsh_int8_index", "lsh_int8_part", "ivf_int8_part")
 
   private def requireReadable(a: Args, path: String, what: String): Unit =
     try a.spark.read.parquet(path).schema
@@ -307,6 +316,13 @@ object TableFunctions {
     StructType(Seq(id, fld("is_dup", BooleanType, false), id.copy(name = "dup_of")))
   }
 
+  /** (id_a, id_b, score) pairs keyed by the corpus id column. */
+  private def pairSchema(score: String, tpe: DataType, nullable: Boolean = true)(
+      a: Args): StructType = {
+    val id = column(a, "corpus", "id_col")
+    StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b"), fld(score, tpe, nullable)))
+  }
+
   private def splitStatsSchema(a: Args): StructType = StructType(
     Seq("n_docs", "n_clusters", "clustered_docs", "max_cluster_size", "train_docs")
       .map(fld(_, LongType, false)) ++
@@ -364,6 +380,16 @@ object TableFunctions {
           "build them with ann_pq_index)")
       Similarity.pqIndexAppend(a.spark, path, a.rel("batch"), a.str("id_col"), a.str("vec_col"))
       Row(path, a.spark.read.parquet(path).count())
+    },
+
+    // the payload's media metadata as columns (media_type, width, height,
+    // n_bytes, sha); width and height stay null for undecoded bytes
+    entry("as_media", req("corpus", RelT), req("payload_col", ColT), req("media_type", StrT))(
+      "as_media('images', 'png', 'image/png')") { a =>
+      val df = a.rel("corpus")
+      val meta = Multimodal.asMediaColumn(F.col(a.str("payload_col")), a.str("media_type"))
+      df.select(df.columns.map(df.col) ++
+        Seq("media_type", "width", "height", "n_bytes", "sha").map(f => meta.getField(f).as(f)): _*)
     },
 
     // writes the tok_grp-partitioned postings plus `_df`/`_meta` siblings;
@@ -457,6 +483,26 @@ object TableFunctions {
     entry("build_vocab", req("corpus", RelT), req("text_col", ColT), req("size", positive))(
       "build_vocab('documents', 'text', 1000)") { a =>
       CorpusStats.buildVocab(a.rel("corpus"), a.str("text_col"), a.int("size"))
+    },
+
+    // overlapping word windows: (id, chunk_id, chunk_text, n_words)
+    entry("chunk_documents", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT),
+      opt("chunk_words", IntT(2), 256L), opt("overlap_words", IntT(0), 32L))(
+      "chunk_documents('documents', 'doc_id', 'text', 40, 8)") { a =>
+      if (a.int("overlap_words") >= a.int("chunk_words"))
+        a.fail("overlap_words must be below chunk_words")
+      Chunking.chunkDocuments(a.rel("corpus"), a.str("id_col"), a.str("text_col"),
+        a.int("chunk_words"), a.int("overlap_words"))
+    },
+
+    // (id, cluster) per id of an (id_a, id_b) pair relation; cluster is the
+    // smallest id of its connected component
+    entry("connected_components", req("pairs", RelT))(
+      "connected_components('dup_pairs')") { a =>
+      Dedup.connectedComponents(pairsRel(a))
+    }.declares { a =>
+      val id = pairsRel(a).schema("id_a").dataType
+      StructType(Seq(fld("id", id, false), fld("cluster", id, false)))
     },
 
     Entry("contaminated_docs", Seq(contaminationSig),
@@ -571,6 +617,24 @@ object TableFunctions {
       Row(path, a.spark.read.parquet(path).head().getLong(2))
     },
 
+    // (id_a, id_b, cos_sim) pairs at or above the threshold; 'lsh' compares
+    // docs sharing a random-hyperplane bucket, 'brute' every pair
+    entry("dedup_embedding_cosine", req("corpus", RelT), req("id_col", ColT),
+      req("vec_col", ColT), opt("threshold", anyNum, 0.95),
+      opt("method", OneOfT("lsh", "brute"), "lsh"), opt("planes", positive, 12L),
+      opt("tables", positive, 6L))(
+      "dedup_embedding_cosine('embeddings', 'vec_id', 'embedding', 0.9)") { a =>
+      Dedup.embeddingCosinePairs(a.rel("corpus"), a.str("id_col"), a.str("vec_col"),
+        a.num("threshold"), planes = a.int("planes"), bruteForce = a.str("method") == "brute",
+        tables = a.int("tables"))
+    }.declares(pairSchema("cos_sim", DoubleType)),
+
+    // exact dedup: (fingerprint, keep_id, dup_count) per normalized-text group
+    entry("dedup_exact", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT))(
+      "dedup_exact('documents', 'doc_id', 'text')") { a =>
+      Dedup.exactGroups(a.rel("corpus"), a.str("id_col"), a.str("text_col"))
+    },
+
     // (num_hashes, shingle) must match the index build
     Entry("dedup_incremental", Seq(incrementalSig),
       "dedup_incremental('newbatch', 'mh_idx', 'doc_id', 'text', 0.5, 64, 16, 2)",
@@ -579,6 +643,28 @@ object TableFunctions {
     Entry("dedup_incremental_pairs", Seq(incrementalSig),
       "dedup_incremental_pairs('newbatch', 'mh_idx', 'doc_id', 'text', 0.5, 64, 16, 2)",
       incremental(pairsOnly = true)),
+
+    // MinHash-LSH candidate pairs (band collisions) verified by shingle
+    // Jaccard; (id_a, id_b, jaccard)
+    entry("dedup_minhash_lsh", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT),
+      opt("threshold", anyNum, 0.8), opt("num_hashes", positive, 128L),
+      opt("bands", positive, 32L), opt("shingle", positive, 3L))(
+      "dedup_minhash_lsh('documents', 'doc_id', 'text', 0.5, 64, 16, 2)") { a =>
+      if (a.int("num_hashes") % a.int("bands") != 0)
+        a.fail("num_hashes must be divisible by bands")
+      Dedup.minhashLshPairs(a.rel("corpus"), a.str("id_col"), a.str("text_col"),
+        a.num("threshold"), a.int("num_hashes"), a.int("bands"), a.int("shingle"))
+    }.declares(pairSchema("jaccard", DoubleType)),
+
+    // exact n-gram Jaccard pairs; shingles posted by more than max_postings
+    // docs are skipped
+    entry("dedup_ngram_jaccard", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT),
+      opt("n", positive, 2L), opt("threshold", anyNum, 0.5),
+      opt("max_postings", positive, 10000L))(
+      "dedup_ngram_jaccard('documents', 'doc_id', 'text', 2, 0.12)") { a =>
+      Dedup.ngramJaccardPairs(a.rel("corpus"), a.str("id_col"), a.str("text_col"),
+        a.int("n"), a.num("threshold"), a.int("max_postings"))
+    },
 
     // near-duplicate IMAGE pairs via DCT perceptual hash; (id_a, id_b, hamming)
     entry("dedup_phash", req("corpus", RelT), req("id_col", ColT), req("image_col", ColT),
@@ -604,12 +690,46 @@ object TableFunctions {
         a.num("threshold"))
     }.declares(_.rel("corpus").schema),
 
+    // the within-cluster cosine pairs dedup_semantic drops from;
+    // (bucket, id_a, id_b, cos_sim)
+    entry("dedup_semantic_pairs", req("corpus", RelT), req("id_col", ColT), req("vec_col", ColT),
+      opt("nlist", positive, 32L), opt("threshold", anyNum, 0.9))(
+      "dedup_semantic_pairs('embeddings', 'vec_id', 'embedding', 32, 0.9)") { a =>
+      Dedup.semDedupPairs(a.rel("corpus"), a.str("id_col"), a.str("vec_col"), a.int("nlist"),
+        a.num("threshold"))
+    }.declares(a => StructType(fld("bucket", LongType) +: pairSchema("cos_sim", DoubleType)(a).fields)),
+
+    // SimHash near-duplicate pairs: (id_a, id_b, hamming) within max_hamming bits
+    entry("dedup_simhash", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT),
+      opt("max_hamming", IntT(0, 64), 3L))(
+      "dedup_simhash('documents', 'doc_id', 'text', 3)") { a =>
+      Dedup.simhashPairs(a.rel("corpus"), a.str("id_col"), a.str("text_col"), a.int("max_hamming"))
+    }.declares(pairSchema("hamming", IntegerType, nullable = false)),
+
     // masks token spans repeated across >= min_docs documents
     entry("dedup_spans", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT),
       opt("span_len", IntT(2), 8L), opt("min_docs", positive, 2L))(
       "dedup_spans('documents', 'doc_id', 'text', 8, 2)") { a =>
       Dedup.spanDedup(a.rel("corpus"), a.str("id_col"), a.str("text_col"), a.int("span_len"),
         a.int("min_docs"))
+    },
+
+    // the corpus in md5(seed || id) order
+    entry("deterministic_shuffle", req("corpus", RelT), req("id_col", ColT),
+      opt("seed", StrT, "graft"))(
+      "deterministic_shuffle('documents', 'doc_id')") { a =>
+      Sampling.deterministicShuffle(a.rel("corpus"), a.str("id_col"), a.str("seed"))
+    },
+
+    // the corpus minus every pair cluster's members but its smallest id
+    entry("drop_duplicate_clusters", req("corpus", RelT), req("id_col", ColT), req("pairs", RelT))(
+      "drop_duplicate_clusters('documents', 'doc_id', 'dup_pairs')") { a =>
+      Dedup.dropDuplicateClusters(a.rel("corpus"), a.str("id_col"), pairsRel(a))
+    }.declares { a =>
+      pairsRel(a)
+      val id = column(a, "corpus", "id_col")
+      StructType(a.rel("corpus").schema.fields.filter(_.name == id.name) ++
+        a.rel("corpus").schema.fields.filterNot(_.name == id.name))
     },
 
     // Gumbel-top-k importance resampling; target_text_col defaults to text_col
@@ -776,6 +896,23 @@ object TableFunctions {
         a.int("width"), a.int("height"))
     },
 
+    // the corpus rows at every stride-th of up to stride·max_frames frame
+    // indexes, the frame count estimated from the payload size
+    entry("sample_frames", req("corpus", RelT), req("payload_col", ColT),
+      opt("stride", positive, 10L), opt("max_frames", positive, 8L))(
+      "sample_frames('images', 'png', 1, 4)") { a =>
+      Multimodal.sampleFrames(a.rel("corpus"), a.str("payload_col"), a.int("stride"),
+        a.int("max_frames"))
+    },
+
+    // the k rows per class with the smallest md5(seed || id)
+    entry("sample_stratified", req("corpus", RelT), req("class_col", ColT), req("id_col", ColT),
+      req("k", positive), opt("seed", StrT, "graft"))(
+      "sample_stratified('documents', 'lang', 'doc_id', 20)") { a =>
+      Sampling.stratifiedTopK(a.rel("corpus"), a.str("class_col"), a.str("id_col"), a.int("k"),
+        a.str("seed"))
+    },
+
     // md5-ordered corpus prefix whose cumulative token count fits the budget
     entry("select_token_budget", req("corpus", RelT), req("id_col", ColT),
       req("text_col", ColT), req("budget_tokens", IntT(0)), maybe("vocab_rel", RelT))(
@@ -793,14 +930,23 @@ object TableFunctions {
         a.long("budget_tokens"), a.str("order_col"), tokenCounter = tokenCounter(a))
     }.declares(plus(_, "corpus", fld("n_tokens", LongType), fld("cum_tokens", LongType))),
 
-    // per-row cosine top-k neighbours, self-matches excluded; see
-    // similarityTopK for the methods
+    // (id, simhash) 64-bit SimHash signatures
+    entry("simhash_table", req("corpus", RelT), req("id_col", ColT), req("text_col", ColT))(
+      "simhash_table('documents', 'doc_id', 'text')") { a =>
+      Dedup.simhashTable(a.rel("corpus"), a.str("id_col"), a.str("text_col"))
+    },
+
+    // per-query cosine top-k neighbours in the corpus, self-matches
+    // excluded; the queries relation (same id/vector column names) defaults
+    // to the corpus; see similarityTopK for the methods
     Entry("similarity_topk", Seq(
       Seq(req("corpus", RelT), req("id_col", ColT), req("vec_col", ColT), req("k", positive),
-        req("mode", OneOfT("pq_trained", "ivf_pq_trained")), req("train_sample", positive)),
+        req("mode", OneOfT("pq_trained", "ivf_pq_trained")), req("train_sample", positive),
+        maybe("queries", RelT)),
       Seq(req("corpus", RelT), req("id_col", ColT), req("vec_col", ColT), req("k", positive),
         opt("method", OneOfT(similarityMethods: _*), "brute"), maybe("planes", positive),
-        maybe("tables", positive))),
+        maybe("tables", positive), maybe("nlist", positive), maybe("nprobe", positive),
+        maybe("queries", RelT))),
       "similarity_topk('embeddings', 'vec_id', 'embedding', 5, 'int8')", similarityTopK)
       .declares(similaritySchema),
 
@@ -846,6 +992,15 @@ object TableFunctions {
       req("k", positive))(
       "top_ngrams('documents', 'text', 3, 25)") { a =>
       CorpusStats.topNgrams(a.rel("corpus"), a.str("text_col"), a.int("n"), a.int("k"))
+    },
+
+    // stateless hash split: `split` is 'train' iff md5(seed || id) falls
+    // below train_fraction
+    entry("train_test_split", req("corpus", RelT), req("id_col", ColT),
+      req("train_fraction", unitOpen), opt("seed", StrT, "graft"))(
+      "train_test_split('documents', 'doc_id', 0.8)") { a =>
+      Sampling.trainTestSplit(a.rel("corpus"), a.str("id_col"), a.num("train_fraction"),
+        a.str("seed"))
     },
 
     // one-row Zipf health profile
@@ -898,29 +1053,38 @@ object TableFunctions {
 
   private lazy val byName: Map[String, Entry] = entries.map(e => e.name -> e).toMap
 
-  /** similarity_topk methods: 'brute' (exact), 'lsh' | 'ivf' (bucketed),
+  /** similarity_topk methods: 'brute' (exact), 'lsh' | 'ivf' (bucketed;
+    * 'ivf' seeds its cells from the corpus, 'ivf_kmeans' trains them),
     * 'int8' | 'pq' | 'pq_trained' | 'ivf_pq' | 'ivf_pq_trained' (quantized
     * scoring), 'int8_index' | 'lsh_int8_index' (vec_col is the q8 column of
     * a persisted ann_int8_index), and the path-based 'pq_index' (corpus is
-    * an ann_pq_index path, vec_col its codes) and 'lsh_int8_part' (corpus is
-    * a bucket-partitioned ann_lsh_postings path). (planes, tables) apply to
-    * the lsh methods and must match the index build. */
+    * an ann_pq_index path, vec_col its codes), 'lsh_int8_part' (corpus is a
+    * bucket-partitioned ann_lsh_postings path) and 'ivf_int8_part' (corpus
+    * is a cell-partitioned int8 index with its `_centroids` sidecar).
+    * (planes, tables) apply to the lsh methods and must match the index
+    * build; (nlist, nprobe) to the ivf methods, where an index fixes nlist. */
   private def similarityMethod(a: Args): String = {
     val method = a.opt[String]("method").getOrElse(a.str("mode"))
     if (a.has("planes") && !method.startsWith("lsh"))
       a.fail(s"(planes, tables) only apply to lsh methods, not '$method'")
+    if ((a.has("nlist") || a.has("nprobe")) && !method.startsWith("ivf"))
+      a.fail(s"(nlist, nprobe) only apply to ivf methods, not '$method'")
+    if (a.has("nlist") && method == "ivf_int8_part")
+      a.fail("'ivf_int8_part' takes nlist from its index")
     method
   }
+
+  private val pathMethods = Set("pq_index", "lsh_int8_part", "ivf_int8_part")
 
   /** (query_id, corpus_id, score, rank); the path-based methods' ids are
     * taken as long, as every index writer here stores them. */
   private def similaritySchema(a: Args): StructType = {
     val method = similarityMethod(a)
     val id =
-      if (method == "pq_index" || method == "lsh_int8_part") LongType
+      if (pathMethods(method)) LongType
       else column(a, "corpus", "id_col").dataType
     val score = method match {
-      case "brute" | "lsh" | "ivf" => "cos_sim"
+      case "brute" | "lsh" | "ivf" | "ivf_kmeans" => "cos_sim"
       case "pq" | "pq_trained" | "ivf_pq" | "ivf_pq_trained" => "pq_dist"
       case "pq_index" => "pq_sdc_dist"
       case _ => "cos_q8"
@@ -936,22 +1100,29 @@ object TableFunctions {
     val planes = a.opt[Long]("planes").fold(10)(_.toInt)
     val tables = a.opt[Long]("tables").fold(4)(_.toInt)
     val trainSample = a.opt[Long]("train_sample").fold(PqTrainSampleDefault)(_.toInt)
+    def ivf(default: Int, p: String) = a.opt[Long](p).fold(default)(_.toInt)
     // path-based methods read `corpus` as a parquet path, so the relation
     // is only resolved by the methods that use it
     lazy val df = a.rel("corpus")
-    def indexQueries(path: String) =
-      a.spark.read.parquet(path).dropDuplicates(id).select(F.col(id), F.col(vec))
+    lazy val q = if (a.has("queries")) a.rel("queries") else df
+    def pathQueries(path: String) =
+      if (a.has("queries")) a.rel("queries")
+      else a.spark.read.parquet(path).dropDuplicates(id).select(F.col(id), F.col(vec))
     method match {
-      case "brute" => bruteForceTopK(df, id, vec, df, id, vec, k)
-      case "lsh" => lshTopK(df, id, vec, df, id, vec, k, planes = planes, tables = tables)
-      case "ivf" => ivfSeededTopK(df, id, vec, df, id, vec, k)
-      case "ivf_pq" => ivfPqTopK(df, id, vec, df, id, vec, k)
-      case "ivf_pq_trained" => ivfPqTopK(df, id, vec, df, id, vec, k,
+      case "brute" => bruteForceTopK(df, id, vec, q, id, vec, k)
+      case "lsh" => lshTopK(df, id, vec, q, id, vec, k, planes = planes, tables = tables)
+      case "ivf" => ivfSeededTopK(df, id, vec, q, id, vec, k,
+        nlist = ivf(64, "nlist"), nprobe = ivf(8, "nprobe"))
+      case "ivf_kmeans" => ivfTopK(df, id, vec, q, id, vec, k,
+        nlist = ivf(64, "nlist"), nprobe = ivf(8, "nprobe"))
+      case "ivf_pq" => ivfPqTopK(df, id, vec, q, id, vec, k,
+        nlist = ivf(32, "nlist"), nprobe = ivf(4, "nprobe"))
+      case "ivf_pq_trained" => ivfPqTopK(df, id, vec, q, id, vec, k,
         subspaces = PqTrainedSubspaces, ksub = PqTrainedKsub, trained = true,
         trainSample = trainSample)
-      case "int8" => int8BruteForceTopK(df, id, vec, df, id, vec, k)
-      case "pq" => pqTopK(df, id, vec, df, id, vec, k)
-      case "pq_trained" => pqTopK(df, id, vec, df, id, vec, k,
+      case "int8" => int8BruteForceTopK(df, id, vec, q, id, vec, k)
+      case "pq" => pqTopK(df, id, vec, q, id, vec, k)
+      case "pq_trained" => pqTopK(df, id, vec, q, id, vec, k,
         subspaces = PqTrainedSubspaces, ksub = PqTrainedKsub, trained = true,
         trainSample = trainSample)
       case "pq_index" =>
@@ -959,19 +1130,25 @@ object TableFunctions {
         requireReadable(a, path + "_codebook", s"a persisted PQ index for 'pq_index': codes " +
           s"parquet at '$path' plus its codebook sibling at '${path}_codebook' (write both " +
           "with ann_pq_index)")
-        pqIndexTopK(a.spark, path, id, vec, indexQueries(path), id, vec, k)
+        pqIndexTopK(a.spark, path, id, vec, pathQueries(path), id, vec, k)
       case "lsh_int8" =>
-        lshTopK(df, id, vec, df, id, vec, k, planes = planes, tables = tables, int8Scoring = true)
-      case "int8_index" => int8IndexTopK(df, id, vec, df, id, vec, k)
+        lshTopK(df, id, vec, q, id, vec, k, planes = planes, tables = tables, int8Scoring = true)
+      case "int8_index" => int8IndexTopK(df, id, vec, q, id, vec, k)
       case "lsh_int8_index" =>
-        lshTopKInt8Index(df, id, vec, df, id, vec, k, planes = planes, tables = tables)
+        lshTopKInt8Index(df, id, vec, q, id, vec, k, planes = planes, tables = tables)
       case "lsh_int8_part" =>
         val path = a.str("corpus")
         if (!path.matches("(?i).*\\.(parquet)$") && !path.contains("/"))
           a.fail("'lsh_int8_part' expects a path to a bucket-partitioned posting index " +
             "(see ann_int8_index + ann_lsh_postings)")
-        lshTopKPartitionedIndex(path, id, vec, indexQueries(path), id, vec, k,
+        lshTopKPartitionedIndex(path, id, vec, pathQueries(path), id, vec, k,
           planes = planes, tables = tables)
+      case "ivf_int8_part" =>
+        val path = a.str("corpus")
+        requireReadable(a, path + "/_centroids", "a cell-partitioned int8 index with its " +
+          s"'_centroids' sidecar at '$path'")
+        ivfTopKPartitionedIndex(path, id, vec, pathQueries(path), id, vec, k,
+          nprobe = ivf(8, "nprobe"))
     }
   }
 

@@ -908,8 +908,8 @@ object Dedup {
     * codegen, map-side partial agg, one shuffle on id), then fold the vote
     * signs into a single 64-bit long in a projection. */
   /** Cores-aware distinct-signature threshold below which [[simhashPairs]]
-    * takes the dense broadcast-signature path. Empirically tuned by
-    * `graft.BenchSimhashGate` (BENCH_SIMHASH_GATE.json, 32 cores): the
+    * takes the dense broadcast-signature path. Empirically tuned by a
+    * dense-vs-banded sweep recorded in BENCH_SIMHASH_GATE.json (32 cores): the
     * codegen'd cross-join bit_count kernel measures ~3.7e8 comparisons
     * /s/core, and at D = 98k (1.5× the old fixed 64Ki gate) dense was
     * still 3× FASTER than the banded path while also being exact (the

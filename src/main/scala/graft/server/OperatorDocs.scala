@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The native-table-function reference page, built from the registry
   * (graft.lang.TableFunctions): each entry's name, signature and example;
   * its output schema from compiling the example (compile-only, with the
-  * registry's example relations in scope); the wv-surface oracle rows that
-  * call it (QueryCatalog.queryWvTexts) or are named for it; and those rows'
-  * scale exponents from BENCH_SCALE.json (absent file → column omitted). */
+  * registry's example relations in scope); the catalog rows whose wv text
+  * calls it (QueryCatalog.queryWvTexts); and those rows' scale exponents
+  * from BENCH_SCALE.json (absent file → column omitted). */
 object OperatorDocs {
 
   final case class OpDoc(
@@ -24,18 +24,10 @@ object OperatorDocs {
     cache.getOrElseUpdate(dir, {
       val exps = scaleExponents()
       val texts = graft.catalog.QueryCatalog.queryWvTexts
-      val allRowNames = graft.catalog.QueryCatalog.queries.keySet
       graft.lang.TableFunctions.entries.map { e =>
         val name = e.name
-        // oracle rows, both derivations structural: wv-surface rows whose
-        // text CALLS the function, plus rows NAMED for it (the API-built
-        // rows follow the q_<operator>… convention — e.g. the
-        // similarity_topk family is API-built so only the name carries the
-        // association)
         val callRe = ("""(?s).*\b""" + java.util.regex.Pattern.quote(name) + """\s*\(.*""").r
-        val byText = texts.collect { case (n, t) if callRe.matches(t) => n }
-        val byName = allRowNames.filter(_.drop(2).contains(name))
-        val rows = (byText.toSet ++ byName).toSeq.sorted
+        val rows = texts.collect { case (n, t) if callRe.matches(t) => n }.toSeq.sorted
         OpDoc(name, e.signature, e.example, exampleSchema(spark, dir, e.example), rows,
           rows.flatMap(r => exps.get(r).map(r -> _)).toMap)
       }

@@ -207,11 +207,10 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tuneBatchShuffle(batch)
-        writeBatchIdempotent(
-          graft.operators.Dedup.dedupAgainstMinhashIndex(
-            batch, idCol, textCol, index, threshold, numHashes, bands, shingleSize),
-          batchId, outPath)
+        val body = graft.operators.Dedup.dedupAgainstMinhashIndex(
+          batch, idCol, textCol, index, threshold, numHashes, bands, shingleSize)
+        tuneBatchShuffle(body)
+        writeBatchIdempotent(body, batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
@@ -241,8 +240,9 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tuneBatchShuffle(batch)
-        writeBatchIdempotent(scorer(batch), batchId, outPath)
+        val body = scorer(batch)
+        tuneBatchShuffle(body)
+        writeBatchIdempotent(body, batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
@@ -289,11 +289,10 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tuneBatchShuffle(batch)
-        writeBatchIdempotent(
-          graft.operators.Dedup.bloomDedupAgainstKeyed(
-            cKeyed, bloom, batch, idCol, textCol),
-          batchId, outPath)
+        val body = graft.operators.Dedup.bloomDedupAgainstKeyed(
+          cKeyed, bloom, batch, idCol, textCol)
+        tuneBatchShuffle(body)
+        writeBatchIdempotent(body, batchId, outPath)
       }
     val q =
       try (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
@@ -359,35 +358,41 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tuneBatchShuffle(batch)
-        writeBatchIdempotent(
-          graft.operators.Dedup.phashAgainstHashes(
-            corpusHashes, batch, idCol, payloadCol, maxHamming),
-          batchId, outPath)
+        val body = graft.operators.Dedup.phashAgainstHashes(
+          corpusHashes, batch, idCol, payloadCol, maxHamming)
+        tuneBatchShuffle(body)
+        writeBatchIdempotent(body, batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 
-  /** Scale the per-trigger shuffle width to the MICRO-BATCH, not the
+  /** Scale the per-trigger shuffle width to the micro-batch body, not the
     * cluster (optimization r19, guide §2.2 / r18 verdict next-round #4):
     * AQE is off inside streaming queries, so every conf-driven shuffle in a
     * foreachBatch body (distinct, groupBy, join exchanges) used the
     * session-wide `spark.sql.shuffle.partitions` — 32 partitions for a
     * ~1k-row micro-batch, pure task-scheduling overhead repeated per
     * trigger. foreachBatch hands each batch a CLONED session, so setting
-    * the conf here scopes to THIS stream only; sized from the batch's plan
-    * statistics at ~32 MB/partition, floored at 4 (corpus-side probe
-    * shuffles keep modest parallelism) and capped at defaultParallelism
-    * (a large batch behaves exactly as before). Batch-path queries never
-    * pass through here and keep the session default. */
-  private def tuneBatchShuffle(batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val cap = spark.sparkContext.defaultParallelism.toLong
-    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target =
-      if (!bytes.isValidLong) cap
-      else math.max(4L, math.min(cap, bytes.toLong / (32L << 20) + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", target.toString)
+    * the conf here scopes to THIS stream only. The same conf also sizes the
+    * body's shuffles of its static side (the corpus, index or model it
+    * joins), so the width follows the body's largest input by plan
+    * statistics, the batch or a static relation alike. Batch-path queries
+    * never pass through here and keep the session default. */
+  private def tuneBatchShuffle(body: DataFrame): Unit = {
+    val spark = body.sparkSession
+    val inputs = body.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      batchShufflePartitions(inputs, spark.sparkContext.defaultParallelism.toLong).toString)
+  }
+
+  /** Shuffle partitions for a body whose inputs measure `inputBytes`: the
+    * largest at ~32 MB a partition, floored at 4 (probe shuffles keep modest
+    * parallelism) and capped at `cap`, the default parallelism (a large
+    * input behaves as without tuning). */
+  private[streaming] def batchShufflePartitions(inputBytes: Seq[BigInt], cap: Long): Long = {
+    val bytes = (inputBytes :+ BigInt(0)).max
+    if (!bytes.isValidLong) cap
+    else math.max(4L, math.min(cap, bytes.toLong / (32L << 20) + 1))
   }
 
   /** Idempotent micro-batch sink: each batch lands in its own
@@ -452,7 +457,6 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tuneBatchShuffle(batch)
         val spark = batch.sparkSession
         val fp = indexFingerprint(spark, indexPath)
         // ownership at SparkContext granularity: foreachBatch hands each
@@ -465,10 +469,10 @@ object Subscribe {
           indexReloads.incrementAndGet()
           spark.read.parquet(indexPath).persist()
         }
-        writeBatchIdempotent(
-          graft.operators.Dedup.dedupAgainstMinhashIndex(
-            batch, idCol, textCol, idx, threshold, numHashes, bands, shingleSize),
-          batchId, outPath)
+        val body = graft.operators.Dedup.dedupAgainstMinhashIndex(
+          batch, idCol, textCol, idx, threshold, numHashes, bands, shingleSize)
+        tuneBatchShuffle(body)
+        writeBatchIdempotent(body, batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }

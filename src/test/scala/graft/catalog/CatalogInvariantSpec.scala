@@ -7,24 +7,43 @@ import graft.SparkTestBase
   * hash-sorts every output column, so a row emitting an array/struct/map
   * column crashes it — r17's q_bpe_encode shipped a raw `array<string>`
   * and the round's only red row was the comparator's pandas lexsort
-  * dying, not a wrong answer. This spec compiles every wv-surface row
-  * compile-only, asserts that no compile starts a Spark job once the
-  * tables are warm, and rejects non-scalar output columns; the
-  * Scala-lambda rows (whose plans only exist at execution) are gated by the
-  * same check inside Verify itself, which fails the row loudly before the
-  * driver's compare. */
+  * dying, not a wrong answer. This spec compiles every wv row compile-only
+  * (a staged row after its artifacts are written, as the tables are warmed
+  * first), asserts that no compile starts a Spark job, and rejects
+  * non-scalar output columns; the SQL and closure rows are gated by the
+  * same column check inside Verify itself, which fails the row loudly
+  * before the driver's compare. It also pins the row kinds: every row is
+  * wv or SQL text unless it is a listed closure with its reason. */
 class CatalogInvariantSpec extends SparkTestBase {
 
+  test("every row is wv or SQL text, or a listed closure with its reason") {
+    val rows = QueryCatalog.relationalQueries ++ QueryCatalog.pipelineQueries
+    val closures = rows.collect {
+      case (n, q, _) if !q.isInstanceOf[QueryCatalog.WvQuery] &&
+        !q.isInstanceOf[QueryCatalog.SqlQuery] => n
+    }
+    val listed = QueryCatalog.closureRows
+    assert(listed.map(_._1).distinct.size == listed.size, "a closure row is listed twice")
+    assert(listed.forall(_._2.trim.nonEmpty), "a closure row is listed without a reason")
+    assert(closures.sorted == listed.map(_._1).sorted,
+      s"unlisted closures: ${closures.diff(listed.map(_._1))}; " +
+        s"listed rows that are text: ${listed.map(_._1).diff(closures)}")
+    assert(listed.size == 19, s"closure rows: ${listed.size}")
+  }
+
   test("every wv oracle row compiles to scalar-only output columns") {
-    val texts = QueryCatalog.queryWvTexts
-    assert(texts.size > 100, s"wv-text capture looks broken: ${texts.size} rows")
+    val rows = QueryCatalog.wvQueries
+    assert(rows.size > 100, s"wv rows look missing: ${rows.size}")
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val withJobs = scala.collection.mutable.ArrayBuffer.empty[String]
     var checked = 0
     graft.Tables.names.foreach(graft.Tables.read(spark, sfDir, _).schema)
-    texts.toSeq.sortBy(_._1).foreach { case (name, text) =>
+    rows.toSeq.sortBy(_._1).foreach { case (name, w) =>
+      val paths = w.stage(spark, sfDir)
+      paths.values.foreach(graft.Tables.readPath(spark, _).schema)
+      val ctx = graft.lang.Lowering.Context(spark, w.resolver(spark, sfDir, paths), sfDir)
       val (df, cost) = graft.SparkCost.of(spark) {
-        try Some(graft.CompileApi.compileOnly(spark, text, sfDir, None))
+        try Some(graft.CompileApi.compileOnlyWith(ctx, w.bind(paths)))
         catch {
           // write-effecting rows (save/dml) refuse compile-only by design;
           // their execution schemas are covered by Verify's check
@@ -39,7 +58,7 @@ class CatalogInvariantSpec extends SparkTestBase {
         if (bad.nonEmpty) offenders += s"$name -> ${bad.mkString(", ")}"
       }
     }
-    assert(checked > 80, s"too few rows actually compiled: $checked")
+    assert(checked > 150, s"too few rows actually compiled: $checked")
     assert(withJobs.isEmpty,
       "compile-only started Spark jobs:\n  " + withJobs.mkString("\n  "))
     assert(offenders.isEmpty,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * is_valid_behavior member-def model executes for real. */
 class CdpBehaviorSpec extends SparkTestBase {
 
-  private val cdpDir = "/root/reference/spec/cdp_behavior"
+  private val cdpDir = graft.catalog.ReferenceCorpus.path("spec/cdp_behavior")
 
   private def readFile(f: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$cdpDir/$f")))
@@ -47,7 +47,7 @@ class CdpBehaviorSpec extends SparkTestBase {
   }
 
   test("cdp_simple suite: behavior model with member-def filter executes") {
-    val dir = "/root/reference/spec/cdp_simple"
+    val dir = graft.catalog.ReferenceCorpus.path("spec/cdp_simple")
     def read(f: String) = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$f")))
     val text = read("cdp_types_duckdb.wv") + "\n" + read("behavior.wv") +

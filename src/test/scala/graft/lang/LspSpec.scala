@@ -11,7 +11,7 @@ import graft.lang.Lsp._
 class LspSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
-  private val lspWorkspace = "/root/reference/spec/lsp"
+  private val lspWorkspace = graft.catalog.ReferenceCorpus.path("spec/lsp")
 
   // ----- definition ---------------------------------------------------------
 

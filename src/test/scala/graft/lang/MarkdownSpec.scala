@@ -12,7 +12,7 @@ import graft.lang.Markdown._
   */
 class MarkdownSpec extends SparkTestBase {
 
-  private val mdDir = "/root/reference/spec/markdown"
+  private val mdDir = graft.catalog.ReferenceCorpus.path("spec/markdown")
 
   private def mdFiles: Seq[java.io.File] = {
     val d = new java.io.File(mdDir)

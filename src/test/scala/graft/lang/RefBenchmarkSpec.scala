@@ -12,7 +12,7 @@ import graft.SparkTestBase
   * the gate needs no external data. */
 class RefBenchmarkSpec extends SparkTestBase {
 
-  private val specDir = "/root/reference/spec/benchmark"
+  private val specDir = graft.catalog.ReferenceCorpus.path("spec/benchmark")
 
   private lazy val specFiles: Seq[Path] = {
     val dir = Paths.get(specDir)

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * comments state the expectation per file). */
 class RefNegSpec extends SparkTestBase {
 
-  private val negDir = "/root/reference/spec/neg"
+  private val negDir = graft.catalog.ReferenceCorpus.path("spec/neg")
 
   private def files: Seq[java.nio.file.Path] =
     Files.walk(Paths.get(negDir)).iterator().asScala

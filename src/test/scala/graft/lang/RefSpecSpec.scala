@@ -31,7 +31,7 @@ import scala.jdk.CollectionConverters._
   */
 class RefSpecSpec extends SparkTestBase {
 
-  private val specDir = "/root/reference/spec/basic"
+  private val specDir = graft.catalog.ReferenceCorpus.path("spec/basic")
   private val excluded = Set(
     "q5.wv",
     "duckdb/execute.wv")
@@ -71,7 +71,7 @@ class RefSpecSpec extends SparkTestBase {
     // testdata fills in the tables tpch lacks (events/documents/embeddings)
     graft.Tables.names.foreach { n =>
       try {
-        val tpch = s"/root/reference/spec/tpch/data/$n.parquet"
+        val tpch = graft.catalog.ReferenceCorpus.path(s"spec/tpch/data/$n.parquet")
         val df =
           if (new java.io.File(tpch).exists()) spark.read.parquet(tpch)
           else graft.Tables.read(spark, "/root/testdata/sf0.001", n)

@@ -17,8 +17,8 @@ import graft.SparkTestBase
   */
 class RefSqlHiveSpec extends SparkTestBase {
 
-  private val hiveDir = "/root/reference/spec/sql/hive"
-  private val parseableDir = "/root/reference/spec/sql/hive-parseable"
+  private val hiveDir = graft.catalog.ReferenceCorpus.path("spec/sql/hive")
+  private val parseableDir = graft.catalog.ReferenceCorpus.path("spec/sql/hive-parseable")
 
   // no file-level exclusions: hive-udtf.sql's each_top_k statement executes
   // via the window rewrite; only its generic undefined-UDTF statement is

@@ -9,7 +9,7 @@ import graft.SparkTestBase
   * idioms the corpus uses. Excluded files carry reasons. */
 class RefSqlSpec extends SparkTestBase {
 
-  private val sqlDir = "/root/reference/spec/sql/basic"
+  private val sqlDir = graft.catalog.ReferenceCorpus.path("spec/sql/basic")
 
   /** files we do not run in the sequential loop, with reasons */
   private val excluded: Map[String, String] = Map(
@@ -88,7 +88,7 @@ class RefSqlSpec extends SparkTestBase {
   }
 
   test("sql/benchmark corpus: every query executes") {
-    val dir = "/root/reference/spec/sql/benchmark"
+    val dir = graft.catalog.ReferenceCorpus.path("spec/sql/benchmark")
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".sql"))
       .sortBy(_.getName).foreach { f =>
         val text = new String(java.nio.file.Files.readAllBytes(f.toPath))

@@ -13,7 +13,7 @@ import graft.catalog.TpcdsSchema
   */
 class RefSqlTpcdsSpec extends SparkTestBase {
 
-  private val dir = "/root/reference/spec/sql/tpc-ds"
+  private val dir = graft.catalog.ReferenceCorpus.path("spec/sql/tpc-ds")
 
   test("tpc-ds corpus: all 99 queries plan and execute on typed empty tables") {
     val d = new java.io.File(dir)

@@ -9,8 +9,8 @@ import graft.SparkTestBase
   * two front-ends are checked against each other as well. */
 class RefSqlTpchSpec extends SparkTestBase {
 
-  private val sqlDir = "/root/reference/spec/sql/tpc-h"
-  private val dataDir = "/root/reference/spec/tpch/data"
+  private val sqlDir = graft.catalog.ReferenceCorpus.path("spec/sql/tpc-h")
+  private val dataDir = graft.catalog.ReferenceCorpus.path("spec/tpch/data")
 
   private val expectedRows = Map(
     "q1.sql" -> 4L, "q2.sql" -> 4L, "q3.sql" -> 10L, "q4.sql" -> 5L,

@@ -16,8 +16,8 @@ import graft.SparkTestBase
   * spec/trino wv-language corpus.) */
 class RefSqlTrinoSpec2 extends SparkTestBase {
 
-  private val trinoDir = "/root/reference/spec/sql/trino"
-  private val updateDir = "/root/reference/spec/sql/update"
+  private val trinoDir = graft.catalog.ReferenceCorpus.path("spec/sql/trino")
+  private val updateDir = graft.catalog.ReferenceCorpus.path("spec/sql/update")
 
   /** every file runs — no exclusions */
   private val excluded: Map[String, String] = Map.empty

@@ -3,7 +3,7 @@ package graft.lang
 import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.DataFrame
 
-/** Executes the reference's own TPC-H corpus (`/root/reference/spec/tpch/
+/** Executes the reference's own TPC-H corpus (`spec/tpch/
   * q1.wv through q22.wv, run by the reference's RunnerSpec.scala:102 with
   * prepareTPCH=true) end-to-end against the reference's sf0.01 dbgen data
   * (parquet under spec/tpch/data — the driver testdata lacks partsupp and
@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * answer sizes, pinned from DuckDB runs of the equivalent SQL. */
 class RefTpchSpec extends SparkTestBase {
 
-  private val tpchDir = "/root/reference/spec/tpch"
+  private val tpchDir = graft.catalog.ReferenceCorpus.path("spec/tpch")
   private val dataDir = s"$tpchDir/data"
 
   private def tpchTable(name: String): DataFrame =

@@ -18,8 +18,8 @@ import graft.SparkTestBase
 class RefTrinoSpec extends SparkTestBase {
 
   private val dirs = Seq(
-    "/root/reference/spec/trino",
-    "/root/reference/spec/td-trino")
+    graft.catalog.ReferenceCorpus.path("spec/trino"),
+    graft.catalog.ReferenceCorpus.path("spec/td-trino"))
 
   private lazy val specFiles: Seq[Path] = dirs.flatMap { d =>
     val dir = Paths.get(d)

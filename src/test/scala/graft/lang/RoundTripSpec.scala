@@ -15,7 +15,7 @@ import graft.SparkTestBase
   */
 class RoundTripSpec extends SparkTestBase {
 
-  private val sqlDir = "/root/reference/spec/sql/basic"
+  private val sqlDir = graft.catalog.ReferenceCorpus.path("spec/sql/basic")
 
   private def fixtures(): Unit = {
     // same fixture surface as RefSqlSpec: stale warehouse dirs from prior
@@ -169,12 +169,12 @@ class RoundTripSpec extends SparkTestBase {
   test("sql/tpc-h: queries transpile to wv and match the SQL results on dbgen data") {
     // reference parity: RoundTripSpecSqlTPCH (parse→print→parse only);
     // this executes BOTH sides on the reference-shipped dbgen parquet
-    val dataDir = "/root/reference/spec/tpch/data"
+    val dataDir = graft.catalog.ReferenceCorpus.path("spec/tpch/data")
     Seq("customer", "lineitem", "nation", "orders", "part", "partsupp",
       "region", "supplier").foreach { t =>
       spark.read.parquet(s"$dataDir/$t.parquet").createOrReplaceTempView(t)
     }
-    val tpchDir = "/root/reference/spec/sql/tpc-h"
+    val tpchDir = graft.catalog.ReferenceCorpus.path("spec/sql/tpc-h")
     val files = new java.io.File(tpchDir).listFiles()
       .filter(_.getName.endsWith(".sql")).map(_.getName)
       .sortBy(f => f.stripPrefix("q").stripSuffix(".sql").toInt)
@@ -218,7 +218,7 @@ class RoundTripSpec extends SparkTestBase {
     // reference parity: RoundTripSpecSqlTPCD — parse→print→parse. No
     // TPC-DS data ships with the reference, so execution is out of scope;
     // the transpiled text must at least be valid wvlet (parser-accepted).
-    val dsDir = "/root/reference/spec/sql/tpc-ds"
+    val dsDir = graft.catalog.ReferenceCorpus.path("spec/sql/tpc-ds")
     val files = new java.io.File(dsDir).listFiles()
       .filter(_.getName.endsWith(".sql")).map(_.getName).sorted
     var transpiled = 0

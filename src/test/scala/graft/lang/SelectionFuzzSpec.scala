@@ -19,7 +19,7 @@ class SelectionFuzzSpec extends AnyFunSuite {
   }
 
   test("every (file, line, mode) selection parses on spec/basic + spec/tpch") {
-    val files = wvFiles("/root/reference/spec/basic") ++ wvFiles("/root/reference/spec/tpch")
+    val files = wvFiles(graft.catalog.ReferenceCorpus.path("spec/basic")) ++ wvFiles(graft.catalog.ReferenceCorpus.path("spec/tpch"))
     assume(files.nonEmpty, "reference corpus not present")
     var checked = 0
     val failures = scala.collection.mutable.ListBuffer.empty[String]

@@ -41,6 +41,8 @@ class TableFunctionRegistrySpec extends SparkTestBase {
     Seq("bm25_index", "ann_pq_index", "dedup_bloom_index").foreach { n =>
       run("from " + localize(TableFunctions.get(n).get.example)).collect()
     }
+    graft.operators.Similarity.writeIvfInt8Index(spark.read.parquet(s"$tmp/int8_idx"),
+      "vec_id", "q8", s"$tmp/ivf_idx", nlist = 8)
   }
 
   override def afterAll(): Unit = {
@@ -76,11 +78,17 @@ class TableFunctionRegistrySpec extends SparkTestBase {
 
   test("similarity_topk: every method compiles with no job, to its executed schema") {
     fixtures
-    val embeddingMethods = Seq("brute", "lsh", "ivf", "int8", "pq", "pq_trained", "ivf_pq",
-      "ivf_pq_trained", "lsh_int8").map(m => s"('embeddings', 'vec_id', 'embedding', 5, '$m')")
+    val embeddingMethods = Seq("brute", "lsh", "ivf", "ivf_kmeans", "int8", "pq", "pq_trained",
+      "ivf_pq", "ivf_pq_trained", "lsh_int8").map(m => s"('embeddings', 'vec_id', 'embedding', 5, '$m')")
     val indexMethods = Seq("int8_index", "lsh_int8_index").map(m =>
-      s"('int8_idx', 'vec_id', 'q8', 5, '$m')") :+ s"('$tmp/pq_idx', 'vec_id', 'codes', 5, 'pq_index')"
-    val failures = (embeddingMethods ++ indexMethods).flatMap { call =>
+      s"('int8_idx', 'vec_id', 'q8', 5, '$m')") ++ Seq(
+      s"('$tmp/pq_idx', 'vec_id', 'codes', 5, 'pq_index')",
+      s"('$tmp/ivf_idx', 'vec_id', 'q8', 5, 'ivf_int8_part', nprobe = 2)")
+    val named = Seq(
+      "('embeddings', 'vec_id', 'embedding', 5, 'ivf', nlist = 16, nprobe = 2, queries = 'evalvecs')",
+      "('embeddings', 'vec_id', 'embedding', 5, 'pq_trained', 512, queries = 'evalvecs')",
+      "('int8_idx', 'vec_id', 'q8', 5, 'lsh_int8_index', 8, 6, queries = 'int8_idx')")
+    val failures = (embeddingMethods ++ indexMethods ++ named).flatMap { call =>
       val q = TableFunctions.examplePreamble + "from similarity_topk" + call
       val (compiled, cost) = SparkCost.of(spark)(CompileApi.compileOnlyWith(context(), q))
       val executed = Lowering.lowerStatements(Parser.parseStatements(q), context()).get
@@ -101,6 +109,24 @@ class TableFunctionRegistrySpec extends SparkTestBase {
       "dedup_bloom: fpp must be a number literal in (0, 1), got '1.5'")
     assert(error("from contaminated_docs('documents', 'documents', 'doc_id', 'text', 'gpt5')")
       .startsWith("contaminated_docs: n must be a positive integer literal or an n-gram preset"))
+    assert(error("from similarity_topk('embeddings', 'vec_id', 'embedding', 5, 'brute', nlist = 8)") ==
+      "similarity_topk: (nlist, nprobe) only apply to ivf methods, not 'brute'")
+    assert(error("from train_test_split('documents', 'doc_id', 1.5)") ==
+      "train_test_split: train_fraction must be a number literal in (0, 1), got '1.5'")
+  }
+
+  test("named arguments bind by parameter name after the positional ones") {
+    def rows(q: String) = graft.Graft.query(spark, TableFunctions.examplePreamble + q,
+      Tables.resolver(spark, sfDir)).collect().toSeq
+    // queries = a 5-vector relation: exactly its ids are ranked
+    val byQuery = rows("from similarity_topk('embeddings', 'vec_id', 'embedding', 3, " +
+      "queries = 'evalvecs')").map(_.getAs[Long]("query_id")).distinct.sorted
+    assert(byQuery == (0L until 5L))
+    assert(rows("from dedup_ngram_jaccard('documents', 'doc_id', 'text', threshold = 0.12)") ==
+      rows("from dedup_ngram_jaccard('documents', 'doc_id', 'text', 2, 0.12)"))
+    // a name given positionally too, or one the signature lacks, fails to bind
+    intercept[LoweringException](rows(
+      "from dedup_ngram_jaccard('documents', 'doc_id', 'text', 2, n = 3)"))
   }
 
   test("every playground demo table function is a registry native") {

@@ -65,10 +65,10 @@ class WvRoundTripSpec extends AnyFunSuite {
   }
 
   test("spec/basic: parse -> print -> re-parse is the identity on the AST") {
-    roundTrip(wvFiles("/root/reference/spec/basic"), minOk = 132, corpus = "basic")
+    roundTrip(wvFiles(graft.catalog.ReferenceCorpus.path("spec/basic")), minOk = 132, corpus = "basic")
   }
 
   test("spec/tpch: parse -> print -> re-parse is the identity on the AST") {
-    roundTrip(wvFiles("/root/reference/spec/tpch"), minOk = 25, corpus = "tpch")
+    roundTrip(wvFiles(graft.catalog.ReferenceCorpus.path("spec/tpch")), minOk = 25, corpus = "tpch")
   }
 }

@@ -19,7 +19,7 @@ import WvToSql.Target
   */
 class WvToSqlDialectSpec extends SparkTestBase {
 
-  private val tpchDir = "/root/reference/spec/tpch"
+  private val tpchDir = graft.catalog.ReferenceCorpus.path("spec/tpch")
   private val dataDir = s"$tpchDir/data"
   private val tpchTables =
     Seq("customer", "lineitem", "nation", "orders", "part", "partsupp", "region", "supplier")

@@ -9,7 +9,7 @@ import graft.SparkTestBase
   * round-trip discipline the SQL→wv transpiler ships with. */
 class WvToSqlSpec extends SparkTestBase {
 
-  private val tpchDir = "/root/reference/spec/tpch"
+  private val tpchDir = graft.catalog.ReferenceCorpus.path("spec/tpch")
   private val dataDir = s"$tpchDir/data"
   private val tpchTables =
     Seq("customer", "lineitem", "nation", "orders", "part", "partsupp", "region", "supplier")

@@ -44,6 +44,23 @@ class OperatorDocsSpec extends SparkTestBase {
     }
   }
 
+  test("every entry a catalog row calls maps to that row by the row's text alone") {
+    val texts = graft.catalog.QueryCatalog.queryWvTexts
+    docs.foreach { d =>
+      val call = ("\\b" + java.util.regex.Pattern.quote(d.name) + "\\s*\\(").r
+      val callers = texts.collect { case (n, t) if call.findFirstIn(t).isDefined => n }.toSet
+      assert(d.oracleRows.toSet == callers, s"${d.name}: mapped ${d.oracleRows}, called by $callers")
+    }
+    // the families whose rows called the Scala operators before they ran
+    // wv text through the registry
+    Map("similarity_topk" -> "q_similarity_topk_lsh", "dedup_ngram_jaccard" -> "q_dedup_ngram_jaccard",
+      "dedup_phash" -> "q_dedup_phash", "connected_components" -> "q_dedup_clusters",
+      "dedup_semantic_pairs" -> "q_dedup_semantic", "train_test_split" -> "q_curation_pipeline"
+    ).foreach { case (op, row) =>
+      assert(docs.find(_.name == op).get.oracleRows.contains(row), s"$op does not map to $row")
+    }
+  }
+
   test("schema probe resolves output schemas for the core operators") {
     // not every example can lower (path-typed args, placeholder relations
     // without aliases) — but the teaching set must show real schemas

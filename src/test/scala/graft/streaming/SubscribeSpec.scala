@@ -227,6 +227,20 @@ class SubscribeSpec extends SparkTestBase {
     assert(err.getMessage.contains("readStream"))
   }
 
+  test("micro-batch shuffle width follows the largest input, static side included") {
+    // a 1 KB micro-batch joining an 8 GB static corpus: the corpus-side
+    // shuffles need the cluster's width, where sizing from the batch alone
+    // gave the floor of 4
+    val batch = BigInt(1024)
+    val corpus = BigInt(8L) << 30
+    assert(Subscribe.batchShufflePartitions(Seq(batch, corpus), cap = 64) == 64)
+    assert(Subscribe.batchShufflePartitions(Seq(batch, BigInt(3L) << 30), cap = 512) == 97)
+    assert(Subscribe.batchShufflePartitions(Seq(corpus, batch), cap = 64) == 64)
+    // a batch-only body keeps the floor; an unknown (overflowing) size the cap
+    assert(Subscribe.batchShufflePartitions(Seq(batch), cap = 64) == 4)
+    assert(Subscribe.batchShufflePartitions(Seq(batch, BigInt(Long.MaxValue) + 1), cap = 64) == 64)
+  }
+
   test("dedupStream: duplicate keys within the watermark emit once, state evicts") {
     val in = Files.createTempDirectory("dds_in").toString
     val out = Files.createTempDirectory("dds_out").toString
