@@ -237,9 +237,6 @@ object DialectQueries {
   // verbatim as the wrapper's FROM.
   // ---------------------------------------------------------------------
 
-  private def refText(f: String): Option[String] =
-    Option.when(ReferenceCorpus.exists(s"spec/tpch/$f"))(ReferenceCorpus.read(s"spec/tpch/$f"))
-
   /** Schema-driven Spark-side normalization mirroring the oracle wrapper. */
   private def normalize(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.{functions => F}
@@ -261,18 +258,24 @@ object DialectQueries {
   private def nudged(c: String): String = s"round($c + 0.000000005, 4) AS $c"
 
   private def tpchGenRow(name: String, file: String, wrapSelect: String,
-      renames: Map[String, String] = Map.empty): Option[(String, Q, Option[String])] =
-    refText(file).map { text =>
-      val duck = WvToSql.generate(text, WvToSql.Target.DuckDb)
-      val q: Q = (spark, dir) => {
-        // unaliased aggregates auto-name differently in the lowering
-        // (`sum(l_quantity)`) vs the text generator (`sum_l_quantity`);
-        // align the Spark side to the generator's name for the compare
-        val df0 = Graft.query(spark, text, Tables.resolver(spark, dir), basePath = dir)
-        normalize(renames.foldLeft(df0) { case (d, (from, to)) => d.withColumnRenamed(from, to) })
-      }
-      (name, q, Some(s"SELECT $wrapSelect FROM (\n$duck\n)"))
+      renames: Map[String, String] = Map.empty): (String, Q, Option[String]) = {
+    val rel = s"spec/tpch/$file"
+    val q: Q = (spark, dir) => {
+      // unaliased aggregates auto-name differently in the lowering
+      // (`sum(l_quantity)`) vs the text generator (`sum_l_quantity`);
+      // align the Spark side to the generator's name for the compare
+      val df0 = Graft.query(spark, ReferenceCorpus.read(rel), Tables.resolver(spark, dir),
+        basePath = dir)
+      normalize(renames.foldLeft(df0) { case (d, (from, to)) => d.withColumnRenamed(from, to) })
     }
+    // the oracle is generated from the corpus text, so without the corpus
+    // the row has none and fails when it runs, naming the missing file
+    val oracle = Option.when(ReferenceCorpus.exists(rel)) {
+      val duck = WvToSql.generate(ReferenceCorpus.read(rel), WvToSql.Target.DuckDb)
+      s"SELECT $wrapSelect FROM (\n$duck\n)"
+    }
+    (name, q, oracle)
+  }
 
   private val tpchGenRows: Seq[(String, Q, Option[String])] = Seq(
     tpchGenRow("q_tpch1_duckdb_gen", "q1.wv",
@@ -287,7 +290,7 @@ object DialectQueries {
         "strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate",
         nudged("o_totalprice"), nudged("sum_l_quantity")).mkString(", "),
       renames = Map("sum(l_quantity)" -> "sum_l_quantity"))
-  ).flatten
+  )
 
   val all: Seq[(String, Q, Option[String])] = texts.map { case (name, text) =>
     (name, wv(text), Some(WvToSql.generate(text, WvToSql.Target.DuckDb)))

@@ -621,12 +621,10 @@ object TableFunctions {
     // docs sharing a random-hyperplane bucket, 'brute' every pair
     entry("dedup_embedding_cosine", req("corpus", RelT), req("id_col", ColT),
       req("vec_col", ColT), opt("threshold", anyNum, 0.95),
-      opt("method", OneOfT("lsh", "brute"), "lsh"), opt("planes", positive, 12L),
-      opt("tables", positive, 6L))(
+      opt("method", OneOfT("lsh", "brute"), "lsh"))(
       "dedup_embedding_cosine('embeddings', 'vec_id', 'embedding', 0.9)") { a =>
       Dedup.embeddingCosinePairs(a.rel("corpus"), a.str("id_col"), a.str("vec_col"),
-        a.num("threshold"), planes = a.int("planes"), bruteForce = a.str("method") == "brute",
-        tables = a.int("tables"))
+        a.num("threshold"), bruteForce = a.str("method") == "brute")
     }.declares(pairSchema("cos_sim", DoubleType)),
 
     // exact dedup: (fingerprint, keep_id, dup_count) per normalized-text group
@@ -714,11 +712,10 @@ object TableFunctions {
         a.int("min_docs"))
     },
 
-    // the corpus in md5(seed || id) order
-    entry("deterministic_shuffle", req("corpus", RelT), req("id_col", ColT),
-      opt("seed", StrT, "graft"))(
+    // the corpus in md5(seed || id) order, seed 'graft'
+    entry("deterministic_shuffle", req("corpus", RelT), req("id_col", ColT))(
       "deterministic_shuffle('documents', 'doc_id')") { a =>
-      Sampling.deterministicShuffle(a.rel("corpus"), a.str("id_col"), a.str("seed"))
+      Sampling.deterministicShuffle(a.rel("corpus"), a.str("id_col"))
     },
 
     // the corpus minus every pair cluster's members but its smallest id
@@ -905,12 +902,11 @@ object TableFunctions {
         a.int("max_frames"))
     },
 
-    // the k rows per class with the smallest md5(seed || id)
+    // the k rows per class with the smallest md5(seed || id), seed 'graft'
     entry("sample_stratified", req("corpus", RelT), req("class_col", ColT), req("id_col", ColT),
-      req("k", positive), opt("seed", StrT, "graft"))(
+      req("k", positive))(
       "sample_stratified('documents', 'lang', 'doc_id', 20)") { a =>
-      Sampling.stratifiedTopK(a.rel("corpus"), a.str("class_col"), a.str("id_col"), a.int("k"),
-        a.str("seed"))
+      Sampling.stratifiedTopK(a.rel("corpus"), a.str("class_col"), a.str("id_col"), a.int("k"))
     },
 
     // md5-ordered corpus prefix whose cumulative token count fits the budget
@@ -994,13 +990,12 @@ object TableFunctions {
       CorpusStats.topNgrams(a.rel("corpus"), a.str("text_col"), a.int("n"), a.int("k"))
     },
 
-    // stateless hash split: `split` is 'train' iff md5(seed || id) falls
-    // below train_fraction
+    // stateless hash split: `split` is 'train' iff md5(seed || id), seed
+    // 'graft', falls below train_fraction
     entry("train_test_split", req("corpus", RelT), req("id_col", ColT),
-      req("train_fraction", unitOpen), opt("seed", StrT, "graft"))(
+      req("train_fraction", unitOpen))(
       "train_test_split('documents', 'doc_id', 0.8)") { a =>
-      Sampling.trainTestSplit(a.rel("corpus"), a.str("id_col"), a.num("train_fraction"),
-        a.str("seed"))
+      Sampling.trainTestSplit(a.rel("corpus"), a.str("id_col"), a.num("train_fraction"))
     },
 
     // one-row Zipf health profile
@@ -1065,7 +1060,7 @@ object TableFunctions {
     * build; (nlist, nprobe) to the ivf methods, where an index fixes nlist. */
   private def similarityMethod(a: Args): String = {
     val method = a.opt[String]("method").getOrElse(a.str("mode"))
-    if (a.has("planes") && !method.startsWith("lsh"))
+    if ((a.has("planes") || a.has("tables")) && !method.startsWith("lsh"))
       a.fail(s"(planes, tables) only apply to lsh methods, not '$method'")
     if ((a.has("nlist") || a.has("nprobe")) && !method.startsWith("ivf"))
       a.fail(s"(nlist, nprobe) only apply to ivf methods, not '$method'")
@@ -1118,6 +1113,7 @@ object TableFunctions {
       case "ivf_pq" => ivfPqTopK(df, id, vec, q, id, vec, k,
         nlist = ivf(32, "nlist"), nprobe = ivf(4, "nprobe"))
       case "ivf_pq_trained" => ivfPqTopK(df, id, vec, q, id, vec, k,
+        nlist = ivf(32, "nlist"), nprobe = ivf(4, "nprobe"),
         subspaces = PqTrainedSubspaces, ksub = PqTrainedKsub, trained = true,
         trainSample = trainSample)
       case "int8" => int8BruteForceTopK(df, id, vec, q, id, vec, k)

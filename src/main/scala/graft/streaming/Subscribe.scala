@@ -207,10 +207,11 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val body = graft.operators.Dedup.dedupAgainstMinhashIndex(
-          batch, idCol, textCol, index, threshold, numHashes, bands, shingleSize)
-        tuneBatchShuffle(body)
-        writeBatchIdempotent(body, batchId, outPath)
+        tuneBatchShuffle(batch, index)
+        writeBatchIdempotent(
+          graft.operators.Dedup.dedupAgainstMinhashIndex(
+            batch, idCol, textCol, index, threshold, numHashes, bands, shingleSize),
+          batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
@@ -240,9 +241,8 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val body = scorer(batch)
-        tuneBatchShuffle(body)
-        writeBatchIdempotent(body, batchId, outPath)
+        tuneBatchShuffle(batch)
+        writeBatchIdempotent(scorer(batch), batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
@@ -289,10 +289,11 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val body = graft.operators.Dedup.bloomDedupAgainstKeyed(
-          cKeyed, bloom, batch, idCol, textCol)
-        tuneBatchShuffle(body)
-        writeBatchIdempotent(body, batchId, outPath)
+        tuneBatchShuffle(batch)
+        writeBatchIdempotent(
+          graft.operators.Dedup.bloomDedupAgainstKeyed(
+            cKeyed, bloom, batch, idCol, textCol),
+          batchId, outPath)
       }
     val q =
       try (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
@@ -358,29 +359,37 @@ object Subscribe {
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val body = graft.operators.Dedup.phashAgainstHashes(
-          corpusHashes, batch, idCol, payloadCol, maxHamming)
-        tuneBatchShuffle(body)
-        writeBatchIdempotent(body, batchId, outPath)
+        tuneBatchShuffle(batch)
+        writeBatchIdempotent(
+          graft.operators.Dedup.phashAgainstHashes(
+            corpusHashes, batch, idCol, payloadCol, maxHamming),
+          batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 
-  /** Scale the per-trigger shuffle width to the micro-batch body, not the
+  /** Scale the per-trigger shuffle width to the micro-batch, not the
     * cluster (optimization r19, guide §2.2 / r18 verdict next-round #4):
     * AQE is off inside streaming queries, so every conf-driven shuffle in a
     * foreachBatch body (distinct, groupBy, join exchanges) used the
     * session-wide `spark.sql.shuffle.partitions` — 32 partitions for a
     * ~1k-row micro-batch, pure task-scheduling overhead repeated per
     * trigger. foreachBatch hands each batch a CLONED session, so setting
-    * the conf here scopes to THIS stream only. The same conf also sizes the
-    * body's shuffles of its static side (the corpus, index or model it
-    * joins), so the width follows the body's largest input by plan
-    * statistics, the batch or a static relation alike. Batch-path queries
-    * never pass through here and keep the session default. */
-  private def tuneBatchShuffle(body: DataFrame): Unit = {
-    val spark = body.sparkSession
-    val inputs = body.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes)
+    * the conf here scopes to THIS stream only. The width follows the
+    * largest input whose shuffles read the conf, by plan statistics: the
+    * batch, and the `static` relations a body joins through a conf-sized
+    * exchange (the minhash index of the dedupIncrementalAppend bodies; the
+    * bloom and phash bodies probe their corpus map-side or at an explicit
+    * width, and scoredAppend's scorer is a function whose inputs are not
+    * seen here, so only their batch counts). A static relation whose size Spark
+    * does not know (it reports `spark.sql.defaultSizeInBytes`) is not
+    * counted. Batch-path queries never pass through here and keep the
+    * session default. */
+  private def tuneBatchShuffle(batch: DataFrame, static: DataFrame*): Unit = {
+    val spark = batch.sparkSession
+    def bytes(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val unknown = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    val inputs = bytes(batch) +: static.map(bytes).filter(_ < unknown)
     spark.conf.set("spark.sql.shuffle.partitions",
       batchShufflePartitions(inputs, spark.sparkContext.defaultParallelism.toLong).toString)
   }
@@ -469,10 +478,11 @@ object Subscribe {
           indexReloads.incrementAndGet()
           spark.read.parquet(indexPath).persist()
         }
-        val body = graft.operators.Dedup.dedupAgainstMinhashIndex(
-          batch, idCol, textCol, idx, threshold, numHashes, bands, shingleSize)
-        tuneBatchShuffle(body)
-        writeBatchIdempotent(body, batchId, outPath)
+        tuneBatchShuffle(batch, idx)
+        writeBatchIdempotent(
+          graft.operators.Dedup.dedupAgainstMinhashIndex(
+            batch, idCol, textCol, idx, threshold, numHashes, bands, shingleSize),
+          batchId, outPath)
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }

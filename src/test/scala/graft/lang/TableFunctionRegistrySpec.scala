@@ -111,6 +111,8 @@ class TableFunctionRegistrySpec extends SparkTestBase {
       .startsWith("contaminated_docs: n must be a positive integer literal or an n-gram preset"))
     assert(error("from similarity_topk('embeddings', 'vec_id', 'embedding', 5, 'brute', nlist = 8)") ==
       "similarity_topk: (nlist, nprobe) only apply to ivf methods, not 'brute'")
+    assert(error("from similarity_topk('embeddings', 'vec_id', 'embedding', 5, 'ivf', tables = 4)") ==
+      "similarity_topk: (planes, tables) only apply to lsh methods, not 'ivf'")
     assert(error("from train_test_split('documents', 'doc_id', 1.5)") ==
       "train_test_split: train_fraction must be a number literal in (0, 1), got '1.5'")
   }
@@ -124,6 +126,13 @@ class TableFunctionRegistrySpec extends SparkTestBase {
     assert(byQuery == (0L until 5L))
     assert(rows("from dedup_ngram_jaccard('documents', 'doc_id', 'text', threshold = 0.12)") ==
       rows("from dedup_ngram_jaccard('documents', 'doc_id', 'text', 2, 0.12)"))
+    // 'ivf_pq_trained' takes (nlist, nprobe): one cell probed whole ranks
+    // every corpus vector, as 'pq_trained' over the same trained codebook does
+    def ranked(call: String) = rows(s"from similarity_topk('embeddings', 'vec_id', " +
+      s"'embedding', 3, $call) select query_id, corpus_id, rank order by query_id, rank")
+    assert(ranked("'ivf_pq_trained', nlist = 1, nprobe = 1") == ranked("'pq_trained'"))
+    assert(ranked("'ivf_pq_trained', nlist = 1, nprobe = 1") !=
+      ranked("'ivf_pq_trained'"))
     // a name given positionally too, or one the signature lacks, fails to bind
     intercept[LoweringException](rows(
       "from dedup_ngram_jaccard('documents', 'doc_id', 'text', 2, n = 3)"))
