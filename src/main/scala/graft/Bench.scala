@@ -125,17 +125,6 @@ object Bench {
     }
   }
 
-  private def openSession(cpus: String): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     // session warm-up outside any timed region: JVM/codegen/parquet-footer
     // costs land here instead of inflating the chunk's first query
@@ -222,7 +211,7 @@ object Bench {
   private def runChunk(chunkFile: String): Unit = {
     val outPath = sys.env("SPARK_GRAFT_CHUNK_OUT")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Tables.localCpus("32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val names = Files.readAllLines(Paths.get(chunkFile)).toArray(Array.empty[String]).toSeq
       .map(_.trim).filter(_.nonEmpty)
@@ -234,7 +223,7 @@ object Bench {
     val floors = referenceFloorsFile(sfDir)
     val runsOf = (n: String) => runsFor(runs, floors.get(n))
     val loadBefore = loadavg()
-    val spark = openSession(cpus)
+    val spark = Tables.localSession(cpus)
     warmUp(spark, sfDir)
     val rs = runQueries(spark, sfDir, runsOf, sel)
     val ctlFresh = freshControl(spark, sfDir)
@@ -341,7 +330,7 @@ object Bench {
     // lazily-created session for legacy mode / per-chunk fallback only
     var fallbackSpark: Option[SparkSession] = None
     def sparkFallback(): SparkSession = fallbackSpark.getOrElse {
-      val s = openSession(cpus); warmUp(s, sfDir); fallbackSpark = Some(s); s
+      val s = Tables.localSession(cpus); warmUp(s, sfDir); fallbackSpark = Some(s); s
     }
 
     val chunkLoads = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -386,7 +375,7 @@ object Bench {
       case None => ()
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Tables.localCpus("32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val chunkSize = sys.env.getOrElse("SPARK_GRAFT_CHUNK_SIZE", "48").toInt.max(1)
     val forking = sys.env.getOrElse("SPARK_GRAFT_FORK", "1") != "0"

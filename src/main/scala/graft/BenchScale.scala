@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 /** Scale-proof bench: times the heavy operator family at the base SF and at
@@ -212,16 +211,10 @@ object BenchScale {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val workDir = args.lift(2).getOrElse("/tmp/graft_benchscale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Tables.localCpus("32")
     val (waitedSec, gaveUp) = BenchGuard.waitUntilQuiet()
     val loadBefore = loadavg()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(cpus)
 
     // ---- materialize the scaled corpus (untimed) ----
     val base = Tables.read(spark, baseDir, "documents")

@@ -30,17 +30,7 @@ object LspServer {
     val docs = scala.collection.mutable.Map.empty[String, String]
     var initialized = false
     var shutdownRequested = false
-    lazy val spark: SparkSession = {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-      Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
+    lazy val spark: SparkSession = Tables.localSession(Tables.localCpus("4"), logLevel = "ERROR")
   }
 
   // -------------------------------------------------------------------------

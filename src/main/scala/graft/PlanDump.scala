@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -27,14 +26,7 @@ object PlanDump {
       else if (args(2).startsWith("~")) all.keys.toSeq.filter(_.contains(args(2).drop(1))).sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.localCpus("32"))
     Files.createDirectories(Paths.get(outDir))
     // session warm-up so the first row's construct/count split is not JVM
     // cold-start (same rationale as Bench.warmUp)

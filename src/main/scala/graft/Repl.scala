@@ -34,16 +34,9 @@ object Repl {
           System.err.println(s"unknown argument: $other"); sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-repl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      Tables.localCpus(Runtime.getRuntime.availableProcessors().toString),
+      appName = Some("graft-repl"))
     println(s"graft interactive -- tables from $dir; empty line executes, :help for commands")
     if (System.console() != null) {
       // real terminal: raw mode + the LineEditor (history, cursor editing,

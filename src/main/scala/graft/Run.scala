@@ -159,16 +159,7 @@ object Run {
     } finally spark.stop()
   }
 
-  private def localSession(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def localSession(appName: String): SparkSession =
+    Tables.localSession(
+      Tables.localCpus(Runtime.getRuntime.availableProcessors().toString), appName = Some(appName))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 /** DuckDB/Trino → Spark SQL dialect normalization for the SQL front-end
@@ -16,10 +17,12 @@ import scala.collection.mutable
 object SqlDialect {
 
   // --- prepared-statement registry (PREPARE / EXECUTE / DEALLOCATE) --------
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
+  // One registry per session, weakly keyed: a dead session's statements go
+  // with it, and the values are strings, so nothing pins the session.
+  private val prepared = new java.util.WeakHashMap[SparkSession, TrieMap[String, String]]()
 
-  private def sessionKey(spark: SparkSession): Int = System.identityHashCode(spark)
+  private def statements(spark: SparkSession): TrieMap[String, String] =
+    prepared.synchronized(prepared.computeIfAbsent(spark, _ => TrieMap.empty))
 
   /** Normalize one statement; returns the Spark statements to actually run
     * (possibly several, possibly none for pure-registration statements). */
@@ -32,7 +35,7 @@ object SqlDialect {
     val prepRe = """(?is)^PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s+(FROM|AS)\s+(.+)$""".r
     bare match {
       case prepRe(name, _, query) =>
-        prepared.put((sessionKey(spark), name.toLowerCase), query.trim)
+        statements(spark).put(name.toLowerCase, query.trim)
         return Nil
       case _ =>
     }
@@ -40,7 +43,7 @@ object SqlDialect {
     val deallocRe = """(?is)^DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*$""".r
     bare match {
       case deallocRe(name) =>
-        prepared.remove((sessionKey(spark), name.toLowerCase))
+        statements(spark).remove(name.toLowerCase)
         return Nil
       case _ =>
     }
@@ -48,9 +51,8 @@ object SqlDialect {
     val execRe = """(?is)^EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)\s*(?:USING\s+(.+)|\(\s*(.*?)\s*\))?\s*$""".r
     bare match {
       case execRe(name, usingArgs, parenArgs) =>
-        val q = prepared.get((sessionKey(spark), name.toLowerCase))
-        if (q == null)
-          throw new IllegalArgumentException(s"prepared statement '$name' not found")
+        val q = statements(spark).getOrElse(name.toLowerCase,
+          throw new IllegalArgumentException(s"prepared statement '$name' not found"))
         val args = Option(usingArgs).orElse(Option(parenArgs)).map(_.trim)
           .filter(_.nonEmpty).map(splitTopLevel).getOrElse(Nil)
         return normalize(spark, bindParams(q, args))
@@ -64,8 +66,7 @@ object SqlDialect {
     val descInRe = """(?is)^DESCRIBE\s+INPUT\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*$""".r
     bare match {
       case descInRe(name) =>
-        val q = prepared.get((sessionKey(spark), name.toLowerCase))
-        val params = if (q == null) 0 else {
+        val params = statements(spark).get(name.toLowerCase).fold(0) { q =>
           var n = 0; var inStr = false
           q.foreach { c =>
             if (c == '\'') inStr = !inStr else if (!inStr && c == '?') n += 1

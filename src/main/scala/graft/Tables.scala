@@ -14,7 +14,7 @@ object Tables {
 
   /** SparkSession configs needed to read the testdata (events.parquet uses
     * nanosecond timestamps, which Spark only reads as long). */
-  def sessionConfigs: Map[String, String] = extraConfigs ++ Map(
+  def sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // optimization r18 (guide §3.1): let AQE rewrite a sort-merge join to a
     // shuffled-hash join at runtime when EVERY post-shuffle partition of
@@ -32,14 +32,27 @@ object Tables {
     "spark.sql.ansi.doubleQuotedIdentifiers" -> "true"
   )
 
-  /** Experiment hook (optimization rounds): extra session configs from
-    * SPARK_GRAFT_EXTRA_CONF ("k=v;k=v"), applied BEFORE the fixed map so
-    * the data-compat configs can never be overridden. */
-  private def extraConfigs: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
-      .toMap
+  /** The cores a local session uses: `SPARK_GRAFT_CPUS`, else `default`. */
+  def localCpus(default: String): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** The local SparkSession a main runs on: `local[cpus]` with one shuffle
+    * partition per core, no UI, [[sessionConfigs]] and the given log
+    * level. */
+  def localSession(
+      cpus: String,
+      logLevel: String = "WARN",
+      appName: Option[String] = None
+  ): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    appName.foreach(b.appName)
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 
   /** Read a table from `dir`, normalizing the event-time column's physical
     * flavor. The driver has regenerated testdata with different `ts`

@@ -2517,9 +2517,8 @@ object QueryCatalog {
     ),
     (
       // language-level incrementalization: group-by over a windowed
-      // subscription grows the tumbling bucket keys automatically — the
-      // batch full refresh recomputes the windowed rows the streaming
-      // runner appends
+      // subscription groups on the window too — the batch full refresh
+      // recomputes the windowed rows the streaming plan appends
       "q_subscribe_windowed_agg",
       wv("""
         from events.subscribe(watermark_column: 'ts', window_size: '1h')
@@ -2538,8 +2537,8 @@ object QueryCatalog {
       """)
     ),
     (
-      // hopping windows through the language: window_slide explodes the
-      // slide-aligned starts at the subscription; group-by injects them
+      // hopping windows through the language: the group-by groups on
+      // window(ts, 1h, 30m), each event landing in two windows
       "q_subscribe_hopping_agg",
       wv("""
         from events.subscribe(watermark_column: 'ts', window_size: '1h', window_slide: '30m')
@@ -2780,10 +2779,10 @@ object QueryCatalog {
       """)
     ),
     (
-      // gap sessionization through the subscribe() language surface: batch
-      // full refresh runs Sessionize.sessionizeBatch (lag → running-sum sid
-      // → one agg, single shuffle); the same recorded metadata drives the
-      // streaming flatMapGroupsWithState plan (SessionizeSpec equivalence)
+      // gap sessionization through the subscribe() language surface: one
+      // row per session, a session_window group-by with n_events = count
+      // (one shuffle); the same text lowers to the streaming plan
+      // (SessionizeSpec equivalence)
       "q_events_session_rows",
       wv("""
         from events.subscribe(watermark_column: 'ts', session_gap: '30m', session_keys: ['user_id'])
@@ -2810,9 +2809,9 @@ object QueryCatalog {
     (
       // per-session aggregation of ARBITRARY event columns: `group by
       // <session_keys> agg …` over a sessionized subscription aggregates
-      // the raw rows per session (bounds injected as group keys AFTER the
-      // filter, so batch and the streaming session_window plan sessionize
-      // the same rows — Lowering GroupBy-over-session + lowerStreamingAgg)
+      // the raw rows per session (the session_window key is grouped AFTER
+      // the filter, so batch and stream sessionize the same rows — the
+      // same lowering in both modes)
       "q_subscribe_session_agg",
       wv("""
         from events.subscribe(watermark_column: 'ts', session_gap: '6h', session_keys: ['user_id'])

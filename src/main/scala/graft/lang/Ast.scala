@@ -130,8 +130,9 @@ final case class RawSql(sql: String) extends Relation
 /** `tbl.subscribe(watermark_column = 'c', window_size = '1h')` — a
   * subscription over the child relation (reference: Subscribe,
   * relation.scala:1121-1141). Batch lowering is a full refresh of the child
-  * (the reference's non-incremental fallback); the recorded metadata drives
-  * the Structured-Streaming incremental path (streaming/Subscribe.scala). */
+  * (the reference's non-incremental fallback); `Lowering.lowerStreamingAgg`
+  * lowers the same relation over a readStream source in place of the
+  * child. */
 final case class SubscribeRel(child: Relation, params: List[(String, String)])
     extends UnaryRelation
 /** `sql"…"` in EXPRESSION position — a SQL fragment template (reference:

@@ -37,28 +37,19 @@ object Lowering {
         * `type … in <dialect>` blocks; portable dialects win (see
         * registerTypeMembers). */
       typeMemberDefs: mutable.Map[String, (Expr, String)] = mutable.Map.empty,
-      /** subscribe() sites seen while lowering: (watermark column,
-        * raw params) — metadata for an incremental runner
-        * (streaming/Subscribe.scala drives the actual streaming plan). */
+      /** subscribe() sites seen while lowering: (watermark column, raw
+        * params), each site with all its parameters. */
       subscriptions: mutable.ListBuffer[(Option[String], Map[String, String])] =
         mutable.ListBuffer.empty,
       /** `use <schema>` state: unqualified table names retry with this
         * prefix (reference: lazy catalog — validation happens at table
         * resolution, not at the use statement). */
       currentSchema: mutable.Map[String, String] = mutable.Map.empty,
-      /** Streaming substitution: when set, a SubscribeRel lowers to THIS
-        * (already watermarked/deduped) streaming DataFrame instead of the
-        * batch full-refresh plan — the hook [[lowerStreamingAgg]] uses to
-        * re-lower a subscription query's own operators onto a readStream
-        * source. */
+      /** Streaming substitution: when set, every SubscribeRel reads THIS
+        * streaming DataFrame (a readStream source) in place of its child.
+        * [[lowerStreamingAgg]] sets it, so the streaming plan is the batch
+        * lowering with a streaming leaf. */
       streamingSub: Option[DataFrame] = None,
-      /** Raw-rows mode for a sessionized subscription: set by the
-        * group-by-over-session lowering so the SubscribeRel keeps the raw
-        * subscribed rows (dedup applied, NO session collapse) — session
-        * bounds are then injected at the aggregation site, AFTER any
-        * intervening filters, matching the streaming session-window plan
-        * which also sessionizes the filtered stream. */
-      sessionRaw: Boolean = false,
       /** `-> Flow` jump targets requested in this context, keyed by the
         * stage that requested them (None when requested outside a flow
         * stage); FlowRunner triggers each as a new run AFTER the current
@@ -90,8 +81,25 @@ object Lowering {
       style: GroupingStyle,
       /** `pivot on col in (…)` awaiting its group-by/agg (pivot-order.wv
         * shape): (pivot column, pivot values). */
-      pivot: Option[(String, List[Any])] = None
+      pivot: Option[(String, List[Any])] = None,
+      /** The window or session of a grouped subscription, an extra key. */
+      window: Option[WindowKey] = None
   ) extends LRes
+
+  /** The window or session a group-by over a subscription adds as a key:
+    * Spark groups on the struct column `key`, and the output carries its
+    * bounds as `<prefix>_start_ms` and `<prefix>_end_ms`, the end moved back
+    * by `endShiftMs`. */
+  private final case class WindowKey(key: Column, prefix: String, endShiftMs: Long)
+
+  /** A subscription's window (window_size[, window_slide], as Spark
+    * intervals) or session (session_gap in ms, session_keys). */
+  private sealed trait SubGrouping
+  private final case class Windowed(size: String, slide: Option[String]) extends SubGrouping
+  private final case class Sessioned(gapMs: Long, keys: List[String]) extends SubGrouping
+
+  /** The subscription parameters a group-by consumes as keys. */
+  private val groupingParams = Set("window_size", "window_slide", "session_gap", "session_keys")
 
   def lowerStatements(stmts: List[Statement], ctx: Context): Option[DataFrame] = {
     var last: Option[DataFrame] = None
@@ -208,7 +216,8 @@ object Lowering {
         } else saveAsTableResilient(w, target, append, ctx)
         last = Some(df)
       case QueryStatement(DeleteRel(rel0)) =>
-        // terminal `delete` pipe: the filtered scan names the rows to remove
+        // terminal `delete` pipe: `from t where c delete` is `delete from t
+        // where c`, and a bare delete removes every row
         var r = rel0
         val conds = mutable.ListBuffer.empty[Expr]
         var unwrap = true
@@ -217,21 +226,14 @@ object Lowering {
           case BracedRelation(c) => r = c
           case _ => unwrap = false
         }
-        r match {
-          case TableRef(t) =>
-            val df = readTarget(t, ctx)
-            val keep =
-              if (conds.isEmpty) df.limit(0) // bare delete = remove all rows
-              else {
-                val condCol = expr(conds.reduceLeft(BinaryOp("and", _, _)),
-                  ExprCtx(ctx, aggMode = false, dfOpt = Some(df)))
-                df.filter(!F.coalesce(condCol, F.lit(false)))
-              }
-            overwriteTarget(t, keep, ctx)
-          case _ =>
-            throw new LoweringException(
-              "delete must terminate a (filtered) table scan")
+        val target = r match {
+          case TableRef(t) => t
+          case FileScan(path) => path
+          case _ => throw new LoweringException(
+            "delete must terminate a (filtered) table scan")
         }
+        lowerStatements(List(DeleteStmt(target,
+          conds.reduceLeftOption(BinaryOp("and", _, _)).getOrElse(BoolLit(true)))), ctx)
       case AlterTableStmt(table, ifExists, op) =>
         val isPath = isPathTarget(table)
         val exists =
@@ -557,19 +559,16 @@ object Lowering {
   def lower(rel: Relation, ctx: Context): DataFrame =
     materialize(lowerRel(rel, ctx), ctx)
 
-  /** STREAMING execution of a windowed-subscription aggregation: the same
-    * language statements whose batch lowering injects the epoch-aligned
-    * bucket keys (GroupBy over subscribe(window_size: …)) are executed
-    * against a streaming source instead — readStream → (dedup-on-ingest) →
-    * watermark → operators between subscribe and group-by → F.window
-    * aggregation with the query's OWN keys and aggregate columns → append.
-    * This is the slice the reference's Incrementalize rewrite targets
-    * (Incrementalize.scala:27-107): the aggregation itself runs inside the
-    * incremental plan, not just in the batch refresh. Output columns and
-    * their order match the batch lowering exactly (keys…, window_start_ms,
-    * window_end_ms, aggs…) so staged appends compare row-for-row against a
-    * full refresh. Trailing order/limit stages are presentation-only and
-    * skipped — a streaming append sink has no global order.
+  /** STREAMING execution of a subscription query: the batch lowering of the
+    * same statements with the stream in place of the subscription's child
+    * (the reference's Incrementalize leaf swap, Incrementalize.scala:27-107).
+    * The SubscribeRel arm sets the watermark and dedup-on-ingest, and a
+    * group-by groups on the same window or session column as in the batch
+    * refresh, so the staged appends compare row-for-row, with the same
+    * columns, against a full refresh. Trailing order/limit stages are
+    * presentation-only and skipped — a streaming append sink has no global
+    * order. Two shapes above the aggregation have no incremental meaning and
+    * fail here: a limit/offset and a `select distinct`.
     */
   def lowerStreamingAgg(
       stmts: List[Statement],
@@ -593,206 +592,37 @@ object Lowering {
       case Offset(c, _) => strip(c)
       case other => other
     }
-    // Stages between the trailing presentation operators and the Agg core:
-    // post-agg HAVING filters and stateless column stages. Peeled here
-    // (innermost first) and re-applied to the streaming aggregate by
-    // applyPostAggStage — the same per-row lowering the batch refresh uses
-    // over the aggregated Plain relation, so staged appends keep comparing
-    // row-for-row against a full refresh.
-    def peel(r: Relation, acc: List[Relation]): (Relation, List[Relation]) = r match {
-      case a: Agg => (a, acc)
-      case Sort(c, _) => peel(c, acc) // row-preserving; append sink has no order
+    val rel = strip(rel0)
+    // the stages above the aggregation, or Nil when the query does not aggregate
+    def aboveAgg(r: Relation, acc: List[Relation]): List[Relation] = r match {
+      case _: Agg => acc
+      case p: Project if p.items.exists(it => hasAgg(it.expr)) => acc
+      case u: UnaryRelation => aboveAgg(u.child, u :: acc)
+      case _ => Nil
+    }
+    aboveAgg(rel, Nil).foreach {
       case _: Limit | _: Offset =>
         throw new LoweringException(
           "streaming aggregation: limit/offset below a post-agg stage has no " +
             "incremental meaning — move it to the end of the pipeline")
-      case f: Filter => peel(f.child, f :: acc)
-      case p: Project if !p.items.exists(it => hasAgg(it.expr)) =>
-        peel(p.child, p :: acc)
-      case t: TransformColumns => peel(t.child, t :: acc)
-      case ac: AddColumns => peel(ac.child, ac :: acc)
-      case ec: ExcludeColumns => peel(ec.child, ec :: acc)
-      case rc: RenameColumns => peel(rc.child, rc :: acc)
-      case sc: ShiftColumns => peel(sc.child, sc :: acc)
-      case other => (other, acc)
-    }
-    val (core, postStages) = peel(strip(rel0), Nil)
-    val agged: DataFrame = core match {
-      case Agg(gb: GroupBy, items) if windowedSubscription(gb.child).isDefined =>
-        val sub = windowedSubscription(gb.child).get
-        val pmap = sub.params.toMap
-        val ts = pmap.getOrElse("watermark_column", throw new LoweringException(
-          "subscribe: window_size requires watermark_column"))
-        val delay = graft.streaming.Subscribe.duration(
-          pmap.getOrElse("watermark_delay", "10 minutes"))
-        val size = graft.streaming.Subscribe.duration(pmap("window_size"))
-        val slide = pmap.get("window_slide").map(graft.streaming.Subscribe.duration)
-        val base =
-          if (pmap.get("dedup_keys").exists(_.trim.nonEmpty))
-            graft.streaming.Subscribe.dedupFromParams(stream, pmap)
-          else graft.functions.EpochTime.normalizeTs(stream, ts).withWatermark(ts, delay)
-        val ctx2 = ctx.copy(streamingSub = Some(base))
-        val child = lower(gb.child, ctx2)
-        val ectx = ExprCtx(ctx2, aggMode = false)
-        val keyCols = gb.keys.zipWithIndex.map { case (k, i) =>
-          expr(k.expr, ectx).as(itemName(k, i))
-        }
-        val aggCols = items.zipWithIndex.map { case (it, i) =>
-          expr(it.expr, ExprCtx(ctx2, aggMode = true)).as(itemName(it, i))
-        }
-        val win = slide match {
-          case Some(s) => F.window(F.col(ts), size, s)
-          case None => F.window(F.col(ts), size)
-        }
-        val agged = child
-          .groupBy(win.as("__w") +: keyCols: _*)
-          .agg(aggCols.head, aggCols.tail: _*)
-          .withColumn("window_start_ms",
-            graft.functions.EpochTime.unixMillis(F.col("__w.start")))
-          .withColumn("window_end_ms",
-            graft.functions.EpochTime.unixMillis(F.col("__w.end")))
-          .drop("__w")
-        // batch refresh column order: keys…, window keys, aggs…
-        val ordered =
-          gb.keys.zipWithIndex.map { case (k, i) => itemName(k, i) } ++
-            Seq("window_start_ms", "window_end_ms") ++
-            items.zipWithIndex.map { case (it, i) => itemName(it, i) }
-        agged.select(ordered.map(F.col): _*)
-
-      case Agg(gb: GroupBy, items) if sessionizedSubscription(gb.child).isDefined =>
-        // Per-session aggregation executed INSIDE the stream: Spark's
-        // native session_window (watermark-bounded merging state, append
-        // emits each session once when the watermark passes its end).
-        // Parity with the batch kernel (Sessionize.annotateSessions):
-        //   - event time is floored to ms FIRST (batch works on ms-floored
-        //     epoch values; session_window would otherwise split on sub-ms)
-        //   - gap is (gapMs + 1) ms: session_window merges an event only
-        //     when t < last + gap (exclusive), the batch kernel when
-        //     t - last <= gap (inclusive) — +1 ms makes them equal on
-        //     ms-floored integers
-        //   - session_end_ms = end - (gapMs + 1) = last event's ms, the
-        //     batch max(ts_ms)
-        val sub = sessionizedSubscription(gb.child).get
-        val pmap = sub.params.toMap
-        val ts = pmap.getOrElse("watermark_column", throw new LoweringException(
-          "subscribe: session_gap requires watermark_column"))
-        val delay = graft.streaming.Subscribe.duration(
-          pmap.getOrElse("watermark_delay", "10 minutes"))
-        val gapMs = graft.streaming.Subscribe.durationMs(pmap("session_gap"))
-        // same contract as the batch lowering: group keys == session_keys
-        val sessKeys = pmap.get("session_keys")
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        val bareKeys = gb.keys.map(_.expr match {
-          case Ident(n) => n.toLowerCase
-          case other => throw new LoweringException(
-            s"group by over a sessionized subscription supports bare session-key columns, got $other")
-        })
-        if (bareKeys.toSet != sessKeys.map(_.toLowerCase).toSet)
-          throw new LoweringException(
-            s"group by over a sessionized subscription must group by exactly its " +
-              s"session_keys (${sessKeys.mkString(", ")}); got (${bareKeys.mkString(", ")})")
-        val floored = stream.withColumn(ts,
-          F.timestamp_millis(graft.functions.EpochTime.epochMs(F.col(ts))))
-        val base =
-          if (pmap.get("dedup_keys").exists(_.trim.nonEmpty))
-            graft.streaming.Subscribe.dedupFromParams(floored, pmap)
-          else floored.withWatermark(ts, delay)
-        val ctx2 = ctx.copy(streamingSub = Some(base))
-        val child = lower(gb.child, ctx2)
-        val ectx = ExprCtx(ctx2, aggMode = false)
-        val keyCols = gb.keys.zipWithIndex.map { case (k, i) =>
-          expr(k.expr, ectx).as(itemName(k, i))
-        }
-        val aggCols = items.zipWithIndex.map { case (it, i) =>
-          expr(it.expr, ExprCtx(ctx2, aggMode = true)).as(itemName(it, i))
-        }
-        val agged = child
-          .groupBy(F.session_window(F.col(ts), s"${gapMs + 1} milliseconds").as("__w") +: keyCols: _*)
-          .agg(aggCols.head, aggCols.tail: _*)
-          .withColumn("session_start_ms",
-            graft.functions.EpochTime.unixMillis(F.col("__w.start")))
-          .withColumn("session_end_ms",
-            graft.functions.EpochTime.unixMillis(F.col("__w.end")) - F.lit(gapMs + 1))
-          .drop("__w")
-        val ordered =
-          gb.keys.zipWithIndex.map { case (k, i) => itemName(k, i) } ++
-            Seq("session_start_ms", "session_end_ms") ++
-            items.zipWithIndex.map { case (it, i) => itemName(it, i) }
-        agged.select(ordered.map(F.col): _*)
-      case other =>
+      case Project(_, _, true) =>
         throw new LoweringException(
-          "streaming aggregation expects `from <t>.subscribe(window_size: …) " +
-            "… group by … agg …` (optional where/select before the group-by " +
-            "and where/select/column stages after the agg); got " +
-            other.getClass.getSimpleName)
+          "streaming aggregation: `select distinct` after the agg would need " +
+            "a second stateful dedup — deduplicate with group keys instead")
+      case _ => ()
     }
-    postStages.foldLeft(agged)((df, st) => applyPostAggStage(df, st, ctx))
-  }
-
-  /** Post-aggregation stages of a streaming subscription query: HAVING-style
-    * filters and stateless projections/column ops over the emitted aggregate
-    * rows. Each case mirrors the batch lowering of the same node over an
-    * aggregated Plain relation (no subqueries — a subquery after a
-    * streaming aggregation is not reproducible by the batch refresh, and
-    * `select distinct` would need a second stateful dedup; both are rejected
-    * at lowering). */
-  private def applyPostAggStage(df: DataFrame, stage: Relation, ctx: Context): DataFrame = {
-    def subqueryFree(e: Expr): Expr = {
-      if (hasSubquery(e))
-        throw new LoweringException(
-          "streaming aggregation: subqueries are not supported after the agg " +
-            "— the batch refresh could not reproduce a stream-side subquery join")
-      e
-    }
-    val ectx = ExprCtx(ctx, aggMode = false, dfOpt = Some(df))
-    stage match {
-      case Filter(_, cond) => df.filter(expr(subqueryFree(cond), ectx))
-      case Project(_, items, distinct) =>
-        if (distinct)
-          throw new LoweringException(
-            "streaming aggregation: `select distinct` after the agg would need " +
-              "a second stateful dedup — deduplicate with group keys instead")
-        df.select(items.zipWithIndex.map { case (it, i) =>
-          it.expr match {
-            case Star(None) => F.col("*")
-            case Star(Some(q)) => F.col(s"$q.*")
-            case e => expr(subqueryFree(e), ectx).as(itemName(it, i))
-          }
-        }: _*)
-      case TransformColumns(_, items) =>
-        items.zipWithIndex.foldLeft(df) { case (d, (it, i)) =>
-          d.withColumn(itemName(it, i),
-            expr(subqueryFree(it.expr), ExprCtx(ctx, aggMode = false, dfOpt = Some(d))))
-        }
-      case AddColumns(_, items, prepend) =>
-        val newCols = items.zipWithIndex.map { case (it, i) =>
-          expr(subqueryFree(it.expr), ectx).as(itemName(it, i))
-        }
-        val existing = df.columns.map(F.col).toList
-        if (prepend) df.select(newCols ++ existing: _*)
-        else df.select(existing ++ newCols: _*)
-      case ExcludeColumns(_, cols) => df.drop(cols: _*)
-      case RenameColumns(_, renames) => df.withColumnsRenamed(renames.toMap)
-      case ShiftColumns(_, cols, toLeft) =>
-        val shifted = cols.map(c => df.columns.find(_.equalsIgnoreCase(c)).getOrElse(c))
-        val rest = df.columns.filterNot(c => shifted.exists(_.equalsIgnoreCase(c))).toList
-        val order = if (toLeft) shifted ++ rest else rest ++ shifted
-        df.select(order.map(F.col): _*)
-      case other =>
-        throw new LoweringException(
-          s"streaming aggregation: unsupported post-agg stage ${other.getClass.getSimpleName}")
-    }
+    lower(rel, ctx.copy(streamingSub = Some(stream)))
   }
 
   /** Bare `group by` at the end of a pipeline renders keys + arbitrary() of
     * every remaining column (reference: SqlGenerator.scala:487). */
   private def materialize(res: LRes, ctx: Context): DataFrame = res match {
     case Plain(df) => df
-    case g @ Grouped(df, keys, _, _, _) =>
+    case g: Grouped =>
       // reference naming: EVERY input column (the grouping keys included)
       // surfaces as arbitrary(col) after the keys — SqlGenerator.scala:1252
       // `keys ++ defaultAggExprs` maps over all inputRelationType.fields
-      val aggs = df.columns.map(c => F.any_value(F.col(c)).as(s"arbitrary($c)"))
+      val aggs = g.df.columns.map(c => F.any_value(F.col(c)).as(s"arbitrary($c)"))
       aggregate(g, aggs.toList, Nil, ctx)
   }
 
@@ -902,7 +732,8 @@ object Lowering {
 
   /** The input columns and the key names of a grouping. */
   private def groupedNames(g: Grouped): Seq[String] =
-    g.df.columns.toSeq ++ g.keys.zipWithIndex.map { case (k, i) => itemName(k, i) }
+    g.df.columns.toSeq ++ g.keys.zipWithIndex.map { case (k, i) => itemName(k, i) } ++
+      g.window.toSeq.flatMap(w => Seq(s"${w.prefix}_start_ms", s"${w.prefix}_end_ms"))
 
   /** groupBy/rollup/cube + agg + having filters. */
   private def aggregate(
@@ -919,7 +750,7 @@ object Lowering {
     }
     val allAggs = aggCols ++ havingCols
     val grouped0 = g.style match {
-      case GroupingStyle.Plain => g.df.groupBy(keyCols: _*)
+      case GroupingStyle.Plain => g.df.groupBy(keyCols ++ g.window.map(_.key.as("__w")): _*)
       case GroupingStyle.Rollup => g.df.rollup(keyCols: _*)
       case GroupingStyle.Cube => g.df.cube(keyCols: _*)
       case GroupingStyle.Sets(sets) =>
@@ -949,7 +780,7 @@ object Lowering {
     // subtotal and grand-total rows are part of the key space) — a dummy
     // aggregate materializes the grouping rows and is dropped
     val keyOnlyDistinct = allAggs.isEmpty &&
-      g.style == GroupingStyle.Plain && g.pivot.isEmpty
+      g.style == GroupingStyle.Plain && g.pivot.isEmpty && g.window.isEmpty
     var out =
       if (keyOnlyDistinct) g.df.select(keyCols: _*).distinct()
       else if (allAggs.isEmpty)
@@ -968,6 +799,14 @@ object Lowering {
     }
     g.havings.indices.foreach { i => out = out.filter(F.col(s"__having_$i")) }
     if (g.havings.nonEmpty) out = out.drop(g.havings.indices.map(i => s"__having_$i"): _*)
+    // the window or session key becomes its two bounds, after the keys
+    g.window.foreach { w =>
+      out = out.select(out.queryExecution.analyzed.output.flatMap { a =>
+        if (a.name == "__w")
+          graft.streaming.Subscribe.msBounds(F.col("__w"), w.prefix, w.endShiftMs)
+        else Seq(org.apache.spark.sql.graftbridge.ColumnBridge.column(a))
+      }: _*)
+    }
     if (postSelect.nonEmpty) out = out.select(postSelect: _*)
     out
   }
@@ -1048,39 +887,76 @@ object Lowering {
   // ---------------------------------------------------------------------------
   // Relation lowering
   // ---------------------------------------------------------------------------
-  /** The windowed subscription feeding a group-by, seen through operators
-    * that pass columns along (where/select/add/rename/sort/limit/…). A
-    * `subscribe(window_size: …)` must hand its window keys to the next
-    * aggregation even when operators sit in between — finding it here (and
-    * validating column survival at the group-by) is what keeps the batch
-    * refresh and the streaming tumbling plan in lockstep. Aggregations,
-    * joins, and set-ops stop the search: past one of those, the window
-    * metadata has been consumed or the provenance is ambiguous. */
-  private def windowedSubscription(r: Relation): Option[SubscribeRel] =
-    subscriptionThrough(r, "window_size")
+  /** The window or session a subscription's parameters declare, validated:
+    * window_size[, window_slide] or session_gap + session_keys, each over
+    * the watermark column. */
+  private def subscriptionGrouping(pmap: Map[String, String]): Option[SubGrouping] = {
+    import graft.streaming.Subscribe.{duration, durationMs}
+    def dur(p: String): Option[String] = pmap.get(p).map { v =>
+      try duration(v)
+      catch {
+        case _: IllegalArgumentException =>
+          throw new LoweringException(s"subscribe: unrecognized $p '$v'")
+      }
+    }
+    def needsWatermark(p: String): Unit =
+      if (!pmap.contains("watermark_column"))
+        throw new LoweringException(s"subscribe: $p requires watermark_column")
+    (dur("window_size"), dur("session_gap")) match {
+      case (Some(_), Some(_)) =>
+        throw new LoweringException(
+          "subscribe: window_size and session_gap are mutually exclusive")
+      case (Some(size), None) =>
+        needsWatermark("window_size")
+        val slide = dur("window_slide")
+        slide.foreach { sl =>
+          if (durationMs(sl) <= 0 || durationMs(size) % durationMs(sl) != 0)
+            throw new LoweringException(
+              s"subscribe: window_slide must divide window_size (got ${pmap("window_slide")})")
+        }
+        Some(Windowed(size, slide))
+      case (None, Some(gap)) =>
+        needsWatermark("session_gap")
+        val keys = pmap.get("session_keys")
+          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toList).getOrElse(Nil)
+        if (keys.isEmpty)
+          throw new LoweringException("subscribe: session_gap requires session_keys")
+        Some(Sessioned(durationMs(gap), keys))
+      case (None, None) =>
+        if (pmap.contains("window_slide"))
+          throw new LoweringException("subscribe: window_slide requires window_size")
+        None
+    }
+  }
 
-  /** The sessionized subscription feeding a group-by — same pass-through
-    * walk as [[windowedSubscription]], keyed on session_gap. */
-  private def sessionizedSubscription(r: Relation): Option[SubscribeRel] =
-    subscriptionThrough(r, "session_gap")
-
-  private def subscriptionThrough(r: Relation, param: String): Option[SubscribeRel] = r match {
-    case s: SubscribeRel => Some(s).filter(_.params.exists(_._1 == param))
-    case Filter(c, _) => subscriptionThrough(c, param)
-    case BracedRelation(c) => subscriptionThrough(c, param)
-    case AliasedRelation(c, _, _) => subscriptionThrough(c, param)
-    case SelectAsNamed(c, _) => subscriptionThrough(c, param)
-    case Sort(c, _) => subscriptionThrough(c, param)
-    case Limit(c, _) => subscriptionThrough(c, param)
-    case Offset(c, _) => subscriptionThrough(c, param)
-    case DedupRel(c) => subscriptionThrough(c, param)
-    case Project(c, _, _) => subscriptionThrough(c, param)
-    case TransformColumns(c, _) => subscriptionThrough(c, param)
-    case AddColumns(c, _, _) => subscriptionThrough(c, param)
-    case ExcludeColumns(c, _) => subscriptionThrough(c, param)
-    case RenameColumns(c, _) => subscriptionThrough(c, param)
-    case ShiftColumns(c, _, _) => subscriptionThrough(c, param)
-    case _ => None
+  /** The windowed or sessionized subscription a group-by aggregates, seen
+    * through operators that pass columns along (where/select/add/rename/
+    * sort/limit/…), with a function that rebuilds `r` around a replacement
+    * for it. Aggregations, joins, and set-ops stop the search: past one of
+    * those, the window has been consumed or its provenance is ambiguous. */
+  private def groupedSubscription(
+      r: Relation): Option[(SubscribeRel, SubscribeRel => Relation)] = {
+    def through(c: Relation, rebuild: Relation => Relation) =
+      groupedSubscription(c).map { case (s, put) => (s, put.andThen(rebuild)) }
+    r match {
+      case s: SubscribeRel if subscriptionGrouping(s.params.toMap).isDefined =>
+        Some((s, identity))
+      case x: Filter => through(x.child, c => x.copy(child = c))
+      case x: BracedRelation => through(x.child, c => x.copy(child = c))
+      case x: AliasedRelation => through(x.child, c => x.copy(child = c))
+      case x: SelectAsNamed => through(x.child, c => x.copy(child = c))
+      case x: Sort => through(x.child, c => x.copy(child = c))
+      case x: Limit => through(x.child, c => x.copy(child = c))
+      case x: Offset => through(x.child, c => x.copy(child = c))
+      case x: DedupRel => through(x.child, c => x.copy(child = c))
+      case x: Project => through(x.child, c => x.copy(child = c))
+      case x: TransformColumns => through(x.child, c => x.copy(child = c))
+      case x: AddColumns => through(x.child, c => x.copy(child = c))
+      case x: ExcludeColumns => through(x.child, c => x.copy(child = c))
+      case x: RenameColumns => through(x.child, c => x.copy(child = c))
+      case x: ShiftColumns => through(x.child, c => x.copy(child = c))
+      case _ => None
+    }
   }
 
   private def lowerRel(rel: Relation, ctx: Context): LRes = rel match {
@@ -1188,104 +1064,50 @@ object Lowering {
       val renamed = if (cols.nonEmpty) df.toDF(cols: _*) else df
       Plain(renamed.alias(alias))
 
-    case SubscribeRel(child, params) if ctx.streamingSub.isDefined =>
-      // streaming re-lowering (lowerStreamingAgg): the subscription IS the
-      // prepared readStream source — dedup/watermark were applied there,
-      // and windowing happens in the downstream F.window aggregation (no
-      // batch explode; F.window's slide covers hopping)
-      Plain(ctx.streamingSub.get)
-
-    case SubscribeRel(child, params) =>
-      // Batch lowering = full refresh of the child (the reference's
-      // non-incremental fallback for Subscribe). Parameters are validated
-      // against the child schema and recorded: the incremental execution
-      // path is streaming/Subscribe.scala (readStream + watermark + window
-      // + AvailableNow checkpoint re-runs), proven by SubscribeSpec.
-      val df = lower(child, ctx)
+    case sub @ SubscribeRel(child, params) =>
+      // One lowering for the batch full refresh (the reference's
+      // non-incremental fallback) and the stream (lowerStreamingAgg puts the
+      // readStream source in place of the child): the event-time column
+      // normalized, the watermark on a stream (a batch plan has none), and
+      // dedup-on-ingest — a stream keeps a key's first row within the
+      // watermark horizon, a batch one row per key.
       val pmap = params.toMap
-      val wm = pmap.get("watermark_column")
-      wm.foreach { c =>
-        if (!df.columns.exists(_.equalsIgnoreCase(c)))
-          throw new LoweringException(
-            s"subscribe: watermark column '$c' is not a column of the subscribed relation")
-      }
-      Seq("window_size", "window_slide").foreach { p =>
-        pmap.get(p).foreach { w =>
-          if (!w.trim.matches("""\d+\s*(ms|s|sec|second|seconds|m|min|minute|minutes|h|hour|hours|d|day|days)"""))
-            throw new LoweringException(s"subscribe: unrecognized $p '$w'")
-        }
-      }
-      // dedup_keys: [...] — dedup-on-ingest. Batch full-refresh keeps one
-      // representative row per key set (streaming keeps the first row seen
-      // within the watermark horizon — streaming/Subscribe.dedupStream,
-      // driven from this same recorded metadata).
-      val dedupKeys = pmap.get("dedup_keys")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      val resolvedKeys = dedupKeys.map { c =>
-        df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-          throw new LoweringException(
-            s"subscribe: dedup key '$c' is not a column of the subscribed relation"))
-      }
-      ctx.subscriptions += ((wm, pmap))
-      val deduped = if (resolvedKeys.nonEmpty) df.dropDuplicates(resolvedKeys) else df
-      // session_gap + session_keys — gap sessionization. Batch full refresh
-      // runs the declarative window plan; the recorded metadata drives the
-      // streaming flatMapGroupsWithState plan (Subscribe.subscribeFromParams).
-      Plain(pmap.get("session_gap") match {
-        case Some(g) =>
-          if (pmap.contains("window_size"))
-            throw new LoweringException(
-              "subscribe: window_size and session_gap are mutually exclusive")
-          if (!g.trim.matches("""\d+\s*(ms|s|sec|second|seconds|m|min|minute|minutes|h|hour|hours|d|day|days)"""))
-            throw new LoweringException(s"subscribe: unrecognized session_gap '$g'")
-          val tsC = wm.flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
-            .getOrElse(throw new LoweringException(
-              "subscribe: session_gap requires watermark_column"))
-          val sKeys = pmap.get("session_keys")
+      subscriptionGrouping(pmap) match {
+        case Some(Sessioned(_, keys)) =>
+          // unaggregated, a sessionized subscription is one row per session
+          lowerRel(Agg(GroupBy(sub, keys.map(k => SelectItem(Ident(k), None))),
+            List(SelectItem(DotRef(Underscore, "count"), Some("n_events")))), ctx)
+        case grouping =>
+          val df = ctx.streamingSub.getOrElse(lower(child, ctx))
+          def column(c: String, what: String): String =
+            df.columns.find(_.equalsIgnoreCase(c)).getOrElse(throw new LoweringException(
+              s"subscribe: $what '$c' is not a column of the subscribed relation"))
+          val ts = pmap.get("watermark_column").map(column(_, "watermark column"))
+          val dedupKeys = pmap.get("dedup_keys")
             .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-          val resolvedS = sKeys.map { c =>
-            df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-              throw new LoweringException(
-                s"subscribe: session key '$c' is not a column of the subscribed relation"))
+            .map(column(_, "dedup key"))
+          ctx.subscriptions += ((pmap.get("watermark_column"), pmap))
+          val normalized = ts.fold(df)(graft.functions.EpochTime.normalizeTs(df, _))
+          val watermarked = ts match {
+            case Some(c) if df.isStreaming =>
+              normalized.withWatermark(c, graft.streaming.Subscribe.duration(
+                pmap.getOrElse("watermark_delay", "10 minutes")))
+            case _ => normalized
           }
-          if (resolvedS.isEmpty)
-            throw new LoweringException("subscribe: session_gap requires session_keys")
-          // raw mode (group-by-over-session): keep raw rows — the
-          // aggregation site sessionizes AFTER intervening filters, in
-          // lockstep with the streaming session-window plan
-          if (ctx.sessionRaw) deduped
-          else graft.streaming.Sessionize.sessionizeBatch(
-            deduped, tsC, resolvedS, graft.streaming.Subscribe.durationMs(g))
-        case None =>
-          // window_slide: hopping subscription — each event belongs to
-          // window/slide overlapping windows, so the batch relation
-          // materializes one row per containing window with the
-          // epoch-aligned `window_start_ms` (the slide-aligned starts,
-          // exactly F.window(ts, size, slide)'s buckets — the streaming
-          // side of this same metadata). A following group-by picks the
-          // column up as an injected key.
-          pmap.get("window_slide") match {
-            case Some(sl) =>
-              val durMs = graft.streaming.Subscribe.durationMs(
-                pmap.getOrElse("window_size", throw new LoweringException(
-                  "subscribe: window_slide requires window_size")))
-              val slMs = graft.streaming.Subscribe.durationMs(sl)
-              if (slMs <= 0 || durMs % slMs != 0)
-                throw new LoweringException(
-                  s"subscribe: window_slide must divide window_size (got $sl)")
-              val tsC = wm.flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
-                .getOrElse(throw new LoweringException(
-                  "subscribe: window_slide requires watermark_column"))
-              val tsMs = graft.functions.EpochTime.epochMs(F.col(tsC))
-              // pmod, not %: floor-aligned buckets for pre-1970 timestamps
-              // too, matching F.window's origin and the oracle's `//`
-              val aligned = tsMs - F.pmod(tsMs, F.lit(slMs))
-              deduped.withColumn("window_start_ms",
-                F.explode(F.sequence(
-                  aligned - F.lit(durMs - slMs), aligned, F.lit(slMs))))
-            case None => deduped
-          }
-      })
+          val deduped =
+            if (dedupKeys.isEmpty) watermarked
+            else if (!df.isStreaming) watermarked.dropDuplicates(dedupKeys)
+            else if (ts.isEmpty)
+              throw new LoweringException("subscribe: dedup_keys requires watermark_column")
+            else watermarked.dropDuplicatesWithinWatermark(dedupKeys.head, dedupKeys.tail: _*)
+          Plain(grouping match {
+            case Some(Windowed(size, slide @ Some(_))) =>
+              // hopping: one row per containing window
+              deduped.withColumn("window_start_ms", graft.functions.EpochTime.unixMillis(
+                graft.streaming.Subscribe.window(F.col(ts.get), size, slide).getField("start")))
+            case _ => deduped
+          })
+      }
     case CallToolRel(connector, tool, args) =>
       // 1-row invocation summary (reference relation.scala:1182-1205):
       // the tool runs ONCE on the driver at lowering time; the result is a
@@ -1328,105 +1150,57 @@ object Lowering {
       Grouped(lower(pchild, ctx), keys, Nil, GroupingStyle.Plain,
         pivot = Some((pivotCol, values.map(v => constValue(v).getOrElse(
           throw new LoweringException("pivot values must be literals"))))))
-    case GroupBy(child, keys) if sessionizedSubscription(child).isDefined =>
-      // Per-session aggregation: `group by <session_keys> agg …` over a
-      // sessionized subscription aggregates the RAW subscribed rows per
-      // session, with the session bounds injected as extra group keys
-      // (the session analogue of the tumbling-window incrementalization
-      // above — streaming side: lowerStreamingAgg's native session_window
-      // plan). Bounds are computed AFTER intervening filters so batch and
-      // stream sessionize the same rows.
-      val ssub = sessionizedSubscription(child).get
-      val spmap = ssub.params.toMap
-      val sts = spmap.getOrElse("watermark_column", throw new LoweringException(
-        "subscribe: session_gap requires watermark_column"))
-      val sgapMs =
-        try graft.streaming.Subscribe.durationMs(spmap("session_gap"))
-        catch { case e: IllegalArgumentException => throw new LoweringException(e.getMessage) }
-      val sessKeys = spmap.get("session_keys")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      // the group keys must be exactly the session keys: a coarser set
-      // would merge distinct keys' sessions, a finer one would split them —
-      // both silently diverge from the per-key session definition
-      val bare = keys.map(_.expr match {
-        case Ident(n) => n.toLowerCase
-        case other => throw new LoweringException(
-          s"group by over a sessionized subscription supports bare session-key columns, got $other")
-      })
-      if (bare.toSet != sessKeys.map(_.toLowerCase).toSet)
-        throw new LoweringException(
-          s"group by over a sessionized subscription must group by exactly its " +
-            s"session_keys (${sessKeys.mkString(", ")}); got (${bare.mkString(", ")})")
-      val rawRows = lower(child, ctx.copy(sessionRaw = true))
-      (Seq(sts) ++ sessKeys).foreach { c =>
-        if (!rawRows.columns.exists(_.equalsIgnoreCase(c)))
-          throw new LoweringException(
-            s"group by over a sessionized subscription: column '$c' was dropped " +
-              "by an intervening operator — session assignment needs it")
-      }
-      val tsResolved = rawRows.columns.find(_.equalsIgnoreCase(sts)).get
-      val keysResolved = sessKeys.map(c => rawRows.columns.find(_.equalsIgnoreCase(c)).get)
-      val annotated = graft.streaming.Sessionize.annotateSessions(
-        rawRows, tsResolved, keysResolved, sgapMs)
-      Grouped(annotated, keys ++ List(
-        SelectItem(Ident("session_start_ms"), Some("session_start_ms")),
-        SelectItem(Ident("session_end_ms"), Some("session_end_ms"))), Nil, GroupingStyle.Plain)
-
-    case GroupBy(child, keys) if windowedSubscription(child).isDefined =>
-      // Incrementalize semantics (reference Incrementalize.scala:27-107):
-      // aggregating a windowed subscription groups by the tumbling bucket
-      // too, so the batch full refresh recomputes exactly the windowed rows
-      // the incremental runner appends (streaming/Subscribe.tumbling; the
-      // epoch-aligned ms arithmetic below equals F.window's default
-      // origin). Expressed as ordinary language arithmetic so the injected
-      // keys lower through the normal expression path and reproduce
-      // identically in SQL oracles. The subscription is found through any
-      // column-pass-through operators between it and the group-by
-      // (windowedSubscription) so an intervening where/select cannot
-      // silently drop the window keys and diverge from the streaming plan.
-      val sub = windowedSubscription(child).get
-      val pmap = sub.params.toMap
-      val ts = pmap.getOrElse("watermark_column", throw new LoweringException(
-        "subscribe: window_size requires watermark_column"))
-      val durMs =
-        try graft.streaming.Subscribe.durationMs(pmap("window_size"))
-        catch { case e: IllegalArgumentException => throw new LoweringException(e.getMessage) }
-      val lowered = lower(child, ctx)
-      val winKeys = pmap.get("window_slide") match {
-        case Some(_) =>
-          // hopping: the subscription lowering already exploded the
-          // slide-aligned starts into a window_start_ms column — group on
-          // it and derive the end
-          if (!lowered.columns.exists(_.equalsIgnoreCase("window_start_ms")))
-            throw new LoweringException(
-              "group by over a hopping subscription: the window_start_ms column " +
-                "injected by subscribe(window_slide: …) was dropped by an " +
-                "intervening operator — keep it in the projection so the " +
-                "aggregation can group by window")
-          List(
-            SelectItem(Ident("window_start_ms"), Some("window_start_ms")),
-            SelectItem(BinaryOp("+", Ident("window_start_ms"), LongLit(durMs)),
-              Some("window_end_ms")))
-        case None =>
-          if (!lowered.columns.exists(_.equalsIgnoreCase(ts)))
-            throw new LoweringException(
-              s"group by over a windowed subscription: watermark column '$ts' " +
-                "was dropped by an intervening operator — the tumbling window " +
-                "keys are derived from it, keep it in the projection")
-          // floor-aligned bucket (`//` lowers to floor division in both
-          // engines) so pre-1970 timestamps agree with F.window and DuckDB
-          val tsMs = BinaryOp("//",
-            FunctionCall("unix_micros", List(Ident(ts))), LongLit(1000L))
-          val start = BinaryOp("*",
-            BinaryOp("//", tsMs, LongLit(durMs)), LongLit(durMs))
-          List(
-            SelectItem(start, Some("window_start_ms")),
-            SelectItem(BinaryOp("+", start, LongLit(durMs)), Some("window_end_ms")))
-      }
-      Grouped(lowered, keys ++ winKeys, Nil, GroupingStyle.Plain)
-
     case GroupBy(child, keys) =>
-      Grouped(lower(child, ctx), keys, Nil, GroupingStyle.Plain)
+      groupedSubscription(child) match {
+        case Some((sub, withSub)) =>
+          // Incrementalize semantics (reference Incrementalize.scala:27-107):
+          // a group-by over a windowed or sessionized subscription groups by
+          // the window or session too, built the same way for the batch
+          // refresh and the stream. The subscription lowers without the
+          // window or session parameters this group-by consumes.
+          val pmap = sub.params.toMap
+          val stripped = sub.copy(params = sub.params.filterNot(p => groupingParams(p._1)))
+          val lowered = lower(withSub(stripped), ctx)
+          // the site is recorded with the parameters this group-by consumed
+          val wm = pmap.get("watermark_column")
+          ctx.subscriptions(ctx.subscriptions.lastIndexOf((wm, stripped.params.toMap))) = (wm, pmap)
+          val grouping = subscriptionGrouping(pmap).get
+          val prefix = if (grouping.isInstanceOf[Windowed]) "window" else "session"
+          val ts = lowered.columns.find(_.equalsIgnoreCase(wm.get)).getOrElse(
+            throw new LoweringException(
+              s"group by over a subscription: watermark column '${wm.get}' was dropped by " +
+                s"an intervening operator — the ${prefix}_start_ms/${prefix}_end_ms keys " +
+                "are derived from it, keep it in the projection"))
+          grouping match {
+            case Windowed(size, slide) =>
+              Grouped(lowered, keys, Nil, GroupingStyle.Plain, window = Some(WindowKey(
+                graft.streaming.Subscribe.window(F.col(ts), size, slide), prefix, 0L)))
+            case Sessioned(gapMs, sessKeys) =>
+              // the group keys must be exactly the session keys: a coarser
+              // set would merge distinct keys' sessions, a finer one split them
+              val bare = keys.map(_.expr match {
+                case Ident(n) => n.toLowerCase
+                case other => throw new LoweringException(
+                  s"group by over a sessionized subscription supports bare session-key columns, got $other")
+              })
+              if (bare.toSet != sessKeys.map(_.toLowerCase).toSet)
+                throw new LoweringException(
+                  s"group by over a sessionized subscription must group by exactly its " +
+                    s"session_keys (${sessKeys.mkString(", ")}); got (${bare.mkString(", ")})")
+              // Sessions are cut on ms-floored event time, as the epoch-ms
+              // oracles cut them. The floored column keeps the column's
+              // metadata, so on a stream the session key stays watermarked.
+              // session_window joins an event when t < last + gap; a gap of
+              // gap + 1 ms makes that t - last <= gap on whole ms, and the
+              // session's end is then its last event's ms.
+              val floored = lowered.withColumn(ts,
+                F.timestamp_millis(graft.functions.EpochTime.epochMs(F.col(ts)))
+                  .as(ts, lowered.schema(ts).metadata))
+              Grouped(floored, keys, Nil, GroupingStyle.Plain, window = Some(WindowKey(
+                F.session_window(F.col(ts), s"${gapMs + 1} milliseconds"), prefix, gapMs + 1)))
+          }
+        case None => Grouped(lower(child, ctx), keys, Nil, GroupingStyle.Plain)
+      }
     case GroupByStyled(child, keys, style) =>
       Grouped(lower(child, ctx), keys, Nil, style)
 

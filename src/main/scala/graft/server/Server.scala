@@ -640,15 +640,9 @@ object Server {
         case other => System.err.println(s"unknown arg $other"); sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(
+      graft.Tables.localCpus(Runtime.getRuntime.availableProcessors().toString),
+      appName = Some("graft-server"))
     val inst = start(spark, dir, port, workDir = workDir)
     println(s"graft server listening on http://127.0.0.1:${inst.port} (tables from $dir)")
     Thread.currentThread().join()

@@ -4,32 +4,49 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
-/** Subscribe / incrementalize: continuous (or repeatedly-triggered) tumbling
-  * window aggregation over an append-only stream, the reference's
-  * subscription model (Subscribe relation.scala:1121-1141, rewritten by
+/** Subscribe / incrementalize: watermark-bounded window and session
+  * aggregation over an append-only stream, the reference's subscription
+  * model (Subscribe relation.scala:1121-1141, rewritten by
   * Incrementalize.scala:27-107 + ExecutionPlanRewriter.scala:37-82 into a
   * watermark + window + staged-append plan).
   *
   * Spark-native mapping:
   *   - the subscription source is a Structured Streaming `readStream`
-  *   - the incremental window state is Spark's watermark-bounded stateful
-  *     aggregation (no hand-rolled state store)
+  *   - the incremental window and session state is Spark's watermark-bounded
+  *     stateful aggregation (no hand-rolled state store)
   *   - the staged append is the parquet sink in append output mode: a window
   *     is written exactly once, when the watermark passes its end
   *   - re-running with `Trigger.AvailableNow` and the same checkpoint gives
   *     the reference's batch-triggered incremental refresh: each run
   *     processes only new files and appends only newly-finalized windows
   *
-  * The same aggregation builder ([[tumbling]]) serves the batch path, so
-  * batch/stream equivalence is by construction.
+  * A language subscription lowers once for both modes
+  * (`Lowering.lowerStreamingAgg` is the batch lowering with the stream in
+  * place of the subscribed relation), and its group-by groups on the same
+  * [[window]] column the [[tumbling]] builder uses, so batch/stream
+  * equivalence holds by construction.
   */
 object Subscribe {
 
-  /** Tumbling-window aggregation, shared by batch and streaming plans.
-    * Emits window_start_ms/window_end_ms epoch columns (portable output).
-    * With `slide` set (a divisor of the window), windows hop: each event
-    * lands in window/slide overlapping windows — Spark's window() with a
-    * slideDuration, the standard smoothed-rate shape. */
+  /** The event-time window a row falls in, Spark's window(): tumbling, or
+    * hopping every `slide` (a divisor of the window), each row then landing
+    * in window/slide overlapping windows — the standard smoothed-rate
+    * shape. */
+  def window(ts: Column, size: String, slide: Option[String] = None): Column =
+    slide.fold(F.window(ts, size))(F.window(ts, size, _))
+
+  /** A window struct's bounds as epoch-ms columns `<prefix>_start_ms` and
+    * `<prefix>_end_ms` (portable output), the end moved back by
+    * `endShiftMs`. */
+  def msBounds(w: Column, prefix: String, endShiftMs: Long = 0L): Seq[Column] = {
+    val end = graft.functions.EpochTime.unixMillis(w.getField("end"))
+    Seq(
+      graft.functions.EpochTime.unixMillis(w.getField("start")).as(s"${prefix}_start_ms"),
+      (if (endShiftMs == 0L) end else end - endShiftMs).as(s"${prefix}_end_ms"))
+  }
+
+  /** Window aggregation, shared by batch and streaming plans: keys, aggs,
+    * then window_start_ms/window_end_ms. */
   def tumbling(
       df: DataFrame,
       tsCol: String,
@@ -39,34 +56,10 @@ object Subscribe {
       slide: Option[String] = None
   ): DataFrame = {
     require(aggs.nonEmpty, "at least one aggregate required")
-    val win = slide match {
-      case Some(s) => F.window(F.col(tsCol), windowDuration, s)
-      case None => F.window(F.col(tsCol), windowDuration)
-    }
-    val grouped = df.groupBy((win.as("__w") +: keys.map(F.col)): _*)
-    grouped
+    df.groupBy(window(F.col(tsCol), windowDuration, slide).as("__w") +: keys.map(F.col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start_ms",
-        graft.functions.EpochTime.unixMillis(F.col("__w.start")))
-      .withColumn("window_end_ms",
-        graft.functions.EpochTime.unixMillis(F.col("__w.end")))
+      .select(F.col("*") +: msBounds(F.col("__w"), "window"): _*)
       .drop("__w")
-  }
-
-  /** Incrementalized subscription plan: watermark-bounded tumbling windows
-    * over a streaming DataFrame. Append output emits each window exactly
-    * once, `watermarkDelay` after it closes. */
-  def subscribe(
-      stream: DataFrame,
-      tsCol: String,
-      windowDuration: String,
-      watermarkDelay: String,
-      keys: Seq[String],
-      aggs: Seq[Column]
-  ): DataFrame = {
-    require(stream.isStreaming, "subscribe requires a streaming DataFrame (readStream)")
-    val s = graft.functions.EpochTime.normalizeTs(stream, tsCol)
-    tumbling(s.withWatermark(tsCol, watermarkDelay), tsCol, windowDuration, keys, aggs)
   }
 
   /** Streaming exact dedup on ingest: emit each key set (e.g. a content
@@ -121,53 +114,6 @@ object Subscribe {
       case "hours" => 3600000L
       case "days" => 86400000L
     })
-  }
-
-  /** The streaming side of a recorded `tbl.subscribe(dedup_keys: […])`
-    * site: apply dedup-on-ingest from the subscription metadata the
-    * language front-end records (Lowering ctx.subscriptions — param names
-    * watermark_column / watermark_delay / dedup_keys, dedup_keys
-    * comma-joined by the parser). */
-  def dedupFromParams(stream: DataFrame, params: Map[String, String]): DataFrame = {
-    val ts = params.getOrElse("watermark_column",
-      throw new IllegalArgumentException("subscribe: dedup_keys requires watermark_column"))
-    val delay = duration(params.getOrElse("watermark_delay", "10 minutes"))
-    val keys = params.get("dedup_keys")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    dedupStream(stream, ts, delay, keys)
-  }
-
-  /** The FULL incremental plan from recorded subscription metadata:
-    * optional dedup-on-ingest (dedup_keys), then watermark-bounded tumbling
-    * windows (window_size) or gap sessionization (session_gap +
-    * session_keys, Sessionize.sessionizeStream custom state) — so one
-    * recorded `subscribe()` site drives the whole streaming pipeline. */
-  def subscribeFromParams(
-      stream: DataFrame,
-      params: Map[String, String],
-      keys: Seq[String],
-      aggs: Seq[Column]
-  ): DataFrame = {
-    val ts = params.getOrElse("watermark_column",
-      throw new IllegalArgumentException("subscribe requires watermark_column"))
-    val delay = duration(params.getOrElse("watermark_delay", "10 minutes"))
-    val hasDedup = params.get("dedup_keys").exists(_.trim.nonEmpty)
-    val base = if (hasDedup) dedupFromParams(stream, params)
-               else graft.functions.EpochTime.normalizeTs(stream, ts).withWatermark(ts, delay)
-    (params.get("window_size"), params.get("session_gap")) match {
-      case (Some(_), Some(_)) =>
-        throw new IllegalArgumentException(
-          "subscribe: window_size and session_gap are mutually exclusive")
-      case (Some(w), None) =>
-        // dedupFromParams already set the watermark; tumbling reuses it
-        tumbling(base, ts, duration(w), keys, aggs,
-          params.get("window_slide").map(duration))
-      case (None, Some(g)) =>
-        val sKeys = params.get("session_keys")
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        Sessionize.sessionizeStream(base, ts, delay, sKeys, durationMs(g)).toDF()
-      case (None, None) => base
-    }
   }
 
   /** Streaming incremental near-dup dedup: each micro-batch of ingested

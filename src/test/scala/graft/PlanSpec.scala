@@ -147,14 +147,14 @@ class PlanSpec extends SparkTestBase {
       "table metadata does not record bucketing")
   }
 
-  test("sessionize batch plan: one shuffle, session-id agg reuses the window partitioning") {
-    // the (key, sid) aggregation must reuse the lag window's hash
-    // partitioning on the key (sid is derived within a key partition, and
-    // partitioning on a subset of the grouping keys satisfies the
-    // clustered distribution) — a second Exchange would re-shuffle the
-    // whole corpus for nothing
-    val df = graft.streaming.Sessionize.sessionizeBatch(
-      table("events"), "ts", Seq("user_id"), 30L * 60 * 1000)
+  test("sessionized subscription batch plan: one shuffle") {
+    // session_window plans partial aggregate → Exchange on the session
+    // keys → sort → merge sessions → final aggregate: a second Exchange
+    // would re-shuffle the whole corpus for nothing
+    val df = graft.lang.Lowering.lowerStatements(graft.lang.Parser.parseStatements(
+      "from events.subscribe(watermark_column: 'ts', session_gap: '30m', " +
+        "session_keys: ['user_id'])"),
+      graft.lang.Lowering.Context(spark, table)).get
     // count from the formatted plan — AQE wraps the physical plan, so a
     // node collect over executedPlan misses the exchanges inside it
     val exchanges = planOf(df).linesIterator

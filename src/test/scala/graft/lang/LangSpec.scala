@@ -1277,30 +1277,36 @@ class LangSpec extends SparkTestBase {
   }
 
   test("partition-pruned DML rewrites only the affected partition directory") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pruned").toString
-    wv(s"""
-      from [[1, 'A', 10], [2, 'A', 99], [3, 'B', 20], [4, 'C', 30]] as t(id, region, v)
-      save to '$tmp/t.parquet' partition by region
-    """)
-    def files(dir: String): Map[String, Long] = {
-      val d = new java.io.File(s"$tmp/t.parquet/$dir")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val bBefore = files("region=B")
-    val cBefore = files("region=C")
-    Thread.sleep(1100) // mtime granularity
-    wv(s"delete from '$tmp/t.parquet' where region = 'A' and v > 50")
-    // untouched partitions keep the SAME files with the SAME mtimes
-    assert(files("region=B") == bBefore, "region=B must not be rewritten")
-    assert(files("region=C") == cBefore, "region=C must not be rewritten")
-    val rows = wv(s"from '$tmp/t.parquet' order by id").collect()
-    assert(rows.map(_.getLong(0)).toList == List(1L, 3L, 4L))
+    // the delete statement and the terminal `delete` pipe take one path
+    Seq(
+      (t: String) => s"delete from '$t' where region = 'A' and v > 50",
+      (t: String) => s"from '$t' where region = 'A' and v > 50 delete"
+    ).foreach { deleteText =>
+      val tmp = java.nio.file.Files.createTempDirectory("graft_pruned").toString
+      wv(s"""
+        from [[1, 'A', 10], [2, 'A', 99], [3, 'B', 20], [4, 'C', 30]] as t(id, region, v)
+        save to '$tmp/t.parquet' partition by region
+      """)
+      def files(dir: String): Map[String, Long] = {
+        val d = new java.io.File(s"$tmp/t.parquet/$dir")
+        d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getName -> f.lastModified()).toMap
+      }
+      val bBefore = files("region=B")
+      val cBefore = files("region=C")
+      Thread.sleep(1100) // mtime granularity
+      wv(deleteText(s"$tmp/t.parquet"))
+      // untouched partitions keep the SAME files with the SAME mtimes
+      assert(files("region=B") == bBefore, "region=B must not be rewritten")
+      assert(files("region=C") == cBefore, "region=C must not be rewritten")
+      val rows = wv(s"from '$tmp/t.parquet' order by id").collect()
+      assert(rows.map(_.getLong(0)).toList == List(1L, 3L, 4L))
 
-    wv(s"update '$tmp/t.parquet' set v = v + 1 where region = 'A'")
-    assert(files("region=B") == bBefore, "update must not rewrite region=B")
-    val after = wv(s"from '$tmp/t.parquet' where id = 1 select v").collect()
-    assert(after.head.getLong(0) == 11L)
+      wv(s"update '$tmp/t.parquet' set v = v + 1 where region = 'A'")
+      assert(files("region=B") == bBefore, "update must not rewrite region=B")
+      val after = wv(s"from '$tmp/t.parquet' where id = 1 select v").collect()
+      assert(after.head.getLong(0) == 11L)
+    }
   }
 
   test("merge into: update-only (no insert clause) leaves unmatched source out") {

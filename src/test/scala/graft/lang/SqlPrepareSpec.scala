@@ -29,4 +29,14 @@ class SqlPrepareSpec extends SparkTestBase {
       Graft.sqlScript(spark, "EXECUTE q3", None)
     }
   }
+
+  test("a statement prepared in one session is not found from another") {
+    Graft.sqlScript(spark, "PREPARE q4 AS SELECT 1 AS one", None)
+    val other = spark.newSession()
+    val err = intercept[IllegalArgumentException] {
+      Graft.sqlScript(other, "EXECUTE q4", None)
+    }
+    assert(err.getMessage.contains("not found"), err.getMessage)
+    assert(Graft.sqlScript(spark, "EXECUTE q4", None).collect().map(_.getInt(0)).toList == List(1))
+  }
 }

@@ -141,13 +141,24 @@ class NtzRobustnessSpec extends SparkTestBase {
     assert(viaString == viaTs && viaString.nonEmpty)
   }
 
+  private val sessionText = """
+    from events.subscribe(watermark_column: 'ts', watermark_delay: '0s',
+                          session_gap: '30m', session_keys: ['user_id'])
+  """
+
+  private def lowerText(text: String, df: DataFrame): DataFrame =
+    graft.lang.Lowering.lowerStatements(graft.lang.Parser.parseStatements(text),
+      graft.lang.Lowering.Context(spark, _ => df)).get
+
+  private def lowerStream(text: String, stream: DataFrame): DataFrame =
+    graft.lang.Lowering.lowerStreamingAgg(graft.lang.Parser.parseStatements(text),
+      stream, graft.lang.Lowering.Context(spark, _ => stream))
+
   test("batch sessionization agrees across timestamp flavors") {
     val results = bothFlavors.map { case (flavor, df) =>
-      val sess = collectSorted(
-        Sessionize.sessionizeBatch(df, "ts", Seq("user_id"), 30 * 60 * 1000L))
-      val annotated = collectSorted(
-        Sessionize.annotateSessions(df, "ts", Seq("user_id"), 30 * 60 * 1000L)
-          .select("event_id", "session_start_ms", "session_end_ms"))
+      val sess = collectSorted(lowerText(sessionText, df))
+      val annotated = collectSorted(lowerText(sessionText +
+        "group by user_id agg first_event = event_id.min, last_event = event_id.max", df))
       (flavor, sess, annotated)
     }
     val Seq((_, sLtz, aLtz), (_, sNtz, aNtz)) = results
@@ -167,14 +178,15 @@ class NtzRobustnessSpec extends SparkTestBase {
     val outT = Files.createTempDirectory("ntz_sub_out").toString
     val ckT = Files.createTempDirectory("ntz_sub_ck").toString
     val tumQ = Subscribe.stageAppend(
-      Subscribe.subscribe(
-        spark.readStream.schema(schema).parquet(s"$in/*"),
-        "ts", "1 hour", "0 seconds", Seq("event_type"),
-        Seq(F.count(F.lit(1)).as("n"))),
+      lowerStream("""
+        from events.subscribe(watermark_column: 'ts', watermark_delay: '0s', window_size: '1h')
+        group by event_type
+        agg n = _.count
+      """, spark.readStream.schema(schema).parquet(s"$in/*")),
       outT, ckT)
     tumQ.awaitTermination()
     // watermark 05:00: hours 00-02 finalized for their event types
-    val tum = spark.read.parquet(outT)
+    val tum = spark.read.parquet(outT).select("event_type", "n", "window_start_ms", "window_end_ms")
     assert(tum.count() > 0, "no tumbling windows finalized on NTZ input")
     // agrees with the batch builder over the same (NTZ) input
     val batch = Subscribe.tumbling(
@@ -186,20 +198,17 @@ class NtzRobustnessSpec extends SparkTestBase {
     val outS = Files.createTempDirectory("ntz_sess_out").toString
     val ckS = Files.createTempDirectory("ntz_sess_ck").toString
     val sessQ = Subscribe.stageAppend(
-      Sessionize.sessionizeStream(
-        spark.readStream.schema(schema).parquet(s"$in/*"),
-        "ts", "0 seconds", Seq("user_id"), 30 * 60 * 1000L).toDF(),
+      lowerStream(sessionText, spark.readStream.schema(schema).parquet(s"$in/*")),
       outS, ckS)
     sessQ.awaitTermination()
     val sess = spark.read.parquet(outS)
     assert(sess.count() > 0, "no sessions closed on NTZ input")
-    // closed sessions must match the batch kernel on the same input rows
-    val batchSess = Sessionize.sessionizeBatch(
-      spark.read.parquet(s"$in/b1"), "ts", Seq("user_id"), 30 * 60 * 1000L)
+    // closed sessions must match the batch plan on the same input rows
+    val batchSess = lowerText(sessionText, spark.read.parquet(s"$in/b1"))
       // watermark 05:00:00 → sessions ending before 05:00 - gap are closed
       .filter(F.col("session_end_ms") + F.lit(30 * 60 * 1000L) <
         F.lit(Timestamp.valueOf("2024-01-01 05:00:00").getTime))
-      .select(F.col("user_id").cast("string").as("session_key"),
+      .select(F.col("user_id"),
         F.col("session_start_ms"), F.col("session_end_ms"), F.col("n_events"))
     assert(collectSorted(sess) == collectSorted(batchSess))
   }

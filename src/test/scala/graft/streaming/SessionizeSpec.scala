@@ -1,17 +1,20 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.lang.{Lowering, Parser}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 import java.sql.Timestamp
 
-/** Gap-sessionization semantics: the pure merge kernel, batch/stream
-  * equivalence over micro-batches (including a late bridging event — the
-  * case that forces sessions to stay open until the watermark proves no
-  * merge can still happen), and the language surface driving both plans
-  * from one recorded subscribe() site. */
+/** Gap-sessionization semantics of `subscribe(session_gap, session_keys)`:
+  * batch/stream equivalence over micro-batches (including a late bridging
+  * event — the case that forces sessions to stay open until the watermark
+  * proves no merge can still happen), and one language text driving both
+  * plans, the batch refresh through `Lowering.lowerStatements` and the
+  * stream through `Lowering.lowerStreamingAgg`. */
 class SessionizeSpec extends SparkTestBase {
-  import Sessionize.{Sess, merge}
 
   private val schema = StructType(Seq(
     StructField("ts", TimestampType),
@@ -27,77 +30,33 @@ class SessionizeSpec extends SparkTestBase {
       .coalesce(1).write.mode("append").parquet(s"$dir/$name")
   }
 
-  test("merge kernel: coalescing, bridging, counts") {
-    val gap = 10L
-    // fresh events split on the gap
-    assert(merge(Nil, Seq(0L, 5L, 30L), gap) ==
-      Seq(Sess(0, 5, 2), Sess(30, 30, 1)))
-    // an event inside an open session only bumps the count
-    assert(merge(Seq(Sess(0, 5, 2)), Seq(3L), gap) == Seq(Sess(0, 5, 3)))
-    // a late event between two open sessions bridges them into one
-    // (bridging needs t within gap of BOTH: t=15 reaches end=5 and start=20)
-    assert(merge(Seq(Sess(0, 5, 2), Sess(20, 25, 2)), Seq(15L), gap) ==
-      Seq(Sess(0, 25, 5)))
-    // an event near only ONE session extends it, no bridge
-    assert(merge(Seq(Sess(0, 5, 2), Sess(30, 40, 2)), Seq(14L), gap) ==
-      Seq(Sess(0, 14, 3), Sess(30, 40, 2)))
-    // boundary: exactly gap apart merges (matches batch's `> gap` split)
-    assert(merge(Nil, Seq(0L, 10L), gap) == Seq(Sess(0, 10, 2)))
-    assert(merge(Nil, Seq(0L, 11L), gap) == Seq(Sess(0, 0, 1), Sess(11, 11, 1)))
-    // order-insensitive
-    assert(merge(Nil, Seq(30L, 0L, 5L), gap) == merge(Nil, Seq(0L, 5L, 30L), gap))
-  }
+  private def batchPlan(text: String, input: DataFrame): DataFrame =
+    Lowering.lowerStatements(Parser.parseStatements(text), Lowering.Context(spark, _ => input)).get
 
-  test("merge kernel property: any micro-batch split yields the batch sessions") {
-    // the streaming guarantee reduces to this: folding events through merge
-    // in ANY batch order/partitioning produces exactly the sessions a
-    // single sorted scan produces. 300 randomized trials, fixed seed.
-    val rnd = new scala.util.Random(42)
-    for (_ <- 1 to 300) {
-      val gap = 1L + rnd.nextInt(20)
-      val events = Seq.fill(1 + rnd.nextInt(40))(rnd.nextInt(200).toLong)
-      // reference: sorted scan, split on > gap
-      val sorted = events.sorted
-      val ref = sorted.tail.foldLeft(List(Sess(sorted.head, sorted.head, 1L))) {
-        (acc, t) =>
-          if (t - acc.head.end_ms <= gap)
-            Sess(acc.head.start_ms, t, acc.head.n + 1) :: acc.tail
-          else Sess(t, t, 1L) :: acc
-      }.reverse
-      // fold the events through merge in random batches of random order
-      val shuffled = rnd.shuffle(events)
-      var open = Seq.empty[Sess]
-      var rest = shuffled
-      while (rest.nonEmpty) {
-        val k = 1 + rnd.nextInt(rest.length)
-        open = merge(open, rest.take(k), gap)
-        rest = rest.drop(k)
-      }
-      assert(open == ref,
-        s"gap=$gap events=$events\n  incremental=$open\n  reference=$ref")
-    }
+  /** Drains the input under `in` through the streaming plan of `text` into `out`. */
+  private def stageStream(text: String, in: String, out: String, ck: String,
+      inSchema: StructType = schema): Unit = {
+    val stream = spark.readStream.schema(inSchema).parquet(s"$in/*")
+    val plan = Lowering.lowerStreamingAgg(
+      Parser.parseStatements(text), stream, Lowering.Context(spark, _ => stream))
+    Subscribe.stageAppend(plan, out, ck).awaitTermination()
   }
 
   test("stream equals batch; late event bridges two open sessions") {
     val in = Files.createTempDirectory("sess_in").toString
     val out = Files.createTempDirectory("sess_out").toString
     val ck = Files.createTempDirectory("sess_ck").toString
-    val gapMs = 30L * 60 * 1000 // 30 min
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-      val sess = Sessionize.sessionizeStream(
-        stream, "ts", "2 hours", Seq("event_type"), gapMs)
-      val q = Subscribe.stageAppend(sess.toDF(), out, ck)
-      q.awaitTermination()
-    }
+    val text = """
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '2 hours',
+                            session_gap: '30m', session_keys: ['event_type'])
+    """
 
     // batch 1: key 'a' has two apparent sessions (00:00, 01:00 — 60 min
     // apart); nothing can finalize (watermark = max(01:00) - 2 h ≤ 0)
     writeBatch(in, "b1", Seq(
       ("2024-01-01 00:00:00", "a", 1.0),
       ("2024-01-01 01:00:00", "a", 2.0)))
-    runOnce()
+    stageStream(text, in, out, ck)
     val afterB1 =
       try spark.read.parquet(out).count()
       catch { case _: Throwable => 0L }
@@ -111,11 +70,11 @@ class SessionizeSpec extends SparkTestBase {
     writeBatch(in, "b2", Seq(
       ("2024-01-01 00:30:00", "a", 3.0),
       ("2024-01-01 06:00:00", "zz", 0.0)))
-    runOnce()
+    stageStream(text, in, out, ck)
 
     val staged = spark.read.parquet(out)
-      .orderBy("session_key", "session_start_ms").collect()
-    val aRows = staged.filter(_.getAs[String]("session_key") == "a")
+      .orderBy("event_type", "session_start_ms").collect()
+    val aRows = staged.filter(_.getAs[String]("event_type") == "a")
     assert(aRows.length == 1,
       s"late event must bridge the two sessions into one, got ${aRows.toSeq}")
     assert(aRows.head.getAs[Long]("n_events") == 3L, s"got ${aRows.head}")
@@ -127,18 +86,14 @@ class SessionizeSpec extends SparkTestBase {
     // batch equivalence on the closed keys: the batch plan over the full
     // input, restricted to key 'a', must equal the staged stream output
     val all = spark.read.schema(schema).parquet(s"$in/*")
-    val batch = Sessionize.sessionizeBatch(all, "ts", Seq("event_type"), gapMs)
-      .filter(org.apache.spark.sql.functions.col("event_type") === "a")
-      .selectExpr("event_type AS session_key", "session_start_ms", "session_end_ms", "n_events")
-      .collect()
+    val batch = batchPlan(text, all).filter(F.col("event_type") === "a").collect()
     assert(batch.map(_.toSeq).toSet == aRows.map(_.toSeq).toSet,
       s"stream/batch mismatch: batch=${batch.toSeq} stream=${aRows.toSeq}")
   }
 
   test("NULL multi-key tuples stay distinct in streaming state keys") {
-    // concat_ws skips NULLs, so without a sentinel ('a', NULL) and
-    // (NULL, 'a') would share the state-store key "a" and sessionize
-    // together — the batch plan keeps them distinct (ADVICE r7)
+    // ('a', NULL) and (NULL, 'a') are different session keys — the batch
+    // plan keeps them distinct, so the stream must too (ADVICE r7)
     val schema2 = StructType(Seq(
       StructField("ts", TimestampType),
       StructField("k1", StringType),
@@ -154,12 +109,12 @@ class SessionizeSpec extends SparkTestBase {
       .map { case (ts, a, b) => org.apache.spark.sql.Row(Timestamp.valueOf(ts), a, b) }
     spark.createDataFrame(rows.asJava, schema2)
       .coalesce(1).write.mode("append").parquet(s"$in/b1")
-    val stream = spark.readStream.schema(schema2).parquet(s"$in/*")
-    val sess = Sessionize.sessionizeStream(
-      stream, "ts", "1 hour", Seq("k1", "k2"), 30L * 60 * 1000)
-    Subscribe.stageAppend(sess.toDF(), out, ck).awaitTermination()
+    stageStream("""
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '1 hour',
+                            session_gap: '30m', session_keys: ['k1', 'k2'])
+    """, in, out, ck, schema2)
     val staged = spark.read.parquet(out)
-      .filter(!org.apache.spark.sql.functions.col("session_key").contains("zz"))
+      .filter(F.coalesce(F.col("k1"), F.lit("")) =!= "zz")
       .collect()
     assert(staged.length == 2,
       s"('a', NULL) and (NULL, 'a') must sessionize separately, got ${staged.toSeq}")
@@ -167,7 +122,6 @@ class SessionizeSpec extends SparkTestBase {
   }
 
   test("language surface: subscribe(session_gap) drives batch and stream plans") {
-    import graft.lang.{Lowering, Parser}
     val in = Files.createTempDirectory("sessl_in").toString
     val out = Files.createTempDirectory("sessl_out").toString
     val ck = Files.createTempDirectory("sessl_ck").toString
@@ -176,23 +130,17 @@ class SessionizeSpec extends SparkTestBase {
       ("2024-01-01 00:10:00", "a", 2.0),
       ("2024-01-01 02:00:00", "a", 9.0), // separate session
       ("2024-01-01 09:00:00", "zz", 0.0))) // advances the watermark
-    val batchDf = spark.read.schema(schema).parquet(s"$in/*")
-    val ctx = Lowering.Context(spark, _ => batchDf)
-    val lowered = Lowering.lowerStatements(Parser.parseStatements(
-      "from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m', " +
-        "session_gap: '30m', session_keys: ['event_type'])"), ctx).get
+    val text = "from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m', " +
+      "session_gap: '30m', session_keys: ['event_type'])"
     // batch semantics: full-refresh sessionization, all sessions present
-    val batchRows = lowered.orderBy("event_type", "session_start_ms").collect()
+    val batchRows = batchPlan(text, spark.read.schema(schema).parquet(s"$in/*"))
+      .orderBy("event_type", "session_start_ms").collect()
     assert(batchRows.count(_.getAs[String]("event_type") == "a") == 2,
       s"expected 2 batch sessions for key a: ${batchRows.toSeq}")
-    // the recorded metadata drives the streaming custom-state plan
-    val params = ctx.subscriptions.head._2
-    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-    val sub = Subscribe.subscribeFromParams(stream, params, Seq.empty, Seq.empty)
-    val q = Subscribe.stageAppend(sub, out, ck)
-    q.awaitTermination()
+    // the same text drives the streaming plan
+    stageStream(text, in, out, ck)
     val staged = spark.read.parquet(out)
-      .filter(org.apache.spark.sql.functions.col("session_key") === "a")
+      .filter(F.col("event_type") === "a")
       .orderBy("session_start_ms").collect()
     assert(staged.length == 2, s"expected both sessions closed, got ${staged.toSeq}")
     assert(staged.map(_.getAs[Long]("n_events")).toSeq == Seq(2L, 1L), s"${staged.toSeq}")
@@ -208,18 +156,43 @@ class SessionizeSpec extends SparkTestBase {
       ("2024-01-01 00:00:00", "a", 1.0),
       ("2024-01-01 00:05:00", "a", 2.0), // dup key, dropped on ingest
       ("2024-01-01 09:00:00", "zz", 0.0))) // advances the watermark
-    val params = Map(
-      "watermark_column" -> "ts", "watermark_delay" -> "10m",
-      "dedup_keys" -> "event_type", "session_gap" -> "30m",
-      "session_keys" -> "event_type")
-    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-    val sub = Subscribe.subscribeFromParams(stream, params, Seq.empty, Seq.empty)
-    val q = Subscribe.stageAppend(sub, out, ck)
-    q.awaitTermination()
+    stageStream("""
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m',
+                            dedup_keys: ['event_type'], session_gap: '30m',
+                            session_keys: ['event_type'])
+    """, in, out, ck)
     val staged = spark.read.parquet(out)
-      .filter(org.apache.spark.sql.functions.col("session_key") === "a").collect()
+      .filter(F.col("event_type") === "a").collect()
     assert(staged.length == 1, s"expected one closed session, got ${staged.toSeq}")
     assert(staged.head.getAs[Long]("n_events") == 1L,
       s"dedup-on-ingest must precede sessionization: ${staged.head}")
+  }
+
+  test("unaggregated sessionized subscription: stream rows and schema equal the batch refresh") {
+    val in = Files.createTempDirectory("sessu_in").toString
+    val out = Files.createTempDirectory("sessu_out").toString
+    val ck = Files.createTempDirectory("sessu_ck").toString
+    val text = """
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m',
+                            session_gap: '30m', session_keys: ['event_type'])
+    """
+    writeBatch(in, "b1", Seq(
+      ("2024-01-01 00:00:00", "a", 1.0),
+      ("2024-01-01 00:20:00", "a", 2.0),
+      ("2024-01-01 00:15:00", "b", 3.0),
+      ("2024-01-01 01:30:00", "a", 4.0)))
+    stageStream(text, in, out, ck)
+    // the sentinel moves the watermark past every other session's end + gap
+    writeBatch(in, "b2", Seq(("2024-01-01 09:00:00", "zz", 0.0)))
+    stageStream(text, in, out, ck)
+    val staged = spark.read.parquet(out)
+    val batch = batchPlan(text, spark.read.schema(schema).parquet(s"$in/*"))
+      .filter(F.col("event_type") =!= "zz")
+    def fields(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(fields(staged) == fields(batch),
+      s"stream schema ${staged.schema} != batch ${batch.schema}")
+    assert(staged.collect().map(_.toSeq).toSet == batch.collect().map(_.toSeq).toSet,
+      s"staged=${staged.collect().toSeq} batch=${batch.collect().toSeq}")
+    assert(staged.count() == 3, s"expected sessions a×2 and b×1: ${staged.collect().toSeq}")
   }
 }

@@ -18,6 +18,15 @@ class SubscribeSpec extends SparkTestBase {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
+  /** Drains the input under `in` through the streaming plan of `text` into `out`. */
+  private def stageStream(text: String, in: String, out: String, ck: String): Unit = {
+    import graft.lang.{Lowering, Parser}
+    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
+    val plan = Lowering.lowerStreamingAgg(
+      Parser.parseStatements(text), stream, Lowering.Context(spark, _ => stream))
+    Subscribe.stageAppend(plan, out, ck).awaitTermination()
+  }
+
   private def writeBatch(dir: String, name: String, rows: Seq[(String, String, Double)]): Unit = {
     import scala.jdk.CollectionConverters._
     val data = rows.map { case (ts, et, v) =>
@@ -37,14 +46,12 @@ class SubscribeSpec extends SparkTestBase {
       ("2024-01-01 00:20:00", "a", 2.0),
       ("2024-01-01 01:05:00", "b", 5.0)))
 
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-      val sub = Subscribe.subscribe(
-        stream, "ts", "1 hour", "10 minutes", Seq("event_type"),
-        Seq(F.count(F.lit(1)).as("n"), F.sum("value").as("total")))
-      val q = Subscribe.stageAppend(sub, out, ck)
-      q.awaitTermination()
-    }
+    def runOnce(): Unit = stageStream("""
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10 minutes',
+                            window_size: '1 hour')
+      group by event_type
+      agg n = _.count, total = value.sum
+    """, in, out, ck)
 
     runOnce()
     // watermark after batch 1 = 01:05 - 10min = 00:55 < end of hour-00
@@ -64,6 +71,7 @@ class SubscribeSpec extends SparkTestBase {
 
     val staged = spark.read.parquet(out)
       .orderBy("window_start_ms", "event_type")
+      .select("event_type", "n", "total")
       .collect()
     // hours 00 and 01 finalized exactly once; hour 03 still open
     assert(staged.map(_.getString(0)).toList == List("a", "b"))
@@ -294,20 +302,14 @@ class SubscribeSpec extends SparkTestBase {
     val batchDf = spark.read.schema(schema).parquet(s"$in/*")
     // batch lowering: full refresh keeps one representative row per key
     val ctx = Lowering.Context(spark, _ => batchDf)
-    val lowered = Lowering.lowerStatements(Parser.parseStatements(
-      "from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10 minutes', " +
-        "dedup_keys: ['event_type'])"), ctx).get
+    val text = "from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10 minutes', " +
+      "dedup_keys: ['event_type'])"
+    val lowered = Lowering.lowerStatements(Parser.parseStatements(text), ctx).get
     assert(lowered.count() == 2, "batch dedup semantics: one row per key")
     val (wmCol, params) = ctx.subscriptions.head
     assert(wmCol.contains("ts") && params("dedup_keys") == "event_type")
-    // the SAME recorded metadata drives the incremental (streaming) plan
-    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-    val q = Subscribe.dedupFromParams(stream, params)
-      .writeStream.outputMode("append").format("parquet")
-      .option("checkpointLocation", ck)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+    // the SAME text drives the incremental (streaming) plan
+    stageStream(text, in, out, ck)
     val staged = spark.read.parquet(out).collect()
       .map(r => (r.getString(1), r.getDouble(2))).sortBy(_._1).toList
     assert(staged == List(("fp1", 1.0), ("fp2", 3.0)), s"got $staged")
@@ -415,14 +417,12 @@ class SubscribeSpec extends SparkTestBase {
     writeBatch(in, "b1", Seq(
       ("2024-01-01 00:40:00", "a", 1.0),
       ("2024-01-01 05:00:00", "zz", 0.0))) // advances watermark to 04:50
-    val params = Map(
-      "watermark_column" -> "ts", "watermark_delay" -> "10m",
-      "window_size" -> "1h", "window_slide" -> "30m")
-    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-    val sub = Subscribe.subscribeFromParams(stream, params,
-      Seq("event_type"), Seq(F.count(F.lit(1)).as("n")))
-    val q = Subscribe.stageAppend(sub, out, ck)
-    q.awaitTermination()
+    stageStream("""
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m',
+                            window_size: '1h', window_slide: '30m')
+      group by event_type
+      agg n = _.count
+    """, in, out, ck)
     val a = spark.read.parquet(out)
       .filter(F.col("event_type") === "a")
       .orderBy("window_start_ms").collect()
@@ -670,8 +670,7 @@ class SubscribeSpec extends SparkTestBase {
       a.toSeq.toString)
   }
 
-  test("subscribeFromParams: one metadata map drives dedup + windowed agg") {
-    import graft.lang.{Lowering, Parser}
+  test("language subscribe(dedup_keys, window_size): dedup precedes the agg") {
     val in = Files.createTempDirectory("sfp_in").toString
     val out = Files.createTempDirectory("sfp_out").toString
     val ck = Files.createTempDirectory("sfp_ck").toString
@@ -680,24 +679,59 @@ class SubscribeSpec extends SparkTestBase {
       ("2024-01-01 00:20:00", "fp1", 2.0), // dup key — dropped on ingest
       ("2024-01-01 00:30:00", "fp2", 3.0),
       ("2024-01-01 03:00:00", "fp9", 9.0))) // advances watermark past hour 00
-    val batchDf = spark.read.schema(schema).parquet(s"$in/*")
-    // record the subscription site from language text (short units: 1h/10m)
-    val ctx = Lowering.Context(spark, _ => batchDf)
-    Lowering.lowerStatements(Parser.parseStatements(
-      "from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m', " +
-        "window_size: '1h', dedup_keys: ['event_type'])"), ctx).get
-    val params = ctx.subscriptions.head._2
-    val stream = spark.readStream.schema(schema).parquet(s"$in/*")
-    val sub = Subscribe.subscribeFromParams(stream, params,
-      Seq.empty, Seq(F.count(F.lit(1)).as("n")))
-    val q = Subscribe.stageAppend(sub, out, ck)
-    q.awaitTermination()
+    // one window count over the whole feed (short units: 1h/10m)
+    stageStream("""
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m',
+                            window_size: '1h', dedup_keys: ['event_type'])
+      add feed = 'ingest'
+      group by feed
+      agg n = _.count
+    """, in, out, ck)
     // hour-00 window finalized; the duplicate fp1 was deduped on ingest
     // BEFORE the window count, so n = 2 (fp1 once + fp2), not 3
     val staged = spark.read.parquet(out).collect()
     assert(staged.length == 1, s"expected one finalized window, got ${staged.length}")
     assert(staged.head.getAs[Long]("n") == 2L,
       s"dedup-on-ingest must precede the window agg: ${staged.head}")
+  }
+
+  test("language dedup_keys + window_size: stream rows and schema equal the batch refresh") {
+    import graft.lang.{Lowering, Parser}
+    val in = Files.createTempDirectory("sdw_in").toString
+    val out = Files.createTempDirectory("sdw_out").toString
+    val ck = Files.createTempDirectory("sdw_ck").toString
+    val text = """
+      from ingest.subscribe(watermark_column: 'ts', watermark_delay: '10m',
+                            window_size: '1h', dedup_keys: ['event_type'])
+      group by event_type
+      agg n = _.count, total = value.sum
+    """
+    // each duplicate repeats its key within minutes and carries the same
+    // value, so the stream's first-within-watermark row and the batch's one
+    // row per key agree
+    writeBatch(in, "b1", Seq(
+      ("2024-01-01 00:10:00", "fp1", 1.0),
+      ("2024-01-01 00:12:00", "fp1", 1.0),
+      ("2024-01-01 00:30:00", "fp2", 3.0),
+      ("2024-01-01 01:20:00", "fp3", 4.0)))
+    stageStream(text, in, out, ck)
+    writeBatch(in, "b2", Seq(
+      ("2024-01-01 01:25:00", "fp4", 5.0),
+      ("2024-01-01 01:26:00", "fp4", 5.0),
+      ("2024-01-01 05:00:00", "fp9", 9.0))) // advances watermark past hour 01
+    stageStream(text, in, out, ck)
+    val staged = spark.read.parquet(out)
+    val ctx = Lowering.Context(spark, _ => spark.read.schema(schema).parquet(s"$in/*"))
+    val batch = Lowering.lowerStatements(Parser.parseStatements(text), ctx).get
+      .filter(F.col("event_type") =!= "fp9")
+    // the site is recorded with every parameter, the window ones included
+    assert(ctx.subscriptions.toList == List((Some("ts"), Map("watermark_column" -> "ts",
+      "watermark_delay" -> "10m", "window_size" -> "1h", "dedup_keys" -> "event_type"))))
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(fields(staged) == fields(batch), s"stream ${staged.schema} != batch ${batch.schema}")
+    assert(staged.collect().map(_.toSeq).toSet == batch.collect().map(_.toSeq).toSet,
+      s"staged=${staged.collect().toSeq} batch=${batch.collect().toSeq}")
+    assert(staged.count() == 4, s"expected fp1..fp4 once each: ${staged.collect().toSeq}")
   }
 
   test("streaming incremental dedup: micro-batches probe the persisted minhash index") {
