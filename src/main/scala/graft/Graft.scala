@@ -179,76 +179,36 @@ object Graft {
     }.last
   }
 
-  /** Split on top-level `;` (quote- and comment-aware). */
+  /** Split a script into statements at each code `;` ([[SqlText]]: never
+    * inside a string, quoted identifier or comment). */
   private[graft] def splitSqlStatements(text: String): List[String] = {
-    val out = List.newBuilder[String]
-    val sb = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (quote != 0) {
-        sb += c
-        if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') { quote = c; sb += c; i += 1 }
-      else if (c == '-' && i + 1 < text.length && text.charAt(i + 1) == '-') {
-        while (i < text.length && text.charAt(i) != '\n') { sb += text.charAt(i); i += 1 }
-      } else if (c == ';') { out += sb.toString; sb.clear(); i += 1 }
-      else { sb += c; i += 1 }
-    }
-    out += sb.toString
-    val bySemicolon = out.result().map(_.trim).filter(_.nonEmpty)
-    // a script with NO semicolons at all (reference sql corpus: at-alias.sql
-    // — its SqlParser splits statements by grammar) falls back to blank-line
-    // boundaries: a blank line followed by a line opening with a statement
-    // keyword starts a new statement
-    if (bySemicolon.lengthCompare(1) == 0 && text.indexOf(';') < 0) {
+    val sql = new SqlText(text)
+    // a script with NO code semicolon at all (reference sql corpus:
+    // at-alias.sql — its SqlParser splits statements by grammar) falls
+    // back to blank-line boundaries: a blank line followed by a line
+    // opening with a statement keyword starts a new statement
+    if (sql.find(";".r).isDefined) sql.statements
+    else {
       val kw = """(?is)^\s*(SELECT|WITH|VALUES|INSERT|UPDATE|DELETE|CREATE|DROP|ALTER|SHOW|DESCRIBE|EXPLAIN|PREPARE|EXECUTE|DEALLOCATE|USE|TRUNCATE|MERGE)\b.*""".r
+      def code(block: String) = new SqlText(block).withoutComments.trim
+      // a buffer that is still only a WITH prelude — `with name as (…)`
+      // before its main query (tpc-h q15 has a blank line there) — must not
+      // be closed at a blank-line boundary
+      def isComplete(block: String): Boolean =
+        !new SqlText(block).outline.trim.matches("""(?is)^with\s+(recursive\s+)?([\w`"]+\s+as\s*,?\s*)*$""")
       val blocks = List.newBuilder[String]
       val cur = new StringBuilder
-      def isStmtStart(block: String): Boolean = {
-        val noComments = block.linesIterator
-          .filterNot(_.trim.startsWith("--")).mkString("\n").trim
-        kw.pattern.matcher(noComments).matches()
-      }
-      // depth-0 text (string literals and parenthesized groups removed):
-      // used to recognize a buffer that is still only a WITH prelude —
-      // `with name as (…)` before its main query (tpc-h q15 has a blank
-      // line there) must not be closed at a blank-line boundary
-      def depthZero(block: String): String = {
-        val sb = new StringBuilder
-        var depth = 0; var quote: Char = 0; var i = 0
-        while (i < block.length) {
-          val c = block.charAt(i)
-          if (quote != 0) { if (c == quote) quote = 0 }
-          else if (c == '\'' || c == '"') quote = c
-          else if (c == '-' && i + 1 < block.length && block.charAt(i + 1) == '-') {
-            while (i < block.length && block.charAt(i) != '\n') i += 1
-          } else if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          else if (depth == 0) sb += c
-          i += 1
-        }
-        sb.toString
-      }
-      def isComplete(block: String): Boolean = {
-        val d0 = depthZero(block).trim
-        !d0.matches("""(?is)^with\s+(recursive\s+)?([\w`"]+\s+as\s*,?\s*)*$""")
-      }
       text.split("\n\\s*\n").foreach { para =>
-        if (cur.nonEmpty && isStmtStart(para) && isComplete(cur.toString)) {
+        if (cur.nonEmpty && kw.pattern.matcher(code(para)).matches() && isComplete(cur.toString)) {
           blocks += cur.toString; cur.clear()
         }
         if (cur.nonEmpty) cur ++= "\n\n"
         cur ++= para
       }
       if (cur.nonEmpty) blocks += cur.toString
-      blocks.result().map(_.trim).filter { b =>
-        // drop comment-only blocks (file headers)
-        b.linesIterator.exists(l => l.trim.nonEmpty && !l.trim.startsWith("--"))
-      }
-    } else bySemicolon
+      // comment-only blocks (file headers) are dropped
+      blocks.result().map(_.trim).filter(code(_).nonEmpty)
+    }
   }
 
   /** Parse only — returns statements for inspection / tooling. */

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrumentation: dump `.explain("formatted")` for
@@ -47,6 +49,7 @@ object PlanDump {
             val tConstruct = (System.nanoTime() - t0) / 1e9
             val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
             Files.writeString(Paths.get(outDir, s"$name$suffix.txt"), plan)
+            val exchanges = exchangesOf(df.queryExecution.executedPlan)
             spark.sparkContext.setJobDescription(s"plandump: $name count")
             val t1 = System.nanoTime()
             val n = df.count()
@@ -57,7 +60,6 @@ object PlanDump {
             fn(spark, sfDir).count()
             val tWarm = (System.nanoTime() - t2) / 1e9
             spark.sparkContext.setJobDescription(null)
-            val exchanges = plan.linesIterator.count(_.contains("Exchange"))
             System.err.println(f"[plandump] $name%-36s construct=$tConstruct%6.2f s  " +
               f"count1=$tCount%6.2f s  count2=$tWarm%6.2f s  rows=$n%8d  exchanges=$exchanges%2d")
             rows += s""""$name":{"construct":${s3(tConstruct)},"count1":${s3(tCount)},""" +
@@ -88,5 +90,20 @@ object PlanDump {
       .map { case (n, body) => s""""$n":$body""" }
     Files.writeString(outFile, merged.mkString("{", ",\n", "}"))
     spark.stop()
+  }
+
+  /** Shuffle and broadcast exchange nodes of a physical plan as AQE starts
+    * it (its initial plan, every exchange already inserted), subquery plans
+    * included — counted on the plan tree, not in explain text, which
+    * prints each node twice. */
+  private def exchangesOf(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchangesOf(a.executedPlan)
+    case s: QueryStageExec => exchangesOf(s.plan)
+    case _ =>
+      val self = p match {
+        case _: ShuffleExchangeLike | _: BroadcastExchangeLike => 1
+        case _ => 0
+      }
+      (p.children ++ p.subqueries).map(exchangesOf).sum + self
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable
 
 /** DuckDB/Trino → Spark SQL dialect normalization for the SQL front-end
   * (reference: SqlParser.scala, 3,722 LoC, parses these dialects into the
@@ -10,8 +9,9 @@ import scala.collection.mutable
   * dialect idioms are rewritten TEXTUALLY before parsing — playing the
   * role of the reference's dialect-specific codegen in reverse).
   *
-  * All rewrites are string-literal aware: rules apply only outside quoted
-  * strings (except backslash doubling, which applies inside), so `'a[b]'`
+  * Every pass reads the text through [[SqlText]]: rules apply only to
+  * code, never inside string literals, quoted identifiers or comments
+  * (except backslash doubling, which applies inside strings), so `'a[b]'`
   * or `'DECIMAL ''x'''` content is never touched.
   */
 object SqlDialect {
@@ -28,7 +28,7 @@ object SqlDialect {
     * (possibly several, possibly none for pure-registration statements). */
   def normalize(spark: SparkSession, stmt0: String): List[String] = {
     val stmt = stmt0.trim
-    val bare = stripComments(stmt).trim
+    val bare = new SqlText(stmt).withoutComments.trim
     if (bare.isEmpty) return Nil
 
     // PREPARE name FROM <q> (Trino) / PREPARE name AS <q> (DuckDB)
@@ -54,7 +54,7 @@ object SqlDialect {
         val q = statements(spark).getOrElse(name.toLowerCase,
           throw new IllegalArgumentException(s"prepared statement '$name' not found"))
         val args = Option(usingArgs).orElse(Option(parenArgs)).map(_.trim)
-          .filter(_.nonEmpty).map(splitTopLevel).getOrElse(Nil)
+          .filter(_.nonEmpty).map(SqlText.items).getOrElse(Nil)
         return normalize(spark, bindParams(q, args))
       case _ =>
     }
@@ -67,11 +67,8 @@ object SqlDialect {
     bare match {
       case descInRe(name) =>
         val params = statements(spark).get(name.toLowerCase).fold(0) { q =>
-          var n = 0; var inStr = false
-          q.foreach { c =>
-            if (c == '\'') inStr = !inStr else if (!inStr && c == '?') n += 1
-          }
-          n
+          val t = new SqlText(q)
+          q.indices.count(i => q.charAt(i) == '?' && t.isCode(i))
         }
         return List(
           if (params == 0)
@@ -123,16 +120,16 @@ object SqlDialect {
           normalize(spark, s"CREATE TABLE $name $rest")
       case _ =>
     }
-    // DELETE FROM t WHERE c → rewrite-the-survivors in place, reusing the
-    // ALTER TABLE layout-preserving rewrite (the previous tmp-CTAS + rename
-    // dance silently dropped the table's partitioning/bucketing)
+    // DELETE FROM t WHERE c → rewrite the survivors in place, keeping the
+    // table's partitioning/bucketing
     val delRe = """(?is)^DELETE\s+FROM\s+(\S+)\s+WHERE\s+(.+)$""".r
     bare match {
       case delRe(name, cond) =>
         val plain = name.replace("`", "").replace("\"", "")
         val fixedCond = rewriteExpressions(cond)
-        return rewriteTableInPlace(spark, plain,
-          df => df.filter(s"NOT coalesce(($fixedCond), false)"))
+        Tables.overwriteTable(spark, plain,
+          spark.table(plain).filter(s"NOT coalesce(($fixedCond), false)"))
+        return Nil
       case _ =>
     }
     // CREATE TABLE: Trino/Postgres DDL surface Spark lacks → normalize
@@ -200,8 +197,10 @@ object SqlDialect {
         if (ifE != null && !exists) return Nil
         val rest = rest0.trim
         def schemaOf = spark.table(plain).schema
-        def rewrite(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): List[String] =
-          rewriteTableInPlace(spark, plain, f)
+        def rewrite(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): List[String] = {
+          Tables.overwriteTable(spark, plain, f(spark.table(plain)))
+          Nil
+        }
         val renameTo = """(?is)^RENAME\s+TO\s+([\w.`"]+)\s*$""".r
         val addCol =
           """(?is)^ADD\s+COLUMNS?\s+(IF\s+NOT\s+EXISTS\s+)?([\w`"]+)\s+(\w+(?:\s*\([^)]*\))?(?:\s*<[^>]*>)?)(\s+NOT\s+NULL)?(\s+COMMENT\s+'(?:[^']|'')*')?\s*$""".r
@@ -251,7 +250,7 @@ object SqlDialect {
               rewrite(df => df.withColumn(cn,
                 org.apache.spark.sql.functions.expr(rewriteExpressions(using)).cast(tpe)))
           case setProps(props) =>
-            val kv = splitTopLevel(props).map { p =>
+            val kv = SqlText.items(props).map { p =>
               val eq = p.indexOf('=')
               val k = p.substring(0, eq).trim
               val v = p.substring(eq + 1).trim
@@ -278,38 +277,6 @@ object SqlDialect {
     * `( LIKE t INCLUDING PROPERTIES )` to Spark `LIKE t`, and give
     * properties-only definitions a placeholder column (Spark requires a
     * schema). */
-  /** Materialize via localCheckpoint to break lineage from the files being
-    * overwritten, then rewrite in place — re-applying the table's
-    * partitioning/bucketing layout, which saveAsTable would otherwise
-    * silently drop. A layout column removed or renamed by the transform
-    * itself can't be re-applied; it is dropped from the layout (the
-    * surviving columns keep theirs). Shared by the ALTER TABLE column ops
-    * and the DELETE FROM rewrite. */
-  private def rewriteTableInPlace(spark: SparkSession, plain: String,
-      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): List[String] = {
-    val meta =
-      try Some(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(plain)))
-      catch { case _: Throwable => None }
-    val out = f(spark.table(plain)).localCheckpoint()
-    val outCols = out.columns.map(_.toLowerCase).toSet
-    var w = out.write.mode("overwrite")
-    meta.foreach { m =>
-      val parts = m.partitionColumnNames.filter(c => outCols(c.toLowerCase))
-      if (parts.nonEmpty) w = w.partitionBy(parts: _*)
-      m.bucketSpec.foreach { b =>
-        val bCols = b.bucketColumnNames.filter(c => outCols(c.toLowerCase))
-        if (bCols.nonEmpty) {
-          w = w.bucketBy(b.numBuckets, bCols.head, bCols.tail: _*)
-          val sCols = b.sortColumnNames.filter(c => outCols(c.toLowerCase))
-          if (sCols.nonEmpty) w = w.sortBy(sCols.head, sCols.tail: _*)
-        }
-      }
-    }
-    w.saveAsTable(plain)
-    Nil
-  }
-
   private def normalizeCreateTable(spark: SparkSession, stmt0: String): String = {
     var stmt = stmt0
     // Trino `LIKE t [INCLUDING|EXCLUDING PROPERTIES]` column-list entries →
@@ -321,7 +288,7 @@ object SqlDialect {
     var expanding = stmt.toUpperCase.contains("LIKE")
     // only inside a CREATE TABLE column list (the statement was dispatched
     // here on its CREATE TABLE prefix); skip the standalone Spark form
-    if (stripComments(stmt).trim.matches(
+    if (new SqlText(stmt).withoutComments.trim.matches(
         """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?[\w.`"]+\s+LIKE\s+[\w.`"]+\s*"""))
       expanding = false
     // …and never inside a CTAS body: a LIKE there is a predicate, not a
@@ -329,31 +296,14 @@ object SqlDialect {
     // misread the pattern as a source table). Column-entry LIKEs can only
     // occur before the top-level AS.
     val ctasAsPos: Int = {
-      val mask = stringMask(stmt)
-      var depth = 0
-      var pos = -1
-      val asRe = """(?i)\bAS\b""".r
-      var k = 0
-      while (pos < 0 && k < stmt.length) {
-        val c = stmt.charAt(k)
-        if (!mask(k)) {
-          if (c == '(' || c == '[') depth += 1
-          else if (c == ')' || c == ']') depth -= 1
-          else if (depth == 0 && (c == 'a' || c == 'A') &&
-              asRe.findPrefixOf(stmt.substring(k)).isDefined &&
-              (k == 0 || (!stmt.charAt(k - 1).isLetterOrDigit && stmt.charAt(k - 1) != '_')))
-            pos = k
-        }
-        k += 1
-      }
-      pos
+      val t = new SqlText(stmt)
+      t.codeMatches("""(?i)\bAS\b""".r).find(m => t.depth(m.start) == 0).fold(-1)(_.start)
     }
     while (expanding) {
-      findOutsideStrings(stmt, likeRe) match {
-        case Some((start, _)) if ctasAsPos >= 0 && start > ctasAsPos =>
+      new SqlText(stmt).find(likeRe) match {
+        case Some(m) if ctasAsPos >= 0 && m.start > ctasAsPos =>
           expanding = false // LIKE inside the CTAS query body — a predicate
-        case Some((start, _)) =>
-          val m = likeRe.findAllMatchIn(stmt).find(_.start == start).get
+        case Some(m) =>
           val src = m.group(1).replace("`", "").replace("\"", "")
             .replaceAll("(?i)^catalog\\.", "") // placeholder catalog prefix
           val ddl =
@@ -370,33 +320,33 @@ object SqlDialect {
     // WITH (…) at any depth — table properties or column properties
     var stripping = true
     while (stripping) {
-      findOutsideStrings(stmt, """(?is)\bWITH\s*\(""".r) match {
-        case Some((start, openIdx)) =>
-          val close = matchDelim(stmt, openIdx, '(', ')')
-          if (close < 0) stripping = false
-          else stmt = stmt.substring(0, start) + stmt.substring(close + 1)
-        case None => stripping = false
+      val t = new SqlText(stmt)
+      t.find("""(?is)\bWITH\s*\(""".r) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          stmt = stmt.substring(0, m.start) + stmt.substring(t.matching(m.end - 1) + 1)
+        case _ => stripping = false
       }
     }
     stmt = replaceSpanning(stmt,
       """(?is)\bDEFAULT\s+(CURRENT_TIMESTAMP\b|'(?:[^']|'')*'|\d+(?:\.\d+)?)""", "")
-    stmt = replaceOutsideStrings(stmt, """(?i)\btext\b""", "string")
-    stmt = replaceOutsideStrings(stmt, """(?i)\bserial\b""", "int")
-    stmt = replaceOutsideStrings(stmt, """(?i)\bjsonb\b""", "string")
-    stmt = replaceOutsideStrings(stmt,
+    stmt = replaceInCode(stmt, """(?i)\btext\b""", "string")
+    stmt = replaceInCode(stmt, """(?i)\bserial\b""", "int")
+    stmt = replaceInCode(stmt, """(?i)\bjsonb\b""", "string")
+    stmt = replaceInCode(stmt,
       """(?is)\(\s*LIKE\s+([A-Za-z_][A-Za-z0-9_.]*)\s+INCLUDING\s+PROPERTIES\s*\)""",
       " LIKE $1")
-    if (stripComments(stmt).trim.matches("""(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\S+\s*"""))
+    if (new SqlText(stmt).withoutComments.trim.matches(
+        """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\S+\s*"""))
       stmt = stmt + " (__placeholder INT)"
     // Trino allows an explicit schema on CTAS; Spark forbids it — the AS
     // SELECT defines the schema, drop the column list
-    findOutsideStrings(stmt, """(?is)\bCREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[^\s(]+\s*\(""".r)
-      .foreach { case (_, openIdx) =>
-        val close = matchDelim(stmt, openIdx, '(', ')')
-        if (close >= 0 &&
-            stmt.substring(close + 1).trim.toUpperCase.startsWith("AS"))
-          stmt = stmt.substring(0, openIdx) + stmt.substring(close + 1)
-      }
+    val t = new SqlText(stmt)
+    t.find("""(?is)\bCREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[^\s(]+\s*\(""".r).foreach { m =>
+      val open = m.end - 1
+      val close = t.matching(open)
+      if (close >= 0 && stmt.substring(close + 1).trim.toUpperCase.startsWith("AS"))
+        stmt = stmt.substring(0, open) + stmt.substring(close + 1)
+    }
     stmt
   }
 
@@ -405,7 +355,7 @@ object SqlDialect {
     var s = sql0
     // backslashes in string literals are literal in DuckDB; Spark treats
     // them as escapes — double them (inside strings only)
-    s = mapStrings(s)(_.replace("\\", "\\\\"))
+    s = new SqlText(s).mapStringBodies(_.replace("\\", "\\\\"))
     // CAST(JSON '…' AS MAP(VARCHAR, VARCHAR)) → from_json(…, map type)
     s = replaceSpanning(s,
       """(?is)CAST\s*\(\s*JSON\s+('(?:[^']|'')*')\s+AS\s+MAP\s*\(\s*VARCHAR\s*,\s*VARCHAR\s*\)\s*\)""",
@@ -423,26 +373,26 @@ object SqlDialect {
       """(?is)\bTIMESTAMP\s+'(\d{4}-\d{2}-\d{2}[ T][\d:.]+)\s+(?:UTC|[A-Za-z]+/[A-Za-z_]+)'""",
       "TIMESTAMP '$1'")
     // timestamp(3) precision → timestamp, then with[out] time zone → timestamp
-    s = replaceOutsideStrings(s, """(?i)\btimestamp\s*\(\s*\d+\s*\)""", "timestamp")
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s, """(?i)\btimestamp\s*\(\s*\d+\s*\)""", "timestamp")
+    s = replaceInCode(s,
       """(?is)\btimestamp\s+with(?:out)?\s+time\s+zone\b""", "timestamp")
     // parameterless varchar → string
-    s = replaceOutsideStrings(s, """(?i)\bvarchar\b(?!\s*\()""", "string")
+    s = replaceInCode(s, """(?i)\bvarchar\b(?!\s*\()""", "string")
     // ARRAY[…] → array(…)  (balanced; nested brackets/parens handled)
     s = convertArrayBrackets(s)
     // MAP(array(...), array(...)) → map_from_arrays
-    s = replaceOutsideStrings(s, """(?is)\bMAP\s*\(\s*array\s*\(""", "map_from_arrays(array(")
+    s = replaceInCode(s, """(?is)\bMAP\s*\(\s*array\s*\(""", "map_from_arrays(array(")
     // DuckDB/Trino spellings of Spark builtins
-    s = replaceOutsideStrings(s, """(?i)\barray_concat\s*\(""", "concat(")
-    s = replaceOutsideStrings(s, """(?i)\blist_transform\s*\(""", "transform(")
-    s = replaceOutsideStrings(s, """(?i)\bstarts_with\s*\(""", "startswith(")
-    s = replaceOutsideStrings(s, """(?i)\bapprox_quantile\s*\(""", "approx_percentile(")
+    s = replaceInCode(s, """(?i)\barray_concat\s*\(""", "concat(")
+    s = replaceInCode(s, """(?i)\blist_transform\s*\(""", "transform(")
+    s = replaceInCode(s, """(?i)\bstarts_with\s*\(""", "startswith(")
+    s = replaceInCode(s, """(?i)\bapprox_quantile\s*\(""", "approx_percentile(")
     // time('…') function — Spark has no TIME builder
-    s = replaceOutsideStrings(s, """(?i)\btime\s*\(""", "to_timestamp(")
+    s = replaceInCode(s, """(?i)\btime\s*\(""", "to_timestamp(")
     // TABLESAMPLE BERNOULLI/SYSTEM (expr[%]) and DuckDB USING SAMPLE forms
     s = convertTablesample(s)
     // FETCH [FIRST|NEXT] n ROWS ONLY → LIMIT n
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+ONLY\b""", "LIMIT $1")
     // DuckDB in-parens null treatment: f(x IGNORE NULLS, a, b) / f(x IGNORE
     // NULLS) → the Spark placement f(x, a, b) IGNORE NULLS. Spanning: the
@@ -450,12 +400,16 @@ object SqlDialect {
     s = replaceSpanning(s,
       """(?is)\(\s*([^(),']+?)\s+(IGNORE|RESPECT)\s+NULLS\s*,([^()]*)\)""",
       "($1,$3) $2 NULLS")
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """(?is)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""", ") $1 NULLS")
     // SHOW CREATE VIEW → SHOW CREATE TABLE (Spark spelling)
-    s = replaceOutsideStrings(s, """(?is)\bSHOW\s+CREATE\s+VIEW\b""", "SHOW CREATE TABLE")
-    // the corpus' placeholder catalog prefix — Spark has no such catalog
-    s = s.replace("\"catalog\".", "")
+    s = replaceInCode(s, """(?is)\bSHOW\s+CREATE\s+VIEW\b""", "SHOW CREATE TABLE")
+    // the corpus' placeholder catalog prefix — Spark has no such catalog;
+    // only a quoted identifier followed by a code `.` is the prefix
+    val cat = new SqlText(s)
+    s = """"catalog"\.""".r.replaceAllIn(s, m =>
+      if (!cat.isCode(m.start) && cat.spanStart(m.start) == m.start && cat.isCode(m.end - 1)) ""
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
     // <expr> AT TIME ZONE 'z' → from_utc_timestamp(<expr>, 'z') (balanced
     // operand extraction)
     s = convertAtTimeZone(s)
@@ -468,8 +422,8 @@ object SqlDialect {
     s = convertOrderedArrayAgg(s)
     // `_` as a lambda parameter (reference issue #1243) — Spark reserves
     // `_`-leading names in lambdas; rename the standalone token
-    if (replaceOutsideStrings(s, """\(?\s*_\s*\)?\s*->""", "").length != s.length)
-      s = replaceOutsideStrings(s, """(?<![A-Za-z0-9_])_(?![A-Za-z0-9_])""", "__lv")
+    if (new SqlText(s).find("""\(?\s*_\s*\)?\s*->""".r).isDefined)
+      s = replaceInCode(s, """(?<![A-Za-z0-9_])_(?![A-Za-z0-9_])""", "__lv")
     // Trino ROW(...)-type CAST algebra → Spark struct types, then ROW value
     // constructors → struct(...)
     s = convertRowTypes(s)
@@ -479,7 +433,7 @@ object SqlDialect {
     s = convertJsonObject(s)
     // single-parameter parenthesized lambda `(x) -> …` → `x -> …` (Spark's
     // grammar only parenthesizes multi-parameter lambdas)
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)\s*->""", "$1 ->")
     // DuckDB numeric truthiness in an identity lambda PREDICATE (`x -> x`
     // inside a filter-family call): truthy = non-null and non-zero; Spark
@@ -492,34 +446,33 @@ object SqlDialect {
     // rewrite to a SELECT chain that keeps the struct value intact
     s = convertStructValuesRows(s)
     // DuckDB `//` integer division → Spark's div operator
-    s = replaceOutsideStrings(s, """//""", " div ")
+    s = replaceInCode(s, """//""", " div ")
     // Hive `STORED AS <fmt>` → Spark `USING <fmt>` (DDL only — `stored`
     // is a legal column alias in queries; leading comment lines skipped)
-    if (s.matches("""(?is)\s*(--[^\n]*\n\s*)*CREATE\b.*"""))
-      s = replaceOutsideStrings(s, """(?i)\bSTORED\s+AS\s+(\w+)""", "USING $1")
+    if (new SqlText(s).withoutComments.trim.matches("""(?is)CREATE\b.*"""))
+      s = replaceInCode(s, """(?i)\bSTORED\s+AS\s+(\w+)""", "USING $1")
     // Trino IPADDRESS literals / casts → plain strings (no inet type;
     // string order preserves the corpus' equality comparisons)
     s = replaceSpanning(s, """(?is)\bIPADDRESS\s+('(?:[^']|'')*')""", "$1")
     s = replaceSpanning(s, """(?is)\bIPADDRESS\s+"([^"]*)"""", "'$1'")
-    s = replaceOutsideStrings(s, """(?i)\bIPADDRESS\s*\(""", "string(")
+    s = replaceInCode(s, """(?i)\bIPADDRESS\s*\(""", "string(")
     // the corpus' placeholder `catalog.` prefix (unquoted form)
-    // (\z: a following double-quoted identifier is now its own masked
-    // segment, so `catalog."t"` shows up here as a segment ending in
-    // `catalog.`)
-    s = replaceOutsideStrings(s, """(?i)\bcatalog\.(?=[\w`"]|\z)""", "")
+    // (\z: a following quoted identifier ends the code run, so
+    // `catalog."t"` shows up here as a run ending in `catalog.`)
+    s = replaceInCode(s, """(?i)\bcatalog\.(?=[\w`"]|\z)""", "")
     // Trino/DuckDB anonymous VALUES columns are column1, column2, …;
     // Spark's are col1, col2, … (rename only when VALUES is present)
-    if (findOutsideStrings(s, """(?i)\bVALUES\s*\(""".r).isDefined)
-      s = replaceOutsideStrings(s, """(?i)\bcolumn(\d+)\b""", "col$1")
+    if (new SqlText(s).find("""(?i)\bVALUES\s*\(""".r).isDefined)
+      s = replaceInCode(s, """(?i)\bcolumn(\d+)\b""", "col$1")
     // Trino parenthesized INSERT source `INSERT INTO t (WITH … SELECT …)`
     // → bare query (Spark's grammar takes the query unparenthesized)
-    findOutsideStrings(s, """(?is)\bINSERT\s+INTO\s+(?:TABLE\s+)?[\w.`"]+\s*\(\s*WITH\b""".r)
-      .foreach { case (_, lastIdx) =>
-        val open = s.lastIndexOf('(', lastIdx)
-        val close = matchDelim(s, open, '(', ')')
-        if (close >= 0 && s.substring(close + 1).trim.isEmpty)
-          s = s.substring(0, open) + s.substring(open + 1, close) + s.substring(close + 1)
-      }
+    val insert = new SqlText(s)
+    insert.find("""(?is)\bINSERT\s+INTO\s+(?:TABLE\s+)?[\w.`"]+\s*\(\s*WITH\b""".r).foreach { m =>
+      val open = s.lastIndexOf('(', m.end - 1)
+      val close = insert.matching(open)
+      if (close >= 0 && s.substring(close + 1).trim.isEmpty)
+        s = s.substring(0, open) + s.substring(open + 1, close) + s.substring(close + 1)
+    }
     // Hivemall-style `each_top_k(k, grp, score, a…) AS (cols)` UDTF →
     // window-rank rewrite (the one executable UDTF shape in the corpus)
     if (s.toLowerCase.contains("each_top_k")) s = convertEachTopK(s)
@@ -538,37 +491,22 @@ object SqlDialect {
     * → append ` ORDER BY 1` inside the window spec. */
   private def convertOrderlessRankingWindows(s0: String): String = {
     var s = s0
+    var t = new SqlText(s)
     val re = """(?is)\b(?:row_number|rank|dense_rank)\s*\(\s*\)\s*OVER\s*\(""".r
+    val orderBy = """(?is)\bORDER\s+BY\b""".r
     var from = 0
     var continue = true
     while (continue) {
-      val sub = s.substring(from)
-      findOutsideStrings(sub, re) match {
-        case None => continue = false
-        case Some((_, open0)) =>
-          val open = from + open0
-          val close = matchDelim(s, open, '(', ')')
-          if (close < 0) continue = false
-          else {
-            val spec = s.substring(open + 1, close)
-            if (!"""(?is)\bORDER\s+BY\b""".r.findFirstIn(spec).exists { _ =>
-                // top-level only: masked/nested ORDER BY doesn't count
-                val mask = stringMask(spec)
-                """(?is)\bORDER\s+BY\b""".r.findAllMatchIn(spec).exists { m =>
-                  !mask(m.start) && {
-                    var d = 0; var i = 0
-                    while (i < m.start) {
-                      val c = spec.charAt(i)
-                      if (!mask(i)) { if (c == '(') d += 1 else if (c == ')') d -= 1 }
-                      i += 1
-                    }
-                    d == 0
-                  }
-                }
-              })
-              s = s.substring(0, close) + " ORDER BY 1" + s.substring(close)
-            from = close + 1
+      t.find(re, from).map(_.end - 1) match {
+        case Some(open) if t.matching(open) >= 0 =>
+          val close = t.matching(open)
+          // top-level only: a nested ORDER BY doesn't count
+          if (!t.codeMatches(orderBy, open + 1, close).exists(m => t.depth(m.start) == t.depth(open) + 1)) {
+            s = s.substring(0, close) + " ORDER BY 1" + s.substring(close)
+            t = new SqlText(s)
           }
+          from = close + 1
+        case _ => continue = false
       }
     }
     s
@@ -579,19 +517,13 @@ object SqlDialect {
   private def convertTdCalls(s0: String): String = {
     val re = """(?i)\bTD_[A-Z_]+\s*\(""".r
     def wrapOne(s: String, from: Int): String = {
-      val sub = s.substring(from)
-      findOutsideStrings(sub, re) match {
-        case None => s
-        case Some((start0, open0)) =>
-          val open = from + open0
-          val close = matchDelim(s, open, '(', ')')
-          if (close < 0) return s
+      val t = new SqlText(s)
+      t.find(re, from).map(_.end - 1) match {
+        case Some(open) if t.matching(open) >= 0 =>
           // nested TD_ calls are wrapped by the continued forward scan
-          val args = splitTopLevel(s.substring(open + 1, close))
-            .map(a => s"CAST($a AS STRING)")
-          val head = s.substring(0, open + 1)
-          val rebuilt = head + args.mkString(", ") + s.substring(close)
-          wrapOne(rebuilt, open + 1)
+          val args = t.itemsIn(open).map(a => s"CAST($a AS STRING)")
+          wrapOne(s.substring(0, open + 1) + args.mkString(", ") + s.substring(t.matching(open)), open + 1)
+        case _ => s
       }
     }
     wrapOne(s0, 0)
@@ -604,39 +536,32 @@ object SqlDialect {
     * window form is the distributed-native equivalent (one shuffle on grp,
     * same as the CLUSTER BY the Hive original requires). */
   private def convertEachTopK(s0: String): String = {
-    val re = """(?is)\bSELECT\s+each_top_k\s*\(""".r
-    findOutsideStrings(s0, re) match {
+    val t = new SqlText(s0)
+    t.find("""(?is)\bSELECT\s+each_top_k\s*\(""".r) match {
       case None => s0
-      case Some((selStart, openIdx)) =>
-        val closeArgs = matchDelim(s0, openIdx, '(', ')')
+      case Some(sel) =>
+        val openIdx = sel.end - 1
+        val closeArgs = t.matching(openIdx)
         if (closeArgs < 0) return s0
-        val args = splitTopLevel(s0.substring(openIdx + 1, closeArgs))
-        val asRe = """(?is)^\s*AS\s*\(""".r
-        asRe.findFirstMatchIn(s0.substring(closeArgs + 1)) match {
+        val args = t.itemsIn(openIdx)
+        """(?is)^\s*AS\s*\(""".r.findFirstMatchIn(s0.substring(closeArgs + 1)) match {
           case None => s0
           case Some(m) =>
             val colsOpen = closeArgs + 1 + m.end - 1
-            val colsClose = matchDelim(s0, colsOpen, '(', ')')
+            val colsClose = t.matching(colsOpen)
             if (colsClose < 0 || args.length < 3) return s0
-            val cols = splitTopLevel(s0.substring(colsOpen + 1, colsClose))
+            val cols = t.itemsIn(colsOpen)
             if (cols.length != args.length - 1) return s0
-            // rest extends to where paren depth drops below the SELECT's
-            var k = colsClose + 1; var depth = 0; var inStr = false
-            var end = s0.length
-            while (k < s0.length && end == s0.length) {
-              val c = s0.charAt(k)
-              if (c == '\'') inStr = !inStr
-              else if (!inStr && c == '(') depth += 1
-              else if (!inStr && c == ')') { depth -= 1; if (depth < 0) end = k }
-              k += 1
-            }
+            // rest extends to the close of the bracket around the SELECT
+            val around = t.enclosingOpen(sel.start)
+            val end = if (around >= 0 && t.matching(around) >= 0) t.matching(around) else s0.length
             val rest = s0.substring(colsClose + 1, end)
             val (kLim, grp, score) = (args(0), args(1), args(2))
             val inner = (s"rank() OVER (PARTITION BY $grp ORDER BY $score DESC) AS ${cols(0)}" ::
               s"$score AS ${cols(1)}" ::
               args.drop(3).zip(cols.drop(2)).map { case (a, c) => s"$a AS $c" }).mkString(", ")
             val repl = s"SELECT * FROM (SELECT $inner $rest) WHERE ${cols(0)} <= $kLim"
-            convertEachTopK(s0.substring(0, selStart) + repl + s0.substring(end))
+            convertEachTopK(s0.substring(0, sel.start) + repl + s0.substring(end))
         }
     }
   }
@@ -647,53 +572,59 @@ object SqlDialect {
     * column (the Trino ROW-value inline-table idiom). */
   private def convertStructValuesRows(s0: String): String = {
     val re = """(?i)\(\s*VALUES\s*\(""".r
-    findOutsideStrings(s0, re) match {
-      case None => s0
-      case Some((start, firstOpen)) =>
-        // collect the parenthesized rows
-        var rows = List.newBuilder[String]
-        var open = firstOpen
-        var ok = true
-        var end = -1
-        var continue = true
-        while (continue) {
-          val close = matchDelim(s0, open, '(', ')')
-          if (close < 0) { ok = false; continue = false }
-          else {
-            rows += s0.substring(open + 1, close)
-            // next non-space: ',' → another row; ')' → end of VALUES
-            var j = close + 1
-            while (j < s0.length && Character.isWhitespace(s0.charAt(j))) j += 1
-            if (j < s0.length && s0.charAt(j) == ',') {
-              var k = j + 1
-              while (k < s0.length && Character.isWhitespace(s0.charAt(k))) k += 1
-              if (k < s0.length && s0.charAt(k) == '(') { open = k }
-              else { ok = false; continue = false }
-            } else if (j < s0.length && s0.charAt(j) == ')') {
-              end = j; continue = false
-            } else { ok = false; continue = false }
+    val aliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)""".r
+    var s = s0
+    var t = new SqlText(s)
+    var from = 0
+    var searching = true
+    while (searching) {
+      t.find(re, from) match {
+        case None => searching = false
+        case Some(values) =>
+          val start = values.start
+          val firstOpen = values.end - 1
+          // collect the parenthesized rows
+          val rows = List.newBuilder[String]
+          var open = firstOpen
+          var ok = true
+          var end = -1
+          var continue = true
+          while (continue) {
+            val close = t.matching(open)
+            if (close < 0) { ok = false; continue = false }
+            else {
+              rows += s.substring(open + 1, close)
+              // next non-space: ',' → another row; ')' → end of VALUES
+              var j = close + 1
+              while (j < s.length && Character.isWhitespace(s.charAt(j))) j += 1
+              if (j < s.length && s.charAt(j) == ',') {
+                var k = j + 1
+                while (k < s.length && Character.isWhitespace(s.charAt(k))) k += 1
+                if (k < s.length && s.charAt(k) == '(') { open = k }
+                else { ok = false; continue = false }
+              } else if (j < s.length && s.charAt(j) == ')') {
+                end = j; continue = false
+              } else { ok = false; continue = false }
+            }
           }
-        }
-        val aliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)""".r
-        val after = if (end >= 0) s0.substring(end + 1) else ""
-        val rowList = rows.result()
-        val allStruct = rowList.nonEmpty && rowList.forall { r =>
-          r.trim.toLowerCase.startsWith("struct(") &&
-            splitTopLevel(r).lengthCompare(1) == 0
-        }
-        aliasRe.findFirstMatchIn(after) match {
-          case Some(m) if ok && allStruct =>
-            val (tbl, col) = (m.group(1), m.group(2))
-            val sel = rowList.map(r => s"SELECT ${r.trim} AS $col").mkString(" UNION ALL ")
-            val rebuilt = s"($sel) $tbl" + after.substring(m.end)
-            convertStructValuesRows(s0.substring(0, start) + rebuilt)
-          case _ =>
-            // leave untouched; avoid rescanning the same site by translating
-            // only the remainder after this VALUES keyword
-            val head = s0.substring(0, firstOpen + 1)
-            head + convertStructValuesRows(s0.substring(firstOpen + 1))
-        }
+          val after = if (end >= 0) s.substring(end + 1) else ""
+          val rowList = rows.result()
+          val allStruct = rowList.nonEmpty && rowList.forall { r =>
+            r.trim.toLowerCase.startsWith("struct(") && SqlText.items(r).lengthCompare(1) == 0
+          }
+          aliasRe.findFirstMatchIn(after) match {
+            case Some(m) if ok && allStruct =>
+              val (tbl, col) = (m.group(1), m.group(2))
+              val sel = rowList.map(r => s"SELECT ${r.trim} AS $col").mkString(" UNION ALL ")
+              s = s.substring(0, start) + s"($sel) $tbl" + after.substring(m.end)
+              t = new SqlText(s)
+            case _ =>
+              // leave untouched and search on after this VALUES keyword
+              from = firstOpen + 1
+          }
       }
+    }
+    s
   }
 
   /** Normalize a raw `sql"…"` fragment that Spark's parser rejected: the
@@ -710,80 +641,61 @@ object SqlDialect {
     * clause; default asc→last, desc→first, the Trino/DuckDB default). */
   private def convertOrderedArrayAgg(s0: String): String = {
     var s = s0
+    var t = new SqlText(s)
     val re = """(?i)\barray_agg\s*\(""".r
+    val obRe = """(?i)\bORDER\s+BY\b""".r
     var searchFrom = 0
     var continue = true
     while (continue) {
-      val sub = s.substring(searchFrom)
-      findOutsideStrings(sub, re) match {
-        case None => continue = false
-        case Some((start0, openIdx0)) =>
-          val start = searchFrom + start0
-          val openIdx = searchFrom + openIdx0
-          val close = matchDelim(s, openIdx, '(', ')')
-          if (close < 0) continue = false
-          else {
-            val inner = s.substring(openIdx + 1, close)
-            // top-level ORDER BY split (outside strings, depth 0)
-            val mask = stringMask(inner)
-            val obRe = """(?i)\bORDER\s+BY\b""".r
-            val obAt = obRe.findAllMatchIn(inner).find { m =>
-              !mask(m.start) && {
-                var depth = 0
-                var i = 0
-                var top = true
-                while (i < m.start) {
-                  val c = inner.charAt(i)
-                  if (!mask(i)) {
-                    if (c == '(' || c == '[') depth += 1
-                    else if (c == ')' || c == ']') depth -= 1
-                  }
-                  i += 1
+      t.find(re, searchFrom) match {
+        case Some(agg) if t.matching(agg.end - 1) >= 0 =>
+          val start = agg.start
+          val openIdx = agg.end - 1
+          val close = t.matching(openIdx)
+          val level = t.depth(openIdx) + 1
+          // top-level ORDER BY split
+          t.codeMatches(obRe, openIdx + 1, close).find(m => t.depth(m.start) == level) match {
+            case None => searchFrom = close + 1
+            case Some(m) =>
+              var exprPart = s.substring(openIdx + 1, m.start).trim
+              val distinct = """(?i)^DISTINCT\b""".r.findFirstIn(exprPart).isDefined
+              if (distinct) exprPart = exprPart.substring("DISTINCT".length).trim
+              val keys = t.items(m.end, close, level).map { k0 =>
+                var k = k0.trim
+                var desc = false
+                var nullsFirst: Option[Boolean] = None
+                val nf = """(?i)\s+NULLS\s+(FIRST|LAST)\s*$""".r
+                nf.findFirstMatchIn(k).foreach { mm =>
+                  nullsFirst = Some(mm.group(1).equalsIgnoreCase("FIRST"))
+                  k = k.substring(0, mm.start).trim
                 }
-                top && depth == 0
+                val ad = """(?i)\s+(ASC|DESC)\s*$""".r
+                ad.findFirstMatchIn(k).foreach { mm =>
+                  desc = mm.group(1).equalsIgnoreCase("DESC")
+                  k = k.substring(0, mm.start).trim
+                }
+                (k, desc, nullsFirst.getOrElse(desc)) // default: asc→nulls last, desc→nulls first
               }
-            }
-            obAt match {
-              case None => searchFrom = close + 1
-              case Some(m) =>
-                var exprPart = inner.substring(0, m.start).trim
-                val distinct = """(?i)^DISTINCT\b""".r.findFirstIn(exprPart).isDefined
-                if (distinct) exprPart = exprPart.substring("DISTINCT".length).trim
-                val keys = splitTopLevel(inner.substring(m.end)).map { k0 =>
-                  var k = k0.trim
-                  var desc = false
-                  var nullsFirst: Option[Boolean] = None
-                  val nf = """(?i)\s+NULLS\s+(FIRST|LAST)\s*$""".r
-                  nf.findFirstMatchIn(k).foreach { mm =>
-                    nullsFirst = Some(mm.group(1).equalsIgnoreCase("FIRST"))
-                    k = k.substring(0, mm.start).trim
-                  }
-                  val ad = """(?i)\s+(ASC|DESC)\s*$""".r
-                  ad.findFirstMatchIn(k).foreach { mm =>
-                    desc = mm.group(1).equalsIgnoreCase("DESC")
-                    k = k.substring(0, mm.start).trim
-                  }
-                  (k, desc, nullsFirst.getOrElse(desc)) // default: asc→nulls last, desc→nulls first
-                }
-                val fields = (s"($exprPart) AS __v" ::
-                  keys.zipWithIndex.map { case ((k, _, _), i) => s"($k) AS __k$i" }).mkString(", ")
-                val cmp = keys.zipWithIndex.flatMap { case ((_, desc, nFirst), i) =>
-                  val (lt, gt) = if (desc) ("1", "-1") else ("-1", "1")
-                  val (nl, nr) = if (nFirst) ("-1", "1") else ("1", "-1")
-                  List(
-                    s"WHEN l.__k$i IS NULL AND r.__k$i IS NOT NULL THEN $nl",
-                    s"WHEN r.__k$i IS NULL AND l.__k$i IS NOT NULL THEN $nr",
-                    s"WHEN l.__k$i < r.__k$i THEN $lt",
-                    s"WHEN l.__k$i > r.__k$i THEN $gt")
-                }.mkString(" ")
-                val distinctKw = if (distinct) "DISTINCT " else ""
-                val repl =
-                  s"transform(array_sort(array_agg(${distinctKw}struct($fields)), " +
-                    s"(l, r) -> CASE $cmp ELSE 0 END), s -> s.__v)"
-                s = s.substring(0, start) + repl + s.substring(close + 1)
-                searchFrom = start + repl.length
-            }
+              val fields = (s"($exprPart) AS __v" ::
+                keys.zipWithIndex.map { case ((k, _, _), i) => s"($k) AS __k$i" }).mkString(", ")
+              val cmp = keys.zipWithIndex.flatMap { case ((_, desc, nFirst), i) =>
+                val (lt, gt) = if (desc) ("1", "-1") else ("-1", "1")
+                val (nl, nr) = if (nFirst) ("-1", "1") else ("1", "-1")
+                List(
+                  s"WHEN l.__k$i IS NULL AND r.__k$i IS NOT NULL THEN $nl",
+                  s"WHEN r.__k$i IS NULL AND l.__k$i IS NOT NULL THEN $nr",
+                  s"WHEN l.__k$i < r.__k$i THEN $lt",
+                  s"WHEN l.__k$i > r.__k$i THEN $gt")
+              }.mkString(" ")
+              val distinctKw = if (distinct) "DISTINCT " else ""
+              val repl =
+                s"transform(array_sort(array_agg(${distinctKw}struct($fields)), " +
+                  s"(l, r) -> CASE $cmp ELSE 0 END), s -> s.__v)"
+              s = s.substring(0, start) + repl + s.substring(close + 1)
+              t = new SqlText(s)
+              searchFrom = start + repl.length
           }
+        case _ => continue = false
       }
     }
     s
@@ -799,51 +711,33 @@ object SqlDialect {
     // only engage when a ROW( appears (keeps the common path untouched)
     if ("""(?i)\bROW\s*\(""".r.findFirstIn(s).isEmpty) return s
     // 1. translate CAST type operands
+    var t = new SqlText(s)
     val castRe = """(?i)\bCAST\s*\(""".r
+    val asRe = """(?i)\sAS\s""".r
     var from = 0
     var continue = true
     while (continue) {
-      val sub = s.substring(from)
-      findOutsideStrings(sub, castRe) match {
-        case None => continue = false
-        case Some((cs0, open0)) =>
-          val open = from + open0
-          val close = matchDelim(s, open, '(', ')')
-          if (close < 0) continue = false
-          else {
-            val inner = s.substring(open + 1, close)
-            val mask = stringMask(inner)
-            // last top-level ` AS ` splits value from type
-            val asRe = """(?i)\sAS\s""".r
-            val splits = asRe.findAllMatchIn(inner).filter { m =>
-              !mask(m.start) && {
-                var depth = 0; var i = 0
-                while (i < m.start) {
-                  val c = inner.charAt(i)
-                  if (!mask(i)) {
-                    if (c == '(' || c == '[') depth += 1
-                    else if (c == ')' || c == ']') depth -= 1
-                  }
-                  i += 1
-                }
-                depth == 0
-              }
-            }.toList
-            if (splits.isEmpty) { from = close + 1 }
-            else {
-              val m = splits.last
-              val valuePart = inner.substring(0, m.start)
-              val typePart = inner.substring(m.end).trim
-              val newType = translateTypeExpr(typePart)
+      t.find(castRe, from) match {
+        case Some(cast) if t.matching(cast.end - 1) >= 0 =>
+          val open = cast.end - 1
+          val close = t.matching(open)
+          // last top-level ` AS ` splits value from type
+          t.codeMatches(asRe, open + 1, close).filter(m => t.depth(m.start) == t.depth(open) + 1)
+            .toList.lastOption match {
+            case None => from = close + 1
+            case Some(m) =>
+              val valuePart = s.substring(open + 1, m.start)
+              val newType = translateTypeExpr(s.substring(m.end, close).trim)
               val rebuilt = s"CAST($valuePart AS $newType)"
-              s = s.substring(0, from + cs0) + rebuilt + s.substring(close + 1)
-              from = from + cs0 + rebuilt.length
-            }
+              s = s.substring(0, cast.start) + rebuilt + s.substring(close + 1)
+              t = new SqlText(s)
+              from = cast.start + rebuilt.length
           }
+        case _ => continue = false
       }
     }
     // 2. remaining ROW( are value constructors
-    replaceOutsideStrings(s, """(?i)\bROW\s*\(""", "struct(")
+    replaceInCode(s, """(?i)\bROW\s*\(""", "struct(")
   }
 
   /** Recursive type-expression translation (Trino/DuckDB → Spark DDL). */
@@ -858,13 +752,12 @@ object SqlDialect {
       }
     } else {
       val head = t.substring(0, paren).trim.toLowerCase
-      val close = matchDelim(t, paren, '(', ')')
+      val sql = new SqlText(t)
+      val close = sql.matching(paren)
       if (close < 0) return t
-      val inner = t.substring(paren + 1, close)
       head match {
         case "row" =>
-          val fields = splitTopLevel(inner).map { f0 =>
-            val f = f0.trim
+          val fields = sql.itemsIn(paren).map { f =>
             val sp = f.indexOf(' ')
             if (sp < 0) f
             else {
@@ -874,9 +767,9 @@ object SqlDialect {
             }
           }
           s"struct<${fields.mkString(", ")}>"
-        case "array" => s"array<${translateTypeExpr(inner)}>"
+        case "array" => s"array<${translateTypeExpr(t.substring(paren + 1, close))}>"
         case "map" =>
-          val parts = splitTopLevel(inner).map(translateTypeExpr)
+          val parts = sql.itemsIn(paren).map(translateTypeExpr)
           s"map<${parts.mkString(", ")}>"
         case "decimal" | "numeric" | "char" => t // parameterized scalars pass through
         case _ => t
@@ -893,30 +786,28 @@ object SqlDialect {
     val re = """(?i)\bJSON_OBJECT\s*\(""".r
     var continue = true
     while (continue) {
-      findOutsideStrings(s, re) match {
-        case None => continue = false
-        case Some((start, openIdx)) =>
-          val close = matchDelim(s, openIdx, '(', ')')
-          if (close < 0) continue = false
-          else {
-            var inner = s.substring(openIdx + 1, close)
-            // strip trailing modifiers (they follow the final pair)
-            inner = inner.replaceAll(
-              """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL(\s+WITH(OUT)?\s+UNIQUE\s+KEYS)?\s*$""", "")
-            inner = inner.replaceAll(
-              """(?is)\s+WITH(OUT)?\s+UNIQUE\s+KEYS\s*$""", "")
-            val items = splitTopLevel(inner).map(_.trim).filter(_.nonEmpty)
-            val kvRe = """(?is)^KEY\s+(.+?)\s+VALUE\s+(.+)$""".r
-            val pairs: List[String] =
-              if (items.forall(kvRe.pattern.matcher(_).matches()))
-                items.flatMap { it =>
-                  val m = kvRe.findFirstMatchIn(it).get
-                  List(m.group(1).trim, m.group(2).trim)
-                }
-              else items // DuckDB alternating style is already k, v, k, v
-            val repl = s"to_json(named_struct(${pairs.mkString(", ")}))"
-            s = s.substring(0, start) + repl + s.substring(close + 1)
-          }
+      val t = new SqlText(s)
+      t.find(re) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          val close = t.matching(m.end - 1)
+          var inner = s.substring(m.end, close)
+          // strip trailing modifiers (they follow the final pair)
+          inner = inner.replaceAll(
+            """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL(\s+WITH(OUT)?\s+UNIQUE\s+KEYS)?\s*$""", "")
+          inner = inner.replaceAll(
+            """(?is)\s+WITH(OUT)?\s+UNIQUE\s+KEYS\s*$""", "")
+          val items = SqlText.items(inner)
+          val kvRe = """(?is)^KEY\s+(.+?)\s+VALUE\s+(.+)$""".r
+          val pairs: List[String] =
+            if (items.forall(kvRe.pattern.matcher(_).matches()))
+              items.flatMap { it =>
+                val kv = kvRe.findFirstMatchIn(it).get
+                List(kv.group(1).trim, kv.group(2).trim)
+              }
+            else items // DuckDB alternating style is already k, v, k, v
+          val repl = s"to_json(named_struct(${pairs.mkString(", ")}))"
+          s = s.substring(0, m.start) + repl + s.substring(close + 1)
+        case _ => continue = false
       }
     }
     s
@@ -928,32 +819,19 @@ object SqlDialect {
     val re = """(?i)\bMAP\s*\{""".r
     var continue = true
     while (continue) {
-      findOutsideStrings(s, re) match {
-        case None => continue = false
-        case Some((start, openIdx)) =>
-          val close = matchDelim(s, openIdx, '{', '}')
-          if (close < 0) continue = false
-          else {
-            val inner = s.substring(openIdx + 1, close)
-            val pairs = splitTopLevel(inner).flatMap { kv =>
-              // split on the FIRST top-level colon (values may nest maps)
-              val mask = stringMask(kv)
-              var depth = 0; var cut = -1; var i = 0
-              while (i < kv.length && cut < 0) {
-                val c = kv.charAt(i)
-                if (!mask(i)) {
-                  if (c == '(' || c == '[' || c == '{') depth += 1
-                  else if (c == ')' || c == ']' || c == '}') depth -= 1
-                  else if (c == ':' && depth == 0) cut = i
-                }
-                i += 1
-              }
-              if (cut < 0) List(kv.trim)
-              else List(kv.substring(0, cut).trim, kv.substring(cut + 1).trim)
-            }
-            s = s.substring(0, start) + "map(" + pairs.mkString(", ") + ")" +
-              s.substring(close + 1)
+      val t = new SqlText(s)
+      t.find(re) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          val close = t.matching(m.end - 1)
+          val pairs = t.itemsIn(m.end - 1).flatMap { kv =>
+            // split on the FIRST top-level colon (values may nest maps)
+            val cut = new SqlText(kv).topLevelIndexOf(':')
+            if (cut < 0) List(kv)
+            else List(kv.substring(0, cut).trim, kv.substring(cut + 1).trim)
           }
+          s = s.substring(0, m.start) + "map(" + pairs.mkString(", ") + ")" +
+            s.substring(close + 1)
+        case _ => continue = false
       }
     }
     s
@@ -964,7 +842,7 @@ object SqlDialect {
     * preceding non-space character cannot END an operand (start of input,
     * `(`, `[`, `{`, `,` or an operator/colon). */
   private def convertBareArrayBrackets(s0: String): String = {
-    val mask = stringMask(s0)
+    val t = new SqlText(s0)
     def isLiteralStart(idx: Int): Boolean = {
       var j = idx - 1
       while (j >= 0 && Character.isWhitespace(s0.charAt(j))) j -= 1
@@ -981,108 +859,50 @@ object SqlDialect {
             "all", "distinct", "case").contains(word)
         }
     }
-    val openIdx = s0.indices.find(i => !mask(i) && s0.charAt(i) == '[' && isLiteralStart(i))
-    openIdx match {
-      case None => s0
-      case Some(i) =>
-        val close = matchDelim(s0, i, '[', ']')
-        if (close < 0) s0
-        else convertBareArrayBrackets(
+    s0.indices.find(i => s0.charAt(i) == '[' && t.isCode(i) && isLiteralStart(i)) match {
+      case Some(i) if t.matching(i) >= 0 =>
+        val close = t.matching(i)
+        convertBareArrayBrackets(
           s0.substring(0, i) + "array(" +
             convertBareArrayBrackets(s0.substring(i + 1, close)) + ")" +
             s0.substring(close + 1))
+      case _ => s0
     }
   }
 
   // --- helpers ---------------------------------------------------------------
 
-  /** Split `a, 'x,y', f(1,2)` on TOP-LEVEL commas. */
-  private def splitTopLevel(s: String): List[String] = {
-    val out = List.newBuilder[String]
-    val sb = new StringBuilder
-    var depth = 0
-    var inStr = false
-    s.foreach {
-      case '\'' => inStr = !inStr; sb += '\''
-      case c if inStr => sb += c
-      // brackets count for depth but pass through UNCHANGED — rewriting
-      // [ to ( corrupted subscripts (`k[1]` became the call `k(1)`)
-      case c @ ('(' | '[') => depth += 1; sb += c
-      case c @ (')' | ']') => depth -= 1; sb += c
-      case ',' if depth == 0 => out += sb.toString.trim; sb.clear()
-      case c => sb += c
-    }
-    if (sb.nonEmpty) out += sb.toString.trim
-    out.result().filter(_.nonEmpty)
-  }
+  private val paramRe = """\?|\$[\p{L}\p{Nd}_][\p{L}\p{Nd}_]*""".r
 
-  /** Bind `?` (sequential), `$1` (positional), `$name` (by position) params. */
+  /** Bind `?` (sequential), `$1` (positional), `$name` (by position)
+    * params in code; a `?` in a string, identifier or comment stays. */
   private def bindParams(q: String, args: List[String]): String = {
-    var i = 0
-    val sb = new StringBuilder
-    var inStr = false
-    var k = 0
-    while (k < q.length) {
-      val c = q.charAt(k)
-      if (c == '\'') { inStr = !inStr; sb += c; k += 1 }
-      else if (inStr) { sb += c; k += 1 }
-      else if (c == '?') {
-        sb ++= args.lift(i).getOrElse("NULL"); i += 1; k += 1
-      } else if (c == '$' && k + 1 < q.length &&
-          (q.charAt(k + 1).isDigit || q.charAt(k + 1).isLetter || q.charAt(k + 1) == '_')) {
-        var j = k + 1
-        while (j < q.length && (q.charAt(j).isLetterOrDigit || q.charAt(j) == '_')) j += 1
-        val token = q.substring(k + 1, j)
-        val idx = token.toIntOption.map(_ - 1).getOrElse { val v = i; i += 1; v }
-        sb ++= args.lift(idx).getOrElse("NULL")
-        k = j
-      } else { sb += c; k += 1 }
-    }
-    sb.toString
+    var next = 0
+    def sequential(): Int = { next += 1; next - 1 }
+    new SqlText(q).mapCode(run => paramRe.replaceAllIn(run, m => {
+      val idx =
+        if (m.matched == "?") sequential()
+        else m.matched.tail.toIntOption.map(_ - 1).getOrElse(sequential())
+      scala.util.matching.Regex.quoteReplacement(args.lift(idx).getOrElse("NULL"))
+    }))
   }
 
-  private def stripComments(s: String): String = {
-    val sb = new StringBuilder
-    var inStr = false
-    var inDq = false
-    var k = 0
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (!inStr && !inDq && c == '-' && k + 1 < s.length && s.charAt(k + 1) == '-') {
-        while (k < s.length && s.charAt(k) != '\n') k += 1
-      } else {
-        if (!inStr && c == '"') inDq = !inDq
-        else if (!inDq && c == '\'') inStr = !inStr
-        sb += c
-        k += 1
-      }
-    }
-    sb.toString
-  }
-
-  /** Apply `f` to string-literal segments only. */
-  private def mapStrings(s: String)(f: String => String): String =
-    mapSegments(s)((seg, inStr) => if (inStr) f(seg) else seg)
-
-  /** Regex replace applied to non-string segments only. */
-  private def replaceOutsideStrings(s: String, pattern: String, replacement: String): String =
-    mapSegments(s)((seg, inStr) => if (inStr) seg else seg.replaceAll(pattern, replacement))
+  /** Regex replace applied to code only. */
+  private def replaceInCode(s: String, pattern: String, replacement: String): String =
+    new SqlText(s).replaceCode(pattern.r, replacement)
 
   /** Regex replace over the WHOLE text (matches may span string literals,
     * e.g. typed literals `DECIMAL '0.95'`), applied only when the match
-    * STARTS outside a string literal. */
+    * STARTS at code. */
   private def replaceSpanning(s0: String, pattern: String, replacement: String): String = {
-    var s = s0
     val re = pattern.r
-    var continue = true
-    while (continue) {
-      val mask = stringMask(s)
-      re.findAllMatchIn(s).find(m => !mask(m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          s = s.substring(0, m.start) + m.matched.replaceAll(pattern, replacement) +
-            s.substring(m.end)
-      }
+    var s = s0
+    var next = new SqlText(s).find(re)
+    while (next.isDefined) {
+      val m = next.get
+      s = s.substring(0, m.start) + re.pattern.matcher(m.group).replaceAll(replacement) +
+        s.substring(m.end)
+      next = new SqlText(s).find(re)
     }
     s
   }
@@ -1101,23 +921,21 @@ object SqlDialect {
     val re = """(?is)\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(""".r
     var continue = true
     while (continue) {
-      findOutsideStrings(s, re) match {
-        case None => continue = false
-        case Some((start, openIdx)) =>
-          val close = matchDelim(s, openIdx, '(', ')')
-          if (close < 0) continue = false
-          else {
-            val folded = fold(s.substring(openIdx + 1, close)).getOrElse("10")
-            s = s.substring(0, start) + s"TABLESAMPLE ($folded PERCENT)" + s.substring(close + 1)
-          }
+      val t = new SqlText(s)
+      t.find(re) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          val close = t.matching(m.end - 1)
+          val folded = fold(s.substring(m.end, close)).getOrElse("10")
+          s = s.substring(0, m.start) + s"TABLESAMPLE ($folded PERCENT)" + s.substring(close + 1)
+        case _ => continue = false
       }
     }
     // USING SAMPLE reservoir(10%) / 10% / 10 percent / 5 [rows]
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """(?is)\bUSING\s+SAMPLE\s+reservoir\s*\(\s*(\d+)\s*%?\s*\)""", "TABLESAMPLE ($1 PERCENT)")
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """(?is)\bUSING\s+SAMPLE\s+(\d+)\s*(?:%|percent)""", "TABLESAMPLE ($1 PERCENT)")
-    s = replaceOutsideStrings(s,
+    s = replaceInCode(s,
       """(?is)\bUSING\s+SAMPLE\s+(\d+)(?:\s+rows)?\b""", "TABLESAMPLE ($1 ROWS)")
     s
   }
@@ -1127,7 +945,7 @@ object SqlDialect {
     // recursive-descent over + - * / and parens
     val s = e.replaceAll("\\s+", "")
     var pos = 0
-    def peek: Char = if (pos < s.length) s.charAt(pos) else ' '
+    def peek: Char = if (pos < s.length) s.charAt(pos) else '\u0000'
     def expr(): Double = {
       var v = term()
       while (peek == '+' || peek == '-') {
@@ -1157,85 +975,21 @@ object SqlDialect {
     catch { case _: Throwable => None }
   }
 
-  /** Split into alternating outside/inside-string segments, map, re-join.
-    * Inside segments exclude the surrounding quotes; '' stays one literal.
-    * `--` comments pass through untouched — an apostrophe in a comment
-    * (don't!) must not flip the string state. Double-quoted IDENTIFIERS
-    * (`"offset"`, `"a//b"` — double quotes are identifiers in this
-    * front-end) pass through verbatim, never handed to `f`: they are
-    * neither rewritable SQL text nor string literals, and a textual rule
-    * firing inside one would corrupt the identifier. */
-  private def mapSegments(s: String)(f: (String, Boolean) => String): String = {
-    val sb = new StringBuilder
-    val seg = new StringBuilder
-    var inStr = false
-    var k = 0
-    def flush(): Unit = { sb ++= f(seg.toString, inStr); seg.clear() }
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (!inStr && c == '-' && k + 1 < s.length && s.charAt(k + 1) == '-') {
-        flush()
-        while (k < s.length && s.charAt(k) != '\n') { sb += s.charAt(k); k += 1 }
-      } else if (!inStr && c == '/' && k + 1 < s.length && s.charAt(k + 1) == '*') {
-        // block comment: copy through untouched (an apostrophe inside one
-        // must not flip string state for the rest of the statement)
-        flush()
-        val end = s.indexOf("*/", k + 2)
-        val stop = if (end < 0) s.length else end + 2
-        while (k < stop) { sb += s.charAt(k); k += 1 }
-      } else if (!inStr && c == '`') {
-        // backtick identifier (Spark native quoting): copy untouched
-        flush()
-        sb += '`'; k += 1
-        while (k < s.length && s.charAt(k) != '`') { sb += s.charAt(k); k += 1 }
-        if (k < s.length) { sb += '`'; k += 1 }
-      } else if (!inStr && c == '"') {
-        // double-quoted identifier: copy through untouched ("" stays escaped)
-        flush()
-        sb += '"'; k += 1
-        var closed = false
-        while (k < s.length && !closed) {
-          if (s.charAt(k) == '"' && k + 1 < s.length && s.charAt(k + 1) == '"') {
-            sb ++= "\"\""; k += 2
-          } else if (s.charAt(k) == '"') { sb += '"'; k += 1; closed = true }
-          else { sb += s.charAt(k); k += 1 }
-        }
-      } else if (!inStr && c == '\'') { flush(); sb += '\''; inStr = true; k += 1 }
-      else if (inStr && c == '\'' && k + 1 < s.length && s.charAt(k + 1) == '\'') {
-        seg ++= "''"; k += 2
-      } else if (inStr && c == '\'') { flush(); sb += '\''; inStr = false; k += 1 }
-      else { seg += c; k += 1 }
-    }
-    flush()
-    sb.toString
-  }
-
   /** ARRAY[a, b] → array(a, b), nesting-aware, strings skipped. */
   private def convertArrayBrackets(s0: String): String = {
     var s = s0
     val re = """(?i)\bARRAY\s*\[""".r
     var continue = true
     while (continue) {
-      val posOpt = findOutsideStrings(s, re)
-      posOpt match {
-        case None => continue = false
-        case Some((start, openIdx)) =>
-          val close = matchDelim(s, openIdx, '[', ']')
-          if (close < 0) { continue = false }
-          else {
-            s = s.substring(0, start) + "array(" +
-              s.substring(openIdx + 1, close) + ")" + s.substring(close + 1)
-          }
+      val t = new SqlText(s)
+      t.find(re) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          val close = t.matching(m.end - 1)
+          s = s.substring(0, m.start) + "array(" + s.substring(m.end, close) + ")" + s.substring(close + 1)
+        case _ => continue = false
       }
     }
     s
-  }
-
-  /** First match of `re` outside string literals: (matchStart, lastCharIdx). */
-  private def findOutsideStrings(s: String, re: scala.util.matching.Regex): Option[(Int, Int)] = {
-    val inString = stringMask(s)
-    re.findAllMatchIn(s).find(m => !inString(m.start))
-      .map(m => (m.start, m.end - 1))
   }
 
   private val identityLambdaHosts =
@@ -1250,26 +1004,14 @@ object SqlDialect {
   private def rewriteIdentityLambdaPredicates(s0: String): String = {
     val re = """\b([A-Za-z_][A-Za-z0-9_]*)\s*->\s*\1\s*([,)])""".r
     var s = s0
+    var t = new SqlText(s)
     var search = 0
     var continue = true
     while (continue) {
-      val mask = stringMask(s)
-      re.findAllMatchIn(s).find(m => m.start >= search && !mask(m.start)) match {
+      t.codeMatches(re).find(_.start >= search) match {
         case None => continue = false
         case Some(m) =>
-          var depth = 0
-          var k = m.start - 1
-          var open = -1
-          while (open < 0 && k >= 0) {
-            val c = s.charAt(k)
-            if (!mask(k)) {
-              if (c == ')' || c == ']') depth += 1
-              else if (c == '(' || c == '[') {
-                if (depth == 0) open = k else depth -= 1
-              }
-            }
-            k -= 1
-          }
+          val open = t.enclosingOpen(m.start)
           val fnName =
             if (open > 0) {
               var e = open - 1
@@ -1283,65 +1025,12 @@ object SqlDialect {
             val tail = m.group(2)
             val repl = s"$v -> coalesce($v, 0) <> 0$tail"
             s = s.substring(0, m.start) + repl + s.substring(m.end)
+            t = new SqlText(s)
             search = m.start + repl.length
           } else search = m.end
       }
     }
     s
-  }
-
-  /** mask(i) = i is inside a string literal, a quoted identifier
-    * (double-quote or backtick), or a comment (`--` line or slash-star
-    * block) — rules must not fire in any of them; comment/backtick
-    * apostrophes do not flip string state. */
-  private def stringMask(s: String): Array[Boolean] = {
-    val mask = new Array[Boolean](s.length)
-    var inStr = false
-    var inDq = false
-    var inBt = false
-    var k = 0
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (!inStr && !inDq && !inBt && c == '-' && k + 1 < s.length && s.charAt(k + 1) == '-') {
-        while (k < s.length && s.charAt(k) != '\n') { mask(k) = true; k += 1 }
-      } else if (!inStr && !inDq && !inBt && c == '/' && k + 1 < s.length &&
-          s.charAt(k + 1) == '*') {
-        // block comment: mask through the closing */ (or to end of input)
-        val end = s.indexOf("*/", k + 2)
-        val stop = if (end < 0) s.length else end + 2
-        while (k < stop) { mask(k) = true; k += 1 }
-      } else if (!inStr && !inBt && c == '"') { mask(k) = true; inDq = !inDq; k += 1 }
-      else if (!inStr && !inDq && c == '`') { mask(k) = true; inBt = !inBt; k += 1 }
-      else if (!inDq && !inBt && c == '\'') { mask(k) = true; inStr = !inStr; k += 1 }
-      else { mask(k) = inStr || inDq || inBt; k += 1 }
-    }
-    mask
-  }
-
-  /** Index of the delimiter matching `open` at `openIdx` (nesting, strings,
-    * and `--` comments respected). */
-  private def matchDelim(s: String, openIdx: Int, open: Char, close: Char): Int = {
-    var depth = 0
-    var inStr = false
-    var inDq = false
-    var k = openIdx
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (!inStr && !inDq && c == '-' && k + 1 < s.length && s.charAt(k + 1) == '-') {
-        while (k < s.length && s.charAt(k) != '\n') k += 1
-      } else if (!inStr && !inDq && c == '/' && k + 1 < s.length && s.charAt(k + 1) == '*') {
-        val end = s.indexOf("*/", k + 2)
-        k = if (end < 0) s.length - 1 else end + 1
-      } else if (!inStr && c == '"') inDq = !inDq
-      else if (!inDq && c == '\'') inStr = !inStr
-      else if (!inStr && !inDq && (c == open || c == '(' || c == '[')) depth += 1
-      else if (!inStr && !inDq && (c == close || c == ')' || c == ']')) {
-        depth -= 1
-        if (depth == 0) return k
-      }
-      k += 1
-    }
-    -1
   }
 
   /** `<operand> AT TIME ZONE 'z'` → `from_utc_timestamp(<operand>, 'z')`.
@@ -1352,8 +1041,8 @@ object SqlDialect {
     val re = """(?is)\bAT\s+TIME\s+ZONE\s+('[^']*')""".r
     var continue = true
     while (continue) {
-      val inString = stringMask(s)
-      re.findAllMatchIn(s).find(m => !inString(m.start)) match {
+      val t = new SqlText(s)
+      t.find(re) match {
         case None => continue = false
         case Some(m) =>
           val tz = m.group(1)
@@ -1366,26 +1055,16 @@ object SqlDialect {
             if (pos <= 0) return pos
             val c = s.charAt(pos - 1)
             if (c == ')') {
-              var depth = 0; var k = pos - 1; var inStr = false
-              while (k >= 0) {
-                val ch = s.charAt(k)
-                if (ch == '\'') inStr = !inStr
-                else if (!inStr && ch == ')') depth += 1
-                else if (!inStr && ch == '(') {
-                  depth -= 1
-                  if (depth == 0) {
-                    // include a directly-preceding function name
-                    var j = k
-                    while (j > 0 && (s.charAt(j - 1).isLetterOrDigit || s.charAt(j - 1) == '_')) j -= 1
-                    return j
-                  }
-                }
-                k -= 1
+              val k = t.matching(pos - 1)
+              if (k < 0) pos
+              else {
+                // include a directly-preceding function name
+                var j = k
+                while (j > 0 && (s.charAt(j - 1).isLetterOrDigit || s.charAt(j - 1) == '_')) j -= 1
+                j
               }
-              pos
             } else if (c == '\'') {
-              var k = pos - 2
-              while (k >= 0 && s.charAt(k) != '\'') k -= 1
+              val k = t.spanStart(pos - 1)
               // include a typed-literal keyword (TIMESTAMP '…' / DATE '…')
               var j = k
               while (j > 0 && s.charAt(j - 1).isWhitespace) j -= 1
@@ -1418,33 +1097,20 @@ object SqlDialect {
   /** Trino `if(cond, value)` → `if(cond, value, NULL)`. */
   private def convertTwoArgIf(s0: String): String = {
     var s = s0
+    var t = new SqlText(s)
     val re = """(?i)\bIF\s*\(""".r
     var searchFrom = 0
     var continue = true
     while (continue) {
-      val inString = stringMask(s)
-      re.findAllMatchIn(s).find(m => m.start >= searchFrom && !inString(m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          val openIdx = m.end - 1
-          val close = matchDelim(s, openIdx, '(', ')')
-          if (close < 0) continue = false
-          else {
-            // count top-level commas
-            var depth = 0; var inStr = false; var commas = 0
-            var k = openIdx
-            while (k <= close) {
-              val c = s.charAt(k)
-              if (c == '\'') inStr = !inStr
-              else if (!inStr && (c == '(' || c == '[')) depth += 1
-              else if (!inStr && (c == ')' || c == ']')) depth -= 1
-              else if (!inStr && c == ',' && depth == 1) commas += 1
-              k += 1
-            }
-            if (commas == 1)
-              s = s.substring(0, close) + ", NULL" + s.substring(close)
-            searchFrom = m.end
+      t.codeMatches(re).find(_.start >= searchFrom) match {
+        case Some(m) if t.matching(m.end - 1) >= 0 =>
+          val close = t.matching(m.end - 1)
+          if (t.itemsIn(m.end - 1).lengthCompare(2) == 0) {
+            s = s.substring(0, close) + ", NULL" + s.substring(close)
+            t = new SqlText(s)
           }
+          searchFrom = m.end
+        case _ => continue = false
       }
     }
     s

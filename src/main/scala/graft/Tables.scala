@@ -125,6 +125,37 @@ object Tables {
     }
   }
 
+  /** Overwrites catalog table `name` with `df`, which may read the table
+    * itself: `df` is materialized via localCheckpoint first, to break its
+    * lineage from the files being overwritten, and the write re-applies
+    * the table's partitioning and bucketing, which a plain overwriting
+    * saveAsTable would drop. A layout column that `df` no longer has is
+    * dropped from the layout; the other columns keep theirs. The one
+    * rewrite behind SQL DELETE and ALTER TABLE column operations and wv
+    * delete, update, merge, truncate and alter on catalog tables. */
+  def overwriteTable(spark: SparkSession, name: String, df: DataFrame): Unit = {
+    val meta =
+      try Some(spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(name)))
+      catch { case _: Throwable => None }
+    val out = df.localCheckpoint()
+    val outCols = out.columns.map(_.toLowerCase).toSet
+    var w = out.write.mode("overwrite")
+    meta.foreach { m =>
+      val parts = m.partitionColumnNames.filter(c => outCols(c.toLowerCase))
+      if (parts.nonEmpty) w = w.partitionBy(parts: _*)
+      m.bucketSpec.foreach { b =>
+        val bCols = b.bucketColumnNames.filter(c => outCols(c.toLowerCase))
+        if (bCols.nonEmpty) {
+          w = w.bucketBy(b.numBuckets, bCols.head, bCols.tail: _*)
+          val sCols = b.sortColumnNames.filter(c => outCols(c.toLowerCase))
+          if (sCols.nonEmpty) w = w.sortBy(sCols.head, sCols.tail: _*)
+        }
+      }
+    }
+    w.saveAsTable(name)
+  }
+
   private def pathFingerprint(spark: SparkSession, path: String): String = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

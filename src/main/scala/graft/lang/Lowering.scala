@@ -546,15 +546,13 @@ object Lowering {
     }
   }
 
-  private def overwriteTarget(target: String, df: DataFrame, ctx: Context): Unit = {
-    // break lineage from the source files/table so the overwrite does not
-    // read from what it is replacing
-    val materialized = df.localCheckpoint(true)
+  private def overwriteTarget(target: String, df: DataFrame, ctx: Context): Unit =
     if (isPathTarget(target)) {
+      // break lineage from the source files so the overwrite does not read
+      // from what it is replacing
       val path = resolveTargetPath(target, ctx)
-      writeByExtension(materialized.write.mode("overwrite"), target, path)
-    } else materialized.write.mode("overwrite").saveAsTable(target)
-  }
+      writeByExtension(df.localCheckpoint(true).write.mode("overwrite"), target, path)
+    } else graft.Tables.overwriteTable(ctx.spark, target, df)
 
   def lower(rel: Relation, ctx: Context): DataFrame =
     materialize(lowerRel(rel, ctx), ctx)

@@ -19,112 +19,17 @@ object Parser {
     "week", "weeks", "day", "days", "hour", "hours",
     "minute", "minutes", "second", "seconds",
     "millisecond", "milliseconds", "microsecond", "microseconds")
-  def parseQuery(src: String): Relation = {
-    val p = new Parser(Scanner.tokenize(src))
-    val stmts = p.parseStatements()
-    stmts.reverseIterator.collectFirst { case QueryStatement(r) => r } match {
-      case Some(r) => r
-      case None => throw new ParseException("no query statement found")
-    }
-  }
 
   /** Like [[parseStatements]] but also returns each statement's source
     * char span (start, endExclusive) — the editor-selection surface. */
   def parseStatementsWithSpans(src: String): (List[Statement], List[(Int, Int)]) = {
     val p = new Parser(Scanner.tokenize(src))
-    val stmts = attachDocs(p.parseStatements(), src)
+    val stmts = p.parseStatements()
     (stmts, p.statementSpans.toList)
   }
 
   def parseStatements(src: String): List[Statement] =
-    attachDocs(new Parser(Scanner.tokenize(src)).parseStatements(), src)
-
-  private def attachDocs(stmts0: List[Statement], src: String): List[Statement] = {
-    val stmts = stmts0
-    // attach `--- doc ---` blocks to the model defs they precede (the
-    // scanner drops comments; reference: markdown model documentation,
-    // spec/basic/model/model1.wv; comments attach to the *following* node,
-    // WvletParser.scala:72-125)
-    val docs = scanModelDocs(src)
-    if (docs.isEmpty) stmts
-    else stmts.map {
-      case m: ModelDef if docs.contains(m.name) => m.copy(doc = docs(m.name))
-      case s => s
-    }
-  }
-
-  /** Replays the scanner's comment pairing over the raw source: each
-    * `--- … ---` block whose next real token — skipping whitespace, `--`
-    * line comments, nested `---` blocks, and `/* */` comments — is
-    * `model <name>` becomes that model's doc. Because the scanner closes a
-    * block at the FIRST following `---`, an attached doc can never itself
-    * contain `---`, which is what keeps the wv printer's `--- doc ---`
-    * regeneration total. */
-  private def scanModelDocs(src: String): Map[String, String] = {
-    val out = Map.newBuilder[String, String]
-    val n = src.length
-    var i = 0
-    def skipTrivia(start: Int): Int = {
-      var j = start
-      var moved = true
-      while (moved) {
-        moved = false
-        while (j < n && src.charAt(j).isWhitespace) { j += 1; moved = true }
-        if (src.startsWith("---", j)) {
-          val e = src.indexOf("---", j + 3); j = if (e < 0) n else e + 3; moved = true
-        } else if (j + 1 < n && src.charAt(j) == '-' && src.charAt(j + 1) == '-') {
-          while (j < n && src.charAt(j) != '\n') j += 1; moved = true
-        } else if (src.startsWith("/*", j)) {
-          val e = src.indexOf("*/", j + 2); j = if (e < 0) n else e + 2; moved = true
-        }
-      }
-      j
-    }
-    while (i < n) {
-      val c = src.charAt(i)
-      if (src.startsWith("---", i)) {
-        val end = src.indexOf("---", i + 3)
-        val doc = (if (end < 0) src.substring(i + 3) else src.substring(i + 3, end)).trim
-        i = if (end < 0) n else end + 3
-        if (doc.nonEmpty) {
-          val j = skipTrivia(i)
-          if (j + 5 <= n && src.regionMatches(true, j, "model", 0, 5) &&
-            (j + 5 == n || !(src.charAt(j + 5).isLetterOrDigit || src.charAt(j + 5) == '_'))) {
-            var k = j + 5
-            while (k < n && src.charAt(k).isWhitespace) k += 1
-            val s = k
-            while (k < n && (src.charAt(k).isLetterOrDigit || src.charAt(k) == '_')) k += 1
-            if (k > s) out += src.substring(s, k) -> doc
-          }
-        }
-      } else if (c == '-' && i + 1 < n && src.charAt(i + 1) == '-') {
-        while (i < n && src.charAt(i) != '\n') i += 1
-      } else if (src.startsWith("/*", i)) {
-        val e = src.indexOf("*/", i + 2); i = if (e < 0) n else e + 2
-      } else if (c == '\'' || c == '"' || c == '`') {
-        // skip string/backquote literals so `---` inside them is inert;
-        // triple-quoted strings are handled as a run of quote chars
-        if (c == '"' && src.startsWith("\"\"\"", i)) {
-          // mirror the scanner's rule: a run of >3 closing quotes keeps the
-          // extras inside the literal (Scanner.scala triple-quote handling)
-          var e = src.indexOf("\"\"\"", i + 3)
-          if (e < 0) i = n
-          else {
-            while (e + 3 < n && src.charAt(e + 3) == '"') e += 1
-            i = e + 3
-          }
-        } else {
-          var j = i + 1
-          while (j < n && src.charAt(j) != c) {
-            if (src.charAt(j) == '\\' && c != '`') j += 1
-            j += 1
-          }
-          i = if (j < n) j + 1 else n
-        }
-      } else i += 1
-    }
-    out.result()
-  }
+    new Parser(Scanner.tokenize(src)).parseStatements()
 }
 
 final class Parser(tokens: Vector[Token]) {
@@ -147,8 +52,6 @@ final class Parser(tokens: Vector[Token]) {
     if (peek.is(s)) { advance(); true } else false
   private def fail(msg: String): Nothing =
     throw new ParseException(s"$msg, got '${peek.text}' at offset ${peek.pos}")
-
-  private def isKw(t: Token, kw: String): Boolean = t.is(kw)
 
   private def identName(): String = peek.kind match {
     case TokenKind.Ident | TokenKind.BackquotedIdent => advance().text
@@ -455,6 +358,8 @@ final class Parser(tokens: Vector[Token]) {
   }
 
   private def parseModelDef(): Statement = {
+    // a `--- … ---` block right before `model` is the model's doc
+    val doc = peek.doc
     expectKw("model")
     val name = identName()
     val params = List.newBuilder[(String, Option[Expr])]
@@ -481,7 +386,7 @@ final class Parser(tokens: Vector[Token]) {
     val body =
       if (accept("{")) { val r = parseRelation(); expectOp("}"); r }
       else parseRelation()
-    ModelDef(name, params.result(), body, paramSig = sig.result().mkString(", "))
+    ModelDef(name, params.result(), body, paramSig = sig.result().mkString(", "), doc = doc)
   }
 
   private def parseValDef(): Statement = {

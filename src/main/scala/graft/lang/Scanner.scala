@@ -12,8 +12,10 @@ object TokenKind {
   case object EOF extends TokenKind
 }
 
+/** `doc` is the text of the last closed `--- … ---` block before the
+  * token, with no other token between them. */
 final case class Token(kind: TokenKind, text: String, pos: Int,
-    bol: Boolean = false) {
+    bol: Boolean = false, doc: String = "") {
   def is(s: String): Boolean =
     (kind == TokenKind.Ident && text.equalsIgnoreCase(s)) ||
       (kind == TokenKind.Op && text == s)
@@ -22,8 +24,11 @@ final case class Token(kind: TokenKind, text: String, pos: Int,
 
 /** Hand-written tokenizer. Strings accept single or double quotes (both are
   * string literals in the language; backquotes delimit identifiers). `--`
-  * starts a line comment. Numbers: 123, 1.5, 1e-3, 50 (percent sign is its
-  * own Op token).
+  * starts a line comment, `/* */` a block comment and `---` a doc block
+  * closed by the next `---`; a doc block's trimmed text rides on the next
+  * token (the reference attaches comments to the following node,
+  * WvletParser.scala:72-125). Numbers: 123, 1.5, 1e-3, 50 (percent sign is
+  * its own Op token).
   */
 final class ScannerException(msg: String) extends Exception(msg)
 
@@ -33,14 +38,20 @@ object Scanner {
 
   def tokenize(src: String): Vector[Token] = {
     val out = Vector.newBuilder[Token]
+    // (end, text) of each closed, non-empty doc block, in order
+    val docs = List.newBuilder[(Int, String)]
     var i = 0
     val n = src.length
     while (i < n) {
       val c = src.charAt(i)
       if (c.isWhitespace) i += 1
       else if (src.startsWith("---", i)) {
-        // `---` opens a block comment closed by the next `---`
+        // `---` opens a doc block closed by the next `---`
         val end = src.indexOf("---", i + 3)
+        if (end >= 0) {
+          val doc = src.substring(i + 3, end).trim
+          if (doc.nonEmpty) docs += ((end + 3, doc))
+        }
         i = if (end < 0) n else end + 3
       } else if (c == '-' && i + 1 < n && src.charAt(i + 1) == '-') {
         while (i < n && src.charAt(i) != '\n') i += 1
@@ -108,12 +119,16 @@ object Scanner {
     // newline — a multi-line triple-quoted string — can mark the next
     // token bol spuriously; the only consumer is the newline-sensitive
     // `delete` disambiguation, where that degrades to the safe reading.)
+    // Each token also takes the last doc block that ends before it.
     val toks = out.result()
+    var pending = docs.result()
     var prevPos = 0
     toks.map { t =>
       val bol = t.pos > 0 && src.lastIndexOf('\n', t.pos - 1) >= prevPos
       prevPos = t.pos
-      if (bol) t.copy(bol = true) else t
+      val before = pending.takeWhile(_._1 <= t.pos)
+      pending = pending.drop(before.length)
+      if (bol || before.nonEmpty) t.copy(bol = bol, doc = before.lastOption.fold("")(_._2)) else t
     }
   }
 

@@ -57,30 +57,4 @@ object Chunking {
         F.size(F.slice(F.col("__words"), F.col("chunk_id") * step + 1, F.lit(chunkWords)))
           .as("n_words"))
   }
-
-  /** Sliding character windows (byte-budgeted sinks, e.g. fixed-size shard
-    * records); same explode shape as [[chunkDocuments]]. */
-  def chunkByChars(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      chunkChars: Int = 2048,
-      overlapChars: Int = 128
-  ): DataFrame = {
-    require(chunkChars > overlapChars && overlapChars >= 0,
-      "need chunkChars > overlapChars >= 0")
-    val step = chunkChars - overlapChars
-    val len = F.length(F.col(textCol))
-    val nChunks = F.greatest(
-      F.ceil((len - F.lit(overlapChars)).cast("double") / F.lit(step)).cast("int"),
-      F.lit(1))
-    df.select(F.col(idCol), F.col(textCol), nChunks.as("__n"))
-      .select(F.col(idCol), F.col(textCol),
-        F.explode(F.sequence(F.lit(0), F.col("__n") - 1)).as("chunk_id"))
-      .select(
-        F.col(idCol),
-        F.col("chunk_id"),
-        F.col(textCol).substr(F.col("chunk_id") * step + 1, F.lit(chunkChars))
-          .as("chunk_text"))
-  }
 }

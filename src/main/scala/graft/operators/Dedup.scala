@@ -922,11 +922,6 @@ object Dedup {
   def denseSigLimitFor(cores: Int): Long =
     math.min(math.sqrt(2.0 * 2.0 * 3.7e8 * cores).toLong, 1L << 21)
 
-  /** Distinct 64-bit signature count of a corpus — the quantity the
-    * [[simhashPairs]] path gate tests; exposed for the gate probe. */
-  def simhashDistinctSignatures(df: DataFrame, idCol: String, textCol: String): Long =
-    simhashTable(df, idCol, textCol).select("simhash").distinct().count()
-
   def simhashTable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val exploded = spread(df).select(
       F.col(idCol),

@@ -142,4 +142,10 @@ class SqlDialectInvarianceSpec extends AnyFunSuite {
       assert(SqlDialect.rewriteExpressions(s) == s, s"rewritten: $s")
     }
   }
+
+  test("the \"catalog\" placeholder prefix is removed from code only") {
+    assert(SqlDialect.rewriteExpressions("""SELECT * FROM "catalog".s.t""") == "SELECT * FROM s.t")
+    val hidden = """SELECT '"catalog".x' AS s -- "catalog".y"""
+    assert(SqlDialect.rewriteExpressions(hidden) == hidden)
+  }
 }

@@ -1574,4 +1574,52 @@ class LangSpec extends SparkTestBase {
     val err = wv("call crm.lookup(id: '7') select status, content").collect().head
     assert(err.getString(0) == "error" && err.getString(1).contains("no such id"))
   }
+
+  test("a --- doc --- block attaches to the model that follows it, across comments") {
+    def docs(src: String): Map[String, String] =
+      Parser.parseStatements(src).collect { case m: ModelDef => m.name -> m.doc }.toMap
+    assert(docs("--- Orders by day ---\nmodel daily = { from [[1]] as t(a) }") ==
+      Map("daily" -> "Orders by day"))
+    assert(docs(
+      """--- kept across comments ---
+        |-- a line comment
+        |/* a block comment */
+        |model m = { from [[1]] as t(a) }""".stripMargin) == Map("m" -> "kept across comments"))
+    // `---` inside a string literal opens no doc block
+    assert(docs(
+      """from [['--- not a doc ---']] as t(s)
+        |model m = { from [[1]] as t(a) }""".stripMargin) == Map("m" -> ""))
+    // a doc before any other statement attaches to nothing
+    assert(docs(
+      """--- orphan ---
+        |val x = 1
+        |model m = { from [[1]] as t(a) }""".stripMargin) == Map("m" -> ""))
+  }
+
+  test("wv delete, update, truncate and alter keep a catalog table's partitioning and bucketing") {
+    spark.sql("DROP TABLE IF EXISTS probe_layout")
+    spark.sql(
+      """CREATE TABLE probe_layout (id INT, v STRING, extra INT, p INT) USING parquet
+        |PARTITIONED BY (p) CLUSTERED BY (id) INTO 2 BUCKETS""".stripMargin)
+    spark.sql("INSERT INTO probe_layout VALUES (1, 'a', 0, 10), (2, 'b', 0, 10), (3, 'c', 0, 20)")
+    def layout() = {
+      val m = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("probe_layout"))
+      (m.partitionColumnNames, m.bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames)))
+    }
+    val want = (Seq("p"), Some((2, Seq("id"))))
+    wv("delete from probe_layout where id = 1")
+    assert(layout() == want)
+    wv("update probe_layout set v = 'z' where id = 2")
+    assert(layout() == want)
+    wv("alter table probe_layout drop column extra")
+    assert(layout() == want)
+    val rows = spark.table("probe_layout").orderBy("id").collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[String]("v"), r.getAs[Int]("p"))).toList
+    assert(rows == List((2, "z", 10), (3, "c", 20)))
+    wv("truncate probe_layout")
+    assert(layout() == want)
+    assert(spark.table("probe_layout").count() == 0)
+    spark.sql("DROP TABLE IF EXISTS probe_layout")
+  }
 }

@@ -39,4 +39,16 @@ class SqlPrepareSpec extends SparkTestBase {
     assert(err.getMessage.contains("not found"), err.getMessage)
     assert(Graft.sqlScript(spark, "EXECUTE q4", None).collect().map(_.getInt(0)).toList == List(1))
   }
+
+  test("a ? inside a comment is not a parameter") {
+    val rows = Graft.sqlScript(spark,
+      "PREPARE q6 FROM SELECT /* ? */ ? AS x; EXECUTE q6 USING 5", None).collect()
+    assert(rows.map(_.getInt(0)).toList == List(5))
+  }
+
+  test("DESCRIBE INPUT counts no ? inside a quoted identifier") {
+    val rows = Graft.sqlScript(spark,
+      """PREPARE q7 FROM SELECT ? AS "a?"; DESCRIBE INPUT q7""", None).collect()
+    assert(rows.length == 1)
+  }
 }
