@@ -24,6 +24,21 @@ object SqlDialect {
   private def statements(spark: SparkSession): TrieMap[String, String] =
     prepared.synchronized(prepared.computeIfAbsent(spark, _ => TrieMap.empty))
 
+  // --- statement forms, compiled once -------------------------------------
+  private val prepRe = """(?is)^PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s+(FROM|AS)\s+(.+)$""".r
+  private val deallocRe = """(?is)^DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*$""".r
+  private val execRe =
+    """(?is)^EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)\s*(?:USING\s+(.+)|\(\s*(.*?)\s*\))?\s*$""".r
+  private val descInRe = """(?is)^DESCRIBE\s+INPUT\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*$""".r
+  private val descOutRe = """(?is)^DESCRIBE\s+OUTPUT\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*$""".r
+  private val setSessRe = """(?is)^SET\s+SESSION\s+([\w.]+)\s*=\s*(.+)$""".r
+  private val explainOptsRe = """(?is)^EXPLAIN\s*\(\s*[^)]*\)\s*(.+)$""".r
+  private val explainAnalyzeRe = """(?is)^EXPLAIN\s+ANALYZE\s+(?:VERBOSE\s+)?(.+)$""".r
+  private val explainPlanForRe = """(?is)^EXPLAIN\s+PLAN\s+FOR\s+(.+)$""".r
+  private val alterTableRe = """(?s)ALTER\s+TABLE\b.*""".r
+  private val cortRe = """(?is)^CREATE\s+OR\s+REPLACE\s+TABLE\s+(\S+)\s+(.*)$""".r
+  private val delRe = """(?is)^DELETE\s+FROM\s+(\S+)\s+WHERE\s+(.+)$""".r
+
   /** Normalize one statement; returns the Spark statements to actually run
     * (possibly several, possibly none for pure-registration statements). */
   def normalize(spark: SparkSession, stmt0: String): List[String] = {
@@ -32,7 +47,6 @@ object SqlDialect {
     if (bare.isEmpty) return Nil
 
     // PREPARE name FROM <q> (Trino) / PREPARE name AS <q> (DuckDB)
-    val prepRe = """(?is)^PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s+(FROM|AS)\s+(.+)$""".r
     bare match {
       case prepRe(name, _, query) =>
         statements(spark).put(name.toLowerCase, query.trim)
@@ -40,7 +54,6 @@ object SqlDialect {
       case _ =>
     }
     // DEALLOCATE [PREPARE] name
-    val deallocRe = """(?is)^DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*$""".r
     bare match {
       case deallocRe(name) =>
         statements(spark).remove(name.toLowerCase)
@@ -48,7 +61,6 @@ object SqlDialect {
       case _ =>
     }
     // EXECUTE name [USING a, b] / EXECUTE name(a, b) / EXECUTE name
-    val execRe = """(?is)^EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)\s*(?:USING\s+(.+)|\(\s*(.*?)\s*\))?\s*$""".r
     bare match {
       case execRe(name, usingArgs, parenArgs) =>
         val q = statements(spark).getOrElse(name.toLowerCase,
@@ -63,7 +75,6 @@ object SqlDialect {
     // without an analyzer pass, Trino itself prints `unknown` for bare ?);
     // an unregistered name yields the empty result (the corpus DESCRIBEs
     // statements it never PREPAREd — parse-only surface).
-    val descInRe = """(?is)^DESCRIBE\s+INPUT\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*$""".r
     bare match {
       case descInRe(name) =>
         val params = statements(spark).get(name.toLowerCase).fold(0) { q =>
@@ -80,12 +91,10 @@ object SqlDialect {
     }
     // DESCRIBE OUTPUT name → Trino's output-metadata shape; empty without
     // an analyzer pass over the registered statement
-    val descOutRe = """(?is)^DESCRIBE\s+OUTPUT\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*$""".r
     if (descOutRe.pattern.matcher(bare).matches())
       return List(
         "SELECT CAST(NULL AS STRING) AS column_name, CAST(NULL AS STRING) AS type WHERE FALSE")
     // SET SESSION key = value → Spark SET (arbitrary conf keys are legal)
-    val setSessRe = """(?is)^SET\s+SESSION\s+([\w.]+)\s*=\s*(.+)$""".r
     bare match {
       case setSessRe(k, v) => return List(s"SET $k=${v.trim.stripPrefix("'").stripSuffix("'")}")
       case _ =>
@@ -98,9 +107,6 @@ object SqlDialect {
     // EXPLAIN (TYPE …, FORMAT …) / EXPLAIN ANALYZE [VERBOSE] / EXPLAIN PLAN
     // FOR → Spark explain modes (one text plan per statement; Trino's
     // type/format axes have no Spark equivalent beyond FORMATTED/EXTENDED)
-    val explainOptsRe = """(?is)^EXPLAIN\s*\(\s*[^)]*\)\s*(.+)$""".r
-    val explainAnalyzeRe = """(?is)^EXPLAIN\s+ANALYZE\s+(?:VERBOSE\s+)?(.+)$""".r
-    val explainPlanForRe = """(?is)^EXPLAIN\s+PLAN\s+FOR\s+(.+)$""".r
     bare match {
       case explainOptsRe(q) => return normalize(spark, s"EXPLAIN FORMATTED $q")
       case explainAnalyzeRe(q) => return normalize(spark, s"EXPLAIN $q")
@@ -110,10 +116,10 @@ object SqlDialect {
     // ALTER TABLE: the v1-expressible subset (rename/add/drop/rename-column/
     // type change) + no-op governance forms; column-shape ops on plain
     // parquet are read-transform-overwrite rewrites
-    if (bare.toUpperCase.matches("(?s)ALTER\\s+TABLE\\b.*"))
+    val upper = bare.toUpperCase
+    if (alterTableRe.matches(upper))
       return normalizeAlterTable(spark, bare)
     // CREATE OR REPLACE TABLE t AS … → v1 tables lack RTAS; drop + create
-    val cortRe = """(?is)^CREATE\s+OR\s+REPLACE\s+TABLE\s+(\S+)\s+(.*)$""".r
     bare match {
       case cortRe(name, rest) =>
         return List(s"DROP TABLE IF EXISTS $name") ++
@@ -122,7 +128,6 @@ object SqlDialect {
     }
     // DELETE FROM t WHERE c → rewrite the survivors in place, keeping the
     // table's partitioning/bucketing
-    val delRe = """(?is)^DELETE\s+FROM\s+(\S+)\s+WHERE\s+(.+)$""".r
     bare match {
       case delRe(name, cond) =>
         val plain = name.replace("`", "").replace("\"", "")
@@ -133,11 +138,19 @@ object SqlDialect {
       case _ =>
     }
     // CREATE TABLE: Trino/Postgres DDL surface Spark lacks → normalize
-    if (bare.toUpperCase.startsWith("CREATE TABLE") ||
-        bare.toUpperCase.startsWith("CREATE OR REPLACE TABLE"))
+    if (upper.startsWith("CREATE TABLE") || upper.startsWith("CREATE OR REPLACE TABLE"))
       return List(rewriteExpressions(normalizeCreateTable(spark, stmt)))
     List(rewriteExpressions(stmt))
   }
+
+  private val showCreateSchema = """(?is)^SHOW\s+CREATE\s+SCHEMA\s+([\w.`"]+)\s*$""".r
+  private val showCreateFn = """(?is)^SHOW\s+CREATE\s+FUNCTION\s+([\w.`"]+)\s*$""".r
+  private val showCreateMv = """(?is)^SHOW\s+CREATE\s+MATERIALIZED\s+VIEW\s+([\w.`"]+)\s*$""".r
+  private val showStats = """(?is)^SHOW\s+STATS\s+FOR\s+([\w.`"]+)\s*$""".r
+  private val showBranches = """(?is)^SHOW\s+BRANCHES(\s+(FROM|IN)\s+TABLE\s+[\w.`"]+)?\s*$""".r
+  private val showGrants = """(?is)^SHOW\s+GRANTS(\s+ON\s+[\w.`"]+)?\s*$""".r
+  private val showRoles = """(?is)^SHOW\s+(CURRENT\s+ROLES|ROLE\s+GRANTS)(\s+(FROM|IN)\s+[\w.`"]+)?\s*$""".r
+  private val showSession = """(?is)^SHOW\s+SESSION\s*$""".r
 
   /** Trino SHOW statements with no Spark spelling → executable results:
     * governance/branch listings (grants, roles, branches) are empty typed
@@ -149,14 +162,6 @@ object SqlDialect {
   private def normalizeTrinoShow(bare: String): Option[List[String]] = {
     val b = bare.trim
     def one(sql: String) = Some(List(sql))
-    val showCreateSchema = """(?is)^SHOW\s+CREATE\s+SCHEMA\s+([\w.`"]+)\s*$""".r
-    val showCreateFn = """(?is)^SHOW\s+CREATE\s+FUNCTION\s+([\w.`"]+)\s*$""".r
-    val showCreateMv = """(?is)^SHOW\s+CREATE\s+MATERIALIZED\s+VIEW\s+([\w.`"]+)\s*$""".r
-    val showStats = """(?is)^SHOW\s+STATS\s+FOR\s+([\w.`"]+)\s*$""".r
-    val showBranches = """(?is)^SHOW\s+BRANCHES(\s+(FROM|IN)\s+TABLE\s+[\w.`"]+)?\s*$""".r
-    val showGrants = """(?is)^SHOW\s+GRANTS(\s+ON\s+[\w.`"]+)?\s*$""".r
-    val showRoles = """(?is)^SHOW\s+(CURRENT\s+ROLES|ROLE\s+GRANTS)(\s+(FROM|IN)\s+[\w.`"]+)?\s*$""".r
-    val showSession = """(?is)^SHOW\s+SESSION\s*$""".r
     b match {
       case showCreateSchema(n) =>
         one(s"SELECT 'CREATE SCHEMA ${n.replace("'", "''")}' AS create_schema")
@@ -176,6 +181,28 @@ object SqlDialect {
     }
   }
 
+  /** ALTER TABLE and the forms after its table name, compiled once. */
+  private object Alter {
+    val head = """(?is)^ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.`"]+)\s+(.*)$""".r
+    val renameTo = """(?is)^RENAME\s+TO\s+([\w.`"]+)\s*$""".r
+    val addCol =
+      """(?is)^ADD\s+COLUMNS?\s+(IF\s+NOT\s+EXISTS\s+)?([\w`"]+)\s+(\w+(?:\s*\([^)]*\))?(?:\s*<[^>]*>)?)(\s+NOT\s+NULL)?(\s+COMMENT\s+'(?:[^']|'')*')?\s*$""".r
+    val dropCol = """(?is)^DROP\s+COLUMNS?\s+(IF\s+EXISTS\s+)?([\w`"]+)\s*$""".r
+    val renameCol =
+      """(?is)^RENAME\s+COLUMN\s+(IF\s+EXISTS\s+)?([\w`"]+)\s+TO\s+([\w`"]+)\s*$""".r
+    // DuckDB `ALTER c TYPE T [USING expr]` and standard
+    // `ALTER COLUMN c SET DATA TYPE T [USING expr]` / `ALTER COLUMN c TYPE T`
+    val colType =
+      """(?is)^ALTER\s+(?:COLUMN\s+)?([\w`"]+)\s+(?:SET\s+DATA\s+TYPE|TYPE)\s+(\w+(?:\s*\([^)]*\))?)(?:\s+USING\s+(.+?))?\s*$""".r
+    val setProps = """(?is)^SET\s+PROPERTIES\s+(.+)$""".r
+    val colDefault =
+      """(?is)^ALTER\s+COLUMN\s+([\w`"]+)\s+(SET\s+DEFAULT\s+.+|DROP\s+DEFAULT)\s*$""".r
+    val notNullNoop =
+      """(?is)^ALTER\s+COLUMN\s+[\w`"]+\s+(SET|DROP)\s+NOT\s+NULL\s*$""".r
+    val setAuth = """(?is)^SET\s+AUTHORIZATION\b.*$""".r
+    val execute = """(?is)^EXECUTE\s+(\w+)\b.*$""".r
+  }
+
   /** ALTER TABLE dialect normalization. Catalog-level operations (RENAME
     * TO, ADD COLUMNS, SET TBLPROPERTIES, column defaults) map to Spark DDL;
     * column-shape operations v1 tables lack (DROP/RENAME COLUMN, type
@@ -186,9 +213,9 @@ object SqlDialect {
     * no-ops, mirroring how WITH-property blocks are stripped; EXECUTE
     * analyze maps to ANALYZE TABLE. */
   private def normalizeAlterTable(spark: SparkSession, bare: String): List[String] = {
-    val re = """(?is)^ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.`"]+)\s+(.*)$""".r
+    import Alter._
     bare match {
-      case re(ifE, table0, rest0) =>
+      case head(ifE, table0, rest0) =>
         val table = table0.replace("\"", "`")
         val plain = table.replace("`", "")
         val exists =
@@ -201,23 +228,6 @@ object SqlDialect {
           Tables.overwriteTable(spark, plain, f(spark.table(plain)))
           Nil
         }
-        val renameTo = """(?is)^RENAME\s+TO\s+([\w.`"]+)\s*$""".r
-        val addCol =
-          """(?is)^ADD\s+COLUMNS?\s+(IF\s+NOT\s+EXISTS\s+)?([\w`"]+)\s+(\w+(?:\s*\([^)]*\))?(?:\s*<[^>]*>)?)(\s+NOT\s+NULL)?(\s+COMMENT\s+'(?:[^']|'')*')?\s*$""".r
-        val dropCol = """(?is)^DROP\s+COLUMNS?\s+(IF\s+EXISTS\s+)?([\w`"]+)\s*$""".r
-        val renameCol =
-          """(?is)^RENAME\s+COLUMN\s+(IF\s+EXISTS\s+)?([\w`"]+)\s+TO\s+([\w`"]+)\s*$""".r
-        // DuckDB `ALTER c TYPE T [USING expr]` and standard
-        // `ALTER COLUMN c SET DATA TYPE T [USING expr]` / `ALTER COLUMN c TYPE T`
-        val colType =
-          """(?is)^ALTER\s+(?:COLUMN\s+)?([\w`"]+)\s+(?:SET\s+DATA\s+TYPE|TYPE)\s+(\w+(?:\s*\([^)]*\))?)(?:\s+USING\s+(.+?))?\s*$""".r
-        val setProps = """(?is)^SET\s+PROPERTIES\s+(.+)$""".r
-        val colDefault =
-          """(?is)^ALTER\s+COLUMN\s+([\w`"]+)\s+(SET\s+DEFAULT\s+.+|DROP\s+DEFAULT)\s*$""".r
-        val notNullNoop =
-          """(?is)^ALTER\s+COLUMN\s+[\w`"]+\s+(SET|DROP)\s+NOT\s+NULL\s*$""".r
-        val setAuth = """(?is)^SET\s+AUTHORIZATION\b.*$""".r
-        val execRe = """(?is)^EXECUTE\s+(\w+)\b.*$""".r
         def colName(c: String) = c.replace("`", "").replace("\"", "")
         def hasCol(c: String) = schemaOf.fieldNames.exists(_.equalsIgnoreCase(colName(c)))
         def sparkType(t: String) = translateTypeExpr(t)
@@ -261,7 +271,7 @@ object SqlDialect {
             List(s"ALTER TABLE $table ALTER COLUMN $c ${action.trim}")
           case notNullNoop(_) => Nil
           case setAuth() => Nil
-          case execRe(cmd) =>
+          case execute(cmd) =>
             if (cmd.equalsIgnoreCase("analyze"))
               List(s"ANALYZE TABLE $table COMPUTE STATISTICS")
             else Nil // optimize/vacuum: no compaction layer on plain parquet
@@ -270,6 +280,15 @@ object SqlDialect {
       case _ => List(bare)
     }
   }
+
+  private val likeEntryRe =
+    """(?is)\bLIKE\s+([\w.`"]+?)(\s+(?:INCLUDING|EXCLUDING)\s+PROPERTIES)?\s*([,)])""".r
+  private val createLikeRe =
+    """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?[\w.`"]+\s+LIKE\s+[\w.`"]+\s*""".r
+  private val asWordRe = """(?i)\bAS\b""".r
+  private val withPropsRe = """(?is)\bWITH\s*\(""".r
+  private val createBareRe = """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\S+\s*""".r
+  private val createColumnsRe = """(?is)\bCREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[^\s(]+\s*\(""".r
 
   /** CREATE TABLE dialect normalization: strip `WITH (k = v, …)` property
     * blocks (table- and column-level — engine hints with no Spark meaning),
@@ -284,12 +303,10 @@ object SqlDialect {
     // exists only as a standalone form; Trino mixes LIKE with columns and
     // allows several). Resolution happens here, at normalize time, against
     // the live catalog — exactly what Trino's analyzer does.
-    val likeRe = """(?is)\bLIKE\s+([\w.`"]+?)(\s+(?:INCLUDING|EXCLUDING)\s+PROPERTIES)?\s*([,)])""".r
     var expanding = stmt.toUpperCase.contains("LIKE")
     // only inside a CREATE TABLE column list (the statement was dispatched
     // here on its CREATE TABLE prefix); skip the standalone Spark form
-    if (new SqlText(stmt).withoutComments.trim.matches(
-        """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?[\w.`"]+\s+LIKE\s+[\w.`"]+\s*"""))
+    if (createLikeRe.matches(new SqlText(stmt).withoutComments.trim))
       expanding = false
     // …and never inside a CTAS body: a LIKE there is a predicate, not a
     // Trino column entry (`CREATE TABLE t AS SELECT if(n LIKE p, 1, 0)…`
@@ -297,10 +314,10 @@ object SqlDialect {
     // occur before the top-level AS.
     val ctasAsPos: Int = {
       val t = new SqlText(stmt)
-      t.codeMatches("""(?i)\bAS\b""".r).find(m => t.depth(m.start) == 0).fold(-1)(_.start)
+      t.codeMatches(asWordRe).find(m => t.depth(m.start) == 0).fold(-1)(_.start)
     }
     while (expanding) {
-      new SqlText(stmt).find(likeRe) match {
+      new SqlText(stmt).find(likeEntryRe) match {
         case Some(m) if ctasAsPos >= 0 && m.start > ctasAsPos =>
           expanding = false // LIKE inside the CTAS query body — a predicate
         case Some(m) =>
@@ -321,27 +338,19 @@ object SqlDialect {
     var stripping = true
     while (stripping) {
       val t = new SqlText(stmt)
-      t.find("""(?is)\bWITH\s*\(""".r) match {
+      t.find(withPropsRe) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           stmt = stmt.substring(0, m.start) + stmt.substring(t.matching(m.end - 1) + 1)
         case _ => stripping = false
       }
     }
-    stmt = replaceSpanning(stmt,
-      """(?is)\bDEFAULT\s+(CURRENT_TIMESTAMP\b|'(?:[^']|'')*'|\d+(?:\.\d+)?)""", "")
-    stmt = replaceInCode(stmt, """(?i)\btext\b""", "string")
-    stmt = replaceInCode(stmt, """(?i)\bserial\b""", "int")
-    stmt = replaceInCode(stmt, """(?i)\bjsonb\b""", "string")
-    stmt = replaceInCode(stmt,
-      """(?is)\(\s*LIKE\s+([A-Za-z_][A-Za-z0-9_.]*)\s+INCLUDING\s+PROPERTIES\s*\)""",
-      " LIKE $1")
-    if (new SqlText(stmt).withoutComments.trim.matches(
-        """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\S+\s*"""))
+    stmt = createTableRewrites.foldLeft(stmt)((s, rewrite) => rewrite(s))
+    if (createBareRe.matches(new SqlText(stmt).withoutComments.trim))
       stmt = stmt + " (__placeholder INT)"
     // Trino allows an explicit schema on CTAS; Spark forbids it — the AS
     // SELECT defines the schema, drop the column list
     val t = new SqlText(stmt)
-    t.find("""(?is)\bCREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[^\s(]+\s*\(""".r).foreach { m =>
+    t.find(createColumnsRe).foreach { m =>
       val open = m.end - 1
       val close = t.matching(open)
       if (close >= 0 && stmt.substring(close + 1).trim.toUpperCase.startsWith("AS"))
@@ -350,158 +359,193 @@ object SqlDialect {
     stmt
   }
 
+  /** Non-foldable DEFAULTs out, Postgres-ish column types mapped, `( LIKE t
+    * INCLUDING PROPERTIES )` to Spark `LIKE t`. */
+  private val createTableRewrites: List[String => String] = List(
+    spanning("default",
+      """(?is)\bDEFAULT\s+(CURRENT_TIMESTAMP\b|'(?:[^']|'')*'|\d+(?:\.\d+)?)""", ""),
+    inCode("text", """(?i)\btext\b""", "string"),
+    inCode("serial", """(?i)\bserial\b""", "int"),
+    inCode("jsonb", """(?i)\bjsonb\b""", "string"),
+    inCode("like",
+      """(?is)\(\s*LIKE\s+([A-Za-z_][A-Za-z0-9_.]*)\s+INCLUDING\s+PROPERTIES\s*\)""",
+      " LIKE $1"))
+
   /** The ordered expression-level rewrites. */
-  private[graft] def rewriteExpressions(sql0: String): String = {
-    var s = sql0
+  private[graft] def rewriteExpressions(sql: String): String =
+    expressionRewrites.foldLeft(sql)((s, rewrite) => rewrite(s))
+
+  private val quotedCatalogRe = """"catalog"\.""".r
+  private val underscoreLambdaRe = """\(?\s*_\s*\)?\s*->""".r
+  private val valuesRowRe = """(?i)\bVALUES\s*\(""".r
+  private val insertWithRe = """(?is)\bINSERT\s+INTO\s+(?:TABLE\s+)?[\w.`"]+\s*\(\s*WITH\b""".r
+  private val underscoreRe = """(?<![A-Za-z0-9_])_(?![A-Za-z0-9_])""".r
+  private val createRe = """(?is)CREATE\b.*""".r
+  private val storedAsRe = """(?i)\bSTORED\s+AS\s+(\w+)""".r
+  private val columnNRe = """(?i)\bcolumn(\d+)\b""".r
+
+  private val expressionRewrites: List[String => String] = List(
     // backslashes in string literals are literal in DuckDB; Spark treats
     // them as escapes — double them (inside strings only)
-    s = new SqlText(s).mapStringBodies(_.replace("\\", "\\\\"))
+    s => if (s.indexOf('\\') < 0) s else new SqlText(s).mapStringBodies(_.replace("\\", "\\\\")),
     // CAST(JSON '…' AS MAP(VARCHAR, VARCHAR)) → from_json(…, map type)
-    s = replaceSpanning(s,
+    spanning("json",
       """(?is)CAST\s*\(\s*JSON\s+('(?:[^']|'')*')\s+AS\s+MAP\s*\(\s*VARCHAR\s*,\s*VARCHAR\s*\)\s*\)""",
-      "from_json($1, 'map<string,string>')")
+      "from_json($1, 'map<string,string>')"),
     // JSON '…' typed literal → plain string
-    s = replaceSpanning(s, """(?is)\bJSON\s+('(?:[^']|'')*')""", "$1")
+    spanning("json", """(?is)\bJSON\s+('(?:[^']|'')*')""", "$1"),
     // DECIMAL '…' typed literal → bare numeric literal (Spark parses
     // fractional literals as decimal already)
-    s = replaceSpanning(s, """(?is)\bDECIMAL\s+'([0-9eE.+-]+)'""", "$1")
+    spanning("decimal", """(?is)\bDECIMAL\s+'([0-9eE.+-]+)'""", "$1"),
     // TIME '…' literal → plain string (lexicographic comparisons preserved;
     // Spark has no TIME type)
-    s = replaceSpanning(s, """(?is)\bTIME\s+('(?:[^']|'')*')""", "$1")
+    spanning("time", """(?is)\bTIME\s+('(?:[^']|'')*')""", "$1"),
     // TIMESTAMP '… <zone>' → strip the zone suffix Spark cannot parse
-    s = replaceSpanning(s,
+    spanning("timestamp",
       """(?is)\bTIMESTAMP\s+'(\d{4}-\d{2}-\d{2}[ T][\d:.]+)\s+(?:UTC|[A-Za-z]+/[A-Za-z_]+)'""",
-      "TIMESTAMP '$1'")
+      "TIMESTAMP '$1'"),
     // timestamp(3) precision → timestamp, then with[out] time zone → timestamp
-    s = replaceInCode(s, """(?i)\btimestamp\s*\(\s*\d+\s*\)""", "timestamp")
-    s = replaceInCode(s,
-      """(?is)\btimestamp\s+with(?:out)?\s+time\s+zone\b""", "timestamp")
+    inCode("timestamp", """(?i)\btimestamp\s*\(\s*\d+\s*\)""", "timestamp"),
+    inCode("zone", """(?is)\btimestamp\s+with(?:out)?\s+time\s+zone\b""", "timestamp"),
     // parameterless varchar → string
-    s = replaceInCode(s, """(?i)\bvarchar\b(?!\s*\()""", "string")
+    inCode("varchar", """(?i)\bvarchar\b(?!\s*\()""", "string"),
     // ARRAY[…] → array(…)  (balanced; nested brackets/parens handled)
-    s = convertArrayBrackets(s)
+    onlyWith("array")(convertArrayBrackets),
     // MAP(array(...), array(...)) → map_from_arrays
-    s = replaceInCode(s, """(?is)\bMAP\s*\(\s*array\s*\(""", "map_from_arrays(array(")
+    inCode("map", """(?is)\bMAP\s*\(\s*array\s*\(""", "map_from_arrays(array("),
     // DuckDB/Trino spellings of Spark builtins
-    s = replaceInCode(s, """(?i)\barray_concat\s*\(""", "concat(")
-    s = replaceInCode(s, """(?i)\blist_transform\s*\(""", "transform(")
-    s = replaceInCode(s, """(?i)\bstarts_with\s*\(""", "startswith(")
-    s = replaceInCode(s, """(?i)\bapprox_quantile\s*\(""", "approx_percentile(")
+    inCode("array_concat", """(?i)\barray_concat\s*\(""", "concat("),
+    inCode("list_transform", """(?i)\blist_transform\s*\(""", "transform("),
+    inCode("starts_with", """(?i)\bstarts_with\s*\(""", "startswith("),
+    inCode("approx_quantile", """(?i)\bapprox_quantile\s*\(""", "approx_percentile("),
     // time('…') function — Spark has no TIME builder
-    s = replaceInCode(s, """(?i)\btime\s*\(""", "to_timestamp(")
-    // TABLESAMPLE BERNOULLI/SYSTEM (expr[%]) and DuckDB USING SAMPLE forms
-    s = convertTablesample(s)
+    inCode("time", """(?i)\btime\s*\(""", "to_timestamp("),
+    // TABLESAMPLE BERNOULLI/SYSTEM (expr[%]), then the DuckDB USING SAMPLE
+    // forms reservoir(10%) / 10% / 10 percent / 5 [rows]
+    onlyWith("tablesample")(convertTablesample),
+    inCode("sample",
+      """(?is)\bUSING\s+SAMPLE\s+reservoir\s*\(\s*(\d+)\s*%?\s*\)""", "TABLESAMPLE ($1 PERCENT)"),
+    inCode("sample", """(?is)\bUSING\s+SAMPLE\s+(\d+)\s*(?:%|percent)""", "TABLESAMPLE ($1 PERCENT)"),
+    inCode("sample", """(?is)\bUSING\s+SAMPLE\s+(\d+)(?:\s+rows)?\b""", "TABLESAMPLE ($1 ROWS)"),
     // FETCH [FIRST|NEXT] n ROWS ONLY → LIMIT n
-    s = replaceInCode(s,
-      """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+ONLY\b""", "LIMIT $1")
+    inCode("fetch", """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+ONLY\b""", "LIMIT $1"),
     // DuckDB in-parens null treatment: f(x IGNORE NULLS, a, b) / f(x IGNORE
     // NULLS) → the Spark placement f(x, a, b) IGNORE NULLS. Spanning: the
     // trailing args may contain string literals
-    s = replaceSpanning(s,
+    spanning("nulls",
       """(?is)\(\s*([^(),']+?)\s+(IGNORE|RESPECT)\s+NULLS\s*,([^()]*)\)""",
-      "($1,$3) $2 NULLS")
-    s = replaceInCode(s,
-      """(?is)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""", ") $1 NULLS")
+      "($1,$3) $2 NULLS"),
+    inCode("nulls", """(?is)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""", ") $1 NULLS"),
     // SHOW CREATE VIEW → SHOW CREATE TABLE (Spark spelling)
-    s = replaceInCode(s, """(?is)\bSHOW\s+CREATE\s+VIEW\b""", "SHOW CREATE TABLE")
+    inCode("show", """(?is)\bSHOW\s+CREATE\s+VIEW\b""", "SHOW CREATE TABLE"),
     // the corpus' placeholder catalog prefix — Spark has no such catalog;
     // only a quoted identifier followed by a code `.` is the prefix
-    val cat = new SqlText(s)
-    s = """"catalog"\.""".r.replaceAllIn(s, m =>
-      if (!cat.isCode(m.start) && cat.spanStart(m.start) == m.start && cat.isCode(m.end - 1)) ""
-      else scala.util.matching.Regex.quoteReplacement(m.matched))
+    onlyWith("\"catalog\"") { s =>
+      val cat = new SqlText(s)
+      quotedCatalogRe.replaceAllIn(s, m =>
+        if (!cat.isCode(m.start) && cat.spanStart(m.start) == m.start && cat.isCode(m.end - 1)) ""
+        else scala.util.matching.Regex.quoteReplacement(m.matched))
+    },
     // <expr> AT TIME ZONE 'z' → from_utc_timestamp(<expr>, 'z') (balanced
     // operand extraction)
-    s = convertAtTimeZone(s)
+    onlyWith("zone")(convertAtTimeZone),
     // Trino 2-argument if(c, v) → if(c, v, NULL)
-    s = convertTwoArgIf(s)
+    onlyWith("if")(convertTwoArgIf),
     // DuckDB MAP {'k': v, …} struct-ish literal → map('k', v, …)
-    s = convertMapBraces(s)
+    onlyWith("map")(convertMapBraces),
     // array_agg(expr ORDER BY …) → struct-sort rewrite (Spark SQL has no
     // ordered-aggregate syntax; the flow front-end supports it natively)
-    s = convertOrderedArrayAgg(s)
+    onlyWith("array_agg")(convertOrderedArrayAgg),
     // `_` as a lambda parameter (reference issue #1243) — Spark reserves
     // `_`-leading names in lambdas; rename the standalone token
-    if (new SqlText(s).find("""\(?\s*_\s*\)?\s*->""".r).isDefined)
-      s = replaceInCode(s, """(?<![A-Za-z0-9_])_(?![A-Za-z0-9_])""", "__lv")
+    onlyWith("->") { s =>
+      if (new SqlText(s).find(underscoreLambdaRe).isEmpty) s
+      else new SqlText(s).replaceCode(underscoreRe, "__lv")
+    },
     // Trino ROW(...)-type CAST algebra → Spark struct types, then ROW value
     // constructors → struct(...)
-    s = convertRowTypes(s)
+    onlyWith("row")(convertRowTypes),
     // JSON_OBJECT('k', v, …) / JSON_OBJECT(KEY 'k' VALUE v, … [modifiers])
     // → to_json(named_struct('k', v, …)) — Spark has no json type; the
     // serialized-string form is the engine-portable reading
-    s = convertJsonObject(s)
+    onlyWith("json_object")(convertJsonObject),
     // single-parameter parenthesized lambda `(x) -> …` → `x -> …` (Spark's
     // grammar only parenthesizes multi-parameter lambdas)
-    s = replaceInCode(s,
-      """\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)\s*->""", "$1 ->")
+    inCode("->", """\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)\s*->""", "$1 ->"),
     // DuckDB numeric truthiness in an identity lambda PREDICATE (`x -> x`
     // inside a filter-family call): truthy = non-null and non-zero; Spark
     // lambdas are typed boolean. Anchored to the ENCLOSING CALL NAME — a
     // bare identity-lambda rewrite also converted value-returning lambdas
     // (aggregate finishers, transform) to booleans
-    s = rewriteIdentityLambdaPredicates(s)
+    onlyWith("->")(rewriteIdentityLambdaPredicates),
     // `VALUES (struct(…))` single-struct rows: Spark's inline-table rule
     // expands a lone struct row into its fields, breaking 1-column aliases —
     // rewrite to a SELECT chain that keeps the struct value intact
-    s = convertStructValuesRows(s)
+    onlyWith("values")(convertStructValuesRows),
     // DuckDB `//` integer division → Spark's div operator
-    s = replaceInCode(s, """//""", " div ")
+    inCode("//", """//""", " div "),
     // Hive `STORED AS <fmt>` → Spark `USING <fmt>` (DDL only — `stored`
     // is a legal column alias in queries; leading comment lines skipped)
-    if (new SqlText(s).withoutComments.trim.matches("""(?is)CREATE\b.*"""))
-      s = replaceInCode(s, """(?i)\bSTORED\s+AS\s+(\w+)""", "USING $1")
+    onlyWith("stored") { s =>
+      if (!createRe.matches(new SqlText(s).withoutComments.trim)) s
+      else new SqlText(s).replaceCode(storedAsRe, "USING $1")
+    },
     // Trino IPADDRESS literals / casts → plain strings (no inet type;
     // string order preserves the corpus' equality comparisons)
-    s = replaceSpanning(s, """(?is)\bIPADDRESS\s+('(?:[^']|'')*')""", "$1")
-    s = replaceSpanning(s, """(?is)\bIPADDRESS\s+"([^"]*)"""", "'$1'")
-    s = replaceInCode(s, """(?i)\bIPADDRESS\s*\(""", "string(")
+    spanning("ipaddress", """(?is)\bIPADDRESS\s+('(?:[^']|'')*')""", "$1"),
+    spanning("ipaddress", """(?is)\bIPADDRESS\s+"([^"]*)"""", "'$1'"),
+    inCode("ipaddress", """(?i)\bIPADDRESS\s*\(""", "string("),
     // the corpus' placeholder `catalog.` prefix (unquoted form)
     // (\z: a following quoted identifier ends the code run, so
     // `catalog."t"` shows up here as a run ending in `catalog.`)
-    s = replaceInCode(s, """(?i)\bcatalog\.(?=[\w`"]|\z)""", "")
+    inCode("catalog.", """(?i)\bcatalog\.(?=[\w`"]|\z)""", ""),
     // Trino/DuckDB anonymous VALUES columns are column1, column2, …;
     // Spark's are col1, col2, … (rename only when VALUES is present)
-    if (new SqlText(s).find("""(?i)\bVALUES\s*\(""".r).isDefined)
-      s = replaceInCode(s, """(?i)\bcolumn(\d+)\b""", "col$1")
+    onlyWith("values") { s =>
+      if (new SqlText(s).find(valuesRowRe).isEmpty) s
+      else new SqlText(s).replaceCode(columnNRe, "col$1")
+    },
     // Trino parenthesized INSERT source `INSERT INTO t (WITH … SELECT …)`
     // → bare query (Spark's grammar takes the query unparenthesized)
-    val insert = new SqlText(s)
-    insert.find("""(?is)\bINSERT\s+INTO\s+(?:TABLE\s+)?[\w.`"]+\s*\(\s*WITH\b""".r).foreach { m =>
-      val open = s.lastIndexOf('(', m.end - 1)
-      val close = insert.matching(open)
-      if (close >= 0 && s.substring(close + 1).trim.isEmpty)
-        s = s.substring(0, open) + s.substring(open + 1, close) + s.substring(close + 1)
-    }
+    onlyWith("insert") { s =>
+      val insert = new SqlText(s)
+      insert.find(insertWithRe).fold(s) { m =>
+        val open = s.lastIndexOf('(', m.end - 1)
+        val close = insert.matching(open)
+        if (close >= 0 && s.substring(close + 1).trim.isEmpty)
+          s.substring(0, open) + s.substring(open + 1, close) + s.substring(close + 1)
+        else s
+      }
+    },
     // Hivemall-style `each_top_k(k, grp, score, a…) AS (cols)` UDTF →
     // window-rank rewrite (the one executable UDTF shape in the corpus)
-    if (s.toLowerCase.contains("each_top_k")) s = convertEachTopK(s)
+    onlyWith("each_top_k")(convertEachTopK),
     // TD_* time functions take numeric-or-string time values; the UDFs are
     // registered over strings and ANSI mode won't implicitly cast — wrap
     // each top-level argument in CAST(… AS STRING)
-    if (s.toLowerCase.contains("td_time_")) s = convertTdCalls(s)
+    onlyWith("td_time_")(convertTdCalls),
     // Hive permits orderless ranking windows (`row_number() OVER (PARTITION
     // BY x)`); Spark requires an ORDER BY — a constant key keeps the
     // (already arbitrary) within-partition order legal
-    s = convertOrderlessRankingWindows(s)
-    s
-  }
+    onlyWith("over")(convertOrderlessRankingWindows)
+  )
+
+  private val rankingOverRe = """(?is)\b(?:row_number|rank|dense_rank)\s*\(\s*\)\s*OVER\s*\(""".r
+  private val orderByRe = """(?i)\bORDER\s+BY\b""".r
 
   /** `row_number|rank|dense_rank() OVER (PARTITION BY … )` with no ORDER BY
     * → append ` ORDER BY 1` inside the window spec. */
   private def convertOrderlessRankingWindows(s0: String): String = {
     var s = s0
     var t = new SqlText(s)
-    val re = """(?is)\b(?:row_number|rank|dense_rank)\s*\(\s*\)\s*OVER\s*\(""".r
-    val orderBy = """(?is)\bORDER\s+BY\b""".r
     var from = 0
     var continue = true
     while (continue) {
-      t.find(re, from).map(_.end - 1) match {
+      t.find(rankingOverRe, from).map(_.end - 1) match {
         case Some(open) if t.matching(open) >= 0 =>
           val close = t.matching(open)
           // top-level only: a nested ORDER BY doesn't count
-          if (!t.codeMatches(orderBy, open + 1, close).exists(m => t.depth(m.start) == t.depth(open) + 1)) {
+          if (!t.codeMatches(orderByRe, open + 1, close).exists(m => t.depth(m.start) == t.depth(open) + 1)) {
             s = s.substring(0, close) + " ORDER BY 1" + s.substring(close)
             t = new SqlText(s)
           }
@@ -512,13 +556,14 @@ object SqlDialect {
     s
   }
 
+  private val tdCallRe = """(?i)\bTD_[A-Z_]+\s*\(""".r
+
   /** Wrap every top-level argument of a `TD_*(…)` call in CAST(… AS
     * STRING) so the string-typed UDFs accept numeric epochs under ANSI. */
   private def convertTdCalls(s0: String): String = {
-    val re = """(?i)\bTD_[A-Z_]+\s*\(""".r
     def wrapOne(s: String, from: Int): String = {
       val t = new SqlText(s)
-      t.find(re, from).map(_.end - 1) match {
+      t.find(tdCallRe, from).map(_.end - 1) match {
         case Some(open) if t.matching(open) >= 0 =>
           // nested TD_ calls are wrapped by the continued forward scan
           val args = t.itemsIn(open).map(a => s"CAST($a AS STRING)")
@@ -529,6 +574,9 @@ object SqlDialect {
     wrapOne(s0, 0)
   }
 
+  private val eachTopKRe = """(?is)\bSELECT\s+each_top_k\s*\(""".r
+  private val leadingAsRe = """(?is)^\s*AS\s*\(""".r
+
   /** `SELECT each_top_k(k, grp, score, a1, a2, …) AS (c1, c2, …) FROM rest`
     * → `SELECT * FROM (SELECT rank() OVER (PARTITION BY grp ORDER BY score
     * DESC) AS c1, score AS c2, a1 AS c3, … FROM rest) WHERE c1 <= k`.
@@ -537,14 +585,14 @@ object SqlDialect {
     * same as the CLUSTER BY the Hive original requires). */
   private def convertEachTopK(s0: String): String = {
     val t = new SqlText(s0)
-    t.find("""(?is)\bSELECT\s+each_top_k\s*\(""".r) match {
+    t.find(eachTopKRe) match {
       case None => s0
       case Some(sel) =>
         val openIdx = sel.end - 1
         val closeArgs = t.matching(openIdx)
         if (closeArgs < 0) return s0
         val args = t.itemsIn(openIdx)
-        """(?is)^\s*AS\s*\(""".r.findFirstMatchIn(s0.substring(closeArgs + 1)) match {
+        leadingAsRe.findFirstMatchIn(s0.substring(closeArgs + 1)) match {
           case None => s0
           case Some(m) =>
             val colsOpen = closeArgs + 1 + m.end - 1
@@ -566,19 +614,21 @@ object SqlDialect {
     }
   }
 
+  private val valuesOpenRe = """(?i)\(\s*VALUES\s*\(""".r
+  private val valuesAliasRe =
+    """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)""".r
+
   /** `(VALUES (struct(…))[, (struct(…))]*) AS t(x)` → `(SELECT struct(…) AS
     * x [UNION ALL SELECT …]) t`. Only engages when every row is a single
     * top-level struct(...) expression and the alias names exactly one
     * column (the Trino ROW-value inline-table idiom). */
   private def convertStructValuesRows(s0: String): String = {
-    val re = """(?i)\(\s*VALUES\s*\(""".r
-    val aliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)""".r
     var s = s0
     var t = new SqlText(s)
     var from = 0
     var searching = true
     while (searching) {
-      t.find(re, from) match {
+      t.find(valuesOpenRe, from) match {
         case None => searching = false
         case Some(values) =>
           val start = values.start
@@ -612,7 +662,7 @@ object SqlDialect {
           val allStruct = rowList.nonEmpty && rowList.forall { r =>
             r.trim.toLowerCase.startsWith("struct(") && SqlText.items(r).lengthCompare(1) == 0
           }
-          aliasRe.findFirstMatchIn(after) match {
+          valuesAliasRe.findFirstMatchIn(after) match {
             case Some(m) if ok && allStruct =>
               val (tbl, col) = (m.group(1), m.group(2))
               val sel = rowList.map(r => s"SELECT ${r.trim} AS $col").mkString(" UNION ALL ")
@@ -634,6 +684,11 @@ object SqlDialect {
   private[graft] def normalizeRawFragment(sql0: String): String =
     convertBareArrayBrackets(rewriteExpressions(sql0))
 
+  private val arrayAggRe = """(?i)\barray_agg\s*\(""".r
+  private val leadingDistinctRe = """(?i)^DISTINCT\b""".r
+  private val trailingNullsRe = """(?i)\s+NULLS\s+(FIRST|LAST)\s*$""".r
+  private val trailingDirectionRe = """(?i)\s+(ASC|DESC)\s*$""".r
+
   /** `array_agg([DISTINCT] expr ORDER BY k1 [ASC|DESC] [NULLS F|L], …)` →
     * `transform(array_sort(array_agg([DISTINCT] struct(expr AS __v, k1 AS
     * __k1, …)), (l, r) -> CASE…), s -> s.__v)`. The struct agg keeps rows
@@ -642,35 +697,31 @@ object SqlDialect {
   private def convertOrderedArrayAgg(s0: String): String = {
     var s = s0
     var t = new SqlText(s)
-    val re = """(?i)\barray_agg\s*\(""".r
-    val obRe = """(?i)\bORDER\s+BY\b""".r
     var searchFrom = 0
     var continue = true
     while (continue) {
-      t.find(re, searchFrom) match {
+      t.find(arrayAggRe, searchFrom) match {
         case Some(agg) if t.matching(agg.end - 1) >= 0 =>
           val start = agg.start
           val openIdx = agg.end - 1
           val close = t.matching(openIdx)
           val level = t.depth(openIdx) + 1
           // top-level ORDER BY split
-          t.codeMatches(obRe, openIdx + 1, close).find(m => t.depth(m.start) == level) match {
+          t.codeMatches(orderByRe, openIdx + 1, close).find(m => t.depth(m.start) == level) match {
             case None => searchFrom = close + 1
             case Some(m) =>
               var exprPart = s.substring(openIdx + 1, m.start).trim
-              val distinct = """(?i)^DISTINCT\b""".r.findFirstIn(exprPart).isDefined
+              val distinct = leadingDistinctRe.findFirstIn(exprPart).isDefined
               if (distinct) exprPart = exprPart.substring("DISTINCT".length).trim
               val keys = t.items(m.end, close, level).map { k0 =>
                 var k = k0.trim
                 var desc = false
                 var nullsFirst: Option[Boolean] = None
-                val nf = """(?i)\s+NULLS\s+(FIRST|LAST)\s*$""".r
-                nf.findFirstMatchIn(k).foreach { mm =>
+                trailingNullsRe.findFirstMatchIn(k).foreach { mm =>
                   nullsFirst = Some(mm.group(1).equalsIgnoreCase("FIRST"))
                   k = k.substring(0, mm.start).trim
                 }
-                val ad = """(?i)\s+(ASC|DESC)\s*$""".r
-                ad.findFirstMatchIn(k).foreach { mm =>
+                trailingDirectionRe.findFirstMatchIn(k).foreach { mm =>
                   desc = mm.group(1).equalsIgnoreCase("DESC")
                   k = k.substring(0, mm.start).trim
                 }
@@ -701,6 +752,10 @@ object SqlDialect {
     s
   }
 
+  private val rowCallRe = """(?i)\bROW\s*\(""".r
+  private val castCallRe = """(?i)\bCAST\s*\(""".r
+  private val spacedAsRe = """(?i)\sAS\s""".r
+
   /** Trino/DuckDB ROW-type algebra: the AS-operand of a CAST translated to
     * Spark type syntax — `ROW(id bigint, name varchar)` → `struct<id:
     * bigint, name: string>`, `array(T)`/`map(K,V)` → `array<T>`/`map<K,V>`
@@ -709,20 +764,18 @@ object SqlDialect {
   private def convertRowTypes(s0: String): String = {
     var s = s0
     // only engage when a ROW( appears (keeps the common path untouched)
-    if ("""(?i)\bROW\s*\(""".r.findFirstIn(s).isEmpty) return s
+    if (rowCallRe.findFirstIn(s).isEmpty) return s
     // 1. translate CAST type operands
     var t = new SqlText(s)
-    val castRe = """(?i)\bCAST\s*\(""".r
-    val asRe = """(?i)\sAS\s""".r
     var from = 0
     var continue = true
     while (continue) {
-      t.find(castRe, from) match {
+      t.find(castCallRe, from) match {
         case Some(cast) if t.matching(cast.end - 1) >= 0 =>
           val open = cast.end - 1
           val close = t.matching(open)
           // last top-level ` AS ` splits value from type
-          t.codeMatches(asRe, open + 1, close).filter(m => t.depth(m.start) == t.depth(open) + 1)
+          t.codeMatches(spacedAsRe, open + 1, close).filter(m => t.depth(m.start) == t.depth(open) + 1)
             .toList.lastOption match {
             case None => from = close + 1
             case Some(m) =>
@@ -737,7 +790,7 @@ object SqlDialect {
       }
     }
     // 2. remaining ROW( are value constructors
-    replaceInCode(s, """(?i)\bROW\s*\(""", "struct(")
+    new SqlText(s).replaceCode(rowCallRe, "struct(")
   }
 
   /** Recursive type-expression translation (Trino/DuckDB → Spark DDL). */
@@ -777,31 +830,33 @@ object SqlDialect {
     }
   }
 
+  private val jsonObjectRe = """(?i)\bJSON_OBJECT\s*\(""".r
+  private val jsonOnNullRe =
+    """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL(\s+WITH(OUT)?\s+UNIQUE\s+KEYS)?\s*$""".r
+  private val jsonUniqueKeysRe = """(?is)\s+WITH(OUT)?\s+UNIQUE\s+KEYS\s*$""".r
+  private val jsonKeyValueRe = """(?is)^KEY\s+(.+?)\s+VALUE\s+(.+)$""".r
+
   /** `JSON_OBJECT('k', v, …)` and the standard-SQL `JSON_OBJECT(KEY 'k'
     * VALUE v, … [NULL|ABSENT ON NULL] [WITH|WITHOUT UNIQUE KEYS])` →
     * `to_json(named_struct('k', v, …))`; modifiers are serialization hints
     * dropped with the json type itself. */
   private def convertJsonObject(s0: String): String = {
     var s = s0
-    val re = """(?i)\bJSON_OBJECT\s*\(""".r
     var continue = true
     while (continue) {
       val t = new SqlText(s)
-      t.find(re) match {
+      t.find(jsonObjectRe) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           val close = t.matching(m.end - 1)
           var inner = s.substring(m.end, close)
           // strip trailing modifiers (they follow the final pair)
-          inner = inner.replaceAll(
-            """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL(\s+WITH(OUT)?\s+UNIQUE\s+KEYS)?\s*$""", "")
-          inner = inner.replaceAll(
-            """(?is)\s+WITH(OUT)?\s+UNIQUE\s+KEYS\s*$""", "")
+          inner = jsonOnNullRe.replaceAllIn(inner, "")
+          inner = jsonUniqueKeysRe.replaceAllIn(inner, "")
           val items = SqlText.items(inner)
-          val kvRe = """(?is)^KEY\s+(.+?)\s+VALUE\s+(.+)$""".r
           val pairs: List[String] =
-            if (items.forall(kvRe.pattern.matcher(_).matches()))
+            if (items.forall(jsonKeyValueRe.matches(_)))
               items.flatMap { it =>
-                val kv = kvRe.findFirstMatchIn(it).get
+                val kv = jsonKeyValueRe.findFirstMatchIn(it).get
                 List(kv.group(1).trim, kv.group(2).trim)
               }
             else items // DuckDB alternating style is already k, v, k, v
@@ -813,14 +868,15 @@ object SqlDialect {
     s
   }
 
+  private val mapBraceRe = """(?i)\bMAP\s*\{""".r
+
   /** DuckDB `MAP {'k1': v1, 'k2': v2}` → `map('k1', v1, 'k2', v2)`. */
   private def convertMapBraces(s0: String): String = {
     var s = s0
-    val re = """(?i)\bMAP\s*\{""".r
     var continue = true
     while (continue) {
       val t = new SqlText(s)
-      t.find(re) match {
+      t.find(mapBraceRe) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           val close = t.matching(m.end - 1)
           val pairs = t.itemsIn(m.end - 1).flatMap { kv =>
@@ -887,42 +943,70 @@ object SqlDialect {
     }))
   }
 
-  /** Regex replace applied to code only. */
-  private def replaceInCode(s: String, pattern: String, replacement: String): String =
-    new SqlText(s).replaceCode(pattern.r, replacement)
+  /** `f`, skipped for a text that does not contain `keyword` (lower case),
+    * ignoring ASCII case as the `(?i)` patterns do: every change `f` makes
+    * needs the keyword, so the skip changes no output. */
+  private def onlyWith(keyword: String)(f: String => String): String => String =
+    s => if (mentions(s, keyword)) f(s) else s
 
-  /** Regex replace over the WHOLE text (matches may span string literals,
-    * e.g. typed literals `DECIMAL '0.95'`), applied only when the match
-    * STARTS at code. */
-  private def replaceSpanning(s0: String, pattern: String, replacement: String): String = {
+  /** Regex replace applied to code only. The pattern is compiled once, and
+    * a text without `keyword`, a literal every match contains, is skipped:
+    * most patterns lead with `\b`, which keeps the matcher from skipping
+    * ahead, so running one tests every character of the text. */
+  private def inCode(keyword: String, pattern: String, replacement: String): String => String = {
     val re = pattern.r
-    var s = s0
-    var next = new SqlText(s).find(re)
-    while (next.isDefined) {
-      val m = next.get
-      s = s.substring(0, m.start) + re.pattern.matcher(m.group).replaceAll(replacement) +
-        s.substring(m.end)
-      next = new SqlText(s).find(re)
-    }
-    s
+    onlyWith(keyword)(s => new SqlText(s).replaceCode(re, replacement))
   }
 
-  /** TABLESAMPLE BERNOULLI/SYSTEM (expr[%]) and DuckDB USING SAMPLE forms →
-    * Spark `TABLESAMPLE (n PERCENT|n ROWS)`. Integer arithmetic inside the
-    * parens is folded (Spark only accepts literal percentages). */
+  /** As [[inCode]], but over the WHOLE text (matches may span string
+    * literals, e.g. typed literals `DECIMAL '0.95'`), applied only when the
+    * match STARTS at code. */
+  private def spanning(keyword: String, pattern: String, replacement: String): String => String = {
+    val re = pattern.r
+    onlyWith(keyword) { s0 =>
+      var s = s0
+      var next = new SqlText(s).find(re)
+      while (next.isDefined) {
+        val m = next.get
+        s = s.substring(0, m.start) + re.pattern.matcher(m.group).replaceAll(replacement) +
+          s.substring(m.end)
+        next = new SqlText(s).find(re)
+      }
+      s
+    }
+  }
+
+  /** Whether `s` contains the lower-case `keyword`, ignoring ASCII case. */
+  private def mentions(s: String, keyword: String): Boolean = {
+    val k = keyword.length
+    var i = 0
+    var j = 0
+    while (j < k && i + k <= s.length) {
+      val c = s.charAt(i + j)
+      if ((if (c >= 'A' && c <= 'Z') (c + 32).toChar else c) == keyword.charAt(j)) j += 1
+      else { i += 1; j = 0 }
+    }
+    j == k
+  }
+
+  private val tablesampleRe = """(?is)\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(""".r
+  private val arithRe = """[0-9.\s()+\-*/]+""".r
+
+  /** TABLESAMPLE BERNOULLI/SYSTEM (expr[%]) → Spark `TABLESAMPLE (n
+    * PERCENT)`. Integer arithmetic inside the parens is folded (Spark only
+    * accepts literal percentages). */
   private def convertTablesample(s0: String): String = {
     var s = s0
     def fold(inner0: String): Option[String] = {
       val inner = inner0.trim.stripSuffix("%").trim
-      if (inner.matches("""[0-9.\s()+\-*/]+""")) Some(evalArith(inner).map(v =>
+      if (arithRe.matches(inner)) Some(evalArith(inner).map(v =>
         if (v == v.floor) v.toLong.toString else v.toString).getOrElse(inner))
       else None
     }
-    val re = """(?is)\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(""".r
     var continue = true
     while (continue) {
       val t = new SqlText(s)
-      t.find(re) match {
+      t.find(tablesampleRe) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           val close = t.matching(m.end - 1)
           val folded = fold(s.substring(m.end, close)).getOrElse("10")
@@ -930,13 +1014,6 @@ object SqlDialect {
         case _ => continue = false
       }
     }
-    // USING SAMPLE reservoir(10%) / 10% / 10 percent / 5 [rows]
-    s = replaceInCode(s,
-      """(?is)\bUSING\s+SAMPLE\s+reservoir\s*\(\s*(\d+)\s*%?\s*\)""", "TABLESAMPLE ($1 PERCENT)")
-    s = replaceInCode(s,
-      """(?is)\bUSING\s+SAMPLE\s+(\d+)\s*(?:%|percent)""", "TABLESAMPLE ($1 PERCENT)")
-    s = replaceInCode(s,
-      """(?is)\bUSING\s+SAMPLE\s+(\d+)(?:\s+rows)?\b""", "TABLESAMPLE ($1 ROWS)")
     s
   }
 
@@ -975,14 +1052,15 @@ object SqlDialect {
     catch { case _: Throwable => None }
   }
 
+  private val arrayBracketRe = """(?i)\bARRAY\s*\[""".r
+
   /** ARRAY[a, b] → array(a, b), nesting-aware, strings skipped. */
   private def convertArrayBrackets(s0: String): String = {
     var s = s0
-    val re = """(?i)\bARRAY\s*\[""".r
     var continue = true
     while (continue) {
       val t = new SqlText(s)
-      t.find(re) match {
+      t.find(arrayBracketRe) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           val close = t.matching(m.end - 1)
           s = s.substring(0, m.start) + "array(" + s.substring(m.end, close) + ")" + s.substring(close + 1)
@@ -992,6 +1070,7 @@ object SqlDialect {
     s
   }
 
+  private val identityLambdaRe = """\b([A-Za-z_][A-Za-z0-9_]*)\s*->\s*\1\s*([,)])""".r
   private val identityLambdaHosts =
     Set("filter", "list_filter", "array_filter", "any_match", "all_match", "none_match")
 
@@ -1002,13 +1081,12 @@ object SqlDialect {
     * anchors correctly and value-returning identity lambdas elsewhere
     * (transform, aggregate finishers) stay untouched. */
   private def rewriteIdentityLambdaPredicates(s0: String): String = {
-    val re = """\b([A-Za-z_][A-Za-z0-9_]*)\s*->\s*\1\s*([,)])""".r
     var s = s0
     var t = new SqlText(s)
     var search = 0
     var continue = true
     while (continue) {
-      t.codeMatches(re).find(_.start >= search) match {
+      t.codeMatches(identityLambdaRe).find(_.start >= search) match {
         case None => continue = false
         case Some(m) =>
           val open = t.enclosingOpen(m.start)
@@ -1033,16 +1111,17 @@ object SqlDialect {
     s
   }
 
+  private val atTimeZoneRe = """(?is)\bAT\s+TIME\s+ZONE\s+('[^']*')""".r
+
   /** `<operand> AT TIME ZONE 'z'` → `from_utc_timestamp(<operand>, 'z')`.
     * The operand is the longest preceding primary chain: literal, quoted
     * string, identifier/function-call/paren group, `::type` casts. */
   private def convertAtTimeZone(s0: String): String = {
     var s = s0
-    val re = """(?is)\bAT\s+TIME\s+ZONE\s+('[^']*')""".r
     var continue = true
     while (continue) {
       val t = new SqlText(s)
-      t.find(re) match {
+      t.find(atTimeZoneRe) match {
         case None => continue = false
         case Some(m) =>
           val tz = m.group(1)
@@ -1094,15 +1173,16 @@ object SqlDialect {
     s
   }
 
+  private val ifCallRe = """(?i)\bIF\s*\(""".r
+
   /** Trino `if(cond, value)` → `if(cond, value, NULL)`. */
   private def convertTwoArgIf(s0: String): String = {
     var s = s0
     var t = new SqlText(s)
-    val re = """(?i)\bIF\s*\(""".r
     var searchFrom = 0
     var continue = true
     while (continue) {
-      t.codeMatches(re).find(_.start >= searchFrom) match {
+      t.codeMatches(ifCallRe).find(_.start >= searchFrom) match {
         case Some(m) if t.matching(m.end - 1) >= 0 =>
           val close = t.matching(m.end - 1)
           if (t.itemsIn(m.end - 1).lengthCompare(2) == 0) {
