@@ -205,15 +205,12 @@ object BenchScale {
     // recheck — one corpus scan, zero corpus shuffle, expect ~1
     "q_dedup_bloom_against_index")
 
-  private def loadavg(): String = BenchGuard.loadavg()
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val workDir = args.lift(2).getOrElse("/tmp/graft_benchscale")
     val cpus = Tables.localCpus("32")
-    val (waitedSec, gaveUp) = BenchGuard.waitUntilQuiet()
-    val loadBefore = loadavg()
+    val loadBefore = Bench.loadavg()
     val spark = Tables.localSession(cpus)
 
     // ---- materialize the scaled corpus (untimed) ----
@@ -291,11 +288,6 @@ object BenchScale {
     val liBigRows = spark.read.parquet(s"$workDir/lineitem.parquet").count()
     System.err.println(s"[scale] lineitem base=$liBaseRows rows, scaled=$liBigRows rows")
 
-    // the materialization itself is a 32-thread write burst (page-cache
-    // writeback, GC) — re-quiesce before timing, or the first base
-    // measurements absorb the flush and skew their exponents negative
-    BenchGuard.waitUntilQuiet()
-
     def time(name: String, dir: String, partitions: Int): Double = {
       // partitions scale with the corpus — the 100 TB sizing policy
       // (shuffle partitions sized so each fits executor memory); pinning
@@ -332,7 +324,7 @@ object BenchScale {
       System.err.println(f"[scale] $name%-28s ${tSmall}%7.2f s -> ${tBig}%8.2f s  exponent ${exp}%5.2f")
       (name, tSmall, tBig, exp)
     }
-    val loadAfter = loadavg()
+    val loadAfter = Bench.loadavg()
     // ROOT locale, same hazard Bench.s3 fixed: the f-interpolator honors the
     // default locale, and a comma-decimal locale makes the JSON invalid
     def s3(v: Double) =
@@ -358,8 +350,7 @@ object BenchScale {
     val json =
       s"""{"base_dir":"$baseDir","base_rows":$baseRows,"scaled_rows":$bigRows,""" +
         s""""replicas":$replicas,"cpus":"$cpus","loadavg_before":"$loadBefore",""" +
-        s""""loadavg_after":"$loadAfter","quiet_wait_sec":$waitedSec,""" +
-        s""""quiet_gave_up":$gaveUp,"queries":$rows}"""
+        s""""loadavg_after":"$loadAfter","queries":$rows}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_SCALE.json"), json)
     println(json)
     spark.stop()

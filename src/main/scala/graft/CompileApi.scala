@@ -86,8 +86,9 @@ object CompileApi {
   def compileOnlyWith(ctx0: graft.lang.Lowering.Context, text: String): org.apache.spark.sql.DataFrame = {
     import graft.lang._
     // copy shares the mutable maps (models/vals/…) with the caller's ctx,
-    // so session-reuse state still accumulates where callers expect it
-    val ctx = ctx0.copy(analysisOnly = true)
+    // so session-reuse state still accumulates where callers expect it; the
+    // model frames are its own, as analysis-only frames skip their jobs
+    val ctx = ctx0.copy(analysisOnly = true, modelFrames = scala.collection.mutable.Map.empty)
     val stmts = Parser.parseStatements(text)
     // write-effecting statements lower EAGERLY (save/delete/… execute inside
     // lowerStatements) — compile-only must refuse them rather than run them

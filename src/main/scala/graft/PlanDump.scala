@@ -30,11 +30,8 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Tables.localSession(Tables.localCpus("32"))
     Files.createDirectories(Paths.get(outDir))
-    // session warm-up so the first row's construct/count split is not JVM
-    // cold-start (same rationale as Bench.warmUp)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    // so the first row's construct/count split is not JVM cold-start
+    Bench.warmUp(spark, sfDir)
     def s3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]

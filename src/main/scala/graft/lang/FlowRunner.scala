@@ -273,7 +273,10 @@ object FlowRunner {
               case Some(df) => routeFilter(name, sp.name, df)
               case None => ctx2.tableResolver(name)
             }
-          val sctx = ctx2.copy(tableResolver = resolver, stageName = Some(sp.name))
+          // own model frames: stages resolve names to their own inputs and
+          // may run concurrently
+          val sctx = ctx2.copy(tableResolver = resolver, stageName = Some(sp.name),
+            modelFrames = scala.collection.mutable.Map.empty)
           sp.body match {
             case Left(merges) =>
               merges.map(m => inputs(m)).reduce(_ unionByName _)

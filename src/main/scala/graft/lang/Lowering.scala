@@ -65,7 +65,16 @@ object Lowering {
         * playground validation): table functions whose lowering runs a job
         * or writes return an empty frame of their declared schema instead
         * (TableFunctions.lower). */
-      analysisOnly: Boolean = false
+      analysisOnly: Boolean = false,
+      /** Unaliased frames of the parameterless models lowered in the current
+        * statement, keyed by the model and the vals in scope (a
+        * parameterized model's bindings are visible to the models it
+        * references): a model referenced twice runs its table functions'
+        * jobs once, as [[graft.Tables.read]] hands back one frame per table.
+        * [[lowerStatements]] empties it around each statement, since the
+        * REPL and server keep one Context across inputs and a DML statement
+        * changes what a model reads. */
+      modelFrames: mutable.Map[(ModelDef, Map[String, Expr]), DataFrame] = mutable.Map.empty
   )
 
   /** Lowering result: either a plain DataFrame or a "grouped" relation —
@@ -103,7 +112,7 @@ object Lowering {
 
   def lowerStatements(stmts: List[Statement], ctx: Context): Option[DataFrame] = {
     var last: Option[DataFrame] = None
-    stmts.foreach {
+    def statement(stmt: Statement): Unit = stmt match {
       case m: ModelDef => ctx.models(m.name) = m
       case ValDef(name, e) =>
         // vals evaluate ONCE at declaration (reference semantics: a val of
@@ -425,6 +434,10 @@ object Lowering {
         w.saveAsTable(name)
         last = Some(df)
     }
+    stmts.foreach { stmt =>
+      ctx.modelFrames.clear()
+      try statement(stmt) finally ctx.modelFrames.clear()
+    }
     last
   }
 
@@ -609,7 +622,7 @@ object Lowering {
             "a second stateful dedup — deduplicate with group keys instead")
       case _ => ()
     }
-    lower(rel, ctx.copy(streamingSub = Some(stream)))
+    lower(rel, ctx.copy(streamingSub = Some(stream), modelFrames = mutable.Map.empty))
   }
 
   /** Bare `group by` at the end of a pipeline renders keys + arbitrary() of
@@ -957,6 +970,11 @@ object Lowering {
     }
   }
 
+  /** A parameterless model's body, lowered once per statement and vals in
+    * scope (see [[Context.modelFrames]]). */
+  private def lowerModel(m: ModelDef, ctx: Context): DataFrame =
+    ctx.modelFrames.getOrElseUpdate((m, ctx.vals.toMap), lower(m.body, ctx))
+
   private def lowerRel(rel: Relation, ctx: Context): LRes = rel match {
     case TableRef(name) =>
       ctx.models.get(name) match {
@@ -998,10 +1016,10 @@ object Lowering {
             s"model $name: missing argument for parameter '$pname'")))
         pname -> v
       }
-      val ctx2 =
-        if (bindings.isEmpty) ctx
-        else ctx.copy(vals = ctx.vals.clone() ++= bindings)
-      Plain(lower(m.body, ctx2).alias(name))
+      val body =
+        if (bindings.isEmpty) lowerModel(m, ctx)
+        else lower(m.body, ctx.copy(vals = ctx.vals.clone() ++= bindings))
+      Plain(body.alias(name))
 
     case PipeInput =>
       throw new LoweringException(
@@ -1129,10 +1147,11 @@ object Lowering {
     case BracedRelation(child) => lowerRel(child, ctx)
 
     case SelectAsNamed(child, name) =>
-      // name the intermediate result: later `from name` re-derives the same
+      // name the intermediate result: later `from name` reads the same
       // relation (registered like a zero-arg model)
-      ctx.models(name) = ModelDef(name, Nil, child)
-      Plain(lower(child, ctx).alias(name))
+      val m = ModelDef(name, Nil, child)
+      ctx.models(name) = m
+      Plain(lowerModel(m, ctx).alias(name))
 
     case SelectAsNamedDyn(child, interp) =>
       lowerRel(SelectAsNamed(child, resolveInterpName(interp, ctx)), ctx)

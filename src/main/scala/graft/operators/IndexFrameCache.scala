@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * context not stopped) — the same ownership rule both call sites already
   * enforced individually.
   */
-final class IndexFrameCache(maxEntries: Int) {
+final class IndexFrameCache(maxEntries: Int = IndexFrameCache.DefaultEntries) {
   private case class Entry(owner: SparkSession, fingerprint: String, df: DataFrame)
 
   // accessOrder=true → iteration order is LRU-first
@@ -115,4 +115,9 @@ final class IndexFrameCache(maxEntries: Int) {
   }
 
   def size: Int = synchronized(map.size())
+}
+
+object IndexFrameCache {
+  /** Live entries per cache and JVM. */
+  val DefaultEntries = 16
 }

@@ -27,11 +27,8 @@ object Similarity {
     * crossover — see [[lshTopKPartitionedIndex]]. A cached frame is bound
     * to the SparkContext that read it; the cap keeps a many-distinct-index
     * workload from pinning executor storage for the context's life
-    * (ADVICE r11). Cap override: env var SPARK_GRAFT_INDEX_CACHE_ENTRIES
-    * (read once at object init — a JVM-wide cache can't honor a per-session
-    * Spark conf). */
-  private val smallIndexCache = new IndexFrameCache(
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_CACHE_ENTRIES", "16").toInt)
+    * (ADVICE r11). */
+  private val smallIndexCache = new IndexFrameCache()
 
   /** Test/server hook: drop the calling context's cached index frames. */
   def clearIndexCache(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -367,8 +367,7 @@ object Subscribe {
     * the loaded + persisted signature frame keyed by directory fingerprint
     * (shared eviction/ownership rules with the ANN small-index cache —
     * ADVICE r11 flagged both as unbounded). */
-  private val indexCache = new graft.operators.IndexFrameCache(
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_CACHE_ENTRIES", "16").toInt)
+  private val indexCache = new graft.operators.IndexFrameCache()
 
   /** Test/server hook: drop the calling context's cached index frames. */
   def clearIndexCache(spark: SparkSession): Unit = indexCache.clear(spark)

@@ -28,7 +28,7 @@ class CatalogInvariantSpec extends SparkTestBase {
     assert(closures.sorted == listed.map(_._1).sorted,
       s"unlisted closures: ${closures.diff(listed.map(_._1))}; " +
         s"listed rows that are text: ${listed.map(_._1).diff(closures)}")
-    assert(listed.size == 19, s"closure rows: ${listed.size}")
+    assert(listed.size == 18, s"closure rows: ${listed.size}")
   }
 
   test("every wv oracle row compiles to scalar-only output columns") {

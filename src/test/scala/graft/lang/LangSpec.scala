@@ -566,6 +566,29 @@ class LangSpec extends SparkTestBase {
     assert(df.collect().map(_.getLong(0)).toList == List(3L))
   }
 
+  test("a model referenced twice in one statement is lowered once") {
+    // connected_components runs its jobs while it lowers; the second
+    // reference to `cc` reuses the first one's frame
+    val defs = """
+      model pairs = { from [[1, 2], [2, 3], [7, 8]] as p(id_a, id_b) }
+      model cc = { from connected_components('pairs') }
+    """
+    def lowering(q: String) =
+      graft.SparkCost.of(spark)(graft.Graft.query(spark, defs + q, name => table(name)))
+    val (_, once) = lowering("from cc")
+    val (twice, cost) = lowering("""
+      from cc as a
+      join cc as b on a.id = b.id
+      select a.id as id, b.cluster as cluster
+      order by id
+    """)
+    assert(once.jobs > 0, "connected_components should run jobs while lowering")
+    assert(cost.jobs == once.jobs,
+      s"two references started ${cost.jobs} job(s), one reference ${once.jobs}")
+    assert(twice.collect().map(r => (r.getLong(0), r.getLong(1))).toList ==
+      List((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L)))
+  }
+
   test("scalar subquery in select and add") {
     wv("""
       from [[1], [2]] as t(id)
